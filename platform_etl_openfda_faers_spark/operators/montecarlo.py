@@ -23,8 +23,10 @@ Differences from the reference (deliberate, SURVEY §2.10 quirks #2/#6):
   ``collect_list`` order.
 
 Scale notes: the grouped input is one row per drug (10^3-10^5 rows — tiny
-next to the pair table), so the Python boundary is crossed once per drug,
-Arrow-batched, with all heavy math vectorized in NumPy.  The simulation cost
+next to the pair table), so a plain Python UDF is called once per drug, on
+every core, and each call runs the whole simulation vectorized in NumPy.
+The workers import NumPy only: this module imports neither pandas nor
+pyarrow, which keeps them lean when one runs per core.  The simulation cost
 is O(permutations x reactions-per-drug) independent of corpus size.  The
 critval table that joins back (J5) is broadcast.
 """
@@ -34,7 +36,6 @@ from __future__ import annotations
 import zlib
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -56,17 +57,31 @@ def _critical_value(
 
     # (permutations, K) simulated allocation matrix.
     x = rng.multinomial(n_j, p, size=permutations).astype(np.float64)
-
-    with np.errstate(divide="ignore", invalid="ignore"):
-        llrs = (
-            x * (np.log(x) - np.log(y))
-            + (z - x) * (np.log(z - x) - np.log(big_n - y))
-            - z * np.log(z)
-            + z * np.log(big_n)
-        )
-    llrs[~np.isfinite(llrs)] = 0.0
-    maxima = llrs.max(axis=1)
+    maxima = _llr_matrix(x, y, z, big_n).max(axis=1)
     return float(np.percentile(maxima, percentile * 100.0))
+
+
+def _llr_matrix(x: np.ndarray, y: np.ndarray, z: float, big_n: float) -> np.ndarray:
+    """Per-cell LLR of the simulated matrix ``x`` (overwritten), NaN/Inf -> 0.
+
+    Evaluates ``x*(ln x - ln y) + (z-x)*(ln(z-x) - ln(N-y)) - z ln z + z ln N``
+    in place: the same IEEE operations in the same order as the plain
+    expression (so bit-identical), but with two ``(permutations, K)`` work
+    buffers instead of one per temporary.
+    """
+    with np.errstate(divide="ignore", invalid="ignore"):
+        llrs = np.log(x)
+        llrs -= np.log(y)
+        llrs *= x
+        np.subtract(z, x, out=x)
+        rest = np.log(x)
+        rest -= np.log(big_n - y)
+        rest *= x
+        llrs += rest
+        llrs -= z * np.log(z)
+        llrs += z * np.log(big_n)
+    llrs[~np.isfinite(llrs)] = 0.0
+    return llrs
 
 
 def _drug_seed(root_seed: int, drug: object) -> np.random.Generator:
@@ -88,8 +103,13 @@ def critical_values(
 
     # A4 — per-drug vector of per-reaction base counts.  first() is safe for
     # the per-drug constants (reference quirk #6); the n_i vector is sorted
-    # by reaction term for deterministic seeding.
-    grouped = stage1.groupBy(drug_col).agg(
+    # by reaction term for deterministic seeding.  The explicit-count
+    # repartition spreads the drugs over every core: AQE would coalesce the
+    # small per-drug table into one partition (one task runs the kernel),
+    # but never merges a repartition with a partition count, and the
+    # aggregate reuses this exchange instead of adding its own.
+    parallelism = stage1.sparkSession.sparkContext.defaultParallelism
+    grouped = stage1.repartition(parallelism, drug_col).groupBy(drug_col).agg(
         F.first("uniq_reports_total").alias("uniq_reports_total"),
         F.first("uniq_report_ids_by_drug").alias("uniq_report_ids_by_drug"),
         F.transform(
@@ -105,22 +125,24 @@ def critical_values(
         ).alias("n_i"),
     )
 
-    @F.pandas_udf(T.DoubleType())
-    def critval_udf(
-        drug: pd.Series, n_j: pd.Series, n_i: pd.Series, total: pd.Series
-    ) -> pd.Series:
-        out = np.empty(len(drug), dtype=np.float64)
-        for i in range(len(drug)):
-            rng = _drug_seed(seed, drug.iloc[i])
-            out[i] = _critical_value(
-                int(n_j.iloc[i]),
-                np.asarray(n_i.iloc[i], dtype=np.float64),
-                int(total.iloc[i]),
-                permutations,
-                percentile,
-                rng,
-            )
-        return pd.Series(out)
+    # No type hints: PySpark would try to infer a pandas UDF eval type.
+    def critval(drug, n_j, n_i, total):
+        return _critical_value(
+            int(n_j),
+            np.asarray(n_i, dtype=np.float64),
+            int(total),
+            permutations,
+            percentile,
+            _drug_seed(seed, drug),
+        )
+
+    # Row-at-a-time and pickled, not Arrow: the worker then needs neither
+    # pandas nor pyarrow.  asNondeterministic() only stops Catalyst from
+    # pushing the join-back's ``critval > 0`` below this projection, which
+    # would evaluate the kernel twice (once under the Filter, once above).
+    # The value IS deterministic: each drug's RNG is seeded from
+    # (seed, crc32(drug)).
+    critval_udf = F.udf(critval, T.DoubleType(), useArrow=False).asNondeterministic()
 
     return grouped.select(
         F.col(drug_col),

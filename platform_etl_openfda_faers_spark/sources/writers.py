@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -28,10 +29,18 @@ def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
 def write_csv_single_file(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """S7 — ``utils/Writers.scala:14-21``: gzip'd single-file CSV with header.
 
+    CSV holds only flat values, so struct, array and map columns (the raw
+    reports' nested ``patient``) are written as ``to_json`` strings.
     Deliberately serializes to one partition; never use in a hot path.
     """
+    nested = (T.StructType, T.ArrayType, T.MapType)
+    flat = df.select(*[
+        F.to_json(F.col(f"`{f.name}`")).alias(f.name)
+        if isinstance(f.dataType, nested) else F.col(f"`{f.name}`")
+        for f in df.schema.fields
+    ])
     (
-        df.coalesce(1)
+        flat.coalesce(1)
         .write.mode(mode)
         .option("compression", "gzip")
         .option("header", True)

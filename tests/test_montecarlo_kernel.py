@@ -1,11 +1,16 @@
 """Numeric-kernel invariants (mirrors reference MathUtilsTest, SURVEY §5):
 multinomial samples sum to size, vary across iterations, degenerate case."""
 
+import subprocess
+import sys
+from pathlib import Path
+
 import numpy as np
 
 from platform_etl_openfda_faers_spark.operators.montecarlo import (
     _critical_value,
     _drug_seed,
+    _llr_matrix,
 )
 
 
@@ -71,9 +76,9 @@ def test_critical_value_golden_pinned():
 
 
 def test_critical_values_dataframe_golden_pinned(spark):
-    """Same golden gate one level up, through the grouped pandas_udf path:
+    """Same golden gate one level up, through the grouped UDF path:
     locks the sorted-reaction n_i assembly (A4), per-drug seeding through
-    the UDF, and Arrow plumbing.  CHEMBL25's value deliberately differs
+    the UDF, and the Python-worker plumbing.  CHEMBL25's value deliberately differs
     from the kernel-only golden above because the pipeline sorts reactions
     alphabetically before building n_i — pinning both catches a regression
     in either half."""
@@ -104,3 +109,51 @@ def test_critical_values_dataframe_golden_pinned(spark):
         "CHEMBL25": 8.218699724625111,
         "CHEMBL1201": 3.0933407966261157,
     }, got
+
+
+def _llr_matrix_expression(x, y, z, big_n):
+    """The LLR as one NumPy expression (a temporary per operation): the
+    form ``_llr_matrix`` evaluates in place, kept as its law."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        llrs = (
+            x * (np.log(x) - np.log(y))
+            + (z - x) * (np.log(z - x) - np.log(big_n - y))
+            - z * np.log(z)
+            + z * np.log(big_n)
+        )
+    llrs[~np.isfinite(llrs)] = 0.0
+    return llrs
+
+
+def test_llr_matrix_in_place_is_bit_identical_to_expression():
+    """Zero cells (ln 0), full cells (z - x = 0) and wide rows included."""
+    rng = np.random.default_rng(2024)
+    for _ in range(300):
+        k = int(rng.integers(1, 60))
+        y = rng.integers(1, 500, size=k).astype(np.float64)
+        n_j = int(rng.integers(1, 200))
+        big_n = float(y.sum() + rng.integers(n_j, 1000))
+        x = rng.multinomial(n_j, y / y.sum(), size=int(rng.integers(1, 80)))
+        x = x.astype(np.float64)
+        want = _llr_matrix_expression(x.copy(), y, float(n_j), big_n)
+        got = _llr_matrix(x.copy(), y, float(n_j), big_n)
+        assert got.shape == want.shape
+        assert np.array_equal(got.view(np.uint64), want.view(np.uint64))
+
+
+def test_montecarlo_import_keeps_workers_lean():
+    """A Python worker unpickling the critical-value UDF imports this
+    module; with one worker per core, pandas + pyarrow (~109 MiB each)
+    would show up in the run's peak RSS.  A fresh interpreter importing
+    it must load neither."""
+    code = (
+        "import sys\n"
+        "import platform_etl_openfda_faers_spark.operators.montecarlo\n"
+        "print(sorted(m for m in ('pandas', 'pyarrow') if m in sys.modules))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parent.parent,
+        capture_output=True, text=True, check=True,
+    )
+    assert out.stdout.strip() == "[]", out.stdout

@@ -204,6 +204,45 @@ def test_run_with_sampling_writes_side_outputs(spark, fixture_paths, tmp_path):
     assert reflat.count() > 0
 
 
+def test_run_with_sampling_writes_csv_outputs(spark, fixture_paths, tmp_path):
+    """CSV output with sampling: the raw-report sample keeps the nested
+    ``patient`` struct, which CSV cannot hold, so the writer stores nested
+    columns as JSON strings; every output is one gzip'd CSV file."""
+    import json
+
+    from platform_etl_openfda_faers_spark.config import (
+        EngineConfig,
+        FdaConfig,
+        MonteCarloConfig,
+        SamplingConfig,
+    )
+    from platform_etl_openfda_faers_spark.plans import pipeline
+
+    reports_path, drugs_path, blacklist_path = fixture_paths
+    out = str(tmp_path / "out")
+    cfg = EngineConfig(
+        fda=FdaConfig(
+            fda_data=reports_path,
+            chembl_drugs=drugs_path,
+            blacklist=blacklist_path,
+            outputs=("csv",),
+            output_path=out,
+            montecarlo=MonteCarloConfig(permutations=50),
+            sampling=SamplingConfig(enabled=True, fraction=1.0, seed=42),
+        )
+    )
+    pipeline.run(spark, cfg)
+
+    for name in ("agg_by_chembl", "agg_critval_drug", "sampled_clean",
+                 "sampled_raw_reports"):
+        assert len(list((tmp_path / "out" / name / "csv").glob("part-*.csv.gz"))) == 1, name
+    raw = spark.read.option("header", True).csv(f"{out}/sampled_raw_reports/csv")
+    rows = raw.select("safetyreportid", "patient").collect()
+    assert rows
+    for r in rows:
+        assert "drug" in json.loads(r.patient), r
+
+
 def test_run_without_sampling_writes_no_side_outputs(spark, fixture_paths, tmp_path):
     from pathlib import Path
 

@@ -367,3 +367,43 @@ def test_sessionize_is_single_exchange(spark, sf_dir):
     n_exchanges = len(re.findall(r"\(\d+\) Exchange", plan))
     assert n_exchanges == 1, plan
     assert "Join" not in plan
+
+
+def test_monte_carlo_kernel_runs_once_spread_over_every_core(spark):
+    """The critical-value UDF must appear as ONE Python evaluation node in
+    ``monte_carlo_filter`` (a pushed-down ``critval > 0`` would evaluate the
+    kernel twice), and the per-drug aggregate must read an explicit-count
+    ``REPARTITION_BY_NUM`` exchange with ``defaultParallelism`` partitions:
+    AQE coalesces the small per-drug shuffle into one task otherwise."""
+    import re
+
+    from platform_etl_openfda_faers_spark.operators.montecarlo import (
+        monte_carlo_filter,
+    )
+
+    stage1 = spark.createDataFrame(
+        [
+            ("CHEMBL25", "NAUSEA", 20, 40, 50, 200, 5.0, ""),
+            ("CHEMBL25", "RASH", 6, 40, 20, 200, 0.1, ""),
+            ("CHEMBL1201", "NAUSEA", 4, 12, 5, 150, 3.0, ""),
+        ],
+        ["chembl_id", "reaction_reactionmeddrapt", "A",
+         "uniq_report_ids_by_drug", "uniq_report_ids_by_reaction",
+         "uniq_reports_total", "llr", "meddraCode"],
+    )
+    out = monte_carlo_filter(stage1, permutations=20)
+    optimized = out._jdf.queryExecution().optimizedPlan().toString()
+    evals = re.findall(r"\b(?:Batch|Arrow)EvalPython\b", optimized)
+    assert len(evals) == 1, optimized
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        out.explain()
+    plan = buf.getvalue()
+    # The tree prints parents above children: the only shuffle must sit
+    # below both halves of the collect_list aggregate.
+    shuffle = re.compile(r"\bExchange hashpartitioning\((\w+)#\d+, (\d+)\), (\w+)")
+    shuffles = [m.groups() for m in shuffle.finditer(plan)]
+    parallelism = str(spark.sparkContext.defaultParallelism)
+    assert shuffles == [("chembl_id", parallelism, "REPARTITION_BY_NUM")], plan
+    assert plan.rindex("collect_list") < shuffle.search(plan).start(), plan
