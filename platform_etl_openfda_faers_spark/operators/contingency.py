@@ -6,12 +6,12 @@ reference computes the three distinct-counts with HLL++
 ``count_distinct`` over a window — so its A/B/C/D carry ~5% rsd error
 (reference quirk #1).
 
-Our engine defaults to EXACT semantics via three group-by aggregates joined
-back (SURVEY §4 recommendation): at 100 TB, windows materialize entire
+Our engine computes them EXACTLY via three group-by aggregates joined back
+(SURVEY §4 recommendation): at 100 TB, windows materialize entire
 partitions per key (every pair row for a hot reaction lands in one task),
 while groupBy does map-side partial aggregation and the joined-back
-aggregates are small enough to broadcast.  ``approx=True`` restores the
-reference's cheaper HLL++ behavior as an opt-in.
+aggregates are small enough to broadcast.  The reference's HLL++ window
+semantics are covered by the ``w_approx_distinct`` registry query.
 
 Output columns: (drug, reaction, A, B, C, D, uniq_report_ids_by_drug,
 uniq_report_ids_by_reaction, uniq_reports_total, aterm, cterm, acterm, llr).
@@ -31,7 +31,6 @@ def contingency_llr(
     report_col: str = "safetyreportid",
     drug_col: str = "chembl_id",
     reaction_col: str = "reaction_reactionmeddrapt",
-    approx: bool = False,
     cache_input: bool = False,
 ) -> DataFrame:
     """pairs(report, drug, reaction) -> one row per (drug, reaction) + stats.
@@ -63,9 +62,7 @@ def contingency_llr(
     # divergence from the reference is "null reports contribute nothing"
     # rather than an off-by-one only in N.
     pairs = pairs.where(F.col(report_col).isNotNull())
-    count = (
-        F.approx_count_distinct(report_col) if approx else F.countDistinct(report_col)
-    )
+    count = F.countDistinct(report_col)
     if cache_input:
         from pyspark import StorageLevel
 
@@ -78,8 +75,6 @@ def contingency_llr(
     # aggregates plan into one job and run concurrently (measured ~1.4x on
     # faers_llr at sf0.1).  The driver-scalar pattern itself is still
     # covered by the a1_distinct_count query.
-    # (always exact, even in approx mode — the reference's A1 is a real
-    # distinct count, only the windows W1-W3 are approximate)
     total_agg = pairs.agg(F.countDistinct(report_col).alias("uniq_reports_total"))
 
     # A per (drug, reaction): the big aggregate — shuffles once on the pair key

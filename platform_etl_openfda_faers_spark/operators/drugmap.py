@@ -15,9 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def map_to_chembl(
-    pairs: DataFrame, drug_list: DataFrame, broadcast_drugs: bool = True
-) -> DataFrame:
+def map_to_chembl(pairs: DataFrame, drug_list: DataFrame) -> DataFrame:
     """Inner join pair rows to ``(chembl_id, drug_name)``; unmatched names drop."""
-    right = F.broadcast(drug_list) if broadcast_drugs else drug_list
-    return pairs.join(right, ["drug_name"], "inner")
+    return pairs.join(F.broadcast(drug_list), ["drug_name"], "inner")

@@ -2039,9 +2039,10 @@ def dedup_stored_index_serve(spark: SparkSession, sf: str) -> DataFrame:
     ``dedup_incremental_simhash64`` (stored == recompute is the family's
     law, pytest-pinned in ``tests/test_dedup.py``), so the driver's
     value-hash certifies the stored path's RESULTS at the hash level —
-    the dial (`tools/stored_index_dial.py`, −79% at sf10) already proved
-    the runtime win.  The index build is an eager write inside the query
-    — the registry callable stays self-contained — so its wall time is
+    the stored-index A/B (−79% at sf10,
+    `artifacts/r11/BENCH_DETAIL_r11_stored_index_sf10.json`) already
+    proved the runtime win.  The index build is an eager write inside the
+    query — the registry callable stays self-contained — so its wall time is
     BUILD-DOMINATED (measured 6.5x per 10x data at r12, vs the serve
     leg's 3.1x).  ``BUILD_SERVE`` exposes the two legs separately so
     bench.py can carry build vs serve-only timings in the committed
@@ -8800,8 +8801,9 @@ def multimodal_video_stored_serve(spark: SparkSession, sf: str) -> DataFrame:
     The oracle is the SAME analytic replay as
     ``multimodal_video_neardup_incremental`` (stored == recompute is
     the family's law, pytest-pinned), so the driver's value-hash
-    certifies the stored path's RESULTS; the dial
-    (`tools/stored_index_dial.py`, −72% at sf1 / −83% stored family)
+    certifies the stored path's RESULTS; the stored-index A/B (−72% at
+    sf1 mixed, `artifacts/r13/BENCH_DETAIL_r13_stored_index_sf1.json`;
+    −83% at sf10, `artifacts/r12/BENCH_DETAIL_r12_stored_index_sf10.json`)
     already proved the runtime win.  Like the SimHash twin, the
     registry callable is self-contained (build is an eager write inside
     the query) and therefore BUILD-DOMINATED — ``BUILD_SERVE`` exposes

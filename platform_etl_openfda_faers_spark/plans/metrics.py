@@ -4,8 +4,9 @@ Wraps the JVM ``AppStatusStore`` — the same numbers the Spark UI's stage
 page shows — so callers can assert DATA MOVEMENT, not just wall time or
 static plan shape.  A plan audit proves the plan has one Exchange; only a
 runtime byte count proves that Exchange moved 2 MB and not 20 GB.  Used
-by ``bench.py`` (per-query ``shuffle_bytes`` in the bench JSON) and the
-runtime audits in ``tests/test_plan_audits.py``.
+by ``bench.py`` (per-query ``shuffle_bytes`` in the bench JSON), the
+per-stage table of ``tools/profile_query.py`` and the runtime audits in
+``tests/test_plan_audits.py``.
 
 Driver-local and read-only: one py4j call per snapshot, no listener
 registration, works with the UI disabled.
@@ -13,10 +14,16 @@ registration, works with the UI disabled.
 
 from __future__ import annotations
 
+# delta() key -> AppStatusStore StageData accessor
+_BYTES = {"shuffle_write": "shuffleWriteBytes", "shuffle_read": "shuffleReadBytes",
+          "spill_disk": "diskBytesSpilled", "spill_mem": "memoryBytesSpilled",
+          "input_bytes": "inputBytes"}
+
 
 class StageMetrics:
-    """Delta-based collector: ``snapshot()`` before a job, ``delta()``
-    after — sums metrics over the stages that ran in between."""
+    """Delta-based collector: ``snapshot()`` before a job, then
+    ``stage_rows()`` / ``delta()`` (their byte sums) over the stages that
+    ran in between."""
 
     def __init__(self, spark) -> None:
         sc = spark.sparkContext
@@ -36,15 +43,17 @@ class StageMetrics:
     def snapshot(self) -> None:
         self._seen = {st.stageId() for st in self._stages()}
 
-    def delta(self) -> dict[str, int]:
-        out = {"shuffle_write": 0, "shuffle_read": 0, "spill_disk": 0,
-               "spill_mem": 0, "input_bytes": 0}
+    def stage_rows(self):
+        """One dict per stage run since ``snapshot()``: tasks, executor
+        run/CPU time, shuffle read/write, spill, input bytes and name."""
         for st in self._stages():
-            if st.stageId() in self._seen:
-                continue
-            out["shuffle_write"] += st.shuffleWriteBytes()
-            out["shuffle_read"] += st.shuffleReadBytes()
-            out["spill_disk"] += st.diskBytesSpilled()
-            out["spill_mem"] += st.memoryBytesSpilled()
-            out["input_bytes"] += st.inputBytes()
-        return out
+            if st.stageId() not in self._seen:
+                yield {"stage": st.stageId(), "tasks": st.numCompleteTasks(),
+                       "run_s": st.executorRunTime() / 1e3,
+                       "cpu_s": st.executorCpuTime() / 1e9,
+                       **{k: getattr(st, f)() for k, f in _BYTES.items()},
+                       "name": str(st.name())}
+
+    def delta(self) -> dict[str, int]:
+        rows = list(self.stage_rows())
+        return {k: sum(r[k] for r in rows) for k in _BYTES}

@@ -21,6 +21,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import EngineConfig, SamplingConfig
+from ..operators.cache import attach_cached, cached_deps
 from ..operators.contingency import contingency_llr
 from ..operators.drugmap import map_to_chembl
 from ..operators.filters import anti_join_blacklist
@@ -64,12 +65,13 @@ def open_fda_stage1(
         pairs = clean_pairs(reports, drug_list, blacklist)
     # cache_input=True: this pair lineage is a raw-JSON flatten (explode x2 +
     # anti-join + synonym join) — recomputing it four times dwarfs the cache.
-    stage1 = contingency_llr(pairs, cache_input=True)
+    table = contingency_llr(pairs, cache_input=True)
     if meddra_pt is not None and meddra_llt is not None:
-        stage1 = add_meddra_codes(stage1, meddra_pt, meddra_llt)
+        stage1 = add_meddra_codes(table, meddra_pt, meddra_llt)
     else:
-        stage1 = stub_meddra_code(stage1)
-    return stage1
+        stage1 = stub_meddra_code(table)
+    # the MedDRA step returns a new DataFrame: carry the pair-table handle
+    return attach_cached(stage1, *cached_deps(table))
 
 
 def stratified_sampling_outputs(
@@ -148,15 +150,16 @@ def run(spark: SparkSession, config: EngineConfig) -> DataFrame:
                 list(fda.outputs),
                 f"{fda.output_path}/sampled_raw_reports",
             )
-    # stage1's cache is only consumed inside this function (critvals +
-    # the stage-2 join + the agg_by_chembl write); result stays persisted
-    # for the caller and carries its handle for caller-owned cleanup
-    # (operators/cache.py contract).
-    if fda.output_path:
-        stage1.unpersist()
-    from ..operators.cache import attach_cached
-
+    # stage1's cache and the pair table under it feed only this function
+    # (critvals + the stage-2 join + the agg_by_chembl write): released here
+    # once the outputs are written, else attached to result.  result stays
+    # persisted for the caller and carries its own handle for caller-owned
+    # cleanup (operators/cache.py contract).
+    stage1_caches = [stage1, *cached_deps(stage1)]
     attach_cached(result, result)
-    if not fda.output_path:
-        attach_cached(result, stage1)
+    if fda.output_path:
+        for h in stage1_caches:
+            h.unpersist()
+    else:
+        attach_cached(result, *stage1_caches)
     return result

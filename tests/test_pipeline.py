@@ -270,6 +270,39 @@ def test_run_without_sampling_writes_no_side_outputs(spark, fixture_paths, tmp_p
     assert not Path(f"{out}/sampled_raw_reports").exists()
 
 
+@pytest.mark.parametrize("write", [True, False], ids=["output_path", "no_output"])
+def test_run_then_unpersist_cached_leaves_sql_cache_empty(spark, fixture_paths, tmp_path, write):
+    """Caller-owned cache lifetime (operators/cache.py) for the whole
+    pipeline: after ``run`` and ``unpersist_cached(result)`` nothing the
+    run persisted stays cached — including contingency_llr's pair table,
+    which must survive the MedDRA step that replaces stage 1."""
+    from platform_etl_openfda_faers_spark.config import (
+        EngineConfig,
+        FdaConfig,
+        MonteCarloConfig,
+    )
+    from platform_etl_openfda_faers_spark.operators.cache import unpersist_cached
+    from platform_etl_openfda_faers_spark.plans import pipeline
+
+    reports_path, drugs_path, blacklist_path = fixture_paths
+    cfg = EngineConfig(
+        fda=FdaConfig(
+            fda_data=reports_path,
+            chembl_drugs=drugs_path,
+            blacklist=blacklist_path,
+            outputs=("parquet",),
+            output_path=str(tmp_path / "out") if write else "",
+            montecarlo=MonteCarloConfig(permutations=50),
+        )
+    )
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    result = pipeline.run(spark, cfg)
+    result.count()
+    unpersist_cached(result)
+    assert cache.isEmpty()
+
+
 def test_merge_upsert_null_update_and_delete(spark):
     """MERGE edge semantics: a matched source row with NULL in a value
     column must overwrite (not resurrect the target value); matched rows

@@ -112,7 +112,10 @@ def _run_bytes(spark, df) -> dict:
     m = StageMetrics(spark)
     m.snapshot()
     df.write.format("noop").mode("overwrite").save()
-    return m.delta()
+    delta, rows = m.delta(), list(m.stage_rows())
+    # delta() is exactly the byte sum of the per-stage rows
+    assert rows and delta == {k: sum(r[k] for r in rows) for k in delta}, (delta, rows)
+    return delta
 
 
 def test_runtime_map_only_stage_moves_zero_shuffle_bytes(spark, sf_dir):

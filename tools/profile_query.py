@@ -1,16 +1,27 @@
-"""Per-stage task-time breakdown for one registry query (r6 VERDICT #4).
+"""Layered profile of registry queries: construction, jobs, stages.
 
-Runs a query once (noop sink) and prints every stage that executed with
-its task count, executor run/CPU time, shuffle read/write, spill, and
-input bytes — the data to decide whether a super-linear WALL ratio is a
-scale-killer (bytes blowing up) or a dense-but-linear CPU cost (bytes
-linear, executor time concentrated in one aggregate stage).
+For each query it prints
+- plan construction alone (``fn(spark, sf_dir)``, no action): seconds and
+  py4j ``send_command`` round trips, counted by cProfile — serial driver
+  latency a cluster pays identically;
+- the second, warm run (construction + noop sink): its Spark job count
+  and wall — at sf0.1 the ~0.1-0.15 s driver cost per job is the local
+  floor;
+- that run's per-stage table from ``plans.metrics.StageMetrics``: tasks,
+  executor run/CPU time, shuffle read/write, spill and input bytes.
 
-Usage: python tools/profile_query.py QUERY [sf_dir] [--partitions N]
+With no query named it profiles the headline lists and ends with a
+jobs-descending summary.  Runs on ``local[<cores>]``.
+
+Usage: python tools/profile_query.py [QUERY ...] --sf SF_DIR [--partitions N]
 """
 
 from __future__ import annotations
 
+import argparse
+import cProfile
+import os
+import pstats
 import sys
 import time
 from pathlib import Path
@@ -18,74 +29,89 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from platform_etl_openfda_faers_spark.plans import benchmarks  # noqa: E402
+from platform_etl_openfda_faers_spark.plans.metrics import StageMetrics  # noqa: E402
 from platform_etl_openfda_faers_spark.session import get_spark  # noqa: E402
 
 
+def release(spark) -> None:
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()
+
+
+def construct(fn, spark, sf_dir):
+    """``fn(spark, sf_dir)`` under cProfile -> (df, seconds, py4j trips)."""
+    prof = cProfile.Profile()
+    t0 = time.monotonic()
+    prof.enable()
+    df = fn(spark, sf_dir)
+    prof.disable()
+    wall = time.monotonic() - t0
+    stats = pstats.Stats(prof).stats
+    return df, wall, sum(c[0] for key, c in stats.items() if "send_command" in key[2])
+
+
 def main() -> None:
-    args = sys.argv[1:]
-    parts = "32"
-    if "--partitions" in args:
-        i = args.index("--partitions")
-        parts = args[i + 1]
-        del args[i : i + 2]
-    name = args[0]
-    sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
-    spark = get_spark(
-        "profile",
-        master="local[32]",
-        conf={
-            "spark.sql.shuffle.partitions": parts,
-            "spark.ui.enabled": "false",
-            "spark.driver.memory": "16g",
-        },
-    )
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("queries", nargs="*", metavar="QUERY")
+    ap.add_argument("--sf", required=True, metavar="SF_DIR",
+                    help="scale-factor directory (see TESTDATA.md)")
+    ap.add_argument("--partitions", help="spark.sql.shuffle.partitions")
+    args = ap.parse_args()
+    names = args.queries or [
+        *benchmarks.HEADLINE,
+        *benchmarks.HEADLINE_V2_EXTRA,
+        *benchmarks.HEADLINE_V3_EXTRA,
+        *benchmarks.HEADLINE_V4_EXTRA,
+    ]
+    unknown = [n for n in names if n not in benchmarks.SPARK_QUERIES]
+    if unknown:
+        ap.error(f"unknown query: {' '.join(unknown)}")
+    conf = {"spark.ui.enabled": "false"}
+    if args.partitions:
+        conf["spark.sql.shuffle.partitions"] = args.partitions
+    spark = get_spark("profile-query", master=f"local[{os.cpu_count() or 1}]", conf=conf)
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    jvm = sc._jvm
-    quant = sc._gateway.new_array(jvm.double, 0)
+    sc, metrics = spark.sparkContext, StageMetrics(spark)
+    # warm the session (parquet footers, first JVM touches) so the first
+    # profiled construction is not charged for them
+    benchmarks.SPARK_QUERIES[names[0]](spark, args.sf)
+    release(spark)
 
-    def stages():
-        empty = jvm.java.util.ArrayList()
-        it = store.stageList(empty, False, False, quant, empty).iterator()
-        while it.hasNext():
-            yield it.next()
+    summary = []
+    for name in names:
+        fn = benchmarks.SPARK_QUERIES[name]
+        df, construct_s, trips = construct(fn, spark, args.sf)
+        df.write.format("noop").mode("overwrite").save()  # warm-up run
+        release(spark)
+        group = f"profile/{name}"
+        sc.setJobGroup(group, group)
+        metrics.snapshot()
+        t0 = time.monotonic()
+        fn(spark, args.sf).write.format("noop").mode("overwrite").save()
+        wall = time.monotonic() - t0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        rows = sorted(metrics.stage_rows(), key=lambda r: -r["run_s"])
+        release(spark)
+        summary.append((jobs, wall, name))
 
-    seen = {st.stageId() for st in stages()}
-    t0 = time.time()
-    benchmarks.SPARK_QUERIES[name](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    wall = time.time() - t0
+        print(f"\n{name} @ {args.sf}  construct {construct_s:.3f}s  "
+              f"py4j send_command {trips}  jobs {jobs}  warm {wall:.2f}s")
+        print(f"{'stage':>5} {'tasks':>5} {'run_s':>8} {'cpu_s':>8} {'shR_MB':>8} "
+              f"{'shW_MB':>8} {'spill':>6} {'in_MB':>8}  name")
+        for r in rows:
+            print(f"{r['stage']:>5} {r['tasks']:>5} {r['run_s']:>8.1f} {r['cpu_s']:>8.1f} "
+                  f"{r['shuffle_read'] / 1e6:>8.1f} {r['shuffle_write'] / 1e6:>8.1f} "
+                  f"{(r['spill_disk'] + r['spill_mem']) / 1e6:>6.0f} "
+                  f"{r['input_bytes'] / 1e6:>8.1f}  {r['name'][:60]}")
+        print(f"total executor run {sum(r['run_s'] for r in rows):.1f}s  "
+              f"cpu {sum(r['cpu_s'] for r in rows):.1f}s  stages {len(rows)}", flush=True)
 
-    rows = []
-    for st in stages():
-        if st.stageId() in seen:
-            continue
-        rows.append(
-            (
-                st.stageId(),
-                st.numCompleteTasks(),
-                st.executorRunTime() / 1e3,
-                st.executorCpuTime() / 1e9,
-                st.shuffleReadBytes() / 1e6,
-                st.shuffleWriteBytes() / 1e6,
-                (st.memoryBytesSpilled() + st.diskBytesSpilled()) / 1e6,
-                st.inputBytes() / 1e6,
-                str(st.name())[:60],
-            )
-        )
-    rows.sort(key=lambda r: -r[2])
-    print(f"\n{name} @ {sf_dir}  wall={wall:.2f}s  shuffle.partitions={parts}")
-    print(f"{'stage':>5} {'tasks':>5} {'run_s':>8} {'cpu_s':>8} "
-          f"{'shR_MB':>8} {'shW_MB':>8} {'spill':>6} {'in_MB':>8}  name")
-    for r in rows:
-        print(f"{r[0]:>5} {r[1]:>5} {r[2]:>8.1f} {r[3]:>8.1f} "
-              f"{r[4]:>8.1f} {r[5]:>8.1f} {r[6]:>6.0f} {r[7]:>8.1f}  {r[8]}")
-    tot_run = sum(r[2] for r in rows)
-    tot_cpu = sum(r[3] for r in rows)
-    print(f"total executor run {tot_run:.1f}s  cpu {tot_cpu:.1f}s  "
-          f"wall {wall:.2f}s  (32 cores => ideal wall ~{tot_run / 32:.2f}s)")
+    if len(summary) > 1:
+        print("\n== jobs-descending ==")
+        for jobs, wall, name in sorted(summary, reverse=True):
+            print(f"{name:35s} jobs {jobs:4d}  warm {wall:6.2f}s")
 
 
 if __name__ == "__main__":
