@@ -49,26 +49,9 @@ def punct_count(c: Column) -> Column:
     return F.length(c) - F.length(F.regexp_replace(c, r"[.,;:!?]", ""))
 
 
-def quality_features(c: Column) -> dict[str, Column]:
-    """Quality-scoring feature set: lengths, ratios (all codegen exprs)."""
-    toks = tokens(c)
-    n_tok = F.size(toks)
-    n_char = F.length(c)
-    return {
-        "n_chars": n_char,
-        "n_tokens": n_tok,
-        "mean_token_len": (
-            F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-            / n_tok
-        ),
-        "punct_ratio": punct_count(c) / n_char,
-        "stopword_ratio": stopword_hits(toks, "en") / n_tok,
-    }
-
-
 # Frozen model-scored quality gate (the standard classifier-filter stage
 # of a training-data pipeline, in oracle-able form): a published-style
-# logistic regression over the quality_features signals, with every
+# logistic regression over length / punctuation / stopword signals, with every
 # feature and the dot product held in EXACT INTEGER micro-units so the
 # gate itself (logit >= threshold) is hash-exact across engines; the
 # only float op is the final display sigmoid (one division + one exp,
@@ -98,10 +81,11 @@ def _idiv(a: Column, b: Column) -> Column:
 
 
 def quality_feature_ints(c: Column) -> dict[str, Column]:
-    """The quality_features signals recast as EXACT-INTEGER columns (the
-    form the frozen-weight gate consumes): same tokenization, same punct
-    class, same stopword list — ratios become permille / centi units via
-    integer division, so both engines agree bit-for-bit."""
+    """Quality signals as EXACT-INTEGER columns (the form the
+    frozen-weight gate consumes): ``tokens`` tokenization, the
+    ``punct_count`` class, the English stopword list — ratios become
+    permille / centi units via integer division, so both engines agree
+    bit-for-bit."""
     toks = tokens(c)
     n_tok = F.size(toks).cast("long")  # >= 1: split('') is ['']
     n_char = F.length(c).cast("long")

@@ -167,16 +167,14 @@ def prune_df_join(
     Fully plan-side — no driver action, no hot-key cardinality limit.  The
     frequency aggregate and the filter join both hash-partition on ``key``,
     the same partitioning the downstream candidate self-join needs, so the
-    exchanges line up.  Measured 1.6x faster than the ``hot_keys`` collect
-    route at sf0.1, which pays an extra full index materialization to make
-    the prune map-only.  NOTE (r8): this form consumes ``index`` twice —
-    when the lineage contains a persisted node, exchange reuse fails to
-    collapse the duplicate and the index derives twice; prefer
+    exchanges line up.  Measured 1.6x faster at sf0.1 than collecting the
+    hot keys to the driver, which pays an extra full index materialization
+    to make the prune map-only.  NOTE (r8): this form consumes ``index``
+    twice — when the lineage contains a persisted node, exchange reuse
+    fails to collapse the duplicate and the index derives twice; prefer
     ``prune_df_window`` (single derivation, output pre-partitioned on the
     key) unless you need drop-NULL-keys join semantics or a plan without a
-    sort.  ``hot_keys`` remains for callers
-    that need the hot list itself (e.g. row-local ``array_except`` pruning
-    of per-doc arrays) or a guaranteed shuffle-free filter.
+    sort.
 
     NULL-key semantics: the inner join DROPS NULL-key rows, while
     ``prune_df_above``'s anti-join KEEPS them (NULL matches nothing).  A
@@ -235,33 +233,6 @@ def prune_df_window(
         .where(F.col(cnt) <= max_doc_freq)
         .drop(cnt)
     )
-
-
-def hot_keys(
-    index: DataFrame, key: str, max_doc_freq: int, limit: int = 100_000
-) -> list:
-    """Collect the inverted-index keys whose document frequency exceeds the
-    cap — the SMALL side of hot-shingle pruning (hot keys are degenerate by
-    definition: each one's df exceeds the cap, so their count is bounded by
-    |index| / cap).  The returned list inlines as a literal IN-filter /
-    array_except argument — a map-only prune with NO anti-join shuffle.
-    ``limit`` guards the driver: more hot keys than that means the cap is
-    far too low for the corpus — fail loudly rather than collect unbounded.
-    """
-    rows = (
-        index.groupBy(key)
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") > max_doc_freq)
-        .select(key)
-        .limit(limit + 1)
-        .collect()
-    )
-    if len(rows) > limit:
-        raise ValueError(
-            f"more than {limit} keys exceed df={max_doc_freq}; raise the cap "
-            "or use prune_df_above (anti-join variant) instead"
-        )
-    return [r[0] for r in rows]
 
 
 def jaccard_pairs(
@@ -1985,7 +1956,6 @@ def jaccard_pairs_prefix(
     id_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    share_stages: bool = True,
 ) -> DataFrame:
     """Exact Jaccard-join with PREFIX FILTERING (AllPairs/PPJoin family) —
     the scale path for high thresholds.
@@ -2018,8 +1988,7 @@ def jaccard_pairs_prefix(
     threshold.  Ties in document frequency are broken by the token string,
     so prefixes are deterministic.
 
-    ``share_stages`` (default on) persists the two many-consumer
-    intermediates MEMORY_AND_DISK: the shingle-array table (consumed by the
+    Two many-consumer intermediates persist MEMORY_AND_DISK: the shingle-array table (consumed by the
     index chain and both verify sides — without it the corpus is
     re-tokenized per consumer, ~6 passes end-to-end) and the pruned prefix
     table (both self-join sides, each otherwise re-running the freq join +
@@ -2036,9 +2005,9 @@ def jaccard_pairs_prefix(
 
     # set_size rides along row-locally through the explode — no join back
     # to a per-doc table (which would not broadcast at corpus scale)
-    arr = docs.select(F.col(id_col), shingle_array(F.col(text_col), n).alias("_arr"))
-    if share_stages:
-        arr = arr.persist(StorageLevel.MEMORY_AND_DISK)
+    arr = docs.select(
+        F.col(id_col), shingle_array(F.col(text_col), n).alias("_arr")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     index = arr.select(
         F.col(id_col),
         F.size("_arr").alias("set_size"),
@@ -2070,9 +2039,8 @@ def jaccard_pairs_prefix(
             + 1
         )
         .select(F.col(id_col), "token")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if share_stages:
-        prefix = prefix.persist(StorageLevel.MEMORY_AND_DISK)
     a = prefix.toDF("id_a", "token")
     b = prefix.toDF("id_b", "token")
     cands = (
@@ -2081,14 +2049,9 @@ def jaccard_pairs_prefix(
         .select("id_a", "id_b")
         .distinct()
     )
-    verified = jaccard_verify_arrays(
-        cands, docs, text_col, id_col, n=n,
-        arrays=arr if share_stages else None,
-    )
+    verified = jaccard_verify_arrays(cands, docs, text_col, id_col, n=n, arrays=arr)
     out = verified.where(F.col("jaccard") >= threshold)
     from .cache import attach_cached, cached_deps
 
-    attach_cached(out, *cached_deps(verified))
-    if share_stages:
-        attach_cached(out, arr, prefix)
+    attach_cached(out, *cached_deps(verified), arr, prefix)
     return out

@@ -34,10 +34,3 @@ def anti_join_blacklist(
 def finite_metric(c: Column) -> Column:
     """``c IS NOT NULL AND NOT isnan(c)`` — P7 (OpenFdaEtl.scala:157)."""
     return c.isNotNull() & ~F.isnan(c)
-
-
-def significant_llr(df: DataFrame, llr_col: str = "llr", critval_col: str = "critval") -> DataFrame:
-    """Keep pairs whose LLR beats the Monte-Carlo critical value (P8)."""
-    return df.where(
-        (F.col(llr_col) > F.col(critval_col)) & (F.col(critval_col) > 0)
-    )

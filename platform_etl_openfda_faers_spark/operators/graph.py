@@ -23,8 +23,11 @@ N-round lineage is quadratic; checkpointing keeps each round O(1)).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .cache import attach_cached
 
 
 def connected_components(
@@ -253,8 +256,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 3,
     damping: float = 0.85,
-    cache_edges: bool = True,
-    checkpoint_every: int = 0,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list — the second
     iterative-algorithm pattern in this engine (after Lloyd k-means):
@@ -273,55 +274,41 @@ def pagerank(
     Plan shape at scale: per iteration one join of edges to ranks on src
     (+ a broadcast-sized outdeg join), one hash aggregate on dst, one
     left join back to the node list; N rides a 1-row lazy-scalar
-    broadcast.  ``iterations`` is fixed so the whole run is one lazy DAG;
-    ``checkpoint_every=k`` truncates lineage with a ``localCheckpoint``
-    every k iterations (value-neutral — ranks are already rounded, so
-    the checkpointed values ARE the iteration's values) to keep plan
-    size bounded for deep iteration counts.  Measured at sf0.1
-    (16k-node purchase graph): checkpointing is SLOWER on wall time
+    broadcast.  ``iterations`` is fixed so the whole run is one lazy DAG,
+    never checkpointed: measured at sf0.1 (16k-node purchase graph), a
+    ``localCheckpoint`` every few iterations was SLOWER on wall time
     (10 iter: 3.0s vs 9.4s; 40 iter: 8.0s vs 29.2s) because each eager
-    checkpoint materializes ranks that the single lazy DAG never needs
-    to — so the default stays 0.  Flip it on when (a) the analyzed plan
-    itself becomes the bottleneck (hundreds of iterations — the
-    checkpointed plan stays O(cadence), the plain one grows linearly;
-    pytest-verified) or (b) on a real cluster where failure recovery
-    re-deriving a 40-round lineage is worse than the checkpoint writes.
+    checkpoint materializes ranks that the single lazy DAG never needs.
 
-    Cache lifetime: with ``cache_edges=True`` the edge projection and
-    node list persist MEMORY_AND_DISK; the handles are attached to the
+    Cache lifetime: the edge projection and node list persist
+    MEMORY_AND_DISK; the handles are attached to the
     returned DataFrame — after materializing, release them with
     ``operators.cache.unpersist_cached(result)`` (or clear the whole
     session cache between queries, as the bench/correctness runners do).
     """
-    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-    if cache_edges:
-        # every iteration joins against the edge list AND the node list:
-        # without a cache the fixed-iteration lazy DAG re-derives the edge
-        # lineage once per consumer (plan-audited: 44 scans for 3
-        # iterations over a joined edge source).  The 2-column edge
-        # projection is a fraction of the source tables; measured 1.75x
-        # on the purchase-graph query at sf0.1 (9.6s -> 5.5s), ~flat at
-        # sf1 where the distinct-pair set is large enough that caching
-        # trades recompute for (de)serialization — disable for graphs
-        # whose edge list rivals the source volume.
-        from pyspark import StorageLevel
-
-        e = e.persist(StorageLevel.MEMORY_AND_DISK)
+    # every iteration joins against the edge list AND the node list:
+    # without a cache the fixed-iteration lazy DAG re-derives the edge
+    # lineage once per consumer (plan-audited: 44 scans for 3 iterations
+    # over a joined edge source).  The 2-column edge projection is a
+    # fraction of the source tables; measured 1.75x on the purchase-graph
+    # query at sf0.1 (9.6s -> 5.5s), ~flat at sf1 where the distinct-pair
+    # set is large enough that caching trades recompute for
+    # (de)serialization.
+    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     nodes = (
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst")))
         .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if cache_edges:
-        from pyspark import StorageLevel
-
-        nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
     n_tab = nodes.agg(F.count("*").alias("n"))
     outdeg = e.groupBy("_src").agg(F.count("*").alias("outdeg"))
     ranks = nodes.crossJoin(F.broadcast(n_tab)).select(
         "node", F.round(F.lit(1.0) / F.col("n"), 10).alias("rank")
     )
-    for i in range(iterations):
+    for _ in range(iterations):
         contribs = (
             e.join(ranks, e["_src"] == ranks["node"])
             .join(outdeg, "_src")
@@ -345,13 +332,5 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        # lineage truncation for deep runs: the per-iteration rounding
-        # makes the checkpointed values exactly the iteration's values,
-        # so this is a pure plan-size control, never a result change
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
-    if cache_edges:
-        from .cache import attach_cached
-
-        attach_cached(ranks, e, nodes)
+    attach_cached(ranks, e, nodes)
     return ranks

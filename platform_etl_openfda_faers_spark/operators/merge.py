@@ -69,7 +69,6 @@ def snapshot_diff(
     keys: list[str],
     compare_cols: list[str] | None = None,
     change_col: str = "change",
-    include_unchanged: bool = False,
 ) -> DataFrame:
     """CDC between two snapshots of the same table: one row per key whose
     state changed, classified ``insert`` (key only in ``new``), ``delete``
@@ -79,9 +78,9 @@ def snapshot_diff(
 
     Output: keys + ``change_col`` + the non-key columns, carrying the NEW
     side for inserts/updates and the OLD side for deletes (what a
-    downstream MERGE or tombstone writer needs).  ``include_unchanged``
-    opts matched-equal rows in with change = ``unchanged`` (off by
-    default: at snapshot scale the unchanged set IS the table).
+    downstream MERGE or tombstone writer needs).  Matched-equal rows are
+    classified ``unchanged`` and dropped: at snapshot scale the unchanged
+    set IS the table.
 
     ``compare_cols`` defaults to every non-key column (schemas must
     match).  NULL snapshot keys are rejected at execution time via the
@@ -135,10 +134,7 @@ def snapshot_diff(
         cols.append(
             F.when(n_absent, F.col(f"o.{c}")).otherwise(F.col(f"n.{c}")).alias(c)
         )
-    out = joined.select(*cols)
-    if not include_unchanged:
-        out = out.where(F.col(change_col) != "unchanged")
-    return out
+    return joined.select(*cols).where(F.col(change_col) != "unchanged")
 
 
 def apply_changes(
@@ -154,10 +150,10 @@ def apply_changes(
     ``cdc_apply_roundtrip`` value-checks and ``test_pipeline`` pins,
     including NULL->value / value->NULL transitions).
 
-    ``unchanged`` rows (from ``include_unchanged=True``) are harmless
-    no-op upserts.  Any OTHER ``change_col`` value fails loudly via a
-    lazy distributed ``raise_error`` — a misspelled label silently
-    treated as an upsert would corrupt the target.
+    ``unchanged`` rows are harmless no-op upserts.  Any OTHER
+    ``change_col`` value fails loudly via a lazy distributed
+    ``raise_error`` — a misspelled label silently treated as an upsert
+    would corrupt the target.
 
     Scale shape: one full-outer merge join plus one left-anti tombstone
     join, both keyed on ``keys`` — the partitioning is reused between

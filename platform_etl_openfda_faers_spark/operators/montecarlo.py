@@ -162,7 +162,6 @@ def monte_carlo_filter(
     permutations: int = 100,
     percentile: float = 0.95,
     seed: int = 42,
-    meddra_col: str | None = "meddraCode",
     cache_stage1: bool = False,
 ) -> DataFrame:
     """Full stage 2: critvals -> broadcast join back (J5) -> P8 filter ->
@@ -189,8 +188,8 @@ def monte_carlo_filter(
         F.col("llr"),
         F.col("critval"),
     ]
-    if meddra_col is not None and meddra_col in stage1.columns:
-        out_cols.append(F.col(meddra_col))
+    if "meddraCode" in stage1.columns:
+        out_cols.append(F.col("meddraCode"))
     out = (
         stage1.join(F.broadcast(critvals), [drug_col], "inner")
         .where((F.col("llr") > F.col("critval")) & (F.col("critval") > 0))

@@ -4743,20 +4743,15 @@ def audio_landmark_matches_incremental(
     return attach_cached(out, lm)
 
 
-def frame_sample(df: DataFrame, every_n: int = 10, fake: bool = True) -> DataFrame:
+def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
     """Video frame-sampling stub: emits (media_id, frame_idx) rows.
 
     Real frame extraction exists for MJPEG-in-AVI payloads since r8 —
     use :func:`video_frames` (full RIFF walk + per-frame JPEG decode).
-    ``fake=False`` here still raises: this function's contract is
-    payload-length-derived frame counts for arbitrary/opaque codecs
-    (1 frame per 64 bytes, every ``every_n``-th sampled).
+    This function's contract is payload-length-derived frame counts for
+    arbitrary/opaque codecs (1 frame per 64 bytes, every ``every_n``-th
+    sampled).
     """
-    if not fake:
-        raise NotImplementedError(
-            "opaque-codec frame decode not available; MJPEG-in-AVI payloads "
-            "are decodable via video_frames()"
-        )
     n_frames = F.greatest(
         (F.octet_length(F.col("content")) / F.lit(64)).cast("int"), F.lit(1)
     )

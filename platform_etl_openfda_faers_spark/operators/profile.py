@@ -6,11 +6,10 @@ unpivot of the 1-row aggregate, not per-column re-scans (a
 union-of-selects profiler re-reads the table once per column; at 100 TB
 that is the difference between one pass and |columns| passes).
 
-Distinct counts default to ``approx_count_distinct`` (HLL++, map-side
-mergeable — the scale path); ``exact_distinct=True`` switches to exact
-``countDistinct``, which Spark plans via an Expand of |columns| copies —
-fine for profiling samples and small tables, and what the oracle-checked
-query uses so every number is engine-exact.
+Distinct counts are exact ``countDistinct``, which Spark plans via an
+Expand of |columns| copies — fine for profiling samples and small tables,
+and every number is engine-exact, so the oracle-checked query compares
+them directly.
 
 The unpivot is built from TYPED Column expressions (``explode`` of an
 array of per-column structs), never from interpolated SQL strings: the
@@ -39,12 +38,7 @@ def _exact_col(name: str):
     return F.col("`" + name.replace("`", "``") + "`")
 
 
-def profile_table(
-    df: DataFrame,
-    cols: list[str] | None = None,
-    exact_distinct: bool = False,
-    rsd: float = 0.05,
-) -> DataFrame:
+def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Long-format profile: one row per column with
     (col_name, n_rows, n_nulls, n_distinct, min_num, max_num, min_str,
     max_str) — numeric min/max as double, everything else as string,
@@ -62,17 +56,12 @@ def profile_table(
     null_s = F.lit(None).cast("string")
     structs = []
     for i, c in enumerate(cols):
-        nd = (
-            F.countDistinct(_exact_col(c))
-            if exact_distinct
-            else F.approx_count_distinct(_exact_col(c), rsd)
-        )
         aggs.append(
             F.sum(F.when(_exact_col(c).isNull(), 1).otherwise(0))
             .cast("long")
             .alias(f"_nulls_{i}")
         )
-        aggs.append(nd.cast("long").alias(f"_nd_{i}"))
+        aggs.append(F.countDistinct(_exact_col(c)).cast("long").alias(f"_nd_{i}"))
         numeric = dtypes[c].startswith(_NUMERIC_PREFIXES)
         if numeric:
             aggs.append(F.min(_exact_col(c)).cast("double").alias(f"_min_{i}"))

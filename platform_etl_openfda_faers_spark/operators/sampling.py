@@ -162,7 +162,11 @@ def sample_clean_rows(all_clean: DataFrame, sampled_ids: DataFrame, key: str = "
 def sample_raw_reports(
     raw: DataFrame, sampled_clean: DataFrame, report_key: str = "safetyreportid"
 ) -> DataFrame:
-    """Raw reports for the sampled report ids — original fields preserved.
+    """Raw reports for the sampled report ids — fields unchanged.
+
+    From ``pipeline.run`` these are ``load_fda_reports`` rows, so they carry
+    exactly the pinned ``FAERS_SCHEMA`` fields, which is still valid
+    pipeline input.
 
     No broadcast hint: the id list scales with the sampled fraction of the
     corpus (unbounded at 100 TB), unlike the drug-key list in

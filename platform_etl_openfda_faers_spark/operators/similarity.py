@@ -85,62 +85,6 @@ def brute_force_topk(
     )
 
 
-def brute_force_topk_pandas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    score_decimals: int = 6,
-) -> DataFrame:
-    """Arrow/NumPy matmul variant of ``brute_force_topk`` — same results.
-
-    The wide-vector path (>~4k dims) where per-element ``zip_with`` codegen
-    loses to BLAS: the (small) query set is collected and broadcast as a
-    normalized matrix, the corpus streams through ``mapInPandas`` scoring a
-    whole Arrow batch per matmul.  Per-query top-k happens distributed,
-    after the scores exist — only the tiny query matrix ever touches the
-    driver.
-    """
-    q_rows = queries.select(id_col, vec_col).collect()  # query set is small
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    bc = corpus.sparkSession.sparkContext.broadcast((q_ids, q_mat))
-
-    def score_batches(batches):
-        import pandas as pd
-
-        ids, qn = bc.value
-        nq = len(ids)
-        for pdf in batches:
-            c = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            cn = c / np.linalg.norm(c, axis=1, keepdims=True)
-            s = cn @ qn.T  # (batch, nq)
-            nb = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.tile(ids, nb),
-                    "neighbor_id": np.repeat(
-                        pdf[id_col].to_numpy(dtype=np.int64), nq
-                    ),
-                    "score": np.round(s.ravel(), score_decimals),
-                }
-            )
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        score_batches, schema="query_id long, neighbor_id long, score double"
-    ).where(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
-
-
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     """Deterministic Gaussian hyperplanes (shared with tests/oracles)."""
     rng = np.random.default_rng(np.random.SeedSequence([seed, dim, n_planes]))
@@ -600,7 +544,6 @@ def kmeans_centroids(
     k: int = 16,
     iterations: int = 2,
     score_decimals: int = 6,
-    checkpoint_every: int = 0,
 ) -> DataFrame:
     """Deterministic Lloyd k-means over an embedding column, as a purely
     DECLARATIVE composition — no driver-side loop actions, no RNG.
@@ -622,11 +565,7 @@ def kmeans_centroids(
     static DAG the optimizer sees whole, and determinism doesn't hinge on
     a tolerance check.  At 100 TB you would train on a sample (one
     ``hash_sample`` upstream) — the update shuffle is |corpus| x dim rows
-    into k x dim groups per iteration.  ``checkpoint_every=j`` truncates
-    the centroid lineage with a ``localCheckpoint`` every j iterations —
-    value-neutral (centroid means are already rounded, so the
-    checkpointed values ARE the iteration's values), purely a plan-size
-    control for deep iteration counts.
+    into k x dim groups per iteration.
 
     Empty cells simply drop out (their rows vanish from the aggregate) —
     callers get <= k centroids, each an actual cluster mean.
@@ -645,7 +584,7 @@ def kmeans_centroids(
     cent = c.where(F.col("_id") < k).select(
         F.col("_id").alias("cell"), F.col("_v").alias("centroid")
     )
-    for i in range(iterations):
+    for _ in range(iterations):
         assigned = ivf_cells(
             c, cent, "_id", "_v", nprobe=1, score_decimals=score_decimals
         )
@@ -663,8 +602,6 @@ def kmeans_centroids(
             .agg(F.expr("array_sort(collect_list(struct(pos, m)))").alias("_pm"))
             .select("cell", F.expr("_pm.m").alias("centroid"))
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            cent = cent.localCheckpoint(eager=True)
     return cent
 
 

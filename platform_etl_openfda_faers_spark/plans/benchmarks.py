@@ -2439,7 +2439,7 @@ def _quality_logit_sql(text: str = "text", toks: str = "toks") -> str:
 )
 def text_quality_score(spark: SparkSession, sf: str) -> DataFrame:
     """Model-scored quality gate (VERDICT r11 #7): a FROZEN logistic
-    regression over the quality_features signals — the standard
+    regression over length / punctuation / stopword signals — the standard
     classifier-filter stage of a training-data pipeline, in oracle-able
     form.  Every feature and the weight dot product live in EXACT integer
     micro-units (``functions.text.FROZEN_QUALITY_WEIGHTS``; ratios become
@@ -7045,14 +7045,13 @@ def a_profile_orders(spark: SparkSession, sf: str) -> DataFrame:
     nulls / exact distincts / typed min-max off a SINGLE aggregate + stack
     unpivot — one table scan regardless of column count (the union-of-
     selects formulation the oracle uses for clarity would re-scan per
-    column).  Exact distincts here so every number is engine-exact; the
-    operator's scale default is approx_count_distinct (mergeable HLL++)."""
+    column).  Distincts are exact, so every number is engine-exact."""
     from ..operators.profile import profile_table
 
     orders = load_table(spark, sf, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
-    return profile_table(orders, exact_distinct=True)
+    return profile_table(orders)
 
 
 @query(

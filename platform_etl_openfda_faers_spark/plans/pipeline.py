@@ -48,21 +48,14 @@ def clean_pairs(
 
 
 def open_fda_stage1(
-    spark: SparkSession,
-    reports: DataFrame,
-    drug_list: DataFrame,
-    blacklist: DataFrame,
+    pairs: DataFrame,
     meddra_pt: DataFrame | None = None,
     meddra_llt: DataFrame | None = None,
-    pairs: DataFrame | None = None,
 ) -> DataFrame:
-    """Stage 1 ("Unfiltered"): pair stats + llr, MedDRA-enriched if given.
-
-    ``pairs`` lets the composer pass precomputed cleaned pairs so the
-    sampling side output shares the lineage instead of re-flattening.
+    """Stage 1 ("Unfiltered"): pair stats + llr over the ``clean_pairs``
+    output, MedDRA-enriched if given.  The composer passes the same pairs
+    to the sampling side output, so the reports are flattened once.
     """
-    if pairs is None:
-        pairs = clean_pairs(reports, drug_list, blacklist)
     # cache_input=True: this pair lineage is a raw-JSON flatten (explode x2 +
     # anti-join + synonym join) — recomputing it four times dwarfs the cache.
     table = contingency_llr(pairs, cache_input=True)
@@ -85,10 +78,12 @@ def stratified_sampling_outputs(
 
     Sample ``fraction`` of significant ChEMBL ids and ``fraction`` of all
     cleaned ids, full-outer-merge the key sets (J6), pull every cleaned row
-    for those ids (J7), then the raw reports for the sampled report ids —
-    with ORIGINAL fields preserved (quirk #4: the reference stamps
-    ``seriousnessdeath = 1`` onto every sampled report, which would make the
-    sample unusable as pipeline input).
+    for those ids (J7), then the raw reports for the sampled report ids.
+    Those are unchanged ``load_fda_reports`` rows, whose ``patient`` struct
+    holds exactly the pinned ``readers.FAERS_SCHEMA`` fields — every field
+    the flatten reads — so the sample is still valid pipeline input (quirk
+    #4: the reference stamps ``seriousnessdeath = 1`` onto every sampled
+    report, which would make it unusable as pipeline input).
 
     Returns (sampled_clean, sampled_raw).
     """
@@ -116,9 +111,9 @@ def run(spark: SparkSession, config: EngineConfig) -> DataFrame:
         )
 
     pairs = clean_pairs(reports, drug_list, blacklist)
-    stage1 = open_fda_stage1(
-        spark, reports, drug_list, blacklist, meddra_pt, meddra_llt, pairs=pairs
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    stage1 = open_fda_stage1(pairs, meddra_pt, meddra_llt).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
     result = monte_carlo_filter(
         stage1,

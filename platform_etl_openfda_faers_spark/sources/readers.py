@@ -1,14 +1,14 @@
 """Source readers (reference: ``utils/Loaders.scala``).
 
 Every reader narrows to the needed columns immediately after the scan
-(manual column pruning — Catalyst prunes anyway, but for schema-inferred JSON
-the narrow ``select`` also keeps inference/driver costs bounded) and applies
-name normalization at the edge so downstream operators see a stable schema.
+(manual column pruning) and applies name normalization at the edge so
+downstream operators see a stable schema.
 
-Scale notes: JSON schema inference samples the input; on a 100 TB corpus pass
-an explicit ``schema`` (the reference never does — we make it optional).
-Blacklist/MedDRA tables are tiny and are meant to be broadcast by their
-consumers.
+Scale notes: FAERS reports are always read with the pinned ``FAERS_SCHEMA``.
+The reference infers the schema (``utils/Loaders.scala:38``), which costs one
+extra job that reads the whole input (~130 GB in production) on every run;
+the pinned read submits no job at plan time.  Blacklist/MedDRA tables are
+tiny and are meant to be broadcast by their consumers.
 """
 
 from __future__ import annotations
@@ -19,8 +19,9 @@ from pyspark.sql import types as T
 
 from ..functions.normalize import normalize_term
 
-# Minimal FAERS report schema for schema-enforced reads (optional; the
-# reference always infers — utils/Loaders.scala:38).
+# The FAERS report fields the pipeline reads; ``load_fda_reports`` always
+# reads with it (the reference infers instead — utils/Loaders.scala:38).  A
+# field absent from every record reads as null rather than failing analysis.
 FAERS_SCHEMA = T.StructType(
     [
         T.StructField("safetyreportid", T.StringType()),
@@ -80,25 +81,16 @@ FAERS_SCHEMA = T.StructType(
 )
 
 
-def load_fda_reports(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    mode: str = "PERMISSIVE",
-) -> DataFrame:
+def load_fda_reports(spark: SparkSession, path: str) -> DataFrame:
     """Raw FAERS JSONL -> narrow report projection.
 
-    Reference: ``utils/Loaders.scala:34-46`` (S1 + P1): schema-inferred JSON
-    read, then ``selectExpr`` pulling nested paths with renames.
-
-    ``mode``: ``PERMISSIVE`` (default — malformed lines become null-field
-    rows, filtered downstream by the P6 null guards, so one bad record never
-    kills a 100 TB ingest), ``DROPMALFORMED``, or ``FAILFAST``.
+    Reference: ``utils/Loaders.scala:34-46`` (S1 + P1): JSON read, then
+    ``selectExpr`` pulling nested paths with renames.  Reads with the pinned
+    ``FAERS_SCHEMA`` in PERMISSIVE mode: a malformed line becomes a
+    null-field row that the P6 null guards filter downstream, so one bad
+    record never kills a 100 TB ingest.
     """
-    reader = spark.read.option("mode", mode)
-    if schema is not None:
-        reader = reader.schema(schema)
-    raw = reader.json(path)
+    raw = spark.read.option("mode", "PERMISSIVE").schema(FAERS_SCHEMA).json(path)
     return raw.select(
         F.col("safetyreportid"),
         F.col("serious"),
@@ -195,15 +187,16 @@ def load_meddra_low_level_terms(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def scale_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def scale_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition a *narrow* scan so downstream fan-out
     (explode / UDF) parallelizes.
 
     Small files scan as a single input split (``maxPartitionBytes``), which
     serializes every per-row transform that follows — a 32-core local run
     executes a shingle explode on one core.  Only repartitions when the scan
-    has fewer partitions than the target (cluster-scale inputs with many
-    splits pass through untouched, so this is safe to leave in at 100 TB).
+    has fewer partitions than ``defaultParallelism`` (cluster-scale inputs
+    with many splits pass through untouched, so this is safe to leave in at
+    100 TB).
 
     CAVEAT (measured, r15 sf30 probe): the guard counts BYTE-RANGE
     splits, which overestimate effective parallelism when the file's
@@ -216,7 +209,7 @@ def scale_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     would cost a footer read per file per query, which at 100 TB /
     millions of files is exactly the metadata storm this engine avoids.
     """
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

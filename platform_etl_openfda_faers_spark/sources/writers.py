@@ -7,6 +7,7 @@ name then ignores it and writes to the bare output root
 Scale notes: ``coalesce(1)`` single-file CSV is kept only as an explicit
 opt-in (the reference itself documents it as "very slow",
 ``reference.conf:20-22``); Parquet/JSON write many parts in parallel.
+Every writer overwrites its target.
 """
 
 from __future__ import annotations
@@ -16,17 +17,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_parquet(df: DataFrame, path: str) -> None:
     """S5 — ``utils/Writers.scala:27-31,45-48``."""
-    df.write.mode(mode).parquet(path)
+    df.write.mode("overwrite").parquet(path)
 
 
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_json(df: DataFrame, path: str) -> None:
     """S6 — ``utils/Writers.scala:23-26,41-44`` (many-part JSONL, parallel)."""
-    df.write.mode(mode).json(path)
+    df.write.mode("overwrite").json(path)
 
 
-def write_csv_single_file(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_csv_single_file(df: DataFrame, path: str) -> None:
     """S7 — ``utils/Writers.scala:14-21``: gzip'd single-file CSV with header.
 
     CSV holds only flat values, so struct, array and map columns (the raw
@@ -41,19 +42,14 @@ def write_csv_single_file(df: DataFrame, path: str, mode: str = "overwrite") -> 
     ])
     (
         flat.coalesce(1)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .option("compression", "gzip")
         .option("header", True)
         .csv(path)
     )
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-) -> None:
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
     """Hive-style partitioned parquet (``path/col=value/...`` directories).
 
     The read-side payoff is PARTITION PRUNING: an equality/range filter on a
@@ -64,7 +60,7 @@ def write_partitioned(
     (date, region), keep cardinality low (directories = cross product),
     and bucket WITHIN partitions for join co-location.
     """
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def cluster_for_partitioned_write(
@@ -112,8 +108,6 @@ def write_bucketed(
     table: str,
     bucket_col: str,
     num_buckets: int = 32,
-    sort: bool = True,
-    mode: str = "overwrite",
 ) -> None:
     """Persist as a bucketed (and bucket-sorted) managed table.
 
@@ -123,10 +117,13 @@ def write_bucketed(
     tests).  The scale pattern for repeatedly-joined fact tables: pay the
     shuffle once at ingest instead of per query.
     """
-    w = df.write.mode(mode).format("parquet").bucketBy(num_buckets, bucket_col)
-    if sort:
-        w = w.sortBy(bucket_col)
-    w.saveAsTable(table)
+    (
+        df.write.mode("overwrite")
+        .format("parquet")
+        .bucketBy(num_buckets, bucket_col)
+        .sortBy(bucket_col)
+        .saveAsTable(table)
+    )
 
 
 def write_outputs(df: DataFrame, formats: list[str], path: str) -> None:
@@ -145,12 +142,11 @@ def write_outputs(df: DataFrame, formats: list[str], path: str) -> None:
 def write_orc(
     df: DataFrame,
     path: str,
-    mode: str = "overwrite",
     partition_cols: list[str] | None = None,
 ) -> None:
     """ORC sink (zlib default), optionally hive-partitioned — same
     pruning/layout guidance as ``write_partitioned``."""
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if partition_cols:
         w = w.partitionBy(*partition_cols)
     w.orc(path)

@@ -279,16 +279,18 @@ def test_interval_join_pre_epoch_timestamps(spark):
 
 def test_pagerank_matches_numpy_reference(spark):
     """Fixed-iteration PageRank equals a NumPy power-iteration reference
-    (same no-dangling-redistribution convention, same per-step rounding)."""
+    (same no-dangling-redistribution convention, same per-step rounding);
+    its two cached inputs are attached for release, exactly once."""
+    from platform_etl_openfda_faers_spark.operators.cache import (
+        unpersist_cached,
+    )
     from platform_etl_openfda_faers_spark.operators.graph import pagerank
 
     edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c")]
-    got = {
-        r.node: r.rank
-        for r in pagerank(
-            spark.createDataFrame(edges, ["src", "dst"]), iterations=3
-        ).collect()
-    }
+    ranks = pagerank(spark.createDataFrame(edges, ["src", "dst"]), iterations=3)
+    got = {r.node: r.rank for r in ranks.collect()}
+    assert unpersist_cached(ranks) == 2   # edge projection + node list
+    assert unpersist_cached(ranks) == 0   # second call is a no-op
 
     nodes = sorted({n for e in edges for n in e})
     idx = {n: i for i, n in enumerate(nodes)}
@@ -319,55 +321,3 @@ def test_pagerank_matches_numpy_reference(spark):
     assert got == expect, (got, expect)
     # ranks form a probability-like vector (dangling leak keeps sum <= 1)
     assert 0.5 < sum(got.values()) <= 1.000001
-
-
-def test_pagerank_checkpoint_cadence_value_neutral_and_bounded_plan(spark):
-    """checkpoint_every is a pure lineage-size control: a 20-iteration run
-    checkpointed every 3 rounds returns bit-identical ranks to the
-    un-checkpointed run (per-iteration rounding makes the checkpointed
-    values the iteration's values), and its analyzed plan stays bounded
-    instead of growing linearly with iterations."""
-    from platform_etl_openfda_faers_spark.operators.cache import (
-        unpersist_cached,
-    )
-    from platform_etl_openfda_faers_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c"),
-         ("c", "d"), ("b", "d")],
-        ["src", "dst"],
-    )
-    plain = pagerank(edges, iterations=20, checkpoint_every=0)
-    ckpt = pagerank(edges, iterations=20, checkpoint_every=3)
-    got_plain = {r.node: r.rank for r in plain.collect()}
-    got_ckpt = {r.node: r.rank for r in ckpt.collect()}
-    assert got_plain == got_ckpt
-
-    plan_plain = plain._jdf.queryExecution().analyzed().toString()
-    plan_ckpt = ckpt._jdf.queryExecution().analyzed().toString()
-    # un-checkpointed: 20 iterations of lineage; checkpointed: at most the
-    # last 2 iterations on top of a scan — an order of magnitude smaller
-    assert len(plan_ckpt) < len(plan_plain) / 5, (
-        len(plan_ckpt), len(plan_plain),
-    )
-    assert unpersist_cached(plain) == 2   # edge projection + node list
-    assert unpersist_cached(ckpt) == 2
-    assert unpersist_cached(ckpt) == 0    # second call is a no-op
-
-
-def test_kmeans_checkpoint_cadence_value_neutral(spark):
-    """Same contract for the Lloyd trainer: checkpointed centroids equal
-    the un-checkpointed run exactly."""
-    from platform_etl_openfda_faers_spark.operators.similarity import (
-        kmeans_centroids,
-    )
-
-    rows = [
-        (i, [float((i * 7) % 11) + 1.0, float((i * 5) % 13) + 1.0])
-        for i in range(40)
-    ]
-    corpus = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    plain = kmeans_centroids(corpus, k=4, iterations=6, checkpoint_every=0)
-    ckpt = kmeans_centroids(corpus, k=4, iterations=6, checkpoint_every=2)
-    as_map = lambda df: {r.cell: r.centroid for r in df.collect()}
-    assert as_map(plain) == as_map(ckpt)

@@ -11,7 +11,7 @@ from platform_etl_openfda_faers_spark.operators.drugmap import map_to_chembl
 from platform_etl_openfda_faers_spark.operators.filters import anti_join_blacklist
 from platform_etl_openfda_faers_spark.operators.flatten import explode_reports
 from platform_etl_openfda_faers_spark.operators.montecarlo import monte_carlo_filter
-from platform_etl_openfda_faers_spark.plans.pipeline import open_fda_stage1
+from platform_etl_openfda_faers_spark.plans.pipeline import clean_pairs, open_fda_stage1
 from platform_etl_openfda_faers_spark.sources import readers
 
 from .faers_fixtures import write_fixtures
@@ -111,9 +111,9 @@ def test_contingency_exact_counts_match_duckdb(spark, loaded):
     assert checked > 10
 
 
-def test_llr_nonnegative_and_finite(spark, loaded):
+def test_llr_nonnegative_and_finite(loaded):
     reports, drugs, blacklist = loaded
-    stage1 = open_fda_stage1(spark, reports, drugs, blacklist)
+    stage1 = open_fda_stage1(clean_pairs(reports, drugs, blacklist))
     rows = stage1.collect()
     assert len(rows) > 0
     for r in rows:
@@ -123,9 +123,9 @@ def test_llr_nonnegative_and_finite(spark, loaded):
         assert r.meddraCode == ""
 
 
-def test_monte_carlo_deterministic_and_significant(spark, loaded):
+def test_monte_carlo_deterministic_and_significant(loaded):
     reports, drugs, blacklist = loaded
-    stage1 = open_fda_stage1(spark, reports, drugs, blacklist).cache()
+    stage1 = open_fda_stage1(clean_pairs(reports, drugs, blacklist)).cache()
     out1 = monte_carlo_filter(stage1, permutations=50, percentile=0.95, seed=42)
     out2 = monte_carlo_filter(stage1, permutations=50, percentile=0.95, seed=42)
     rows1 = sorted((r.chembl_id, r.event, r.llr, r.critval) for r in out1.collect())
@@ -425,8 +425,8 @@ def test_scd2_from_log_runs_nulls_and_current_flag(spark):
 
 def test_snapshot_diff_classification_and_null_semantics(spark):
     """CDC diff edge semantics: NULL -> value and value -> NULL are real
-    updates (null-safe comparison), NULL -> NULL is unchanged (excluded by
-    default, classified with include_unchanged), deletes carry the OLD
+    updates (null-safe comparison), NULL -> NULL is unchanged (excluded),
+    deletes carry the OLD
     values, inserts/updates the NEW ones; schema mismatch and NULL keys
     reject."""
     from platform_etl_openfda_faers_spark.operators.merge import snapshot_diff
@@ -446,12 +446,6 @@ def test_snapshot_diff_classification_and_null_semantics(spark):
         5: ("delete", "gone"),  # delete carries the OLD value
         6: ("insert", "fresh"),
     }  # k=1 equal, k=4 NULL->NULL: both unchanged, excluded
-
-    full = {
-        r.k: r.change
-        for r in snapshot_diff(old, new, ["k"], include_unchanged=True).collect()
-    }
-    assert full[1] == "unchanged" and full[4] == "unchanged"
 
     import pytest
 
@@ -484,12 +478,9 @@ def test_apply_changes_roundtrip_law(spark):
         [(1, "a"), (2, "b2"), (3, None), (4, None), (6, "fresh")],
         "k int, v string",
     )
-    for unchanged in (False, True):
-        changes = snapshot_diff(old, new, ["k"], include_unchanged=unchanged)
-        applied = {
-            r.k: r.v for r in apply_changes(old, changes, ["k"]).collect()
-        }
-        assert applied == {r.k: r.v for r in new.collect()}, unchanged
+    changes = snapshot_diff(old, new, ["k"])
+    applied = {r.k: r.v for r in apply_changes(old, changes, ["k"]).collect()}
+    assert applied == {r.k: r.v for r in new.collect()}
 
     import pytest
     from pyspark.sql import functions as F

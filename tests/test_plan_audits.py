@@ -212,7 +212,7 @@ def test_profile_table_single_scan_and_values(spark, sf_dir):
         [(1, 2.5, "a"), (2, None, "b"), (3, 7.5, None), (3, 7.5, "b")],
         ["k", "v", "s"],
     )
-    prof = {r.col_name: r for r in profile_table(df, exact_distinct=True).collect()}
+    prof = {r.col_name: r for r in profile_table(df).collect()}
     assert prof["k"].n_rows == 4 and prof["k"].n_nulls == 0
     assert prof["k"].n_distinct == 3
     assert (prof["k"].min_num, prof["k"].max_num) == (1.0, 3.0)
@@ -221,9 +221,6 @@ def test_profile_table_single_scan_and_values(spark, sf_dir):
     assert prof["s"].n_nulls == 1 and prof["s"].n_distinct == 2
     assert (prof["s"].min_str, prof["s"].max_str) == ("a", "b")
     assert prof["s"].min_num is None
-    # approx mode still produces sane counts (scale default)
-    approx = {r.col_name: r for r in profile_table(df).collect()}
-    assert approx["k"].n_distinct >= 2
     # single scan of the parquet table regardless of column count
     from platform_etl_openfda_faers_spark.sources.readers import load_table
 
@@ -232,7 +229,7 @@ def test_profile_table_single_scan_and_values(spark, sf_dir):
     )
     import re
 
-    plan = plan_of(profile_table(orders, exact_distinct=True))
+    plan = plan_of(profile_table(orders))
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
 
 
@@ -247,7 +244,7 @@ def test_profile_table_non_identifier_column_names(spark):
     data = [(1, "x"), (2, None), (2, "y")]
     names = ["bad col", "it's.a `col`"]
     df = spark.createDataFrame(data).toDF(*names)
-    prof = {r.col_name: r for r in profile_table(df, exact_distinct=True).collect()}
+    prof = {r.col_name: r for r in profile_table(df).collect()}
     assert set(prof) == set(names)
     assert prof["bad col"].n_distinct == 2
     assert prof["bad col"].n_nulls == 0

@@ -60,19 +60,6 @@ def test_cosine_near_duplicates_symmetric_pairs(vecs):
     assert all(a < b for a, b in pairs)
 
 
-def test_pandas_matmul_path_equals_jvm_path(spark, sf_dir):
-    """The Arrow/NumPy matmul top-k must match the zip_with/aggregate path."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") < 8)
-    jvm = similarity.brute_force_topk(emb, queries, k=5)
-    pdu = similarity.brute_force_topk_pandas(emb, queries, k=5)
-    j = {(r.query_id, r.neighbor_id): r.score for r in jvm.collect()}
-    p = {(r.query_id, r.neighbor_id): r.score for r in pdu.collect()}
-    assert set(j) == set(p)
-    for k_ in j:
-        assert abs(j[k_] - p[k_]) <= 1e-6
-
-
 def test_quantize_int8_bounds_and_dequant_error(spark):
     """q in [-127,127]; dequantized q*scale within scale/2 of the input
     per element; zero vectors quantize to scale 0 with all-zero q."""

@@ -97,26 +97,65 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
         spark.sql("DROP DATABASE IF EXISTS bucketdb CASCADE")
 
 
+_GOOD_REPORT = (
+    '{"safetyreportid": "SR1", "serious": "1", "receivedate": "20200101",'
+    ' "primarysource": {"qualification": "1"},'
+    ' "patient": {"reaction": [{"reactionmeddrapt": "headache"}],'
+    ' "drug": [{"medicinalproduct": "aspirin", "drugcharacterization": "1"}]}}'
+)
+
+
 def test_fda_reader_survives_malformed_lines(spark, tmp_path):
-    """One corrupt line must not kill the ingest: PERMISSIVE yields a
-    null-field row (dropped by the P6 guards); DROPMALFORMED drops it."""
+    """One corrupt or truncated line must not kill the ingest: PERMISSIVE
+    yields a null-field row for each (dropped by the P6 guards), and the
+    pinned schema reads the same rows a schema-inferred read does."""
     p = tmp_path / "reports.jsonl"
-    good = (
-        '{"safetyreportid": "SR1", "serious": "1", "receivedate": "20200101",'
-        ' "primarysource": {"qualification": "1"},'
-        ' "patient": {"reaction": [{"reactionmeddrapt": "headache"}],'
-        ' "drug": [{"medicinalproduct": "aspirin", "drugcharacterization": "1"}]}}'
+    truncated = _GOOD_REPORT.replace("SR1", "SR2")[:-30]
+    p.write_text(
+        _GOOD_REPORT + "\n{this is not json\n" + truncated + "\n" + _GOOD_REPORT + "\n"
     )
-    p.write_text(good + "\n{this is not json\n" + good + "\n")
-    permissive = readers.load_fda_reports(
-        spark, str(p), schema=readers.FAERS_SCHEMA
-    )
-    assert permissive.count() == 3
+    permissive = readers.load_fda_reports(spark, str(p))
+    assert permissive.count() == 4
     assert permissive.where(F.col("safetyreportid").isNotNull()).count() == 2
-    dropped = readers.load_fda_reports(
-        spark, str(p), schema=readers.FAERS_SCHEMA, mode="DROPMALFORMED"
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    inferred = spark.read.json(str(p)).select(
+        "safetyreportid", "primarysource.qualification"
     )
-    assert dropped.count() == 2
+    assert rows(permissive.select("safetyreportid", "qualification")) == rows(
+        inferred
+    )
+
+
+def test_fda_reader_tolerates_absent_fields(spark, tmp_path):
+    """A field that no record carries reads as null instead of failing
+    analysis: without ``seriousnessdeath`` a report counts as non-death
+    ('0', stage/OpenFdaEtl.scala:76); without ``primarysource`` its
+    qualification is null, so the P5 filter drops it downstream."""
+    p = tmp_path / "reports.jsonl"
+    bare = _GOOD_REPORT.replace(' "primarysource": {"qualification": "1"},', "")
+    assert "primarysource" not in bare and "seriousnessdeath" not in bare
+    p.write_text(bare + "\n" + bare.replace("SR1", "SR2") + "\n")
+    got = readers.load_fda_reports(spark, str(p)).collect()
+    assert sorted(r.safetyreportid for r in got) == ["SR1", "SR2"]
+    assert {(r.seriousness_death, r.qualification) for r in got} == {("0", None)}
+
+
+def test_fda_reader_submits_no_job_at_plan_time(spark, tmp_path):
+    """Building the FAERS read runs nothing: the schema is pinned, so no
+    inference job scans the input (~130 GB in production)."""
+    p = tmp_path / "reports.jsonl"
+    p.write_text(_GOOD_REPORT + "\n")
+    sc = spark.sparkContext
+    group = "test/load_fda_reports"
+    sc.setJobGroup(group, group)
+    try:
+        readers.load_fda_reports(spark, str(p))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_write_outputs_roundtrip(spark, sf_dir, tmp_path):

@@ -1,9 +1,9 @@
-"""The command-line tools under ``tools/`` stay runnable.
+"""The command-line tools and benchmark scripts stay runnable.
 
-No test imports the tools, so an engine refactor could silently break
-one.  Every ``tools/*.py`` is parsed (not executed) and each engine
-import it makes must resolve; the profiling CLI also gets one end-to-end
-smoke run.
+No test imports ``tools/``, ``faersbench/`` or ``bench.py``, so an engine
+refactor could silently break one.  Every such script is parsed (not
+executed) and each engine import it makes must resolve; the profiling
+CLI also gets one end-to-end smoke run.
 """
 
 import ast
@@ -17,7 +17,9 @@ import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 PKG = "platform_etl_openfda_faers_spark"
-TOOLS = sorted((REPO / "tools").glob("*.py"))
+TOOLS = sorted(
+    [*REPO.glob("tools/*.py"), *REPO.glob("faersbench/*.py"), REPO / "bench.py"]
+)
 
 
 def _engine_bindings(tree: ast.Module):
