@@ -40,11 +40,12 @@ def contingency_llr(
     every consumer is a distinct-count, so Catalyst prunes columns and
     eliminates any upstream ``distinct()`` per consumer — four cheap pruned
     scans beat materializing the full three-column pair set when the
-    lineage is a cheap parquet scan.  Set ``cache_input=True`` when the
-    lineage is genuinely expensive to recompute (multi-table join, raw-JSON
-    flatten).  Measured crossover on the star-schema pairs (4-table join +
-    DISTINCT): caching costs ~9% at sf0.1 but wins 36% at sf1 (15.1s ->
-    9.7s) and the gap grows with scale — the flagship query passes True.
+    lineage is a cheap parquet scan or already persisted (``pipeline.run``
+    persists its pairs).  Set ``cache_input=True`` for an expensive lineage
+    nothing else persists.  Measured crossover on the star-schema pairs
+    (4-table join + DISTINCT): caching costs ~9% at sf0.1 but wins 36% at
+    sf1 (15.1s -> 9.7s) and the gap grows with scale — the flagship query
+    passes True.
 
     Alternative formulation measured and rejected (for now): distinct the
     (report, drug, reaction) set first, then derive A as a plain count and

@@ -169,8 +169,8 @@ def monte_carlo_filter(
 
     ``cache_stage1`` persists the input (the reference does, ETL.scala:27);
     measured at sf0.1 it's a wash for parquet-backed lineages (two pruned
-    parallel scans ~= one cached pass), so it defaults off and the raw-JSON
-    pipeline opts in where recomputing the flatten genuinely hurts.
+    parallel scans ~= one cached pass), so it defaults off; ``pipeline.run``
+    persists stage 1 itself, because its writer reads it too.
 
     Reference: ``stage/MonteCarloSampling.scala:40-57``.
     """

@@ -5,7 +5,8 @@ results and 10% of all cleaned rows, full-outer-merge their ChEMBL id sets,
 pull every cleaned row for those ids, then emit the raw reports for the
 sampled report ids.
 
-Fixes two reference quirks (SURVEY §2.10): #2 — ``sample()`` is seeded here;
+Fixes two reference quirks (SURVEY §2.10): #2 — unseeded ``sample()``
+becomes an md5 bucket of the key (``hash_sample``), the same on any layout;
 #4 — the reference stamps ``seriousnessdeath = lit(1)`` onto every sampled
 raw report, which would make the sample unusable as pipeline input (the
 death filter would drop everything); we preserve original fields.
@@ -47,7 +48,7 @@ def hash_sample(
     state, pushes down to the scan, and re-runs select identical rows.
     Rows with equal keys are kept or dropped together (sample-by-key).
     """
-    return df.where(hash_bucket(F.col(key_col), seed, buckets) < int(fraction * buckets))
+    return df.where(hash_bucket(F.col(key_col), seed, buckets) < round(fraction * buckets))
 
 
 def stratified_hash_sample(
@@ -61,7 +62,7 @@ def stratified_hash_sample(
     """Per-stratum deterministic sample: the bucket is salted with the
     stratum, so each stratum draws an independent ~``fraction`` subset."""
     salted = F.concat_ws("|", F.col(stratum_col).cast("string"), F.col(key_col).cast("string"))
-    return df.where(hash_bucket(salted, seed, buckets) < int(fraction * buckets))
+    return df.where(hash_bucket(salted, seed, buckets) < round(fraction * buckets))
 
 
 def temperature_sample(
@@ -137,13 +138,11 @@ def stratified_sample_ids(
     seed: int = 42,
     key: str = "chembl_id",
 ) -> DataFrame:
-    """Union-of-sampled-key-sets via full-outer join + coalesce (J6)."""
-    a = significant.select(key).distinct().sample(fraction=fraction, seed=seed)
-    b = all_clean.select(key).distinct().sample(fraction=fraction, seed=seed + 1)
+    """J6 — the union of two ``hash_sample`` key sets: ``fraction`` of the
+    significant ids (salt ``seed``) and of all cleaned ids (``seed + 1``)."""
     return (
-        a.withColumnRenamed(key, "a_key")
-        .join(b.withColumnRenamed(key, "b_key"), F.col("a_key") == F.col("b_key"), "full_outer")
-        .select(F.coalesce(F.col("a_key"), F.col("b_key")).alias(key))
+        hash_sample(significant.select(key), key, fraction, seed)
+        .union(hash_sample(all_clean.select(key), key, fraction, seed + 1))
         .distinct()
     )
 

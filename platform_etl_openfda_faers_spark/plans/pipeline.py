@@ -5,14 +5,19 @@ Dataflow (SURVEY §3.2):
 
     load_chembl_drug_list  ─┐
     load_fda_reports ──> explode_reports ──> anti_join_blacklist ──> J2
-        ──> contingency_llr (exact A/B/C/D + llr) ──> meddra codes (or stub)
-        ──> persist  ──┬──> writers ("Unfiltered" stage-1 output)
-                       └──> monte_carlo_filter ──> persist ──> writers
+        ──> persist (cleaned pairs)
+             ├──> contingency_llr (exact A/B/C/D + llr) ──> meddra codes
+             │    (or stub) ──> persist ──┬──> writers ("Unfiltered" stage 1)
+             │                            └──> monte_carlo_filter ──> persist
+             │                                 ──> writers (significant pairs)
+             └──> stratified sample (optional; significant ids + raw
+                  reports) ──> writers
 
-Persist placement mirrors the reference (``stage/OpenFdaEtl.scala:43,47``,
-``ETL.scala:27``): stage-1 feeds both the writers and the MC stage, and the
-MC stage scans its input twice (groupBy + join-back), so both are persisted
-MEMORY_AND_DISK.
+Persist placement (all MEMORY_AND_DISK): the cleaned pairs, a raw-JSON
+flatten that the contingency and the sample both read, so the JSON is parsed
+once for them (the sampled raw reports take one more pass); stage 1, read by
+its writer and the MC stage; and the MC output (reference:
+``stage/OpenFdaEtl.scala:43,47``, ``ETL.scala:27``).
 """
 
 from __future__ import annotations
@@ -21,7 +26,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import EngineConfig, SamplingConfig
-from ..operators.cache import attach_cached, cached_deps
+from ..operators.cache import attach_cached
 from ..operators.contingency import contingency_llr
 from ..operators.drugmap import map_to_chembl
 from ..operators.filters import anti_join_blacklist
@@ -53,18 +58,13 @@ def open_fda_stage1(
     meddra_llt: DataFrame | None = None,
 ) -> DataFrame:
     """Stage 1 ("Unfiltered"): pair stats + llr over the ``clean_pairs``
-    output, MedDRA-enriched if given.  The composer passes the same pairs
-    to the sampling side output, so the reports are flattened once.
+    output, MedDRA-enriched if given.  ``run`` passes the persisted pairs,
+    which the sampling side output reads too.
     """
-    # cache_input=True: this pair lineage is a raw-JSON flatten (explode x2 +
-    # anti-join + synonym join) — recomputing it four times dwarfs the cache.
-    table = contingency_llr(pairs, cache_input=True)
+    table = contingency_llr(pairs)
     if meddra_pt is not None and meddra_llt is not None:
-        stage1 = add_meddra_codes(table, meddra_pt, meddra_llt)
-    else:
-        stage1 = stub_meddra_code(table)
-    # the MedDRA step returns a new DataFrame: carry the pair-table handle
-    return attach_cached(stage1, *cached_deps(table))
+        return add_meddra_codes(table, meddra_pt, meddra_llt)
+    return stub_meddra_code(table)
 
 
 def stratified_sampling_outputs(
@@ -77,8 +77,8 @@ def stratified_sampling_outputs(
     ``stage/OpenFdaEtl.scala:50-53`` -> ``stage/StratifiedSampling.scala:14-41``).
 
     Sample ``fraction`` of significant ChEMBL ids and ``fraction`` of all
-    cleaned ids, full-outer-merge the key sets (J6), pull every cleaned row
-    for those ids (J7), then the raw reports for the sampled report ids.
+    cleaned ids by md5 bucket, union the key sets (J6), pull every cleaned
+    row for those ids (J7), then the raw reports for the sampled report ids.
     Those are unchanged ``load_fda_reports`` rows, whose ``patient`` struct
     holds exactly the pinned ``readers.FAERS_SCHEMA`` fields — every field
     the flatten reads — so the sample is still valid pipeline input (quirk
@@ -110,7 +110,9 @@ def run(spark: SparkSession, config: EngineConfig) -> DataFrame:
             spark, f"{fda.meddra_path}/MedAscii/llt.asc"
         )
 
-    pairs = clean_pairs(reports, drug_list, blacklist)
+    pairs = clean_pairs(reports, drug_list, blacklist).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     stage1 = open_fda_stage1(pairs, meddra_pt, meddra_llt).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -145,12 +147,11 @@ def run(spark: SparkSession, config: EngineConfig) -> DataFrame:
                 list(fda.outputs),
                 f"{fda.output_path}/sampled_raw_reports",
             )
-    # stage1's cache and the pair table under it feed only this function
-    # (critvals + the stage-2 join + the agg_by_chembl write): released here
-    # once the outputs are written, else attached to result.  result stays
-    # persisted for the caller and carries its own handle for caller-owned
-    # cleanup (operators/cache.py contract).
-    stage1_caches = [stage1, *cached_deps(stage1)]
+    # stage1 and the pairs feed only this function: released here once the
+    # outputs are written, else attached to result.  result stays persisted
+    # for the caller and carries its own handle for caller-owned cleanup
+    # (operators/cache.py contract).
+    stage1_caches = [stage1, pairs]
     attach_cached(result, result)
     if fda.output_path:
         for h in stage1_caches:

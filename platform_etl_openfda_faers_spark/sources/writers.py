@@ -137,16 +137,3 @@ def write_outputs(df: DataFrame, formats: list[str], path: str) -> None:
             write_csv_single_file(df, f"{path}/csv")
         else:
             raise ValueError(f"unknown output format: {fmt}")
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str] | None = None,
-) -> None:
-    """ORC sink (zlib default), optionally hive-partitioned — same
-    pruning/layout guidance as ``write_partitioned``."""
-    w = df.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.orc(path)

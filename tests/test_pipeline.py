@@ -2,6 +2,10 @@
 strategy — SURVEY §5 — plus exact-count invariants the reference can't
 assert because of its approx_count_distinct)."""
 
+import hashlib
+from collections import Counter
+from pathlib import Path
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -180,10 +184,9 @@ def test_run_with_sampling_writes_side_outputs(spark, fixture_paths, tmp_path):
             outputs=("parquet",),
             output_path=out,
             montecarlo=MonteCarloConfig(permutations=50),
-            # fraction=1.0: Bernoulli sample keeps every id — deterministic,
-            # so the existence assertions can't flake on a tiny fixture (the
-            # sampler's fractional behavior is covered in
-            # test_sampling_session_ivf.py)
+            # fraction=1.0: every md5 bucket is under the threshold, so the
+            # sample keeps every id (fractional samples are pinned by
+            # test_stratified_sample_is_md5_predicate_and_layout_independent)
             sampling=SamplingConfig(enabled=True, fraction=1.0, seed=42),
         )
     )
@@ -274,8 +277,8 @@ def test_run_without_sampling_writes_no_side_outputs(spark, fixture_paths, tmp_p
 def test_run_then_unpersist_cached_leaves_sql_cache_empty(spark, fixture_paths, tmp_path, write):
     """Caller-owned cache lifetime (operators/cache.py) for the whole
     pipeline: after ``run`` and ``unpersist_cached(result)`` nothing the
-    run persisted stays cached — including contingency_llr's pair table,
-    which must survive the MedDRA step that replaces stage 1."""
+    run persisted stays cached — including the cleaned pair table under
+    stage 1."""
     from platform_etl_openfda_faers_spark.config import (
         EngineConfig,
         FdaConfig,
@@ -301,6 +304,100 @@ def test_run_then_unpersist_cached_leaves_sql_cache_empty(spark, fixture_paths, 
     result.count()
     unpersist_cached(result)
     assert cache.isEmpty()
+
+
+def _bucket(key, seed, buckets=10_000):
+    """Plain-Python replica of ``sampling.hash_bucket``."""
+    return int(hashlib.md5(f"{key}#{seed}".encode()).hexdigest()[:8], 16) % buckets
+
+
+def test_stratified_sample_is_md5_predicate_and_layout_independent(spark, loaded):
+    """The stratified sample is a pure md5 predicate on the ChEMBL id: the
+    same sampled clean rows and raw report ids at 4, 8 and 16 shuffle
+    partitions, and exactly the ids a plain-Python replica of the bucket
+    rule selects — ``bucket(id, seed + 1) < t``, or the id is significant
+    and ``bucket(id, seed) < t``."""
+    from platform_etl_openfda_faers_spark.config import SamplingConfig
+    from platform_etl_openfda_faers_spark.plans.pipeline import (
+        stratified_sampling_outputs,
+    )
+
+    reports, drugs, blacklist = loaded
+    sampling = SamplingConfig(enabled=True, fraction=0.3, seed=42)
+    # the fixture plants no signal, so Monte Carlo finds no significant pair:
+    # stand in two significant ids so that both draws take part
+    sig_ids = {"CHEMBL25", "CHEMBL1201"}
+    significant = spark.createDataFrame([(i,) for i in sig_ids], ["chembl_id"])
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    got = {}
+    try:
+        for n in (4, 8, 16):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            pairs = clean_pairs(reports, drugs, blacklist)
+            clean, raw = stratified_sampling_outputs(
+                reports, pairs, significant, sampling
+            )
+            got[n] = (
+                Counter(clean.collect()),
+                sorted(r.safetyreportid for r in raw.select("safetyreportid").collect()),
+            )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert got[4] == got[8] == got[16]
+
+    clean_rows, raw_ids = got[8]
+    assert clean_rows and raw_ids
+    all_ids = {r.chembl_id for r in pairs.select("chembl_id").distinct().collect()}
+    t = round(sampling.fraction * 10_000)
+    expected = {
+        i for i in all_ids
+        if _bucket(i, sampling.seed + 1) < t
+        or (i in sig_ids and _bucket(i, sampling.seed) < t)
+    }
+    assert {r.chembl_id for r in clean_rows} == expected
+    assert expected < all_ids
+    # the significant-id draw contributes an id the all-id draw misses
+    assert any(_bucket(i, sampling.seed + 1) >= t for i in expected)
+
+
+@pytest.mark.parametrize(
+    "sampling,max_scans", [(True, 2), (False, 1)], ids=["sampling", "no_sampling"]
+)
+def test_run_parses_faers_json_within_scan_budget(
+    spark, fixture_paths, tmp_path, sampling, max_scans
+):
+    """``pipeline.run`` parses the FAERS JSON once for stage 1 (the cleaned
+    pairs are persisted and shared with the sample) and at most once more
+    for the sampled raw reports.  A full scan is a stage whose input bytes
+    reach the JSON file's size."""
+    from platform_etl_openfda_faers_spark.config import (
+        EngineConfig,
+        FdaConfig,
+        MonteCarloConfig,
+        SamplingConfig,
+    )
+    from platform_etl_openfda_faers_spark.operators.cache import unpersist_cached
+    from platform_etl_openfda_faers_spark.plans import pipeline
+    from platform_etl_openfda_faers_spark.plans.metrics import StageMetrics
+
+    reports_path, drugs_path, blacklist_path = fixture_paths
+    cfg = EngineConfig(
+        fda=FdaConfig(
+            fda_data=reports_path,
+            chembl_drugs=drugs_path,
+            blacklist=blacklist_path,
+            outputs=("parquet",),
+            output_path=str(tmp_path / "out"),
+            montecarlo=MonteCarloConfig(permutations=50),
+            sampling=SamplingConfig(enabled=sampling, fraction=0.3),
+        )
+    )
+    metrics = StageMetrics(spark)
+    metrics.snapshot()
+    unpersist_cached(pipeline.run(spark, cfg))
+    size = Path(reports_path).stat().st_size
+    n = sum(r["input_bytes"] >= size for r in metrics.stage_rows())
+    assert 1 <= n <= max_scans
 
 
 def test_merge_upsert_null_update_and_delete(spark):

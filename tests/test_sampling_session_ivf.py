@@ -52,6 +52,30 @@ def test_hash_sample_keys_move_together(spark, sf_dir):
     assert per_key.count() == 0
 
 
+def test_hash_sample_threshold_rounds_fraction(spark):
+    """The bucket threshold is ``round(fraction * buckets)``: 0.57 * 10_000
+    is 5699.999..., which truncation cuts to 5699, dropping every key in
+    bucket 5699 (key 9524, and stratum 4 / key 15651, at seed 42).  Both
+    samplers select exactly the keys of a plain-Python md5 replica."""
+    import hashlib
+
+    def bucket(key):
+        return int(hashlib.md5(f"{key}#42".encode()).hexdigest()[:8], 16) % 10_000
+
+    keys = range(20_000)
+    df = spark.range(len(keys)).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("g")
+    )
+    plain = {r.k for r in sampling.hash_sample(df, "k", 0.57).collect()}
+    assert 9524 in plain
+    assert plain == {k for k in keys if bucket(k) < 5700}
+    strat = {
+        r.k for r in sampling.stratified_hash_sample(df, "k", "g", 0.57).collect()
+    }
+    assert 15651 in strat
+    assert strat == {k for k in keys if bucket(f"{k % 7}|{k}") < 5700}
+
+
 def test_stratified_sample_covers_strata(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders")
     out = sampling.stratified_hash_sample(

@@ -270,18 +270,17 @@ def test_load_table_normalizes_ntz_timestamps(spark, sf_dir):
 
 
 def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
-    """ORC sink/scan roundtrip; a filter on the scan reaches the ORC
+    """ORC roundtrip; a filter on the ``load_orc`` scan reaches the ORC
     reader's PushedFilters (same pushdown contract as parquet)."""
     import contextlib
     import io
     import re
 
     from platform_etl_openfda_faers_spark.sources.readers import load_orc, load_table
-    from platform_etl_openfda_faers_spark.sources.writers import write_orc
 
     out = str(tmp_path / "nation_orc")
     nation = load_table(spark, sf_dir, "nation")
-    write_orc(nation, out)
+    nation.write.orc(out)
 
     back = load_orc(spark, out, columns=["n_nationkey", "n_name"]).where(
         F.col("n_nationkey") < 5
