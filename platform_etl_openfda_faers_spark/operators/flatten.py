@@ -11,6 +11,13 @@ Scale note: explode multiplies rows (a report with 10 reactions x 5 drugs x
 4 synonyms -> 200 rows).  Filtering *before* exploding (qualification is a
 report-level field) keeps the blow-up bounded — the reference filters after
 its wide projection; we filter report-level predicates pre-explode.
+
+The exploded rows are hash-partitioned by ``safetyreportid`` once, just
+before the final ``distinct()``: the distinct needs no exchange of its own,
+and the pair table reaches ``contingency_llr`` already clustered by report,
+which is what each of its count-distincts needs — so none of them shuffles
+the pairs again (at ~130 GB of JSON, each such exchange moves about one pair
+table).  Reports are bounded in size, so the partitioning adds no skew.
 """
 
 from __future__ import annotations
@@ -80,10 +87,15 @@ def explode_reports(reports: DataFrame) -> DataFrame:
         F.lower(F.col("raw_drug_name")).alias("drug_name"),
     )
 
-    # P6 null/empty guards — stage/OpenFdaEtl.scala:104-106.
-    return exploded.where(
-        F.col("drug_name").isNotNull()
-        & (F.col("drug_name") != "")
-        & F.col("reaction_reactionmeddrapt").isNotNull()
-        & (F.col("reaction_reactionmeddrapt") != "")
-    ).distinct()
+    # P6 null/empty guards — stage/OpenFdaEtl.scala:104-106; then the one
+    # exchange, by report id (see the scale note).
+    return (
+        exploded.where(
+            F.col("drug_name").isNotNull()
+            & (F.col("drug_name") != "")
+            & F.col("reaction_reactionmeddrapt").isNotNull()
+            & (F.col("reaction_reactionmeddrapt") != "")
+        )
+        .repartition("safetyreportid")
+        .distinct()
+    )

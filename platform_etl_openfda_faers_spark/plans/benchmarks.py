@@ -979,9 +979,12 @@ def f_scalar_suite(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def f_meddra_parse(spark: SparkSession, sf: str) -> DataFrame:
-    """S4 + F13-F15 — the $-delimited MedDRA .asc parsing shape, on synthetic
-    lines built from part columns (same regexp_replace/split/getItem chain as
-    ``sources.readers.load_meddra_asc``)."""
+    """S4 + F13-F15 — the reference's $-delimited MedDRA .asc parsing chain
+    (``utils/Loaders.scala:91-93``: collapse ``$`` runs to ``,``, strip the
+    trailing ``,``, split on ``,``, ``getItem``), on synthetic lines built
+    from part columns.  ``sources.readers.load_meddra_asc`` no longer uses
+    this chain — it splits on ``$`` runs so terms with commas stay whole —
+    but the query keeps the reference's F13-F15 shape under oracle check."""
     p = load_table(spark, sf, "part")
     line = F.concat(
         F.col("p_brand"),

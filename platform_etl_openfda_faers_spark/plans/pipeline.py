@@ -15,9 +15,13 @@ Dataflow (SURVEY §3.2):
 
 Persist placement (all MEMORY_AND_DISK): the cleaned pairs, a raw-JSON
 flatten that the contingency and the sample both read, so the JSON is parsed
-once for them (the sampled raw reports take one more pass); stage 1, read by
-its writer and the MC stage; and the MC output (reference:
-``stage/OpenFdaEtl.scala:43,47``, ``ETL.scala:27``).
+once for them (the sampled raw reports take one more pass) — the pairs come
+out of the flatten hash-partitioned by report id and the cache keeps that, so
+the contingency's count-distincts and the sample's report-id distinct need no
+shuffle of the pairs; stage 1, read by its writer and the MC stage; the MC
+output (reference: ``stage/OpenFdaEtl.scala:43,47``, ``ETL.scala:27``); and,
+with sampling on, the sampled clean rows, read by their writer and by the
+raw-report semi-join, so the sample's md5 draws and J6/J7 run once.
 """
 
 from __future__ import annotations
@@ -132,10 +136,18 @@ def run(spark: SparkSession, config: EngineConfig) -> DataFrame:
             result, list(fda.outputs), f"{fda.output_path}/agg_critval_drug"
         )
 
+    # stage1 and the pairs (and the sampled clean rows) feed only this
+    # function: released here once the outputs are written, else attached to
+    # result.  result stays persisted for the caller and carries its own
+    # handle for caller-owned cleanup (operators/cache.py contract).
+    stage1_caches = [stage1, pairs]
     if fda.sampling.enabled:
         sampled_clean, sampled_raw = stratified_sampling_outputs(
             reports, pairs, result, fda.sampling
         )
+        # read by its own writer and by the raw-report semi-join
+        sampled_clean = sampled_clean.persist(StorageLevel.MEMORY_AND_DISK)
+        stage1_caches.append(sampled_clean)
         if fda.output_path:
             writers.write_outputs(
                 sampled_clean,
@@ -147,11 +159,6 @@ def run(spark: SparkSession, config: EngineConfig) -> DataFrame:
                 list(fda.outputs),
                 f"{fda.output_path}/sampled_raw_reports",
             )
-    # stage1 and the pairs feed only this function: released here once the
-    # outputs are written, else attached to result.  result stays persisted
-    # for the caller and carries its own handle for caller-owned cleanup
-    # (operators/cache.py contract).
-    stage1_caches = [stage1, pairs]
     attach_cached(result, result)
     if fda.output_path:
         for h in stage1_caches:

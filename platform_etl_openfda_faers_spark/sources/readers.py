@@ -4,11 +4,13 @@ Every reader narrows to the needed columns immediately after the scan
 (manual column pruning) and applies name normalization at the edge so
 downstream operators see a stable schema.
 
-Scale notes: FAERS reports are always read with the pinned ``FAERS_SCHEMA``.
-The reference infers the schema (``utils/Loaders.scala:38``), which costs one
-extra job that reads the whole input (~130 GB in production) on every run;
-the pinned read submits no job at plan time.  Blacklist/MedDRA tables are
-tiny and are meant to be broadcast by their consumers.
+Scale notes: every FAERS-pipeline input is read with a pinned schema
+(``FAERS_SCHEMA``, ``CHEMBL_SCHEMA``, ``BLACKLIST_SCHEMA``; MedDRA ``.asc``
+files as plain text).  The reference infers them (``utils/Loaders.scala:38``),
+which costs one extra job per input — for the reports, a job that reads the
+whole input (~130 GB in production) on every run; the pinned reads submit no
+job at plan time.  Blacklist/MedDRA tables are tiny and are meant to be
+broadcast by their consumers.
 """
 
 from __future__ import annotations
@@ -81,6 +83,21 @@ FAERS_SCHEMA = T.StructType(
 )
 
 
+# The ChEMBL molecule fields ``load_chembl_drug_list`` reads; a record that
+# lacks ``synonyms`` or ``tradeNames`` reads them as null.
+CHEMBL_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.StringType()),
+        T.StructField("name", T.StringType()),
+        T.StructField("synonyms", T.ArrayType(T.StringType())),
+        T.StructField("tradeNames", T.ArrayType(T.StringType())),
+    ]
+)
+
+# The blacklist is one term per line.
+BLACKLIST_SCHEMA = T.StructType([T.StructField("raw_term", T.StringType())])
+
+
 def load_fda_reports(spark: SparkSession, path: str) -> DataFrame:
     """Raw FAERS JSONL -> narrow report projection.
 
@@ -108,9 +125,9 @@ def load_chembl_drug_list(spark: SparkSession, path: str) -> DataFrame:
 
     Reference: ``utils/Loaders.scala:10-28`` (S2 + L2 + F7-F9 + A2 + O1):
     merge pref_name with synonym/tradeName arrays, flatten, dedup, lowercase,
-    explode to one row per name.
+    explode to one row per name.  Reads with the pinned ``CHEMBL_SCHEMA``.
     """
-    raw = spark.read.json(path)
+    raw = spark.read.schema(CHEMBL_SCHEMA).json(path)
     names = F.array_distinct(
         F.flatten(
             F.array(
@@ -135,16 +152,17 @@ def load_blacklist(spark: SparkSession, path: str) -> DataFrame:
 
     Reference: ``utils/Loaders.scala:53-61`` (S3): tab-separated CSV with
     whitespace trim, lowercased + ``translate('^' -> "'")`` + trimmed, sorted.
-    The result is tiny — consumers broadcast it (J1).
+    The result is tiny — consumers broadcast it (J1).  Reads with the
+    pinned one-column ``BLACKLIST_SCHEMA``.
     """
     raw = (
-        spark.read.options(
+        spark.read.schema(BLACKLIST_SCHEMA)
+        .options(
             sep="\t",
             ignoreLeadingWhiteSpace=True,
             ignoreTrailingWhiteSpace=True,
         )
         .csv(path)
-        .toDF("raw_term")
     )
     return (
         raw.select(normalize_term(F.col("raw_term")).alias("reactions"))
@@ -159,13 +177,19 @@ def load_meddra_asc(
 ) -> DataFrame:
     """``$``-delimited MedDRA ``.asc`` file -> named columns.
 
-    Reference: ``utils/Loaders.scala:64-99`` (S4 + F13-F15): read each line as
-    one CSV column, collapse runs of ``$`` to a single separator, strip the
-    trailing delimiter, split, positional ``getItem`` projection.
+    Reference: ``utils/Loaders.scala:64-99`` (S4 + F13-F15): read each line,
+    strip the trailing ``$`` run, split on runs of ``$``, positional
+    ``getItem`` projection.
+
+    Deliberate divergence (``utils/Loaders.scala:91-93``): the reference reads
+    each line as CSV, rewrites ``$`` runs to ``,`` and splits on ``,``, so a
+    term that contains a comma (``Fracture, hip``) is cut at the comma and a
+    ``"``-quoted term is subject to CSV quoting.  Reading plain text and
+    splitting on ``$`` alone keeps every term whole; it also needs no
+    schema-inference job.  Blank lines are skipped, as the CSV reader does.
     """
-    raw = spark.read.csv(path).toDF("line")
-    cleaned = F.regexp_replace(F.regexp_replace(F.col("line"), r"\$+", ","), r",$", "")
-    tokens = F.split(cleaned, ",")
+    raw = spark.read.text(path).where(F.col("value") != "")
+    tokens = F.split(F.regexp_replace(F.col("value"), r"\$+$", ""), r"\$+")
     return raw.select(
         *[tokens.getItem(i).alias(name) for i, name in enumerate(columns)]
     )

@@ -159,6 +159,72 @@ def test_contingency_ignores_null_report_ids(spark):
     assert {r["uniq_reports_total"] for r in contingency_llr(dirty).select("uniq_reports_total").collect()} == {3}
 
 
+def _exchanges(df) -> list[str]:
+    """One line per shuffle exchange of ``df``'s physical plan, through AQE
+    and broadcast wrappers but not into a cached relation's own plan."""
+
+    def walk(plan):
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            return walk(plan.executedPlan())
+        out = [plan.simpleString(25)] if plan.nodeName() == "Exchange" else []
+        kids = plan.children()
+        for i in range(kids.size()):
+            out += walk(kids.apply(i))
+        return out
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+def _report_keyed_exchanges(df) -> list[str]:
+    """The exchanges Spark adds to ``df``'s plan on its own (not asked for
+    by a ``repartition``) that hash on the report id."""
+    return [
+        e for e in _exchanges(df)
+        if "ENSURE_REQUIREMENTS" in e and "safetyreportid" in e
+    ]
+
+
+def test_stage1_over_persisted_pairs_adds_no_report_exchange(spark, loaded):
+    """``clean_pairs`` leaves its rows hash-partitioned by report id, and
+    the persisted table keeps that partitioning, so none of stage 1's four
+    count-distincts shuffles the pairs on (key, report id): only the small
+    per-key partial counts move.  The pairs are materialized first, so the
+    plan is the one Spark runs once the cache is built (an unbuilt cache
+    reports no partitioning until adaptive execution has built it)."""
+    from pyspark import StorageLevel
+
+    # no stage 1 cached by an earlier test may stand in for the plan
+    spark.catalog.clearCache()
+    pairs = clean_pairs(*loaded).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        pairs.count()
+        stage1 = open_fda_stage1(pairs)
+        assert _report_keyed_exchanges(stage1) == []
+        # the per-key exchanges are still there: the walk sees the plan
+        assert any("chembl_id" in e for e in _exchanges(stage1))
+    finally:
+        pairs.unpersist()
+
+
+def test_contingency_same_rows_on_any_partitioning(spark, loaded):
+    """Law: ``contingency_llr`` over pairs that lack the report-id
+    partitioning (round-robin repartitioned) equals the result over the
+    report-partitioned pairs row for row — exact A/B/C/D and equal llr."""
+    from pyspark import StorageLevel
+
+    pairs = clean_pairs(*loaded).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        clustered = contingency_llr(pairs)
+        scattered = contingency_llr(pairs.repartition(5))
+        # the round-robin input takes the (key, report) shuffles again
+        assert _report_keyed_exchanges(scattered)
+        want = sorted(map(tuple, clustered.collect()))
+        got = sorted(map(tuple, scattered.collect()))
+    finally:
+        pairs.unpersist()
+    assert want and got == want
+
+
 def test_run_with_sampling_writes_side_outputs(spark, fixture_paths, tmp_path):
     """Composed pipeline with sampling enabled (reference:
     OpenFdaEtl.scala:50-53 -> StratifiedSampling.scala:14-41): the side
@@ -273,16 +339,23 @@ def test_run_without_sampling_writes_no_side_outputs(spark, fixture_paths, tmp_p
     assert not Path(f"{out}/sampled_raw_reports").exists()
 
 
-@pytest.mark.parametrize("write", [True, False], ids=["output_path", "no_output"])
-def test_run_then_unpersist_cached_leaves_sql_cache_empty(spark, fixture_paths, tmp_path, write):
+@pytest.mark.parametrize(
+    "write,sampling",
+    [(True, False), (False, False), (True, True), (False, True)],
+    ids=["output_path", "no_output", "output_path_sampling", "no_output_sampling"],
+)
+def test_run_then_unpersist_cached_leaves_sql_cache_empty(
+    spark, fixture_paths, tmp_path, write, sampling
+):
     """Caller-owned cache lifetime (operators/cache.py) for the whole
     pipeline: after ``run`` and ``unpersist_cached(result)`` nothing the
     run persisted stays cached — including the cleaned pair table under
-    stage 1."""
+    stage 1 and the sampled clean rows."""
     from platform_etl_openfda_faers_spark.config import (
         EngineConfig,
         FdaConfig,
         MonteCarloConfig,
+        SamplingConfig,
     )
     from platform_etl_openfda_faers_spark.operators.cache import unpersist_cached
     from platform_etl_openfda_faers_spark.plans import pipeline
@@ -296,6 +369,7 @@ def test_run_then_unpersist_cached_leaves_sql_cache_empty(spark, fixture_paths, 
             outputs=("parquet",),
             output_path=str(tmp_path / "out") if write else "",
             montecarlo=MonteCarloConfig(permutations=50),
+            sampling=SamplingConfig(enabled=sampling, fraction=0.3),
         )
     )
     spark.catalog.clearCache()
@@ -360,16 +434,9 @@ def test_stratified_sample_is_md5_predicate_and_layout_independent(spark, loaded
     assert any(_bucket(i, sampling.seed + 1) >= t for i in expected)
 
 
-@pytest.mark.parametrize(
-    "sampling,max_scans", [(True, 2), (False, 1)], ids=["sampling", "no_sampling"]
-)
-def test_run_parses_faers_json_within_scan_budget(
-    spark, fixture_paths, tmp_path, sampling, max_scans
-):
-    """``pipeline.run`` parses the FAERS JSON once for stage 1 (the cleaned
-    pairs are persisted and shared with the sample) and at most once more
-    for the sampled raw reports.  A full scan is a stage whose input bytes
-    reach the JSON file's size."""
+def _measured_run(spark, fixture_paths, out, sampling):
+    """``pipeline.run`` on the fixture under a job group of its own; returns
+    the run's job ids and its ``StageMetrics`` stage rows."""
     from platform_etl_openfda_faers_spark.config import (
         EngineConfig,
         FdaConfig,
@@ -387,17 +454,59 @@ def test_run_parses_faers_json_within_scan_budget(
             chembl_drugs=drugs_path,
             blacklist=blacklist_path,
             outputs=("parquet",),
-            output_path=str(tmp_path / "out"),
+            output_path=str(out),
             montecarlo=MonteCarloConfig(permutations=50),
             sampling=SamplingConfig(enabled=sampling, fraction=0.3),
         )
     )
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    group = f"test/pipeline.run/{out}"
     metrics = StageMetrics(spark)
     metrics.snapshot()
-    unpersist_cached(pipeline.run(spark, cfg))
-    size = Path(reports_path).stat().st_size
-    n = sum(r["input_bytes"] >= size for r in metrics.stage_rows())
+    sc.setJobGroup(group, group)
+    try:
+        unpersist_cached(pipeline.run(spark, cfg))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    return jobs, list(metrics.stage_rows())
+
+
+@pytest.mark.parametrize(
+    "sampling,max_scans", [(True, 2), (False, 1)], ids=["sampling", "no_sampling"]
+)
+def test_run_parses_faers_json_within_scan_budget(
+    spark, fixture_paths, tmp_path, sampling, max_scans
+):
+    """``pipeline.run`` parses the FAERS JSON once for stage 1 (the cleaned
+    pairs are persisted and shared with the sample) and at most once more
+    for the sampled raw reports.  A full scan is a stage whose input bytes
+    reach the JSON file's size."""
+    _, stages = _measured_run(spark, fixture_paths, tmp_path / "out", sampling)
+    size = Path(fixture_paths[0]).stat().st_size
+    n = sum(r["input_bytes"] >= size for r in stages)
     assert 1 <= n <= max_scans
+
+
+@pytest.mark.parametrize(
+    "sampling,max_jobs,max_shuffle_bytes",
+    [(True, 28, 44_000), (False, 22, 42_000)],
+    ids=["sampling", "no_sampling"],
+)
+def test_run_within_job_and_shuffle_budget(
+    spark, fixture_paths, tmp_path, sampling, max_jobs, max_shuffle_bytes
+):
+    """The ``pipeline.run`` budget on the fixture: jobs submitted and
+    shuffle bytes written.  Measured at 4 cores and 8 shuffle partitions:
+    28 jobs and 41,830 bytes with sampling, 22 jobs and 40,614 bytes
+    without (the byte bounds leave ~5% headroom).  Before the pairs were
+    partitioned by report id, each count-distinct shuffled them once more:
+    36 and 28 jobs, 108.5 and 100.8 KB."""
+    jobs, stages = _measured_run(spark, fixture_paths, tmp_path / "out", sampling)
+    shuffle = sum(r["shuffle_write"] for r in stages)
+    assert len(jobs) <= max_jobs, len(jobs)
+    assert shuffle <= max_shuffle_bytes, shuffle
 
 
 def test_merge_upsert_null_update_and_delete(spark):

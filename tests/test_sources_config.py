@@ -31,6 +31,25 @@ def test_meddra_asc_parser(spark, tmp_path):
     assert got == {("10000001", "headache"), ("10000002", "nausea and vomiting")}
 
 
+def test_meddra_asc_keeps_comma_and_quoted_terms_whole(spark, tmp_path):
+    """Only ``$`` separates fields: a term with a comma or a double quote
+    reads whole, so it keeps its own code (the reference's CSV read and
+    comma split cut ``Fracture, hip`` down to ``fracture``)."""
+    p = tmp_path / "llt.asc"
+    p.write_text(
+        "10000007$Fracture$10000008$$$\n"
+        "10000003$Fracture, hip$10000004$$$\n"
+        '10000005$"Tennis" elbow$10000006$$$\n'
+    )
+    llt = readers.load_meddra_low_level_terms(spark, str(p))
+    got = {(r.llt_code, r.llt_name) for r in llt.collect()}
+    assert got == {
+        ("10000003", "fracture, hip"),
+        ("10000005", '"tennis" elbow'),
+        ("10000007", "fracture"),
+    }
+
+
 def test_normalize_term_parity(spark):
     df = spark.createDataFrame([("  FOO^s Bar ",)], ["t"])
     assert df.select(normalize_term(df.t).alias("n")).first().n == "foo's bar"
@@ -143,19 +162,60 @@ def test_fda_reader_tolerates_absent_fields(spark, tmp_path):
     assert {(r.seriousness_death, r.qualification) for r in got} == {("0", None)}
 
 
+def _plan_time_jobs(spark, load, path) -> list[int]:
+    """Ids of the jobs submitted while ``load(spark, path)`` builds its
+    DataFrame (nothing is collected)."""
+    sc = spark.sparkContext
+    group = f"test/{load.__name__}"
+    sc.setJobGroup(group, group)
+    try:
+        load(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_fda_reader_submits_no_job_at_plan_time(spark, tmp_path):
     """Building the FAERS read runs nothing: the schema is pinned, so no
     inference job scans the input (~130 GB in production)."""
     p = tmp_path / "reports.jsonl"
     p.write_text(_GOOD_REPORT + "\n")
-    sc = spark.sparkContext
-    group = "test/load_fda_reports"
-    sc.setJobGroup(group, group)
-    try:
-        readers.load_fda_reports(spark, str(p))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert _plan_time_jobs(spark, readers.load_fda_reports, str(p)) == []
+
+
+def test_chembl_and_blacklist_readers_submit_no_job_at_plan_time(spark, tmp_path):
+    """The ChEMBL dump and the blacklist are read with pinned schemas: no
+    inference job reads the molecule dump, no job reads the blacklist's
+    first line."""
+    from .faers_fixtures import write_fixtures
+
+    _, drugs_path, blacklist_path = write_fixtures(tmp_path, n_reports=1)
+    assert _plan_time_jobs(spark, readers.load_chembl_drug_list, drugs_path) == []
+    assert _plan_time_jobs(spark, readers.load_blacklist, blacklist_path) == []
+
+
+def test_chembl_reader_pinned_schema_matches_inferred(spark, tmp_path):
+    """``CHEMBL_SCHEMA`` reads the rows a schema-inferred read does, also
+    for a molecule that lacks ``synonyms`` and ``tradeNames``; that
+    molecule still maps its preferred name."""
+    import json
+
+    from .faers_fixtures import write_fixtures
+
+    _, drugs_path, _ = write_fixtures(tmp_path, n_reports=1)
+    with open(drugs_path, "a") as f:
+        f.write(json.dumps({"id": "CHEMBL9", "name": "Bare", "max_phase": 4}) + "\n")
+    cols = [f.name for f in readers.CHEMBL_SCHEMA.fields]
+
+    def rows(df):
+        return sorted(map(tuple, df.select(*cols).collect()), key=repr)
+
+    pinned = spark.read.schema(readers.CHEMBL_SCHEMA).json(drugs_path)
+    assert rows(pinned) == rows(spark.read.json(drugs_path))
+    drugs = readers.load_chembl_drug_list(spark, drugs_path)
+    assert drugs.where(F.col("chembl_id") == "CHEMBL9").collect() == [
+        ("CHEMBL9", "bare")
+    ]
 
 
 def test_write_outputs_roundtrip(spark, sf_dir, tmp_path):
