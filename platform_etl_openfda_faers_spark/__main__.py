@@ -4,7 +4,7 @@
         --fda-data 'data/**/*.jsonl' --chembl-drugs data/drugs.json \
         --blacklist data/blacklist.txt --output out/ \
         [--meddra path/to/meddra] [--outputs parquet json] \
-        [--permutations 100] [--percentile 0.95] [--seed 42] \
+        [--permutations N] [--percentile P] [--seed S] \
         [--master local[*]]
 
 Unknown steps are rejected up front (the reference logs-and-skips,
@@ -18,7 +18,14 @@ from __future__ import annotations
 import argparse
 import sys
 
-from .config import EngineConfig, FdaConfig, MonteCarloConfig, load_config
+from .config import (
+    VALID_OUTPUT_FORMATS,
+    EngineConfig,
+    FdaConfig,
+    MonteCarloConfig,
+    load_config,
+)
+from .operators.cache import unpersist_cached
 from .plans import pipeline
 from .session import get_spark
 
@@ -43,12 +50,12 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--outputs",
         nargs="+",
-        default=["parquet"],
-        choices=["parquet", "json", "csv"],
+        default=list(FdaConfig.outputs),
+        choices=VALID_OUTPUT_FORMATS,
     )
-    p.add_argument("--permutations", type=int, default=100)
-    p.add_argument("--percentile", type=float, default=0.95)
-    p.add_argument("--seed", type=int, default=42)
+    p.add_argument("--permutations", type=int, default=MonteCarloConfig.permutations)
+    p.add_argument("--percentile", type=float, default=MonteCarloConfig.percentile)
+    p.add_argument("--seed", type=int, default=MonteCarloConfig.seed)
     p.add_argument(
         "--master",
         default=None,
@@ -58,50 +65,41 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def main(argv: list[str] | None = None) -> int:
-    args = build_parser().parse_args(argv)
+    parser = build_parser()
+    args = parser.parse_args(argv)
     if args.config:
         config = load_config(args.config)
-        spark = get_spark("openfda-faers-etl", master=config.spark_uri)
-        result = pipeline.run(spark, config)
-        print(
-            f"significant (drug, event) pairs: {result.count()}", file=sys.stderr
-        )
-        return 0
-    missing = [
-        f"--{n}"
-        for n, v in [
-            ("fda-data", args.fda_data),
-            ("chembl-drugs", args.chembl_drugs),
-            ("blacklist", args.blacklist),
-            ("output", args.output),
+    else:
+        missing = [
+            "--" + a.replace("_", "-")
+            for a in ("fda_data", "chembl_drugs", "blacklist", "output")
+            if not getattr(args, a)
         ]
-        if not v
-    ]
-    if missing:
-        build_parser().error(
-            f"the following arguments are required: {', '.join(missing)} "
-            "(or pass --config)"
-        )
-    config = EngineConfig(
-        spark_uri=args.master,
-        fda=FdaConfig(
-            fda_data=args.fda_data,
-            chembl_drugs=args.chembl_drugs,
-            blacklist=args.blacklist,
-            meddra_path=args.meddra,
-            outputs=tuple(args.outputs),
-            output_path=args.output,
-            montecarlo=MonteCarloConfig(
-                permutations=args.permutations,
-                percentile=args.percentile,
-                seed=args.seed,
+        if missing:
+            parser.error(
+                f"the following arguments are required: {', '.join(missing)} "
+                "(or pass --config)"
+            )
+        config = EngineConfig(
+            spark_uri=args.master,
+            fda=FdaConfig(
+                fda_data=args.fda_data,
+                chembl_drugs=args.chembl_drugs,
+                blacklist=args.blacklist,
+                meddra_path=args.meddra,
+                outputs=tuple(args.outputs),
+                output_path=args.output,
+                montecarlo=MonteCarloConfig(
+                    permutations=args.permutations,
+                    percentile=args.percentile,
+                    seed=args.seed,
+                ),
             ),
-        ),
-    )
+        )
     spark = get_spark("openfda-faers-etl", master=config.spark_uri)
     result = pipeline.run(spark, config)
-    n = result.count()
-    print(f"significant (drug, event) pairs: {n}", file=sys.stderr)
+    print(f"significant (drug, event) pairs: {result.count()}", file=sys.stderr)
+    unpersist_cached(result)
     return 0
 
 

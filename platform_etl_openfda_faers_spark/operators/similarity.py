@@ -215,15 +215,15 @@ def add_lsh_buckets(
     """Attach (table, bucket) rows — one row per vector per table.
 
     ``dim``: pass the known vector width to skip the construction-time
-    ``first()`` probe.  CALLER CONTRACT: a supplied ``dim`` must match the
-    actual vector width — ``zip_with`` null-pads unequal arrays, so a
-    mismatch silently NULLs every projection and hashes all rows to
-    bucket 0 (a near-brute-force candidate explosion, not an error).
-    Pass ``dim=None`` when the width is not certain."""
+    ``first()`` probe.  A non-null vector of another width fails the
+    first action with a ``raise_error`` naming both (``zip_with`` null-pads
+    unequal arrays, so it would hash to bucket 0): one ``CASE`` per row
+    around the bucket array, no extra job.  Null vectors keep bucket 0."""
     if dim is None:
         dim = len(df.select(vec_col).first()[0])
-    v_sql = f"CAST({_sql_ident(vec_col)} AS ARRAY<DOUBLE>)"
-    entries = F.array(
+    ident = _sql_ident(vec_col)
+    v_sql = f"CAST({ident} AS ARRAY<DOUBLE>)"
+    buckets = F.array(
         *[
             F.struct(
                 F.lit(t).alias("table"),
@@ -234,6 +234,11 @@ def add_lsh_buckets(
             for t in range(n_tables)
         ]
     )
+    width = f"CAST(size({ident}) AS STRING)"
+    entries = F.when(
+        F.expr(f"{ident} IS NOT NULL AND size({ident}) != {dim}"),
+        F.expr(f"raise_error('add_lsh_buckets: dim={dim} but {vec_col} has width ' || {width})"),
+    ).otherwise(buckets)
     return df.select("*", F.explode(entries).alias("_e")).select(
         *df.columns, F.col("_e.table").alias("table"), F.col("_e.bucket").alias("bucket")
     )
@@ -255,9 +260,8 @@ def hyperplane_lsh_topk(
 
     ``dim``: pass the known embedding width to skip the eager one-row
     ``first()`` probe job at construction (r16 #18); ``None`` keeps the
-    probe for callers with unknown-width vectors.  A WRONG ``dim`` fails
-    silently (all rows bucket to 0 — see :func:`add_lsh_buckets`), so
-    only pass it when the width is a schema-level certainty.
+    probe for callers with unknown-width vectors.  A wrong ``dim`` raises
+    on the first action (see :func:`add_lsh_buckets`).
 
     .. warning:: **Default change in r7** — ``n_planes`` 8 -> 4 and
        ``n_tables`` 2 -> 8, justified by the recall harness

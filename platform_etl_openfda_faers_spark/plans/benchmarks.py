@@ -9474,145 +9474,3 @@ def dedup_jaccard_prefix(spark: SparkSession, sf: str) -> DataFrame:
     return dedup.jaccard_pairs_prefix(
         docs, "text", "doc_id", n=3, threshold=0.7
     )
-
-
-# ---------------------------------------------------------------------------
-# Driver ordering: the round driver records the FIRST 50 ``queries()``
-# entries (observed cap — CORRECTNESS_r01/r02 both stop at the same 50).
-# With more than 50 queries registered, order the registry so (a) queries
-# the driver has NEVER checked and (b) queries added this round land inside
-# the cap; everything placed after slot 50 was driver-green in BOTH prior
-# rounds and stays covered by ``tools/check_correctness.py --json`` (the
-# full-registry result is committed as CORRECTNESS_LOCAL_r{N}.json).
-
-_DRIVER_FIRST = [
-    # ROUND-16 ROTATION (VERDICT r15 next-steps #3, executed as promised
-    # by the r15 _DEFERRED_TO_R16 header): lead with (a) the query NEW
-    # in r16, then (b) the 19 r12-driver-certified hold-backs — the
-    # OLDEST driver evidence in the registry, four rounds stale — then
-    # (c) the first 30 of the 50 r13-driver-certified (three rounds
-    # stale).  Counts and disjointness are ASSERTED in
-    # _apply_driver_order against _DEFERRED_TO_R17 below.
-    # --- (a) new in r16:
-    # dedup_ingest_loop_serve — the ingest LOOP itself under the oracle
-    # (VERDICT r15 #7): three micro-batches through dedup_ingest_batch's
-    # operator core, greedy keep-lowest acceptance + final index state
-    # (signatures, chunk counts) replayed analytically in SQL.
-    # multimodal_image_stored_serve — the fourth stored-serve family
-    # certificate (text r13, video r14, audio r15), sidecar-wired from
-    # day one; its window slot comes from asof_join_events (r13-
-    # certified, warm-headline-benched every round, deferred to r17).
-    "dedup_ingest_loop_serve", "multimodal_image_stored_serve",
-    # --- (b) the 19 r12-certified (four rounds stale, rotate FIRST per
-    # the r15 deferred header):
-    "multimodal_audio_features", "multimodal_decode",
-    "multimodal_decode_bmp", "multimodal_decode_jpeg",
-    "multimodal_decode_jpeg12", "multimodal_decode_jpeg_420",
-    "multimodal_decode_jpeg_prog", "multimodal_decode_oriented",
-    "multimodal_decode_png", "multimodal_decode_wav", "multimodal_exif_meta",
-    "multimodal_frames", "sketch_count_min_portable", "sketch_kmv_overlap",
-    "stream_interval_join", "stream_session_windows",
-    "stream_tumbling_counts", "w_distinct_windows", "w_frames_suite",
-    # --- (c) 30 of the 50 r13-driver-certified, in the r13 window's own
-    # order (the 20 NOT rotated are the embedding/PQ serving family and
-    # the containment/jaccard incrementals, which have r14/r15-window
-    # cousins over the same operators — emb_lsh_ann/emb_lsh_ann_sparse
-    # r15, dedup_incremental_minhash/dedup_jaccard_prefix r15 — plus
-    # golden-fixture pytests; they rotate FIRST in r17 and stay covered
-    # by the committed full-registry CORRECTNESS_LOCAL runs):
-    "dedup_clusters", "dedup_semantic", "emb_ivf_kmeans_topk",
-    "emb_lsh_multiprobe_topk", "emb_quantize_int8", "graph_pagerank",
-    "multimodal_image_dedup", "multimodal_image_dedup_resized",
-    "multimodal_image_neardup", "multimodal_meta", "stream_dedup_events",
-    "stream_interval_join_outer", "stream_sliding_users",
-    "stream_static_enrich", "text_packing_spans",
-    "dedup_stored_index_serve", "corpus_curriculum_order",
-    "emb_cell_occupancy", "a4_collect_list", "a5_stratified_sample",
-    "a_cube_grouping", "a_dataset_split", "a_grouping_sets",
-    "a_outlier_zscore", "a_percentiles", "a_profile_orders",
-    "a_retention_cohorts", "a_salted_distinct", "a_unpivot_measures",
-]
-
-# Deferred to r17, MAINTAINED AS DATA so _apply_driver_order can assert
-# the bookkeeping.  Provenance: the 20 r13-driver-certified hold-backs
-# named in the window comment above (four rounds stale by r17, rotate
-# FIRST), the 50 queries certified by the r14 driver window, and the 50
-# certified by the r15 window.  Rotation priority for r17: the 20
-# r13-certified, then the r14 block.
-_DEFERRED_TO_R17 = [
-    # 21 r13-driver-certified (rotate FIRST in r17; asof_join_events
-    # ceded its r16 window slot to multimodal_image_stored_serve — it
-    # is warm-headline-benched every round and full-registry-verified):
-    "asof_join_events",
-    "corpus_mix_report", "corpus_temperature_sample",
-    "dedup_containment", "dedup_exact_substrings",
-    "dedup_incremental_containment", "dedup_incremental_jaccard",
-    "dedup_minhash_lsh_uncapped", "dedup_ngram_jaccard",
-    "dedup_semantic_incremental", "emb_cosine_topk",
-    "emb_ivf_incremental_topk", "emb_ivf_pq_rerank_topk",
-    "emb_ivf_pq_topk", "emb_ivf_topk", "emb_near_dup_exact",
-    "emb_pq_adc_hi_topk", "emb_pq_adc_rerank_topk", "emb_pq_adc_topk",
-    "events_json_props", "j2_dimension_join",
-    # 50 r14-driver-certified (the full r14 window):
-    "j3_left_outer", "j6_full_outer", "j7_semi_join",
-    "multimodal_audio_dedup", "multimodal_audio_neardup",
-    "multimodal_audio_neardup_incremental", "multimodal_audio_peaks",
-    "multimodal_decode_gif", "multimodal_gif_frames",
-    "multimodal_image_neardup_incremental", "multimodal_mp4_meta",
-    "multimodal_video_dedup", "multimodal_video_neardup",
-    "multimodal_video_neardup_incremental", "p6_null_guards",
-    "sql_q5_local_supplier",
-    "multimodal_video_stored_serve", "corpus_curriculum_packing",
-    "a_event_transitions", "a_sessionize_events", "corpus_shard_manifest",
-    "dedup_keep_list", "dedup_ngram_jaccard_capped", "dedup_source_leakage",
-    "emb_dim_diagnostics", "f_array_suite", "f_datetime_suite",
-    "f_from_json_typed", "f_inline_structs", "f_map_suite",
-    "f_posexplode_tokens", "f_string_suite", "faers_llr",
-    "j_bloom_prefilter", "j_merge_upsert", "j_salted_skew",
-    "media_curation_pipeline", "multimodal_video_frames",
-    "p5_filter_inlist", "q1_pricing_summary", "q3_shipping_priority",
-    "scd2_user_history", "set_ops_suite", "sql_ranking_suite",
-    "text_bm25_topk", "text_decontaminate", "text_pii_redact",
-    "w_analytic_extras", "w_funnel_conversion", "w_resample_ffill",
-    # 50 r15-driver-certified (the full r15 window):
-    "dedup_compacted_serve", "multimodal_audio_stored_serve",
-    "corpus_curriculum_packing_spans",
-    "a1_distinct_count", "a2_distinct_rows", "a3_dedup_subset",
-    "a5_hash_sample", "dedup_incremental_simhash",
-    "dedup_incremental_simhash64", "dedup_minhash_lsh", "dedup_simhash16",
-    "dedup_simhash_pairs", "emb_lsh_ann", "emb_lsh_ann_sparse",
-    "f_zorder_key", "faers_significant", "j_exists_subquery", "j_nullsafe",
-    "sketch_hll_portable", "w_approx_distinct",
-    "a_pivot_counts", "a_rollup_totals", "a_weighted_sample",
-    "asof_forward_events", "cdc_apply_roundtrip", "cdc_scd2_history",
-    "cdc_snapshot_diff", "corpus_curation_pipeline", "corpus_mix_allocation",
-    "dedup_exact_groups", "dedup_incremental_minhash",
-    "dedup_jaccard_prefix", "f_meddra_parse", "f_scalar_suite",
-    "j1_blacklist_anti", "j_range_join", "l1_explode_structs",
-    "o1_global_topk", "sql_q6_revenue", "text_bpe_count",
-    "text_chunking", "text_fingerprint", "text_langid", "text_packing",
-    "text_quality_score", "text_repetition", "text_stats", "text_tfidf_topk",
-    "text_vocab_coverage", "w_ranking_suite",
-]
-
-def _apply_driver_order() -> None:
-    missing = [n for n in _DRIVER_FIRST if n not in SPARK_QUERIES]
-    assert not missing, f"_DRIVER_FIRST names not registered: {missing}"
-    assert len(_DRIVER_FIRST) == len(set(_DRIVER_FIRST))
-    assert len(_DRIVER_FIRST) == 50, len(_DRIVER_FIRST)
-    # the deferred list is bookkeeping the judge audits — keep it honest
-    # mechanically (r7/r8 both shipped miscounted comment blocks):
-    # disjoint from the window, and window + deferred == whole registry
-    overlap = set(_DRIVER_FIRST) & set(_DEFERRED_TO_R17)
-    assert not overlap, f"deferred names inside the driver window: {overlap}"
-    assert len(_DEFERRED_TO_R17) == len(set(_DEFERRED_TO_R17))
-    uncovered = set(SPARK_QUERIES) - set(_DRIVER_FIRST) - set(_DEFERRED_TO_R17)
-    phantom = set(_DEFERRED_TO_R17) - set(SPARK_QUERIES)
-    assert not uncovered and not phantom, (uncovered, phantom)
-    rest = [n for n in SPARK_QUERIES if n not in set(_DRIVER_FIRST)]
-    ordered = {n: SPARK_QUERIES[n] for n in [*_DRIVER_FIRST, *rest]}
-    SPARK_QUERIES.clear()
-    SPARK_QUERIES.update(ordered)
-
-
-_apply_driver_order()

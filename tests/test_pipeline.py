@@ -339,6 +339,27 @@ def test_run_without_sampling_writes_no_side_outputs(spark, fixture_paths, tmp_p
     assert not Path(f"{out}/sampled_raw_reports").exists()
 
 
+def test_cli_main_writes_stage1_and_rejects_unknown_format(
+    spark, fixture_paths, tmp_path, monkeypatch
+):
+    """``python -m platform_etl_openfda_faers_spark`` in-process on the
+    fixture: exit 0 with both stage-1 tables written; an output format
+    outside ``VALID_OUTPUT_FORMATS`` is refused before Spark runs."""
+    from platform_etl_openfda_faers_spark import __main__ as cli
+
+    # the test session as is, without the engine defaults get_spark applies
+    monkeypatch.setattr(cli, "get_spark", lambda *a, **k: spark)
+    reports_path, drugs_path, blacklist_path = fixture_paths
+    flags = ["--fda-data", reports_path, "--chembl-drugs", drugs_path,
+             "--blacklist", blacklist_path, "--permutations", "50", "--output"]
+    with pytest.raises(SystemExit, match="2"):
+        cli.main([*flags, str(tmp_path / "orc"), "--outputs", "orc"])
+    assert cli.main([*flags, str(tmp_path / "out")]) == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    for name in ("agg_by_chembl", "agg_critval_drug"):
+        assert (tmp_path / "out" / name / "parquet").is_dir(), name
+
+
 @pytest.mark.parametrize(
     "write,sampling",
     [(True, False), (False, False), (True, True), (False, True)],

@@ -51,6 +51,18 @@ def test_lsh_buckets_deterministic(spark, vecs):
     ) == sorted((r.vec_id, r.table, r.bucket) for r in b2.collect())
 
 
+@pytest.mark.parametrize("dim", [2, 8], ids=["narrower", "wider"])
+def test_lsh_buckets_wrong_dim_raises(spark, vecs, dim):
+    """A ``dim`` that is not the vector width fails the first action
+    instead of hashing every row to bucket 0; a null vector does not."""
+    with_null = vecs.union(spark.createDataFrame([(6, None)], vecs.schema))
+    ok = similarity.add_lsh_buckets(with_null, "embedding", n_planes=4, n_tables=2, dim=4)
+    assert {r.bucket for r in ok.where("vec_id = 6").collect()} == {0}
+    b = similarity.add_lsh_buckets(vecs, "embedding", n_planes=4, n_tables=2, dim=dim)
+    with pytest.raises(Exception, match=f"dim={dim} but embedding has width 4"):
+        b.collect()
+
+
 def test_cosine_near_duplicates_symmetric_pairs(vecs):
     out = similarity.cosine_near_duplicates(
         vecs, threshold=0.99, n_planes=2, n_tables=4

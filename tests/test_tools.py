@@ -97,3 +97,15 @@ def test_profile_query_cli_reports_every_layer(sf_dir):
         assert all(float(x) >= 0 for x in r[2:8]), r
     assert sum(int(r[1]) for r in stage_rows) > 0, out.stdout
     assert lines[total].endswith(f"stages {len(stage_rows)}"), lines[total]
+
+
+def test_check_correctness_rejects_unknown_query(sf_dir):
+    """A mistyped query name is an error, not an empty green run."""
+    out = subprocess.run(
+        [sys.executable, "tools/check_correctness.py", sf_dir,
+         "q1_pricing_summary", "no_such_query"],
+        cwd=REPO, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 2, out.stdout[-2000:]
+    assert "no_such_query" in out.stderr
+    assert "q1_pricing_summary" not in out.stderr
