@@ -28,6 +28,7 @@ they generate O(n^2) candidate pairs and carry no discriminative signal).
 from __future__ import annotations
 
 import random
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -1437,29 +1438,180 @@ def simhash_local64(
     )
 
 
-def _simhash64_chunks(sigs: DataFrame, id_col: str, keep: tuple[str, ...] = ()) -> DataFrame:
-    """Explode a (id, sim_hi, sim_lo) signature table into its 4 x 16-bit
-    pigeonhole chunk rows: (id, *keep, sim_hi, sim_lo, ci, cv)."""
+def chunks_4x16(df: DataFrame, hi: str, lo: str) -> DataFrame:
+    """Explode each row of a 64-bit hash table, kept as the two 32-bit
+    halves ``hi``/``lo``, into its 4 x 16-bit pigeonhole chunk rows:
+    every input column, then (ci, cv).  Two hashes within Hamming <= 3
+    agree exactly on at least one chunk.  The one chunk map of the
+    SimHash-64, dHash and video-frame families — full, incremental and
+    stored-index paths alike."""
     mask = F.lit((1 << 16) - 1)
-    chunks = F.array(
-        F.struct(F.lit(0).alias("ci"), F.col("sim_lo").bitwiseAND(mask).alias("cv")),
-        F.struct(
-            F.lit(1).alias("ci"),
-            F.shiftrightunsigned(F.col("sim_lo"), 16).bitwiseAND(mask).alias("cv"),
-        ),
-        F.struct(F.lit(2).alias("ci"), F.col("sim_hi").bitwiseAND(mask).alias("cv")),
-        F.struct(
-            F.lit(3).alias("ci"),
-            F.shiftrightunsigned(F.col("sim_hi"), 16).bitwiseAND(mask).alias("cv"),
-        ),
+    hi_c, lo_c = F.col(hi), F.col(lo)
+    parts = [
+        lo_c, F.shiftrightunsigned(lo_c, 16),
+        hi_c, F.shiftrightunsigned(hi_c, 16),
+    ]
+    chunks = F.array(*[
+        F.struct(F.lit(i).alias("ci"), p.bitwiseAND(mask).alias("cv"))
+        for i, p in enumerate(parts)
+    ])
+    return df.select("*", F.explode(chunks).alias("_c")).select(
+        *df.columns, "_c.ci", "_c.cv"
     )
-    return sigs.select(
-        F.col(id_col), *[F.col(c) for c in keep],
-        F.col("sim_hi"), F.col("sim_lo"),
-        F.explode(chunks).alias("c"),
-    ).select(
-        id_col, *keep, "sim_hi", "sim_lo",
-        F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv"),
+
+
+def hamming_ab():
+    """Column ``hamming``: the exact Hamming distance between the split
+    64-bit hashes (hi_a, lo_a) and (hi_b, lo_b) — one sign-free
+    ``bit_count(xor)`` per half."""
+    return (
+        F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
+        + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
+    ).cast("int").alias("hamming")
+
+
+def _serve_rows(
+    batch: DataFrame,
+    corpus: DataFrame | None,
+    key: Callable[[DataFrame], DataFrame],
+    corpus_index: DataFrame | None,
+    corpus_occupancy: DataFrame | None,
+    family: str,
+    params: dict,
+    cols: list[str],
+    keys: list[str],
+    max_bucket_size: int | None,
+) -> tuple[DataFrame, list[DataFrame]]:
+    """The stored-index serve core of the four incremental near-dup
+    families (SimHash-64 text, dHash images, video frames, audio
+    landmarks): the capped (batch ∪ corpus) keyed rows the family's own
+    pair join consumes, with ``_new`` true on the batch rows, plus the
+    handles persisted here (attach them to the result —
+    ``cache.attach_cached``).
+
+    ``batch`` — the batch's input rows; ``corpus`` — the corpus's input
+    rows with the same columns, the RECOMPUTE path.  ``key`` maps input
+    rows to keyed rows with at least ``cols``, passing the ``_new`` tag
+    through; on the recompute path it runs ONCE over the tagged union,
+    so the family's fold appears once in the plan (keying the two sides
+    apart measured ~0.3 s slower per SimHash-64 serve at sf0.01).
+    ``keys`` is the bucket key the family joins on, ``cols`` the columns
+    the stored path keeps.
+
+    ``corpus_index`` — the STORED path, in place of ``corpus``: the
+    family's keyed table written once at ingest (its ``*_chunk_table`` /
+    ``*_landmark_table`` builder, typically parquet partitioned on one
+    key column).  The corpus side becomes a decode-free scan of it — no
+    corpus text, image, video or audio read, no fold — and the
+    combined-occupancy cap applies across stored + batch rows exactly as
+    in the recompute path, so results are identical (law-pinned per
+    family).  The ``index_fp`` stamp must match ``family`` and
+    ``params`` (``indexstamp.guard_index``, lazy, raises on the first
+    mismatching row).
+
+    ``corpus_occupancy`` — optional stored occupancy sidecar of that
+    index (:func:`stored_occupancy_table`, fp- and content-stamped;
+    only with ``corpus_index``).  The cap is then (stored n + batch n)
+    against a BROADCAST kept-key semi-join
+    (:func:`kept_keys_with_stored_occupancy`) instead of a count window
+    over the whole union — result-identical (law-pinned), but the
+    stored index is never exchanged or sorted at serve time: the one
+    serve stage the r15 sf30 probe saw grow with the CATALOG.  A sidecar
+    older than an ``ingest_batch`` append fails loudly
+    (:func:`guard_occupancy_fresh`).
+
+    ``max_bucket_size`` counts COMBINED (batch ∪ corpus) occupancy per
+    key: a bucket hot in the corpus prunes even when the batch adds one
+    row.  ``None`` serves uncapped.
+
+    Persistence, one rule for every family, chosen by measurement: the
+    capped union is always persisted — the pair join reads it twice, as
+    a shuffle probe and as a broadcast build, so exchange reuse cannot
+    collapse the two lineages and the batch fold (on the recompute path
+    the corpus fold too) would run twice.  Under a sidecar cap the keyed
+    batch rows also feed the per-key batch counts, so they are persisted
+    as well, unless the caller's ``batch`` is already persisted (the
+    ingest loop's pre-folded chunks, which stay the caller's to
+    release).  Leaving the union unpersisted on the sidecar path, so
+    that no index scan is cached, cost one more Spark job on each of the
+    five sidecar-serving registry queries at sf0.01."""
+    from pyspark import StorageLevel
+
+    from .indexstamp import guard_index
+
+    assert (corpus is None) != (corpus_index is None), (
+        "pass exactly one corpus source: the raw corpus (recompute) or "
+        "corpus_index (stored index)"
+    )
+    assert corpus_occupancy is None or corpus_index is not None, (
+        "corpus_occupancy is a sidecar of the stored index — pass it "
+        "together with corpus_index"
+    )
+    handles = []
+    new_rows = batch.withColumn("_new", F.lit(True))
+    if corpus_index is None:
+        rows = key(
+            corpus.withColumn("_new", F.lit(False)).unionByName(new_rows)
+        )
+    else:
+        new_rows = key(new_rows)
+        if (
+            corpus_occupancy is not None
+            and max_bucket_size is not None
+            and not batch.is_cached
+        ):
+            new_rows = new_rows.persist(StorageLevel.MEMORY_AND_DISK)
+            handles.append(new_rows)
+        if corpus_occupancy is not None:
+            corpus_index = guard_occupancy_fresh(corpus_index, corpus_occupancy)
+        rows = guard_index(corpus_index, family, **params).select(
+            *cols, F.lit(False).alias("_new")
+        ).unionByName(new_rows.select(*cols, "_new"))
+    if max_bucket_size is not None:
+        if corpus_occupancy is not None:
+            kept = kept_keys_with_stored_occupancy(
+                new_rows.groupBy(*keys).agg(
+                    F.count(F.lit(1)).cast("long").alias("_bn")
+                ),
+                guard_index(corpus_occupancy, family, **params),
+                keys,
+                max_bucket_size,
+            )
+            handles.append(kept)
+            rows = rows.join(F.broadcast(kept), keys, "left_semi")
+        else:
+            rows = prune_df_window(rows, keys, max_bucket_size)
+    rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
+    return rows, [*handles, rows]
+
+
+def hamming_serve_pairs(
+    rows: DataFrame, id_col: str, hi: str, lo: str, max_hamming: int
+) -> DataFrame:
+    """(id_a, id_b, hamming), id_a < id_b: the Hamming pair join over a
+    :func:`_serve_rows` chunk table (SimHash-64 and dHash) — batch rows
+    are the build side of the (ci, cv) join, the exact per-half
+    ``bit_count(xor)`` keeps the result lossless for Hamming <= 3."""
+
+    def side(s: str, df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(f"id_{s}"),
+            F.col(hi).alias(f"hi_{s}"),
+            F.col(lo).alias(f"lo_{s}"),
+            "ci", "cv",
+        )
+
+    return (
+        side("a", rows.where(F.col("_new")))
+        .join(side("b", rows), ["ci", "cv"])
+        .where(F.col("id_a") != F.col("id_b"))
+        .select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
+            hamming_ab(),
+        )
+        .distinct()
+        .where(F.col("hamming") <= max_hamming)
     )
 
 
@@ -1477,7 +1629,7 @@ def simhash64_chunk_table(
     from .indexstamp import stamp_index
 
     return stamp_index(
-        _simhash64_chunks(simhash_local64(docs, text_col, id_col), id_col),
+        chunks_4x16(simhash_local64(docs, text_col, id_col), "sim_hi", "sim_lo"),
         "simhash64_chunk_table",
     )
 
@@ -1508,32 +1660,17 @@ def simhash_near_duplicates_incremental64(
     (same hi/lo packing, same chunk map, same cap discipline).
 
     Shape: asymmetric batch-vs-(batch ∪ corpus) — signatures map-only via
-    :func:`simhash_local64` (batch flag rides ``keep``), candidates join
-    on (chunk_idx, chunk_value) with the BATCH side as build side, the
-    cap counts COMBINED occupancy via one count-window
-    (:func:`prune_df_window` — single derivation, output pre-partitioned
-    on the join key), and the exact per-half ``bit_count(xor)`` sum keeps
-    the result lossless for Hamming <= 3 (pigeonhole over 4 chunks).
-    Never corpus x corpus.  Ids must be unique across the two inputs.
-    Output: (id_a, id_b, hamming), id_a < id_b.
+    :func:`simhash_local64`, candidates join on (chunk_idx, chunk_value)
+    with the BATCH side as build side, the cap counts COMBINED occupancy,
+    and the exact per-half ``bit_count(xor)`` sum keeps the result
+    lossless for Hamming <= 3 (pigeonhole over 4 chunks).  Never corpus
+    x corpus.  Ids must be unique across the two inputs.  Output: (id_a,
+    id_b, hamming), id_a < id_b.
 
-    ``corpus_index`` — a STORED corpus chunk table (the
-    :func:`simhash64_chunk_table` shape, typically a parquet table
-    written at ingest, partitioned on ``ci``).  When given,
-    ``corpus_docs`` must be None: the corpus side becomes a decode-free
-    scan of the stored index (no text read, no signature fold), the
-    batch side folds only ``new_docs``, and the combined-occupancy cap
-    applies across stored + batch rows exactly as in the recompute path
-    — results are identical by construction (tested).
-
-    ``corpus_occupancy`` — optional stored occupancy sidecar
-    (:func:`stored_occupancy_table` over the same index build, fp-
-    stamped).  When given (requires ``corpus_index``), the combined-
-    occupancy cap is evaluated as (stored n + batch n) against the
-    kept-key broadcast semi-join instead of a count window over the
-    whole union — result-identical (law-pinned), but the stored index
-    is never exchanged or sorted at serve time (the catalog-growing
-    serve stage the r15 sf30 probe measured).
+    ``corpus_index`` (a stored :func:`simhash64_chunk_table`, in place
+    of ``corpus_docs``: no corpus text read, no corpus signature fold)
+    and ``corpus_occupancy`` follow the shared stored-index contract of
+    :func:`_serve_rows`.
 
     ``batch_chunks`` — optional PRE-FOLDED chunk table for the batch
     side (the :func:`simhash64_chunk_table` shape over exactly
@@ -1545,147 +1682,36 @@ def simhash_near_duplicates_incremental64(
     guide §1.2 "don't compute things twice").  The caller owns the
     handle's persist lifetime; results are identical by determinism of
     the fold."""
+    from .cache import attach_cached
+
     assert max_hamming <= 3, "4-chunk bucketing is lossy beyond Hamming 3"
-    assert (corpus_docs is None) != (corpus_index is None), (
-        "pass exactly one of corpus_docs (recompute) or corpus_index "
-        "(stored signature index)"
-    )
-    assert corpus_occupancy is None or corpus_index is not None, (
-        "corpus_occupancy is a sidecar of the stored index — pass it "
-        "together with corpus_index"
-    )
     assert batch_chunks is None or corpus_index is not None, (
         "batch_chunks is a pre-folded batch-side chunk table — only "
         "meaningful on the stored-index serve path"
     )
-    if corpus_index is None:
-        combined = corpus_docs.select(
-            F.col(id_col), F.col(text_col), F.lit(False).alias("_new")
-        ).unionByName(
-            new_docs.select(
-                F.col(id_col), F.col(text_col), F.lit(True).alias("_new")
-            )
-        )
-        sigs = simhash_local64(combined, text_col, id_col, keep=("_new",))
-        keyed = _simhash64_chunks(sigs, id_col, keep=("_new",))
+
+    def fold(docs: DataFrame) -> DataFrame:
+        sigs = simhash_local64(docs, text_col, id_col, keep=("_new",))
+        return chunks_4x16(sigs, "sim_hi", "sim_lo")
+
+    if batch_chunks is None:
+        batch, key = new_docs.select(id_col, text_col), fold
     else:
-        _batch_persisted_here = False
-        if batch_chunks is not None:
-            # caller pre-folded (and owns the persist of) the batch's
-            # chunk table — just project it into the serve-side shape
-            batch = batch_chunks.select(
-                F.col(id_col), F.lit(True).alias("_new"),
-                F.col("sim_hi"), F.col("sim_lo"), F.col("ci"), F.col("cv"),
-            )
-        else:
-            batch = _simhash64_chunks(
-                simhash_local64(
-                    new_docs.select(
-                        F.col(id_col), F.col(text_col),
-                        F.lit(True).alias("_new"),
-                    ),
-                    text_col, id_col, keep=("_new",),
-                ),
-                id_col, keep=("_new",),
-            )
-        from .indexstamp import guard_index
-
-        if (
-            corpus_occupancy is not None
-            and max_bucket_size is not None
-            and batch_chunks is None
-        ):
-            # the batch chunk table feeds BOTH the per-key batch counts
-            # and the union below; without a persist the signature fold
-            # (the batch's dominant CPU) would run once per consumer.
-            # With caller-provided batch_chunks both consumers hit the
-            # caller's cache instead — a second persist of the same rows
-            # would only double the storage.
-            from pyspark import StorageLevel as _SL
-
-            batch = batch.persist(_SL.MEMORY_AND_DISK)
-            _batch_persisted_here = True
-        src = corpus_index
-        if corpus_occupancy is not None:
-            # content-staleness assert rides the index scan (lazy, one
-            # constant comparison per row) — a sidecar that predates an
-            # ingest_batch append fails loudly instead of under-capping
-            src = guard_occupancy_fresh(src, corpus_occupancy)
-        keyed = guard_index(
-            src, "simhash64_chunk_table"
-        ).select(
-            F.col(id_col), F.lit(False).alias("_new"),
-            F.col("sim_hi"), F.col("sim_lo"), F.col("ci"), F.col("cv"),
-        ).unionByName(
-            batch.select(id_col, "_new", "sim_hi", "sim_lo", "ci", "cv")
-        )
-    if max_bucket_size is not None:
-        if corpus_occupancy is not None:
-            from .indexstamp import guard_index as _guard_occ
-
-            kept = kept_keys_with_stored_occupancy(
-                batch.groupBy("ci", "cv").agg(
-                    F.count(F.lit(1)).cast("long").alias("_bn")
-                ),
-                _guard_occ(corpus_occupancy, "simhash64_chunk_table"),
-                ["ci", "cv"],
-                max_bucket_size,
-            )
-            keyed = keyed.join(F.broadcast(kept), ["ci", "cv"], "left_semi")
-        else:
-            keyed = prune_df_window(keyed, ["ci", "cv"], max_bucket_size)
-    # persist the capped chunk table: the a/b sides below consume it under
-    # DIFFERENT exchange types (shuffle probe vs broadcast build), so
-    # exchange reuse cannot collapse the duplicate lineage and the
-    # 64-position signature fold — the query's dominant CPU — would run
-    # TWICE over the full corpus (profiled: 2 x ~190 executor-seconds at
-    # sf1).  Four small rows per doc (~50 B each); the same persisted-base
-    # discipline as minhash_near_duplicates_incremental's shingle table.
-    # In production this table is the stored signature index — content-
-    # addressed, computed once at ingest — so the cache stands in for
-    # that storage exactly as the video frame-hash cache does.
-    from pyspark import StorageLevel
-
-    keyed = keyed.persist(StorageLevel.MEMORY_AND_DISK)
-    a = keyed.where(F.col("_new")).select(
-        F.col(id_col).alias("id_a"),
-        F.col("sim_hi").alias("hi_a"),
-        F.col("sim_lo").alias("lo_a"),
-        "ci", "cv",
+        batch, key = batch_chunks, lambda chunks: chunks
+    rows, handles = _serve_rows(
+        batch,
+        None if corpus_docs is None else corpus_docs.select(id_col, text_col),
+        key,
+        corpus_index,
+        corpus_occupancy,
+        "simhash64_chunk_table",
+        {},
+        [id_col, "sim_hi", "sim_lo", "ci", "cv"],
+        ["ci", "cv"],
+        max_bucket_size,
     )
-    b = keyed.select(
-        F.col(id_col).alias("id_b"),
-        F.col("sim_hi").alias("hi_b"),
-        F.col("sim_lo").alias("lo_b"),
-        "ci", "cv",
-    )
-    out = (
-        a.join(b, ["ci", "cv"])
-        .where(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-            (
-                F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-                + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-            )
-            .cast("int")
-            .alias("hamming"),
-        )
-        .distinct()
-        .where(F.col("hamming") <= max_hamming)
-    )
-    from .cache import attach_cached
-
-    if corpus_occupancy is not None and max_bucket_size is not None:
-        # the keep set — and the batch chunk table when THIS call
-        # persisted it (a caller-provided batch_chunks handle belongs to
-        # the caller) — are further live handles the caller must be able
-        # to release (cache-lifetime contract)
-        if _batch_persisted_here:
-            return attach_cached(out, keyed, batch, kept)
-        return attach_cached(out, keyed, kept)
-    return attach_cached(out, keyed)
+    pairs = hamming_serve_pairs(rows, id_col, "sim_hi", "sim_lo", max_hamming)
+    return attach_cached(pairs, *handles)
 
 
 def stored_occupancy_table(

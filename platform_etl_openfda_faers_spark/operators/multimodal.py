@@ -34,6 +34,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import (
+    _serve_rows,
+    chunks_4x16,
+    hamming_ab,
+    hamming_serve_pairs,
+    prune_df_window,
+)
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -3227,34 +3235,8 @@ def image_dhash(
     )
 
 
-def _dhash_chunks(
-    hashes: DataFrame, id_col: str, keep: tuple[str, ...] = ()
-) -> DataFrame:
-    """Explode an ``image_dhash`` table into its 4 x 16-bit pigeonhole
-    chunk rows: (id, *keep, dhash_hi, dhash_lo, ci, cv) — the ONE chunk
-    map shared by the full, incremental, and stored-index dHash paths
-    (the image analogue of ``dedup._simhash64_chunks``)."""
-    lo, hi = F.col("dhash_lo"), F.col("dhash_hi")
-    mask = F.lit((1 << 16) - 1)
-    chunks = F.array(
-        F.struct(F.lit(0).alias("ci"), lo.bitwiseAND(mask).alias("cv")),
-        F.struct(
-            F.lit(1).alias("ci"),
-            F.shiftrightunsigned(lo, 16).bitwiseAND(mask).alias("cv"),
-        ),
-        F.struct(F.lit(2).alias("ci"), hi.bitwiseAND(mask).alias("cv")),
-        F.struct(
-            F.lit(3).alias("ci"),
-            F.shiftrightunsigned(hi, 16).bitwiseAND(mask).alias("cv"),
-        ),
-    )
-    return hashes.select(
-        F.col(id_col), *[F.col(c) for c in keep],
-        "dhash_hi", "dhash_lo", F.explode(chunks).alias("c"),
-    ).select(
-        id_col, *keep, "dhash_hi", "dhash_lo",
-        F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv"),
-    )
+# the split 64-bit dHash columns of image and video-frame hash tables
+_DHASH = ("dhash_hi", "dhash_lo")
 
 
 def dhash_chunk_table(
@@ -3273,7 +3255,10 @@ def dhash_chunk_table(
     (``indexstamp``) asserted at serve time."""
     from .indexstamp import stamp_index
 
-    return stamp_index(_dhash_chunks(hashes, id_col), "dhash_chunk_table")
+    return stamp_index(
+        chunks_4x16(hashes.select(id_col, *_DHASH), *_DHASH),
+        "dhash_chunk_table",
+    )
 
 
 def dhash_near_duplicates(
@@ -3307,26 +3292,15 @@ def dhash_near_duplicates(
     Spark and the SQL oracle).  Output: (id_a, id_b, hamming).
     """
     assert max_hamming <= 3, "4-chunk bucketing is lossy beyond Hamming 3"
-    keyed = _dhash_chunks(hashes, id_col)
+    keyed = chunks_4x16(hashes.select(id_col, *_DHASH), *_DHASH)
     if max_bucket_size is not None:
-        from .dedup import prune_df_window
-
         keyed = prune_df_window(keyed, ["ci", "cv"], max_bucket_size)
     a = keyed.toDF("id_a", "hi_a", "lo_a", "ci", "cv")
     b = keyed.toDF("id_b", "hi_b", "lo_b", "ci", "cv")
     return (
         a.join(b, ["ci", "cv"])
         .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-                + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-            )
-            .cast("int")
-            .alias("hamming"),
-        )
+        .select("id_a", "id_b", hamming_ab())
         .distinct()
         .where(F.col("hamming") <= max_hamming)
     )
@@ -3360,155 +3334,31 @@ def dhash_near_duplicates_incremental(
     lossless for Hamming <= ``max_hamming``.  Ids must be unique across
     the two inputs.  Output: (id_a, id_b, hamming), id_a < id_b.
 
-    ``corpus_index`` — a STORED corpus chunk table (the
-    :func:`dhash_chunk_table` shape, typically parquet partitioned on
-    ``ci``, written at ingest).  When given, ``corpus_hashes`` must be
-    None: the corpus side becomes a DECODE-FREE scan of the stored index
-    (no corpus image bytes read, no dHash recomputed — the biggest
-    stored-index win of the three families, because the amortized cost
-    is the Python/Arrow image decode itself), the batch side hashes only
-    ``new_hashes``'s images, and the combined-occupancy cap applies
-    across stored + batch rows exactly as in the recompute path.
-
-    ``corpus_occupancy`` — optional stored occupancy sidecar
-    (``dedup.stored_occupancy_table`` over the same index build, fp- and
-    content-stamped).  When given (requires ``corpus_index``), the cap
-    is evaluated as (stored n + batch n) with a kept-key BROADCAST
-    semi-join instead of a count window over the whole union —
-    result-identical (law-pinned), but the stored index is never
-    exchanged, sorted, or PERSISTED at serve time (the recompute/plain
-    stored paths cache the whole capped chunk table for the a/b dual
-    consumption; with a sidecar only the BATCH's decode+hash lineage is
-    cached and the catalog side stays a streaming parquet scan — the
-    fourth family to take the r15 sf30 re-plan, after dedup SimHash,
-    video frames, and audio landmarks).
+    ``corpus_index`` (a stored :func:`dhash_chunk_table`, in place of
+    ``corpus_hashes``: no corpus image bytes read, no dHash recomputed —
+    the amortized cost here is the Python/Arrow image decode itself) and
+    ``corpus_occupancy`` follow the shared stored-index contract of
+    ``dedup._serve_rows``.
     """
-    assert max_hamming <= 3, "4-chunk bucketing is lossy beyond Hamming 3"
-    assert (corpus_hashes is None) != (corpus_index is None), (
-        "pass exactly one of corpus_hashes (recompute) or corpus_index "
-        "(stored chunk index)"
-    )
-    assert corpus_occupancy is None or corpus_index is not None, (
-        "corpus_occupancy is a sidecar of the stored index — pass it "
-        "together with corpus_index"
-    )
-    if corpus_index is None:
-        combined = corpus_hashes.select(
-            F.col(id_col), "dhash_hi", "dhash_lo", F.lit(False).alias("_new")
-        ).unionByName(
-            new_hashes.select(
-                F.col(id_col), "dhash_hi", "dhash_lo",
-                F.lit(True).alias("_new"),
-            )
-        )
-        keyed = _dhash_chunks(combined, id_col, keep=("_new",))
-    else:
-        batch = _dhash_chunks(
-            new_hashes.select(
-                F.col(id_col), "dhash_hi", "dhash_lo",
-                F.lit(True).alias("_new"),
-            ),
-            id_col, keep=("_new",),
-        )
-        if corpus_occupancy is not None:
-            # the batch chunk table feeds BOTH the per-key batch counts
-            # and the union below; without a persist the batch's image
-            # decode+hash (its dominant CPU) would run once per consumer
-            from pyspark import StorageLevel as _SL
-
-            batch = batch.persist(_SL.MEMORY_AND_DISK)
-        from .indexstamp import guard_index
-
-        src = corpus_index
-        if corpus_occupancy is not None:
-            # content-staleness assert rides the index scan (lazy, one
-            # constant comparison per row) — a sidecar that predates an
-            # ingest_batch append fails loudly instead of under-capping
-            from .dedup import guard_occupancy_fresh
-
-            src = guard_occupancy_fresh(src, corpus_occupancy)
-        keyed = guard_index(src, "dhash_chunk_table").select(
-            F.col(id_col), F.lit(False).alias("_new"),
-            F.col("dhash_hi"), F.col("dhash_lo"), F.col("ci"), F.col("cv"),
-        ).unionByName(
-            batch.select(id_col, "_new", "dhash_hi", "dhash_lo", "ci", "cv")
-        )
-    if max_bucket_size is not None:
-        if corpus_occupancy is not None:
-            from .dedup import kept_keys_with_stored_occupancy
-            from .indexstamp import guard_index as _guard_occ
-
-            kept = kept_keys_with_stored_occupancy(
-                batch.groupBy("ci", "cv").agg(
-                    F.count(F.lit(1)).cast("long").alias("_bn")
-                ),
-                _guard_occ(corpus_occupancy, "dhash_chunk_table"),
-                ["ci", "cv"],
-                max_bucket_size,
-            )
-            keyed = keyed.join(F.broadcast(kept), ["ci", "cv"], "left_semi")
-        else:
-            from .dedup import prune_df_window
-
-            keyed = prune_df_window(keyed, ["ci", "cv"], max_bucket_size)
-    from pyspark import StorageLevel
-
-    if corpus_occupancy is None:
-        # persist the capped chunk table: the a/b sides consume it under
-        # DIFFERENT exchange types (shuffle probe vs broadcast build), so
-        # exchange reuse cannot collapse the duplicate lineage — WITHOUT
-        # the cache the upstream decode+hash pipeline runs TWICE
-        # (profiled at sf1: two decode stages, 124 + 47 executor-seconds,
-        # vs the full form's single 105s stage).  Four ~50-byte rows per
-        # image; the production analogue is the stored hash index,
-        # computed once at ingest (the same discipline as the video
-        # frame-hash cache and the 64-bit SimHash chunk table).
-        keyed = keyed.persist(StorageLevel.MEMORY_AND_DISK)
-    # with a sidecar, only the BATCH lineage is cached (persisted above):
-    # caching `keyed` would materialize the CATALOG-sized index scan into
-    # executor memory, exactly what the stored-occupancy re-plan exists
-    # to avoid — the decode-free parquet scan of the index is cheaper
-    # than its own cache at catalog scale
-    a = keyed.where(F.col("_new")).select(
-        F.col(id_col).alias("id_a"),
-        F.col("dhash_hi").alias("hi_a"),
-        F.col("dhash_lo").alias("lo_a"),
-        "ci",
-        "cv",
-    )
-    b = keyed.select(
-        F.col(id_col).alias("id_b"),
-        F.col("dhash_hi").alias("hi_b"),
-        F.col("dhash_lo").alias("lo_b"),
-        "ci",
-        "cv",
-    )
-    out = (
-        a.join(b, ["ci", "cv"])
-        .where(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-            (
-                F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-                + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-            )
-            .cast("int")
-            .alias("hamming"),
-        )
-        .distinct()
-        .where(F.col("hamming") <= max_hamming)
-    )
     from .cache import attach_cached
 
-    if corpus_occupancy is not None:
-        # the persisted batch chunk table (and the persisted keep set,
-        # when capped) are live handles the caller must be able to
-        # release (cache-lifetime contract)
-        if max_bucket_size is not None:
-            return attach_cached(out, batch, kept)
-        return attach_cached(out, batch)
-    return attach_cached(out, keyed)
+    assert max_hamming <= 3, "4-chunk bucketing is lossy beyond Hamming 3"
+
+    rows, handles = _serve_rows(
+        new_hashes.select(id_col, *_DHASH),
+        None if corpus_hashes is None else corpus_hashes.select(id_col, *_DHASH),
+        lambda hashes: chunks_4x16(hashes, *_DHASH),
+        corpus_index,
+        corpus_occupancy,
+        "dhash_chunk_table",
+        {},
+        [id_col, *_DHASH, "ci", "cv"],
+        ["ci", "cv"],
+        max_bucket_size,
+    )
+    pairs = hamming_serve_pairs(rows, id_col, *_DHASH, max_hamming)
+    return attach_cached(pairs, *handles)
+
 
 
 VIDEO_DHASH_SCHEMA = T.StructType(
@@ -3616,52 +3466,17 @@ def video_near_duplicates(
     n_frame_matches), id_a < id_b.
     """
     assert max_hamming <= 3, "4-chunk bucketing is lossy beyond Hamming 3"
-    lo, hi = F.col("dhash_lo"), F.col("dhash_hi")
-    mask = F.lit((1 << 16) - 1)
-    chunks = F.array(
-        F.struct(F.lit(0).alias("ci"), lo.bitwiseAND(mask).alias("cv")),
-        F.struct(
-            F.lit(1).alias("ci"),
-            F.shiftrightunsigned(lo, 16).bitwiseAND(mask).alias("cv"),
-        ),
-        F.struct(F.lit(2).alias("ci"), hi.bitwiseAND(mask).alias("cv")),
-        F.struct(
-            F.lit(3).alias("ci"),
-            F.shiftrightunsigned(hi, 16).bitwiseAND(mask).alias("cv"),
-        ),
-    )
-    keyed = frame_hashes.select(
-        "media_id", "frame_idx", "dhash_hi", "dhash_lo",
-        F.explode(chunks).alias("c"),
-    ).select(
-        "media_id",
-        "frame_idx",
-        "dhash_hi",
-        "dhash_lo",
-        F.col("c.ci").alias("ci"),
-        F.col("c.cv").alias("cv"),
+    keyed = chunks_4x16(
+        frame_hashes.select("media_id", "frame_idx", *_DHASH), *_DHASH
     )
     if max_bucket_size is not None:
-        from .dedup import prune_df_window
-
         keyed = prune_df_window(keyed, ["ci", "cv"], max_bucket_size)
     a = keyed.toDF("id_a", "f_a", "hi_a", "lo_a", "ci", "cv")
     b = keyed.toDF("id_b", "f_b", "hi_b", "lo_b", "ci", "cv")
     frame_pairs = (
         a.join(b, ["ci", "cv"])
         .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "f_a",
-            "id_b",
-            "f_b",
-            (
-                F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-                + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-            )
-            .cast("int")
-            .alias("hamming"),
-        )
+        .select("id_a", "f_a", "id_b", "f_b", hamming_ab())
         .distinct()
         .where(F.col("hamming") <= max_hamming)
     )
@@ -3688,7 +3503,9 @@ def video_frame_chunk_table(frame_hashes: DataFrame) -> DataFrame:
     from .indexstamp import stamp_index
 
     return stamp_index(
-        _dhash_chunks(frame_hashes, "media_id", keep=("frame_idx",)),
+        chunks_4x16(
+            frame_hashes.select("media_id", "frame_idx", *_DHASH), *_DHASH
+        ),
         "video_frame_chunk_table",
     )
 
@@ -3721,133 +3538,51 @@ def video_near_duplicates_incremental(
     exactly.  Video ids must be unique across the two inputs.
     Output: (id_a, id_b, n_frame_matches), id_a < id_b.
 
-    ``corpus_index`` — a STORED catalog frame-chunk table (the
-    :func:`video_frame_chunk_table` shape, typically parquet partitioned
-    on ``ci``, written at ingest).  When given, ``corpus_frame_hashes``
-    must be None: the catalog side becomes a DECODE-FREE scan of the
-    stored index — no catalog video bytes read, no container walk, no
-    per-frame JPEG decode, no frame dHash (the heaviest fold in the
-    repo) — the batch side decodes only its own clips, and the
-    combined-occupancy cap applies across stored + batch rows exactly
-    as in the recompute path.
-
-    ``corpus_occupancy`` — optional stored occupancy sidecar
-    (``dedup.stored_occupancy_table`` over the same index build,
-    fp-stamped).  When given (requires ``corpus_index``), the cap is
-    evaluated as (stored n + batch n) with a kept-key BROADCAST
-    semi-join instead of a count window over the whole union —
-    result-identical (law-pinned), but the stored index is never
-    exchanged or sorted at serve time.  This is the r15 sf30 probe's
-    finding made code: the occupancy recompute was the one serve stage
-    whose input grew with the CATALOG (serve read 4.55x for 3x data
-    while the batch only tripled).
+    ``corpus_index`` (a stored :func:`video_frame_chunk_table`, in
+    place of ``corpus_frame_hashes``: no catalog video bytes read, no
+    container walk, no per-frame JPEG decode, no frame dHash — the
+    heaviest fold in the repo) and ``corpus_occupancy`` follow the
+    shared stored-index contract of ``dedup._serve_rows``.
     """
+    from .cache import attach_cached
+
     assert max_hamming <= 3, "4-chunk bucketing is lossy beyond Hamming 3"
-    assert (corpus_frame_hashes is None) != (corpus_index is None), (
-        "pass exactly one of corpus_frame_hashes (recompute) or "
-        "corpus_index (stored frame-chunk index)"
+    cols = ["media_id", "frame_idx", *_DHASH]
+    rows, handles = _serve_rows(
+        new_frame_hashes.select(*cols),
+        None
+        if corpus_frame_hashes is None
+        else corpus_frame_hashes.select(*cols),
+        lambda hashes: chunks_4x16(hashes, *_DHASH),
+        corpus_index,
+        corpus_occupancy,
+        "video_frame_chunk_table",
+        {},
+        [*cols, "ci", "cv"],
+        ["ci", "cv"],
+        max_bucket_size,
     )
-    assert corpus_occupancy is None or corpus_index is not None, (
-        "corpus_occupancy is a sidecar of the stored index — pass it "
-        "together with corpus_index"
-    )
-    if corpus_index is None:
-        combined = corpus_frame_hashes.select(
-            "media_id", "frame_idx", "dhash_hi", "dhash_lo",
-            F.lit(False).alias("_new"),
-        ).unionByName(
-            new_frame_hashes.select(
-                "media_id", "frame_idx", "dhash_hi", "dhash_lo",
-                F.lit(True).alias("_new"),
-            )
+
+    def side(s: str, df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col("media_id").alias(f"id_{s}"),
+            F.col("frame_idx").alias(f"f_{s}"),
+            F.col("dhash_hi").alias(f"hi_{s}"),
+            F.col("dhash_lo").alias(f"lo_{s}"),
+            "ci", "cv",
         )
-        keyed = _dhash_chunks(
-            combined, "media_id", keep=("frame_idx", "_new")
-        )
-    else:
-        batch = _dhash_chunks(
-            new_frame_hashes.select(
-                "media_id", "frame_idx", "dhash_hi", "dhash_lo",
-                F.lit(True).alias("_new"),
-            ),
-            "media_id", keep=("frame_idx", "_new"),
-        )
-        if corpus_occupancy is not None and max_bucket_size is not None:
-            # the batch chunk table feeds BOTH the per-key batch counts
-            # and the union below; without a persist the batch's video
-            # decode (its dominant CPU) would run once per consumer
-            from pyspark import StorageLevel as _SL
 
-            batch = batch.persist(_SL.MEMORY_AND_DISK)
-        from .indexstamp import guard_index
-
-        src = corpus_index
-        if corpus_occupancy is not None:
-            # content-staleness assert rides the index scan (lazy, one
-            # constant comparison per row) — a sidecar that predates an
-            # ingest_batch append fails loudly instead of under-capping
-            from .dedup import guard_occupancy_fresh
-
-            src = guard_occupancy_fresh(src, corpus_occupancy)
-        keyed = guard_index(src, "video_frame_chunk_table").select(
-            F.col("media_id"), F.col("frame_idx"),
-            F.lit(False).alias("_new"),
-            F.col("dhash_hi"), F.col("dhash_lo"), F.col("ci"), F.col("cv"),
-        ).unionByName(
-            batch.select(
-                "media_id", "frame_idx", "_new",
-                "dhash_hi", "dhash_lo", "ci", "cv",
-            )
-        )
-    if max_bucket_size is not None:
-        if corpus_occupancy is not None:
-            from .dedup import kept_keys_with_stored_occupancy
-            from .indexstamp import guard_index as _guard_occ
-
-            kept = kept_keys_with_stored_occupancy(
-                batch.groupBy("ci", "cv").agg(
-                    F.count(F.lit(1)).cast("long").alias("_bn")
-                ),
-                _guard_occ(corpus_occupancy, "video_frame_chunk_table"),
-                ["ci", "cv"],
-                max_bucket_size,
-            )
-            keyed = keyed.join(F.broadcast(kept), ["ci", "cv"], "left_semi")
-        else:
-            from .dedup import prune_df_window
-
-            keyed = prune_df_window(keyed, ["ci", "cv"], max_bucket_size)
-    a = keyed.where(F.col("_new")).select(
-        F.col("media_id").alias("id_a"),
-        F.col("frame_idx").alias("f_a"),
-        F.col("dhash_hi").alias("hi_a"),
-        F.col("dhash_lo").alias("lo_a"),
-        "ci",
-        "cv",
-    )
-    b = keyed.select(
-        F.col("media_id").alias("id_b"),
-        F.col("frame_idx").alias("f_b"),
-        F.col("dhash_hi").alias("hi_b"),
-        F.col("dhash_lo").alias("lo_b"),
-        "ci",
-        "cv",
-    )
     fwd = F.col("id_a") < F.col("id_b")
     frame_pairs = (
-        a.join(b, ["ci", "cv"])
+        side("a", rows.where(F.col("_new")))
+        .join(side("b", rows), ["ci", "cv"])
         .where(F.col("id_a") != F.col("id_b"))
         .select(
             F.least("id_a", "id_b").alias("vid_a"),
             F.when(fwd, F.col("f_a")).otherwise(F.col("f_b")).alias("vf_a"),
             F.greatest("id_a", "id_b").alias("vid_b"),
             F.when(fwd, F.col("f_b")).otherwise(F.col("f_a")).alias("vf_b"),
-            (
-                F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-                + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-            )
-            .cast("int")
-            .alias("hamming"),
+            hamming_ab(),
         )
         .distinct()
         .where(F.col("hamming") <= max_hamming)
@@ -3859,13 +3594,8 @@ def video_near_duplicates_incremental(
         .agg(F.count("*").cast("long").alias("n_frame_matches"))
         .where(F.col("n_frame_matches") >= min_frames)
     )
-    if corpus_occupancy is not None and max_bucket_size is not None:
-        # the persisted batch chunk table and keep set are live handles
-        # the caller must be able to release (cache-lifetime contract)
-        from .cache import attach_cached
+    return attach_cached(out, *handles)
 
-        return attach_cached(out, batch, kept)
-    return out
 
 
 def video_fingerprint(frame_hashes: DataFrame) -> DataFrame:
@@ -4390,6 +4120,9 @@ def audio_fingerprint(df: DataFrame, window: int = 64) -> DataFrame:
 def audio_landmarks(peaks: DataFrame, max_dt: int = 3) -> DataFrame:
     """(media_id, a_bin, b_bin, dt): Shazam-style landmark keys — ordered
     pairs of dominant bins ``dt`` windows apart (1 <= dt <= ``max_dt``).
+    Any other peak column besides ``win``/``peak_bin`` must be constant
+    per track (such as the incremental serve's ``_new`` tag) and rides
+    through next to ``media_id``.
 
     A landmark is LOCAL to a dt-window span, so a time-shifted rendition
     of the same content (clipped intro, concatenation) shares most of
@@ -4422,8 +4155,11 @@ def audio_landmarks(peaks: DataFrame, max_dt: int = 3) -> DataFrame:
     exactly as SemDeDup scales k with the corpus (SCALING.md 'Audio
     landmark keyspace' has the full arithmetic).
     """
+    tags = [c for c in peaks.columns if c not in ("media_id", "win", "peak_bin")]
+    track = ["media_id", *tags]
     arr = peaks.groupBy("media_id").agg(
-        F.array_sort(F.collect_list(F.struct("win", "peak_bin"))).alias("s")
+        F.array_sort(F.collect_list(F.struct("win", "peak_bin"))).alias("s"),
+        *[F.first(c).alias(c) for c in tags],
     )
     n = F.size("s")
     # sequence() descends when start > stop — guard both ranges, then
@@ -4446,11 +4182,11 @@ def audio_landmarks(peaks: DataFrame, max_dt: int = 3) -> DataFrame:
         )
     )
     lm = arr.where(n >= 2).select(
-        "media_id",
+        *track,
         F.explode(F.filter(cand, lambda c: c["_end"] <= n - 1)).alias("c"),
     )
     return lm.select(
-        "media_id",
+        *track,
         F.col("c.a_bin").alias("a_bin"),
         F.col("c.b_bin").alias("b_bin"),
         F.col("c.dt").alias("dt"),
@@ -4478,8 +4214,6 @@ def audio_landmark_matches(
     degenerate keys."""
     lm = audio_landmarks(peaks, max_dt=max_dt)
     if max_bucket_size is not None:
-        from .dedup import prune_df_window
-
         lm = prune_df_window(lm, ["a_bin", "b_bin", "dt"], max_bucket_size)
     a = lm.toDF("id_a", "a_bin", "b_bin", "dt")
     b = lm.toDF("id_b", "a_bin", "b_bin", "dt")
@@ -4622,87 +4356,28 @@ def audio_landmark_matches_incremental(
     must be unique across the two inputs.  Output: (id_a, id_b,
     n_matches), id_a < id_b.
 
-    ``corpus_index`` — a STORED catalog landmark table (the
-    :func:`audio_landmark_table` shape, typically parquet partitioned on
-    ``dt``, written at ingest).  When given, ``peaks_corpus`` must be
-    None: the catalog side becomes a decode-free scan of the stored
-    index (no audio bytes read, no FFT, no landmark triangle for catalog
-    tracks — at the measured sf1 profile that is exactly the
-    118-executor-second stage the cache note below identifies as "the
-    stored landmark index", now a tested real-storage path), the batch
-    side builds landmarks only from ``peaks_batch``, and the combined-
-    occupancy cap applies across stored + batch rows exactly as in the
-    recompute path.  The stored table must have been built with the
-    SAME ``max_dt`` — ENFORCED via the ``index_fp`` build stamp
-    (``indexstamp.guard_index``), not just documented.
+    ``corpus_index`` (a stored :func:`audio_landmark_table`, in place of
+    ``peaks_corpus``: no audio bytes read, no FFT, no landmark triangle
+    for catalog tracks) and ``corpus_occupancy`` follow the shared
+    stored-index contract of ``dedup._serve_rows``.  The stored table
+    must have been built with the SAME ``max_dt`` — ENFORCED via its
+    ``index_fp`` build stamp, not just documented.
     """
-    assert (peaks_corpus is None) != (corpus_index is None), (
-        "pass exactly one of peaks_corpus (recompute) or corpus_index "
-        "(stored landmark index)"
-    )
-    assert corpus_occupancy is None or corpus_index is not None, (
-        "corpus_occupancy is a sidecar of the stored index — pass it "
-        "together with corpus_index"
-    )
-    if corpus_index is None:
-        corpus_lm = audio_landmarks(peaks_corpus, max_dt=max_dt)
-    else:
-        from .indexstamp import guard_index
+    from .cache import attach_cached
 
-        src = corpus_index
-        if corpus_occupancy is not None:
-            # content-staleness assert rides the index scan (lazy, one
-            # constant comparison per row) — a sidecar that predates an
-            # ingest_batch append fails loudly instead of under-capping
-            from .dedup import guard_occupancy_fresh
-
-            src = guard_occupancy_fresh(src, corpus_occupancy)
-        corpus_lm = guard_index(
-            src, "audio_landmark_table", max_dt=max_dt
-        ).select("media_id", "a_bin", "b_bin", "dt")
-    batch_lm = audio_landmarks(peaks_batch, max_dt=max_dt)
-    use_occ = corpus_occupancy is not None and max_bucket_size is not None
-    if use_occ:
-        # the batch landmark table feeds BOTH the per-key batch counts
-        # and the union below; without a persist the batch's synthesis +
-        # FFT + landmark build (its dominant CPU) would run per consumer
-        from pyspark import StorageLevel as _SL
-
-        batch_lm = batch_lm.persist(_SL.MEMORY_AND_DISK)
-    lm = corpus_lm.withColumn("_new", F.lit(False)).unionByName(
-        batch_lm.withColumn("_new", F.lit(True))
-    )
     keys = ["a_bin", "b_bin", "dt"]
-    if max_bucket_size is not None:
-        if use_occ:
-            from .dedup import kept_keys_with_stored_occupancy
-            from .indexstamp import guard_index as _guard_occ
-
-            kept = kept_keys_with_stored_occupancy(
-                batch_lm.groupBy(*keys).agg(
-                    F.count(F.lit(1)).cast("long").alias("_bn")
-                ),
-                _guard_occ(
-                    corpus_occupancy, "audio_landmark_table", max_dt=max_dt
-                ),
-                keys,
-                max_bucket_size,
-            )
-            lm = lm.join(F.broadcast(kept), keys, "left_semi")
-        else:
-            from .dedup import prune_df_window
-
-            lm = prune_df_window(lm, keys, max_bucket_size)
-    # persist the capped landmark table: the a/b sides consume it under
-    # DIFFERENT exchange types (shuffle probe vs broadcast build), so
-    # exchange reuse cannot collapse the duplicate lineage — WITHOUT the
-    # cache the synthesis + FFT + landmark build runs TWICE (profiled at
-    # sf1: 118 + 28 executor-second stages).  One small integer row per
-    # landmark; the production analogue is the stored landmark index
-    # (same discipline as the dHash chunk and video frame-hash caches).
-    from pyspark import StorageLevel
-
-    lm = lm.persist(StorageLevel.MEMORY_AND_DISK)
+    lm, handles = _serve_rows(
+        peaks_batch,
+        peaks_corpus,
+        lambda peaks: audio_landmarks(peaks, max_dt=max_dt),
+        corpus_index,
+        corpus_occupancy,
+        "audio_landmark_table",
+        {"max_dt": max_dt},
+        ["media_id", *keys],
+        keys,
+        max_bucket_size,
+    )
     a = lm.where(F.col("_new")).select(
         F.col("media_id").alias("id_a"), "a_bin", "b_bin", "dt"
     )
@@ -4731,16 +4406,7 @@ def audio_landmark_matches_incremental(
         .agg(F.round(F.sum("_w")).cast("long").alias("n_matches"))
         .where(F.col("n_matches") >= min_matches)
     )
-    from .cache import attach_cached
-
-    if use_occ:
-        # the persisted batch landmark table (and keep set, when capped)
-        # are further live handles the caller must be able to release
-        # (cache-lifetime contract)
-        if max_bucket_size is not None:
-            return attach_cached(out, lm, batch_lm, kept)
-        return attach_cached(out, lm, batch_lm)
-    return attach_cached(out, lm)
+    return attach_cached(out, *handles)
 
 
 def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:

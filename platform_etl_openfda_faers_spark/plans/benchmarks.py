@@ -21,6 +21,13 @@ the same parquet files.  Cross-engine float discipline:
 
 from __future__ import annotations
 
+import atexit
+import functools
+import hashlib
+import itertools
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1944,57 +1951,99 @@ def dedup_incremental_simhash64(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def serving_index_build(spark: SparkSession, sf: str) -> str:
-    """BUILD leg of the stored-index serving query: compute the corpus's
-    uncapped 64-bit SimHash chunk table and WRITE it to real
-    ci-partitioned parquet.  Returns the index path.
+_SCRATCH_SEQ = itertools.count(1)
 
-    Scratch location (ADVICE r12): keyed by the Spark applicationId AND
-    the scale factor — two concurrent runs at the same SF get disjoint
-    directories (no overwrite-vs-read race), and the per-application
-    prefix under the system temp dir isn't a fixed squat-prone path.
-    Repeated calls within one session overwrite the same directory, so a
-    session's scratch footprint is bounded at one index per SF."""
-    import hashlib as _hl
-    import os as _os
-    import tempfile as _tf
 
-    from ..sources.writers import write_partitioned
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="spark_graft_")
+    atexit.register(shutil.rmtree, root, True)
+    return root
 
-    docs = load_docs(spark, sf)
-    corpus = docs.where(F.col("doc_id") % 7 != 0)
-    idx_path = _os.path.join(
-        _tf.gettempdir(),
-        f"spark_graft_serving_index_{spark.sparkContext.applicationId}",
-        f"simhash64_{_hl.md5(sf.encode()).hexdigest()[:12]}",
+
+def scratch_path(kind: str, sf: str, fresh: bool) -> str:
+    """Where a registry query writes its stored index: ``<kind>_<sf
+    digest>`` under ONE scratch root per process, made under the system
+    temp dir on first use and removed at interpreter exit.  Concurrent
+    processes get disjoint roots (no overwrite-vs-read race, no fixed
+    squat-prone path).
+
+    ``fresh=False``: repeated calls at one SF reuse (overwrite) the same
+    directory.  ``fresh=True`` (VERDICT r15 #1) returns a never-reused
+    ``i<n>`` leaf below that directory, after clearing earlier leaves —
+    for the queries that rmtree, rewrite and rename (compact) their index
+    within one Spark app, where a stale file listing of the previous
+    invocation's directories must be unreachable by construction.  Either
+    way a process holds at most one live index per query and SF."""
+    path = os.path.join(
+        _scratch_root(), f"{kind}_{hashlib.md5(sf.encode()).hexdigest()[:12]}"
     )
-    from ..sources.writers import cluster_for_partitioned_write
+    if not fresh:
+        return path
+    shutil.rmtree(path, ignore_errors=True)
+    return os.path.join(path, f"i{next(_SCRATCH_SEQ)}")
 
+
+def write_serving_index(
+    spark: SparkSession,
+    sf: str,
+    kind: str,
+    table: DataFrame,
+    id_col: str,
+    part_col: str,
+    n_parts: int,
+    keys: tuple[str, ...],
+) -> str:
+    """BUILD leg shared by the four stored-index serving queries: write
+    the family's stamped index ``table`` to real parquet partitioned on
+    ``part_col`` (``n_parts`` values, files clustered by ``id_col``)
+    plus its :func:`dedup.stored_occupancy_table` sidecar over ``keys``
+    at ``<path>_occ``; returns the index path."""
+    from ..sources.writers import cluster_for_partitioned_write, write_partitioned
+
+    idx_path = scratch_path(kind, sf, fresh=False)
     # clustered write (guide §6): bound the index's file count to the
     # write parallelism — 4 ci dirs x 32 map tasks otherwise shed ~128
     # tiny files whose listing dominates the occupancy scan and every
     # serve-time read
     write_partitioned(
-        cluster_for_partitioned_write(
-            dedup.simhash64_chunk_table(corpus, "text", "doc_id"),
-            ["ci"], "doc_id", 4,
-        ),
+        cluster_for_partitioned_write(table, [part_col], id_col, n_parts),
         idx_path,
-        ["ci"],
+        [part_col],
     )
-    # occupancy sidecar (r15, from the sf30 probe's finding): per-bucket
-    # counts computed ONCE here from the just-written index (a cheap
-    # signature scan — no text fold) so the serve-time cap never
+    # the path is reused across invocations (overwrite): drop any stale
+    # same-app file listing before reading it back (VERDICT r15 #1)
+    spark.catalog.refreshByPath(idx_path)
+    # occupancy sidecar (r15, from the sf30 probe's finding): per-key
+    # counts computed ONCE from the written index — a cheap integer
+    # scan, no decode or fold — so the serve-time cap never
     # re-aggregates the catalog side
     dedup.stored_occupancy_table(
-        spark.read.parquet(idx_path)
+        spark.read.parquet(idx_path), keys=keys
     ).write.mode("overwrite").parquet(idx_path + "_occ")
-    # this leg REUSES its sf-keyed path across invocations (overwrite) —
-    # same-app re-serves must not ride the previous build's file listing
-    # (VERDICT r15 #1's flake class)
-    spark.catalog.refreshByPath(idx_path)
     spark.catalog.refreshByPath(idx_path + "_occ")
     return idx_path
+
+
+def read_serving_index(
+    spark: SparkSession, idx_path: str
+) -> tuple[DataFrame, DataFrame]:
+    """(stored index, occupancy sidecar) for a SERVE leg; every build leg
+    writes the sidecar next to its index."""
+    return spark.read.parquet(idx_path), spark.read.parquet(idx_path + "_occ")
+
+
+def serving_index_build(spark: SparkSession, sf: str) -> str:
+    """BUILD leg of the stored-index serving query: compute the corpus's
+    uncapped 64-bit SimHash chunk table and WRITE it to real
+    ci-partitioned parquet with its occupancy sidecar.  Returns the
+    index path."""
+    corpus = load_docs(spark, sf).where(F.col("doc_id") % 7 != 0)
+    return write_serving_index(
+        spark, sf, "simhash64",
+        dedup.simhash64_chunk_table(corpus, "text", "doc_id"),
+        "doc_id", "ci", 4, ("ci", "cv"),
+    )
 
 
 def serving_index_serve(
@@ -2003,20 +2052,10 @@ def serving_index_serve(
     """SERVE leg: near-dup check the batch (doc_id % 7 == 0) against the
     STORED chunk index at ``idx_path`` via ``corpus_index=`` — the corpus
     text is never re-read and the signature fold runs only over the
-    batch."""
-    import os as _os
-
-    docs = load_docs(spark, sf)
-    new = docs.where(F.col("doc_id") % 7 == 0)
-    stored = spark.read.parquet(idx_path)
-    # occupancy sidecar written by the build leg when present (the
-    # compacted-index build also writes one post-compaction); serving
-    # falls back to the count-window cap for indexes without it
-    occ = (
-        spark.read.parquet(idx_path + "_occ")
-        if _os.path.exists(idx_path + "_occ")
-        else None
-    )
+    batch; the cap reads the occupancy sidecar (the compacted-index
+    build writes one post-compaction)."""
+    new = load_docs(spark, sf).where(F.col("doc_id") % 7 == 0)
+    stored, occ = read_serving_index(spark, idx_path)
     return dedup.simhash_near_duplicates_incremental64(
         new,
         None,
@@ -2069,12 +2108,6 @@ BUILD_SERVE: dict[str, tuple] = {
 }
 
 
-# per-process invocation counter for compacted_index_build's fresh-leaf
-# scratch discipline (NOT a timestamp/uuid: deterministic across runs,
-# and monotonic within one app is all re-entrancy needs)
-_COMPACT_BUILD_SEQ = 0
-
-
 def compacted_index_build(spark: SparkSession, sf: str) -> str:
     """BUILD+COMPACT leg of ``dedup_compacted_serve``: write the corpus
     chunk table as THREE ``ingest_batch=<id>`` partition directories
@@ -2092,35 +2125,17 @@ def compacted_index_build(spark: SparkSession, sf: str) -> str:
     exercised on the passing side.
 
     RE-ENTRANCY within one Spark app (VERDICT r15 #1): each invocation
-    builds under a FRESH ``i<n>`` leaf (a per-process counter), after
-    clearing the sf-keyed parent of earlier invocations' leaves — this
-    query rmtree-and-rewrites, compacts (directory RENAMES), and serves
-    the same logical index, and the r15 warm bench caught iteration 2
+    builds under a FRESH scratch leaf (:func:`scratch_path`) — this query
+    rmtree-and-rewrites, compacts (directory RENAMES), and serves the
+    same logical index, and the r15 warm bench caught iteration 2
     erroring on a save over the reused path (unreproducible in
-    isolation — consistent with a stale file-listing cache).  A
-    never-reused leaf makes any stale listing of the previous
-    invocation's directories unreachable by construction, and the
-    parent clear bounds the session's scratch footprint at one live
-    index per SF.  The real loop prevents re-append corruption with the
-    checkpoint + watermark; a benchmark callable has neither."""
-    import hashlib as _hl
-    import os as _os
-    import shutil as _sh
-    import tempfile as _tf
-
+    isolation — consistent with a stale file-listing cache).  The real
+    loop prevents re-append corruption with the checkpoint + watermark;
+    a benchmark callable has neither."""
     from ..streaming.ingest import compact_ingest_index
 
-    docs = load_docs(spark, sf)
-    corpus = docs.where(F.col("doc_id") % 7 != 0)
-    global _COMPACT_BUILD_SEQ
-    _COMPACT_BUILD_SEQ += 1
-    parent = _os.path.join(
-        _tf.gettempdir(),
-        f"spark_graft_compacted_index_{spark.sparkContext.applicationId}",
-        f"simhash64_{_hl.md5(sf.encode()).hexdigest()[:12]}",
-    )
-    _sh.rmtree(parent, ignore_errors=True)
-    idx_path = _os.path.join(parent, f"i{_COMPACT_BUILD_SEQ}")
+    corpus = load_docs(spark, sf).where(F.col("doc_id") % 7 != 0)
+    idx_path = scratch_path("compacted_simhash64", sf, fresh=True)
     # ONE fold pass + ONE write job for all three batch directories (r16
     # optimization, guide §1.2 "remove passes"/§2.4): the former
     # per-batch loop ran three write jobs, each scanning `documents` and
@@ -2241,11 +2256,6 @@ _SIMHASH64_LOOP_SQL = f"""
     JOIN sig s ON s.doc_id = acc.doc_id
 """
 
-# per-process invocation counter — same fresh-leaf scratch discipline
-# as compacted_index_build (the loop rmtree/rewrites per invocation)
-_LOOP_BUILD_SEQ = 0
-
-
 @query("dedup_ingest_loop_serve", _SIMHASH64_LOOP_SQL)
 def dedup_ingest_loop_serve(spark: SparkSession, sf: str) -> DataFrame:
     """The INGEST LOOP itself under the driver certificate (VERDICT r15
@@ -2282,24 +2292,13 @@ def dedup_ingest_loop_serve(spark: SparkSession, sf: str) -> DataFrame:
     At 100 TB: each batch pays the signature fold for ITS OWN docs only
     — the corpus side is a decode-free scan of the stored index, and the
     only cross-batch state is the index parquet + the tiny additive
-    occupancy sidecar."""
-    import hashlib as _hl
-    import os as _os
-    import shutil as _sh
-    import tempfile as _tf
-
+    occupancy sidecar.  The loop rewrites its index per invocation, so
+    it builds under a fresh scratch leaf (:func:`scratch_path`), as
+    ``compacted_index_build`` does."""
     from ..streaming import ingest as _ingest
 
-    global _LOOP_BUILD_SEQ
-    _LOOP_BUILD_SEQ += 1
     docs = load_docs(spark, sf)
-    parent = _os.path.join(
-        _tf.gettempdir(),
-        f"spark_graft_ingest_loop_{spark.sparkContext.applicationId}",
-        f"simhash64_{_hl.md5(sf.encode()).hexdigest()[:12]}",
-    )
-    _sh.rmtree(parent, ignore_errors=True)
-    base = _os.path.join(parent, f"i{_LOOP_BUILD_SEQ}")
+    base = scratch_path("ingest_loop_simhash64", sf, fresh=True)
     idx, acc = f"{base}/index", f"{base}/accepted"
     for b in range(3):
         _ingest.dedup_ingest_batch(
@@ -6395,49 +6394,16 @@ def image_serving_index_build(spark: SparkSession, sf: str) -> str:
     :func:`multimodal.dhash_chunk_table` (index_fp-stamped) and WRITE
     the chunk table to real ci-partitioned parquet plus its
     stored-occupancy sidecar — the ingest-time fold a production image
-    catalog pays once.  Scratch path keyed by applicationId + SF, same
-    discipline as :func:`audio_serving_index_build`."""
-    import hashlib as _hl
-    import os as _os
-    import tempfile as _tf
-
-    from ..operators import dedup
-    from ..sources.writers import write_partitioned
-
+    catalog pays once."""
     docs = load_docs(spark, sf).select("doc_id")
     corpus = multimodal.synthetic_bmp_media_perceptual(
         docs.where(F.col("doc_id") % 7 != 0), "doc_id", perturb=True
     )
-    idx_path = _os.path.join(
-        _tf.gettempdir(),
-        f"spark_graft_serving_index_{spark.sparkContext.applicationId}",
-        f"imagedhash_{_hl.md5(sf.encode()).hexdigest()[:12]}",
+    return write_serving_index(
+        spark, sf, "imagedhash",
+        multimodal.dhash_chunk_table(multimodal.image_dhash(corpus)),
+        "media_id", "ci", 4, ("ci", "cv"),
     )
-    from ..sources.writers import cluster_for_partitioned_write
-
-    # clustered write (guide §6): bound the index file count to the
-    # write parallelism (see serving_index_build)
-    write_partitioned(
-        cluster_for_partitioned_write(
-            multimodal.dhash_chunk_table(
-                multimodal.image_dhash(corpus), id_col="media_id"
-            ),
-            ["ci"], "media_id", 4,
-        ),
-        idx_path,
-        ["ci"],
-    )
-    # occupancy sidecar: per-(ci, cv) counts from the written index (a
-    # cheap integer scan — no image decode) so the serve-time cap reads
-    # stored counts instead of re-aggregating the catalog
-    dedup.stored_occupancy_table(
-        spark.read.parquet(idx_path)
-    ).write.mode("overwrite").parquet(idx_path + "_occ")
-    # path reused across invocations (overwrite) — drop any stale
-    # same-app file listing before the serve leg reads it back
-    spark.catalog.refreshByPath(idx_path)
-    spark.catalog.refreshByPath(idx_path + "_occ")
-    return idx_path
 
 
 def image_serving_index_serve(
@@ -6449,9 +6415,7 @@ def image_serving_index_serve(
     family where the amortized cost is the Python/Arrow image decode
     itself), and the combined-occupancy cap reads the sidecar's stored
     counts through a broadcast kept-key semi-join, so the stored index
-    is never exchanged, sorted, or cached at serve time."""
-    import os as _os
-
+    is never exchanged or sorted at serve time."""
     from ..operators.cache import attach_cached, cached_deps
 
     docs = load_docs(spark, sf).select("doc_id")
@@ -6460,12 +6424,7 @@ def image_serving_index_serve(
             docs.where(F.col("doc_id") % 7 == 0), "doc_id", perturb=True
         )
     )
-    stored = spark.read.parquet(idx_path)
-    occ = (
-        spark.read.parquet(idx_path + "_occ")
-        if _os.path.exists(idx_path + "_occ")
-        else None
-    )
+    stored, occ = read_serving_index(spark, idx_path)
     matched = multimodal.dhash_near_duplicates_incremental(
         batch,
         None,
@@ -8317,51 +8276,22 @@ def audio_serving_index_build(spark: SparkSession, sf: str) -> str:
     tracks (media_id % 7 != 0) ONCE with
     :func:`multimodal.audio_landmark_table` (index_fp-stamped, ``max_dt``
     in the stamp) and WRITE the landmark-key table to real
-    dt-partitioned parquet — the ingest-time fold a production audio
-    catalog pays once.  The r14 dial already measured the serve win
-    (−63% at sf10 with 7,153 real tail pairs); this leg makes the build
-    driver-visible.  Scratch path keyed by applicationId + SF, same
-    discipline as :func:`serving_index_build`."""
-    import hashlib as _hl
-    import os as _os
-    import tempfile as _tf
-
-    from ..sources.writers import write_partitioned
-
+    dt-partitioned parquet (``max_dt=3`` values) plus its occupancy
+    sidecar — the ingest-time fold a production audio catalog pays
+    once.  The r14 dial already measured the serve win (−63% at sf10
+    with 7,153 real tail pairs); this leg makes the build
+    driver-visible."""
     catalog = _audio_harness_docs(spark, sf).where(F.col("doc_id") % 7 != 0)
     media = multimodal.synthetic_wav_media_tonal(
         catalog, "doc_id", seed_col="gid", offset_col="off"
     )
-    idx_path = _os.path.join(
-        _tf.gettempdir(),
-        f"spark_graft_serving_index_{spark.sparkContext.applicationId}",
-        f"audiolandmark_{_hl.md5(sf.encode()).hexdigest()[:12]}",
-    )
-    from ..sources.writers import cluster_for_partitioned_write
-
-    # clustered write (guide §6): bound the index file count to the
-    # write parallelism (see serving_index_build); dt has max_dt=3 values
-    write_partitioned(
-        cluster_for_partitioned_write(
-            multimodal.audio_landmark_table(
-                multimodal.audio_spectral_peaks(media, window=64), max_dt=3
-            ),
-            ["dt"], "media_id", 3,
+    return write_serving_index(
+        spark, sf, "audiolandmark",
+        multimodal.audio_landmark_table(
+            multimodal.audio_spectral_peaks(media, window=64), max_dt=3
         ),
-        idx_path,
-        ["dt"],
+        "media_id", "dt", 3, ("a_bin", "b_bin", "dt"),
     )
-    # occupancy sidecar (r15): per-landmark-key counts from the written
-    # index (a cheap integer scan — no decode/FFT) so the serve-time cap
-    # reads stored counts instead of re-aggregating the catalog
-    dedup.stored_occupancy_table(
-        spark.read.parquet(idx_path), keys=("a_bin", "b_bin", "dt")
-    ).write.mode("overwrite").parquet(idx_path + "_occ")
-    # path reused across invocations (overwrite) — drop any stale
-    # same-app file listing before the serve leg reads it back
-    spark.catalog.refreshByPath(idx_path)
-    spark.catalog.refreshByPath(idx_path + "_occ")
-    return idx_path
 
 
 def audio_serving_index_serve(
@@ -8377,16 +8307,9 @@ def audio_serving_index_serve(
     media = multimodal.synthetic_wav_media_tonal(
         batch, "doc_id", seed_col="gid", offset_col="off"
     )
-    import os as _os
-
     from ..operators.cache import attach_cached, cached_deps
 
-    stored = spark.read.parquet(idx_path)
-    occ = (
-        spark.read.parquet(idx_path + "_occ")
-        if _os.path.exists(idx_path + "_occ")
-        else None
-    )
+    stored, occ = read_serving_index(spark, idx_path)
     matched = multimodal.audio_landmark_matches_incremental(
         multimodal.audio_spectral_peaks(media, window=64),
         None,
@@ -8665,7 +8588,7 @@ def multimodal_video_neardup_incremental(
     decode-owning input is exactly the batch, once."""
     from pyspark.storagelevel import StorageLevel
 
-    from ..operators.cache import attach_cached
+    from ..operators.cache import attach_cached, cached_deps
 
     docs = load_docs(spark, sf).select(
         "doc_id",
@@ -8679,14 +8602,18 @@ def multimodal_video_neardup_incremental(
         StorageLevel.MEMORY_AND_DISK
     )
     is_new = F.col("media_id") % 7 == 0
-    out = multimodal.video_near_duplicates_incremental(
+    matched = multimodal.video_near_duplicates_incremental(
         hashes.where(is_new),
         hashes.where(~is_new),
         max_hamming=3,
         min_frames=2,
         max_bucket_size=64,
-    ).select(F.col("id_a"), F.col("id_b"), F.col("n_frame_matches"))
-    return attach_cached(out, hashes)
+    )
+    out = matched.select(
+        F.col("id_a"), F.col("id_b"), F.col("n_frame_matches")
+    )
+    # the operator's persisted chunk rows ride along with the frame hashes
+    return attach_cached(out, hashes, *cached_deps(matched))
 
 
 def _video_harness_docs(spark: SparkSession, sf: str) -> DataFrame:
@@ -8704,52 +8631,21 @@ def video_serving_index_build(spark: SparkSession, sf: str) -> str:
     #3): synthesize + container-walk + per-frame-JPEG-decode + dHash the
     CATALOG's clips (media_id % 7 != 0) ONCE, chunk them with
     :func:`multimodal.video_frame_chunk_table` (index_fp-stamped), and
-    WRITE the frame-chunk table to real ci-partitioned parquet — the
-    ingest-time fold a production catalog pays once.  This is the
-    heaviest fold in the repo (the decode wall behind
+    WRITE the frame-chunk table to real ci-partitioned parquet plus its
+    occupancy sidecar — the ingest-time fold a production catalog pays
+    once.  This is the heaviest fold in the repo (the decode wall behind
     ``multimodal_video_dedup``'s sf10 cost), which is exactly why this
     family's stored serve is the biggest amortization (−72% at sf1 in
-    the r13 dial).  Scratch path keyed by applicationId + SF, same
-    discipline as :func:`serving_index_build`."""
-    import hashlib as _hl
-    import os as _os
-    import tempfile as _tf
-
-    from ..sources.writers import write_partitioned
-
+    the r13 dial)."""
     catalog = _video_harness_docs(spark, sf).where(F.col("doc_id") % 7 != 0)
     media = multimodal.synthetic_avi_media_grid(
         catalog, "doc_id", seed_col="gid", offset_col="off"
     )
-    idx_path = _os.path.join(
-        _tf.gettempdir(),
-        f"spark_graft_serving_index_{spark.sparkContext.applicationId}",
-        f"videochunk_{_hl.md5(sf.encode()).hexdigest()[:12]}",
+    return write_serving_index(
+        spark, sf, "videochunk",
+        multimodal.video_frame_chunk_table(multimodal.video_frame_dhash(media)),
+        "media_id", "ci", 4, ("ci", "cv"),
     )
-    from ..sources.writers import cluster_for_partitioned_write
-
-    # clustered write (guide §6): bound the index file count to the
-    # write parallelism (see serving_index_build)
-    write_partitioned(
-        cluster_for_partitioned_write(
-            multimodal.video_frame_chunk_table(
-                multimodal.video_frame_dhash(media)
-            ),
-            ["ci"], "media_id", 4,
-        ),
-        idx_path,
-        ["ci"],
-    )
-    # occupancy sidecar (r15): computed from the just-written index (a
-    # cheap hash scan — NOT a second decode pass) so the serve-time cap
-    # reads stored counts instead of re-aggregating the catalog — the
-    # stage the sf30 probe measured at 4.55x for 3x data
-    spark.catalog.refreshByPath(idx_path)  # path reused across calls
-    dedup.stored_occupancy_table(
-        spark.read.parquet(idx_path)
-    ).write.mode("overwrite").parquet(idx_path + "_occ")
-    spark.catalog.refreshByPath(idx_path + "_occ")
-    return idx_path
 
 
 def video_serving_index_serve(
@@ -8760,20 +8656,13 @@ def video_serving_index_serve(
     bytes are never re-read, so the batch pays synthesis + decode +
     dHash only for its own clips and the catalog side is a decode-free
     parquet scan of the stamped index."""
-    import os as _os
-
     from ..operators.cache import attach_cached, cached_deps
 
     batch = _video_harness_docs(spark, sf).where(F.col("doc_id") % 7 == 0)
     media = multimodal.synthetic_avi_media_grid(
         batch, "doc_id", seed_col="gid", offset_col="off"
     )
-    stored = spark.read.parquet(idx_path)
-    occ = (
-        spark.read.parquet(idx_path + "_occ")
-        if _os.path.exists(idx_path + "_occ")
-        else None
-    )
+    stored, occ = read_serving_index(spark, idx_path)
     matched = multimodal.video_near_duplicates_incremental(
         multimodal.video_frame_dhash(media),
         None,

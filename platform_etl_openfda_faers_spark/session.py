@@ -33,11 +33,18 @@ def get_spark(
     master: str | None = None,
     conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's defaults.
+    """Build a SparkSession with the engine's defaults, or return the
+    active one unchanged.
 
-    ``master=None`` defers to spark-submit / an existing session so the same
-    code runs unchanged on a 1000-executor cluster and on ``local[32]``.
+    ``master=None`` defers to spark-submit so the same code runs unchanged
+    on a 1000-executor cluster and on ``local[32]``.  An already running
+    session belongs to its host (a notebook, a test harness, a caller of
+    ``main()``): applying ``DEFAULT_CONF`` and ``conf`` to it would rewrite
+    its SQL settings, so neither is applied.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)

@@ -340,15 +340,14 @@ def test_run_without_sampling_writes_no_side_outputs(spark, fixture_paths, tmp_p
 
 
 def test_cli_main_writes_stage1_and_rejects_unknown_format(
-    spark, fixture_paths, tmp_path, monkeypatch
+    spark, fixture_paths, tmp_path
 ):
     """``python -m platform_etl_openfda_faers_spark`` in-process on the
     fixture: exit 0 with both stage-1 tables written; an output format
-    outside ``VALID_OUTPUT_FORMATS`` is refused before Spark runs."""
+    outside ``VALID_OUTPUT_FORMATS`` is refused before Spark runs.  The
+    real ``get_spark`` hands ``main()`` the running test session as is."""
     from platform_etl_openfda_faers_spark import __main__ as cli
 
-    # the test session as is, without the engine defaults get_spark applies
-    monkeypatch.setattr(cli, "get_spark", lambda *a, **k: spark)
     reports_path, drugs_path, blacklist_path = fixture_paths
     flags = ["--fda-data", reports_path, "--chembl-drugs", drugs_path,
              "--blacklist", blacklist_path, "--permutations", "50", "--output"]

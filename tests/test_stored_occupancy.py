@@ -414,3 +414,89 @@ def test_image_occupancy_serve_matches_window_prune(spark, tmp_path):
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
     wplan = win._jdf.queryExecution().executedPlan().toString()
     assert "Window" in wplan, wplan  # the twin really uses the window
+
+
+# ---------------------------------------------------------------------------
+# Cache lifetime of every serve path: each family's result carries every
+# handle the shared serve core persisted, so the caller-owned release
+# (cache.unpersist_cached) leaves the SQL cache empty.
+
+_FAMILIES = ("simhash64", "image", "video", "audio")
+_PATHS = ("recompute", "stored", "stored_sidecar")
+
+
+def _family(spark, name):
+    """(keyed input of doc ids, serve operator, stamped index builder,
+    partition column, occupancy keys) for one near-dup family."""
+
+    def docs(ids):
+        return spark.createDataFrame([(i,) for i in ids], "doc_id LONG").select(
+            "doc_id",
+            F.concat_ws(" ", *[F.lit(f"w{j}") for j in range(12)],
+                        (F.col("doc_id") % 3).cast("string")).alias("text"),
+            (F.col("doc_id") % 3).alias("gid"),
+            F.lit(0).cast("long").alias("off"),
+        )
+
+    if name == "simhash64":
+        return (
+            docs,
+            lambda b, c, **kw: dedup.simhash_near_duplicates_incremental64(
+                b, c, "text", "doc_id", **kw),
+            lambda c: dedup.simhash64_chunk_table(c, "text", "doc_id"),
+            "ci", ("ci", "cv"),
+        )
+    if name == "image":
+        return (
+            lambda ids: multimodal.image_dhash(
+                multimodal.synthetic_bmp_media_perceptual(
+                    docs(ids).select("doc_id"), "doc_id", perturb=True)),
+            multimodal.dhash_near_duplicates_incremental,
+            multimodal.dhash_chunk_table,
+            "ci", ("ci", "cv"),
+        )
+    if name == "video":
+        return (
+            lambda ids: multimodal.video_frame_dhash(
+                multimodal.synthetic_avi_media_grid(
+                    docs(ids), "doc_id", seed_col="gid", offset_col="off")),
+            multimodal.video_near_duplicates_incremental,
+            multimodal.video_frame_chunk_table,
+            "ci", ("ci", "cv"),
+        )
+    return (
+        lambda ids: multimodal.audio_spectral_peaks(
+            multimodal.synthetic_wav_media_tonal(
+                docs(ids), "doc_id", seed_col="gid", offset_col="off"),
+            window=64),
+        lambda b, c, **kw: multimodal.audio_landmark_matches_incremental(
+            b, c, max_dt=3, min_matches=2, **kw),
+        lambda c: multimodal.audio_landmark_table(c, max_dt=3),
+        "dt", ("a_bin", "b_bin", "dt"),
+    )
+
+
+@pytest.mark.parametrize("path", _PATHS)
+@pytest.mark.parametrize("family", _FAMILIES)
+def test_serve_path_releases_every_cache(spark, tmp_path, family, path):
+    from platform_etl_openfda_faers_spark.operators.cache import unpersist_cached
+
+    keyed, serve, build, part, keys = _family(spark, family)
+    # 57 and 64 share the batch's synthetic image class (id % 50)
+    batch_ids = [7, 14, 21]
+    corpus_ids = [i for i in range(1, 22) if i % 7] + [57, 64]
+    spark.catalog.clearCache()
+    kw = {"max_bucket_size": 8}
+    if path == "recompute":
+        out = serve(keyed(batch_ids), keyed(corpus_ids), **kw)
+    else:
+        idx_path = str(tmp_path / "index")
+        writers.write_partitioned(build(keyed(corpus_ids)), idx_path, [part])
+        kw["corpus_index"] = spark.read.parquet(idx_path)
+        if path == "stored_sidecar":
+            kw["corpus_occupancy"] = dedup.stored_occupancy_table(
+                kw["corpus_index"], keys=keys)
+        out = serve(keyed(batch_ids), None, **kw)
+    assert out.collect(), "harness must produce at least one pair"
+    assert unpersist_cached(out) >= 1
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -109,3 +109,38 @@ def test_check_correctness_rejects_unknown_query(sf_dir):
     assert out.returncode == 2, out.stdout[-2000:]
     assert "no_such_query" in out.stderr
     assert "q1_pricing_summary" not in out.stderr
+
+
+def _call_sites(names: set[str]) -> dict[str, list[tuple[str, str]]]:
+    """name -> [(module file, innermost enclosing function)] for every
+    call of ``names`` in the engine package."""
+    sites: dict[str, list[tuple[str, str]]] = {n: [] for n in names}
+
+    class Visitor(ast.NodeVisitor):
+        def __init__(self, path: str) -> None:
+            self.path, self.stack = path, ["<module>"]
+
+        def visit_FunctionDef(self, node) -> None:
+            self.stack.append(node.name)
+            self.generic_visit(node)
+            self.stack.pop()
+
+        def visit_Call(self, node: ast.Call) -> None:
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name in names:
+                sites[name].append((self.path, self.stack[-1]))
+            self.generic_visit(node)
+
+    for path in sorted((REPO / PKG).rglob("*.py")):
+        Visitor(str(path.relative_to(REPO / PKG))).visit(ast.parse(path.read_text()))
+    return sites
+
+
+def test_stored_serve_core_is_the_only_occupancy_caller():
+    """The sidecar staleness guard and the sidecar cap are applied in one
+    place, the stored-index serve core every near-dup family calls — a
+    family that copies the serve logic instead shows up here."""
+    names = {"guard_occupancy_fresh", "kept_keys_with_stored_occupancy"}
+    core = [("operators/dedup.py", "_serve_rows")]
+    assert _call_sites(names) == {n: core for n in names}
