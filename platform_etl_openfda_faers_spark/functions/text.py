@@ -142,7 +142,7 @@ def token_hash64(tok: Column) -> Column:
     Chosen because both Spark (``conv``) and DuckDB (hex cast) can compute
     it identically — the primitive under the oracle-checkable MinHash and
     SimHash implementations.  15 hex chars < 2^60 so the bigint never
-    overflows.  The Spark-only fast path is ``xxhash64`` (see dedup.py).
+    overflows.
     """
     return F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long")
 

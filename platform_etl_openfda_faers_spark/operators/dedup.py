@@ -10,10 +10,10 @@ path):
   banded bucket keys -> candidates join only within buckets -> verify with
   true Jaccard.  The classic scale path: candidate generation is linear in
   corpus size instead of quadratic.
-- **SimHash**: per-token hash bits, weighted majority per bit position ->
-  64-bit signature; near-dups = small Hamming distance, bucketed by 16-bit
-  chunks (two signatures within Hamming<=3 of each other share at least one
-  of 4 chunks exactly).
+- **SimHash**: portable md5 token hashes, ±1 majority per bit position ->
+  row-local signature (16-bit, or 64-bit as two 32-bit halves); near-dups
+  = small Hamming distance, bucketed by bit chunks (two signatures within
+  Hamming <= n_chunks-1 of each other share at least one chunk exactly).
 
 Determinism: all hash-permutation constants derive from an explicit seed, so
 signatures are stable across runs and partition layouts (and reproducible in
@@ -33,7 +33,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import fingerprint, token_hash64, tokens, word_ngrams
+from ..functions.text import fingerprint, tokens, word_ngrams
 
 # ---------------------------------------------------------------------------
 # Shared deterministic MinHash constants (mirrored into the oracle SQL).
@@ -159,53 +159,20 @@ def prune_df_above(index: DataFrame, key: str, max_doc_freq: int) -> DataFrame:
     return index.join(F.broadcast(hot), [key], "left_anti").select(index.columns)
 
 
-def prune_df_join(
-    index: DataFrame, key: str, max_doc_freq: int
-) -> DataFrame:
-    """Declarative df-cap: keep index rows whose key's document frequency
-    is within the cap, via a frequency join on the key.
-
-    Fully plan-side — no driver action, no hot-key cardinality limit.  The
-    frequency aggregate and the filter join both hash-partition on ``key``,
-    the same partitioning the downstream candidate self-join needs, so the
-    exchanges line up.  Measured 1.6x faster at sf0.1 than collecting the
-    hot keys to the driver, which pays an extra full index materialization
-    to make the prune map-only.  NOTE (r8): this form consumes ``index``
-    twice — when the lineage contains a persisted node, exchange reuse
-    fails to collapse the duplicate and the index derives twice; prefer
-    ``prune_df_window`` (single derivation, output pre-partitioned on the
-    key) unless you need drop-NULL-keys join semantics or a plan without a
-    sort.
-
-    NULL-key semantics: the inner join DROPS NULL-key rows, while
-    ``prune_df_above``'s anti-join KEEPS them (NULL matches nothing).  A
-    well-formed inverted index never carries NULL keys (``word_shingles``
-    filters empties), but if yours can, use ``prune_df_above``.
-    """
-    keep = (
-        index.groupBy(key)
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") <= max_doc_freq)
-        .select(key)
-    )
-    # name-join reorders columns; restore input order for positional
-    # consumers (same hazard as prune_df_above)
-    return index.join(keep, [key]).select(index.columns)
-
-
 def prune_df_window(
     index: DataFrame, key: str | list[str], max_doc_freq: int
 ) -> DataFrame:
     """Df-cap via a count window over ``key`` — the SINGLE-DERIVATION prune.
 
-    ``prune_df_join`` consumes its input twice (the frequency aggregate and
-    the filter join's probe side), so the index lineage is planned twice.
-    Spark's exchange reuse usually collapses the duplicate — but NOT when
-    the lineage contains an ``InMemoryTableScan`` (a persisted upstream
-    defeats the canonical-plan match), which is exactly the shape of the
-    curation pipeline: its index derives from a semi join against a cached
-    survivor set, and the duplicate subtree materialized as two identical
-    ~500 MB shuffle writes at sf10.  A count window references the input
+    A frequency aggregate joined back onto the index consumes its input
+    twice (the aggregate and the join's probe side), so the index lineage
+    is planned twice.  Spark's exchange reuse usually collapses the
+    duplicate — but NOT when the lineage contains an ``InMemoryTableScan``
+    (a persisted upstream defeats the canonical-plan match), which is
+    exactly the shape of the curation pipeline: its index derives from a
+    semi join against a cached survivor set, and the duplicate subtree
+    materialized as two identical ~500 MB shuffle writes at sf10.  A
+    count window references the input
     ONCE: one exchange on ``key``, an external (spill-safe) sort, a
     streaming count per key group, a filter.  The output is already
     hash-partitioned on ``key`` — the partitioning every downstream
@@ -216,9 +183,9 @@ def prune_df_window(
     rows at every scale factor.
 
     NULL-key semantics: NULLs form their own window partition and are KEPT
-    when the partition is within the cap (like ``prune_df_above``, unlike
-    ``prune_df_join``'s inner join, which drops them).  Pre-filter
-    ``isNotNull`` if you need drop semantics.
+    when the partition is within the cap, like ``prune_df_above`` (the
+    law reference this form is pinned to).  Pre-filter ``isNotNull`` if
+    you need drop semantics.
     """
     from pyspark.sql import Window
 
@@ -558,53 +525,17 @@ def minhash_signatures(
     return index.groupBy(id_col).agg(*aggs)
 
 
-def minhash_signatures_local(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 3,
-    num_hashes: int = 16,
-    seed: int = 42,
+def _minhash_fold(
+    base: DataFrame, cols: list[str], num_hashes: int, seed: int
 ) -> DataFrame:
-    """(id, mh_0..mh_{K-1}) computed row-local off the shingle ARRAY.
-
-    Same signatures as ``minhash_signatures`` (identical hash constants and
-    min-over-tokens semantics) but as a map-only stage: no explode, no
-    inverted index, no shuffle — ``array_min(transform(shingles, ...))`` per
-    hash.  The scale path for signature computation: at 100 TB the
-    inverted-index route shuffles |docs| x |shingles| rows; this shuffles
-    nothing.  The index is then only needed for the verify step.
-    """
-    arr = df.select(
-        F.col(id_col), shingle_array(F.col(text_col), n).alias("_arr")
-    )
-    return minhash_signatures_from_arrays(
-        arr, id_col, "_arr", num_hashes=num_hashes, seed=seed
-    )
-
-
-def minhash_signatures_from_arrays(
-    arrays: DataFrame,
-    id_col: str,
-    arr_col: str = "_arr",
-    num_hashes: int = 16,
-    seed: int = 42,
-) -> DataFrame:
-    """(id, mh_0..mh_{K-1}) from a precomputed shingle-array table.
-
-    Same constants/semantics as ``minhash_signatures_local`` but starting
-    from ``(id, array<string>)`` — lets the caller compute (and persist) the
-    tokenized arrays ONCE and feed both this and the verify stage, instead
-    of re-tokenizing per consumer.  The md5-derived token hashes are
-    materialized once as a column, then K cheap arithmetic mins run over it.
-    """
-    params = minhash_params(num_hashes, seed)
-    hashed = arrays.select(
-        F.col(id_col),
-        F.transform(F.col(arr_col), lambda s: token_hash32(s)).alias("_h"),
-    )
-    return hashed.select(
-        F.col(id_col),
+    """(cols..., mh_0..mh_{K-1}) — row-local MinHash signatures off the
+    per-shingle 32-bit hash array ``_h``: ``array_min(transform(_h, ...))``
+    per hash, with the constants and min-over-tokens semantics of
+    :func:`minhash_signatures` (law-pinned) but as a map-only stage — no
+    explode, no inverted index, no shuffle.  The one signature fold of
+    both MinHash-LSH forms."""
+    return base.select(
+        *cols,
         *[
             F.array_min(
                 F.transform(
@@ -612,8 +543,36 @@ def minhash_signatures_from_arrays(
                     lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_PRIME),
                 )
             ).alias(f"mh_{i}")
-            for i, (a, b) in enumerate(params)
+            for i, (a, b) in enumerate(minhash_params(num_hashes, seed))
         ],
+    )
+
+
+def _band_buckets(
+    sigs: DataFrame, cols: list[str], bands: int, rows_per_band: int
+) -> DataFrame:
+    """(cols..., band, bucket) — one row per LSH band: the md5 of the
+    band's ``rows_per_band`` signature values joined with ',' (the
+    strings the SQL oracle generators replay)."""
+    band_entries = F.array(
+        *[
+            F.struct(
+                F.lit(bnd).alias("band"),
+                F.md5(
+                    F.concat_ws(
+                        ",",
+                        *[
+                            F.col(f"mh_{bnd * rows_per_band + r}")
+                            for r in range(rows_per_band)
+                        ],
+                    )
+                ).alias("bucket"),
+            )
+            for bnd in range(bands)
+        ]
+    )
+    return sigs.select(*cols, F.explode(band_entries).alias("be")).select(
+        *cols, F.col("be.band").alias("band"), F.col("be.bucket").alias("bucket")
     )
 
 
@@ -641,29 +600,10 @@ def lsh_candidate_pairs(
     ``None`` = uncapped (exact LSH semantics).
     """
     num_hashes = bands * rows_per_band
-    band_entries = F.array(
-        *[
-            F.struct(
-                F.lit(bnd).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"mh_{bnd * rows_per_band + r}")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("bucket"),
-            )
-            for bnd in range(bands)
-        ]
-    )
     assert num_hashes <= sum(1 for _ in signatures.columns if _.startswith("mh_")), (
         "signature has fewer hashes than bands*rows_per_band"
     )
-    buckets = signatures.select(
-        F.col(id_col), F.explode(band_entries).alias("be")
-    ).select(id_col, F.col("be.band").alias("band"), F.col("be.bucket").alias("bucket"))
+    buckets = _band_buckets(signatures, [id_col], bands, rows_per_band)
     if max_bucket_size is not None:
         # single-sided candidate generation: a self-join would duplicate
         # the whole bucket lineage (and the cap's size aggregate) on both
@@ -714,57 +654,6 @@ def lsh_candidate_pairs(
     )
 
 
-def minhash_near_duplicates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    bands: int = 4,
-    rows_per_band: int = 4,
-    threshold: float = 0.5,
-    seed: int = 42,
-    max_doc_freq: int | None = None,
-    max_bucket_size: int | None = 32,
-) -> DataFrame:
-    """End-to-end MinHash-LSH near-dup: candidates -> exact-Jaccard verify.
-
-    .. warning:: **Behavior change in r6** — the default flipped from
-       exact LSH to ``max_bucket_size=32``.  Pairs inside any band-bucket
-       larger than 32 ids (heavy boilerplate groups) are NO LONGER
-       reported by default; callers that need every LSH pair must opt out
-       explicitly with ``max_bucket_size=None``.  Like ``jaccard_pairs``'
-       df-cap, the scale-safe form is the API default — see
-       :func:`lsh_candidate_pairs` for the measured super-linear candidate
-       growth that motivates it (54x shuffle-byte growth per 10x data
-       uncapped vs 4.9x capped).
-
-    Output: (id_a, id_b, jaccard) for verified pairs above ``threshold``.
-    """
-    index = distinct_tokens(df, text_col, id_col)
-    # NOTE: the index is deliberately NOT persisted — it feeds the verify
-    # sides as parallel pruned scans; measured at sf0.1, materializing the
-    # cache serializes the stages and is ~4x slower than recomputing it.
-    if max_doc_freq is not None:
-        # signatures must see the SAME token sets as the verify step, so
-        # with df-pruning on they derive from the pruned index
-        index = prune_df_above(index, "token", max_doc_freq)
-        sigs = minhash_signatures(
-            index, id_col, num_hashes=bands * rows_per_band, seed=seed
-        )
-    else:
-        # row-local signatures (1-gram shingles == tokens): map-only, no
-        # explode/shuffle — the scale path for signature computation
-        sigs = minhash_signatures_local(
-            df, text_col, id_col, n=1, num_hashes=bands * rows_per_band, seed=seed
-        )
-    cands = lsh_candidate_pairs(
-        sigs, id_col, bands, rows_per_band, max_bucket_size=max_bucket_size
-    )
-    verified = jaccard_for_pairs(cands, index, id_col)
-    return verified.where(F.col("jaccard") >= threshold).select(
-        "id_a", "id_b", "jaccard"
-    )
-
-
 def minhash_near_duplicates_shared(
     docs: DataFrame,
     text_col: str,
@@ -800,24 +689,12 @@ def minhash_near_duplicates_shared(
     """
     from pyspark import StorageLevel
 
-    params = minhash_params(bands * rows_per_band, seed)
     base = (
         docs.select(F.col(id_col), shingle_array(F.col(text_col), n).alias("_arr"))
         .withColumn("_h", F.transform(F.col("_arr"), lambda s: token_hash32(s)))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    sigs = base.select(
-        F.col(id_col),
-        *[
-            F.array_min(
-                F.transform(
-                    F.col("_h"),
-                    lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_PRIME),
-                )
-            ).alias(f"mh_{i}")
-            for i, (a, b) in enumerate(params)
-        ],
-    )
+    sigs = _minhash_fold(base, [id_col], bands * rows_per_band, seed)
     cands = lsh_candidate_pairs(
         sigs, id_col, bands, rows_per_band, max_bucket_size=max_bucket_size
     )
@@ -878,7 +755,6 @@ def minhash_near_duplicates_incremental(
     """
     from pyspark import StorageLevel
 
-    params = minhash_params(bands * rows_per_band, seed)
     combined = corpus_docs.select(
         F.col(id_col), F.col(text_col), F.lit(False).alias("_new")
     ).unionByName(
@@ -893,46 +769,8 @@ def minhash_near_duplicates_incremental(
         .withColumn("_h", F.transform(F.col("_arr"), lambda s: token_hash32(s)))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    sigs = base.select(
-        F.col(id_col),
-        F.col("_new"),
-        *[
-            F.array_min(
-                F.transform(
-                    F.col("_h"),
-                    lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_PRIME),
-                )
-            ).alias(f"mh_{i}")
-            for i, (a, b) in enumerate(params)
-        ],
-    )
-    # same (band, md5-bucket) strings as lsh_candidate_pairs, so the
-    # SQL oracle generator replays them unchanged
-    band_entries = F.array(
-        *[
-            F.struct(
-                F.lit(bnd).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"mh_{bnd * rows_per_band + r}")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("bucket"),
-            )
-            for bnd in range(bands)
-        ]
-    )
-    buckets = sigs.select(
-        F.col(id_col), F.col("_new"), F.explode(band_entries).alias("be")
-    ).select(
-        id_col,
-        "_new",
-        F.col("be.band").alias("band"),
-        F.col("be.bucket").alias("bucket"),
-    )
+    sigs = _minhash_fold(base, [id_col, "_new"], bands * rows_per_band, seed)
+    buckets = _band_buckets(sigs, [id_col, "_new"], bands, rows_per_band)
     if max_bucket_size is not None:
         # combined occupancy: the window counts batch + corpus rows per
         # (band, bucket) in one derivation, pre-partitioned on the join key
@@ -963,34 +801,6 @@ def minhash_near_duplicates_incremental(
 
 # ---------------------------------------------------------------------------
 # SimHash
-
-
-def simhash(
-    index: DataFrame, id_col: str, key: str = "token", bits: int = 64
-) -> DataFrame:
-    """(id, simhash) — bitwise majority over per-token hashes.
-
-    Token bits come from ``xxhash64`` (JVM fast path).  Implemented as
-    explode-over-bit-positions + conditional sum + bit reassembly: one
-    shuffle on (id, position) then one on id.  For the oracle-checkable
-    variant use ``bits<=32`` with the portable md5 hash via
-    ``simhash_portable``.
-    """
-    h = F.xxhash64(F.col(key))
-    positions = F.sequence(F.lit(0), F.lit(bits - 1))
-    per_bit = index.select(
-        F.col(id_col), h.alias("h"), F.explode(positions).alias("pos")
-    ).withColumn("bit", F.expr("shiftrightunsigned(h, pos) % 2"))
-    votes = per_bit.groupBy(id_col, "pos").agg(
-        (F.sum(F.when(F.col("bit") == 1, 1).otherwise(-1))).alias("vote")
-    )
-    return votes.groupBy(id_col).agg(
-        F.sum(
-            F.when(F.col("vote") > 0, F.expr("shiftleft(1L, pos)")).otherwise(
-                F.lit(0).cast("long")
-            )
-        ).alias("simhash")
-    )
 
 
 def simhash_portable(
@@ -1115,36 +925,42 @@ def simhash_local(
     )
 
 
-def simhash_pairs_from_signatures(
-    sigs: DataFrame,
-    id_col: str,
-    bits: int,
-    max_hamming: int = 3,
-    n_chunks: int = 4,
-) -> DataFrame:
-    """Chunk-bucketed Hamming pairs from an (id, simhash) table.
+def _pigeonhole_bound(max_hamming: int, n_chunks: int) -> None:
+    """Raise unless ``n_chunks``-chunk bucketing is lossless at
+    ``max_hamming``: two signatures within Hamming <= n_chunks-1 agree
+    exactly on at least one chunk (pigeonhole), so the chunk join finds
+    every such pair; past that bound a pair sharing no chunk is never a
+    candidate and would be silently missing from the result."""
+    if max_hamming > n_chunks - 1:
+        raise ValueError(
+            f"max_hamming={max_hamming} exceeds the pigeonhole bound "
+            f"{n_chunks - 1} of {n_chunks}-chunk bucketing: pairs sharing "
+            f"no chunk would be silently missed"
+        )
 
-    Pigeonhole: two signatures within Hamming <= n_chunks-1 share at least
-    one of the n_chunks bit-chunks exactly, so candidates join on
-    (chunk_idx, chunk_value) — linear in corpus size, never all-pairs —
-    and the exact Hamming filter keeps the result lossless.
-    Output: (id_a, id_b, hamming).
 
-    The signature table is persisted here (r16, guide §2.4): the two
-    self-join sides plan DIFFERENTLY (one becomes the broadcast build,
-    the other the probe), so AQE's runtime stage reuse — which does
-    dedupe symmetric shuffle-join sides — cannot fire, and the whole
-    upstream signature fold executed once per side; worse, constraint
-    inference inlined ``isnotnull(simhash)`` (the full fold expression)
-    into the pre-shuffle filter.  The persisted table is 2 longs per doc
-    — far smaller than the exploded chunk table it feeds.  Lifetime via
-    ``attach_cached`` (callers unpersist or clearCache per contract).
-    """
+def _chunk_rows(
+    sigs: DataFrame, cols: list[str], bits: int, n_chunks: int, max_hamming: int
+) -> tuple[DataFrame, list[DataFrame]]:
+    """(cols..., simhash, ci, cv) — every ``bits``-wide signature of a
+    (cols..., simhash) table exploded into its ``n_chunks`` pigeonhole
+    chunk rows, plus the handles persisted here (attach them to the
+    result — ``cache.attach_cached``).  Raises unless the bucketing is
+    lossless at ``max_hamming`` (:func:`_pigeonhole_bound`).
+
+    The signature table is persisted (r16, guide §2.4): the two sides of
+    the chunk join plan DIFFERENTLY (one becomes the broadcast build, the
+    other the probe), so AQE's runtime stage reuse — which does dedupe
+    symmetric shuffle-join sides — cannot fire, and the whole upstream
+    signature fold executed once per side; worse, constraint inference
+    inlined ``isnotnull(simhash)`` (the full fold expression) into the
+    pre-shuffle filter.  The persisted table is 2 longs per doc — far
+    smaller than the exploded chunk table it feeds."""
     from pyspark import StorageLevel
 
-    from .cache import attach_cached, cached_deps
+    from .cache import cached_deps
 
-    assert max_hamming <= n_chunks - 1, "bucketing is lossy beyond n_chunks-1"
+    _pigeonhole_bound(max_hamming, n_chunks)
     chunk_bits = bits // n_chunks
     mask = (1 << chunk_bits) - 1
     chunks = F.array(
@@ -1161,9 +977,29 @@ def simhash_pairs_from_signatures(
     )
     deps = cached_deps(sigs)
     sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    keyed = sigs.select(
-        F.col(id_col), F.col("simhash"), F.explode(chunks).alias("c")
-    ).select(id_col, "simhash", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv"))
+    keyed = sigs.select(*cols, "simhash", F.explode(chunks).alias("c")).select(
+        *cols, "simhash", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv")
+    )
+    return keyed, [sigs, *deps]
+
+
+def simhash_near_duplicates_portable(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    max_hamming: int = 3,
+    bits: int = 16,
+) -> DataFrame:
+    """Oracle-checkable SimHash near-dup pairs: portable md5-based 16-bit
+    signatures (row-local, map-only) + chunk-bucketed Hamming self-join.
+    Pigeonhole: two signatures within Hamming <= 3 share at least one of
+    4 bit-chunks exactly, so candidates join on (chunk_idx, chunk_value)
+    — linear in corpus size, never all-pairs — and the exact Hamming
+    filter keeps the result lossless.  Output: (id_a, id_b, hamming)."""
+    from .cache import attach_cached
+
+    sigs = simhash_local(df, text_col, id_col, bits=bits)
+    keyed, handles = _chunk_rows(sigs, [id_col], bits, 4, max_hamming)
     a = keyed.toDF("id_a", "sig_a", "ci", "cv")
     b = keyed.toDF("id_b", "sig_b", "ci", "cv")
     out = (
@@ -1177,67 +1013,7 @@ def simhash_pairs_from_signatures(
         .distinct()
         .where(F.col("hamming") <= max_hamming)
     )
-    return attach_cached(out, sigs, *deps)
-
-
-def simhash_near_duplicates_portable(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-    bits: int = 16,
-) -> DataFrame:
-    """Oracle-checkable SimHash near-dup pairs: portable md5-based 16-bit
-    signatures (row-local, map-only) + chunk-bucketed Hamming join.
-    Output: (id_a, id_b, hamming)."""
-    sigs = simhash_local(df, text_col, id_col, bits=bits)
-    return simhash_pairs_from_signatures(
-        sigs, id_col, bits=bits, max_hamming=max_hamming
-    )
-
-
-def simhash_near_duplicates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-    bits: int = 64,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance, chunk-bucketed.
-
-    Signatures within Hamming<=3 share at least one of 4 16-bit chunks
-    (pigeonhole), so candidates join on (chunk_idx, chunk_value) — linear,
-    never all-pairs.  Output: (id_a, id_b, hamming).
-    """
-    index = distinct_tokens(df, text_col, id_col)
-    sigs = simhash(index, id_col, bits=bits)
-    n_chunks = 4
-    chunk_bits = bits // n_chunks
-    mask = (1 << chunk_bits) - 1
-    chunks = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("ci"),
-                (
-                    F.shiftrightunsigned(F.col("simhash"), i * chunk_bits)
-                    .bitwiseAND(F.lit(mask))
-                ).alias("cv"),
-            )
-            for i in range(n_chunks)
-        ]
-    )
-    keyed = sigs.select(
-        F.col(id_col), F.col("simhash"), F.explode(chunks).alias("c")
-    ).select(id_col, "simhash", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv"))
-    a = keyed.toDF("id_a", "sig_a", "ci", "cv")
-    b = keyed.toDF("id_b", "sig_b", "ci", "cv")
-    return (
-        a.join(b, ["ci", "cv"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).alias("hamming"))
-        .distinct()
-        .where(F.col("hamming") <= max_hamming)
-    )
+    return attach_cached(out, *handles)
 
 
 def simhash_near_duplicates_incremental(
@@ -1275,48 +1051,16 @@ def simhash_near_duplicates_incremental(
     unique across the two inputs.  Output: (id_a, id_b, hamming),
     id_a < id_b.
     """
-    assert max_hamming <= n_chunks - 1, "bucketing is lossy beyond n_chunks-1"
+    from .cache import attach_cached
+
     assert bits % n_chunks == 0
     combined = corpus_docs.select(
         F.col(id_col), F.col(text_col), F.lit(False).alias("_new")
     ).unionByName(
         new_docs.select(F.col(id_col), F.col(text_col), F.lit(True).alias("_new"))
     )
-    # Persist the signature table (r16, guide §2.4): the batch and
-    # corpus∪batch join sides plan differently (build vs probe), so AQE
-    # stage reuse cannot dedupe them and the fold would execute once per
-    # side; the table is 2 longs + a flag per doc.
-    from pyspark import StorageLevel
-
-    from .cache import attach_cached, cached_deps
-
     sigs = simhash_local(combined, text_col, id_col, bits=bits, keep=("_new",))
-    deps = cached_deps(sigs)
-    sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    chunk_bits = bits // n_chunks
-    mask = (1 << chunk_bits) - 1
-    chunks = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("ci"),
-                (
-                    F.shiftrightunsigned(F.col("simhash"), i * chunk_bits)
-                    .bitwiseAND(F.lit(mask))
-                ).alias("cv"),
-            )
-            for i in range(n_chunks)
-        ]
-    )
-    keyed = sigs.select(
-        F.col(id_col), F.col("_new"), F.col("simhash"),
-        F.explode(chunks).alias("c"),
-    ).select(
-        id_col,
-        "_new",
-        "simhash",
-        F.col("c.ci").alias("ci"),
-        F.col("c.cv").alias("cv"),
-    )
+    keyed, handles = _chunk_rows(sigs, [id_col, "_new"], bits, n_chunks, max_hamming)
     a = keyed.where(F.col("_new")).select(
         F.col(id_col).alias("id_a"), F.col("simhash").alias("sig_a"), "ci", "cv"
     )
@@ -1336,15 +1080,7 @@ def simhash_near_duplicates_incremental(
         .distinct()
         .where(F.col("hamming") <= max_hamming)
     )
-    return attach_cached(out, sigs, *deps)
-
-
-def _simhash_sig32(hash_arr_col: str):
-    """Column expr: 32-bit SimHash signature (as a non-negative long) from
-    an array-of-32-bit-token-hashes column — the per-bit majority fold of
-    ``simhash_local``, factored so the 64-bit form can run it once per
-    half.  Single-pass integer fold (see ``_simhash_sig_counts``)."""
-    return _simhash_sig_counts(hash_arr_col, 32)
+    return attach_cached(out, *handles)
 
 
 def _simhash_sig_sql(hash_arr_sql: str, bits: int) -> str:
@@ -1684,7 +1420,7 @@ def simhash_near_duplicates_incremental64(
     the fold."""
     from .cache import attach_cached
 
-    assert max_hamming <= 3, "4-chunk bucketing is lossy beyond Hamming 3"
+    _pigeonhole_bound(max_hamming, 4)
     assert batch_chunks is None or corpus_index is not None, (
         "batch_chunks is a pre-folded batch-side chunk table — only "
         "meaningful on the stored-index serve path"

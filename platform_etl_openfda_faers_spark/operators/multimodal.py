@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .dedup import (
+    _pigeonhole_bound,
     _serve_rows,
     chunks_4x16,
     hamming_ab,
@@ -3188,8 +3189,8 @@ def image_dhash(
     Near-dup retrieval at scale composes with the existing SimHash
     machinery: dHash values within Hamming distance <= 3 share one of 4
     16-bit chunks (pigeonhole) — bucket on chunks exactly like
-    ``simhash_near_duplicates``.  This operator emits the hash; exact
-    dedup is a groupBy on (dhash_hi, dhash_lo).
+    ``dedup.simhash_near_duplicates_incremental64``.  This operator emits
+    the hash; exact dedup is a groupBy on (dhash_hi, dhash_lo).
 
     Images must tile evenly (width % grid_w == 0, height % grid_h == 0);
     ragged sizes raise — resize upstream (real pipelines hash thumbnails).
@@ -3268,8 +3269,8 @@ def dhash_near_duplicates(
     max_bucket_size: int | None = 64,
 ) -> DataFrame:
     """Hamming-near image pairs from an ``image_dhash`` table — the same
-    pigeonhole bucketing as ``dedup.simhash_pairs_from_signatures``, on the
-    (hi, lo) split hash: two 64-bit hashes within Hamming <= 3 agree
+    pigeonhole bucketing as ``dedup.simhash_near_duplicates_portable``, on
+    the (hi, lo) split hash: two 64-bit hashes within Hamming <= 3 agree
     exactly on at least one of the four 16-bit chunks, so candidates join
     on (chunk_idx, chunk_value) — linear in corpus size, never all-pairs —
     and the exact Hamming filter keeps the result lossless.
@@ -3291,7 +3292,7 @@ def dhash_near_duplicates(
     shift/mask and the per-half ``bit_count(xor)`` is sign-free in both
     Spark and the SQL oracle).  Output: (id_a, id_b, hamming).
     """
-    assert max_hamming <= 3, "4-chunk bucketing is lossy beyond Hamming 3"
+    _pigeonhole_bound(max_hamming, 4)
     keyed = chunks_4x16(hashes.select(id_col, *_DHASH), *_DHASH)
     if max_bucket_size is not None:
         keyed = prune_df_window(keyed, ["ci", "cv"], max_bucket_size)
@@ -3342,7 +3343,7 @@ def dhash_near_duplicates_incremental(
     """
     from .cache import attach_cached
 
-    assert max_hamming <= 3, "4-chunk bucketing is lossy beyond Hamming 3"
+    _pigeonhole_bound(max_hamming, 4)
 
     rows, handles = _serve_rows(
         new_hashes.select(id_col, *_DHASH),
@@ -3465,7 +3466,7 @@ def video_near_duplicates(
     :func:`video_frame_dhash` table.  Output: (id_a, id_b,
     n_frame_matches), id_a < id_b.
     """
-    assert max_hamming <= 3, "4-chunk bucketing is lossy beyond Hamming 3"
+    _pigeonhole_bound(max_hamming, 4)
     keyed = chunks_4x16(
         frame_hashes.select("media_id", "frame_idx", *_DHASH), *_DHASH
     )
@@ -3546,7 +3547,7 @@ def video_near_duplicates_incremental(
     """
     from .cache import attach_cached
 
-    assert max_hamming <= 3, "4-chunk bucketing is lossy beyond Hamming 3"
+    _pigeonhole_bound(max_hamming, 4)
     cols = ["media_id", "frame_idx", *_DHASH]
     rows, handles = _serve_rows(
         new_frame_hashes.select(*cols),

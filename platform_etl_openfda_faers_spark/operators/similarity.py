@@ -41,10 +41,29 @@ in-memory data structure.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine
+
+
+def _top_k(cands: DataFrame, neighbor: str, score: Column, k: int) -> DataFrame:
+    """(query_id, neighbor_id, score, rank) with rank <= k per query — the
+    one ranking tail of every top-k operator here.  ``neighbor`` names
+    the candidates' neighbor id column, ``score`` is the caller's rounded
+    score; ties break on the lower neighbor id, so the ranking is stable
+    across partitionings and replays in the DuckDB oracle."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        cands.select(
+            "query_id", F.col(neighbor).alias("neighbor_id"), score.alias("score")
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "score", "rank")
+    )
 
 
 def brute_force_topk(
@@ -64,25 +83,9 @@ def brute_force_topk(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("c_vec"),
     )
-    scored = (
-        c.join(F.broadcast(q))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), score_decimals).alias(
-                "score"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    cands = c.join(F.broadcast(q)).where(F.col("query_id") != F.col("neighbor_id"))
+    score = F.round(cosine(F.col("q_vec"), F.col("c_vec")), score_decimals)
+    return _top_k(cands, "neighbor_id", score, k)
 
 
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
@@ -152,11 +155,6 @@ def _plane_sql(plane) -> str:
         "non-finite hyperplane value cannot be embedded as a SQL literal"
     )
     return "array(" + ",".join(f"{float(x)!r}D" for x in plane) + ")"
-
-
-def _plane_lit(plane) -> "F.Column":
-    """One-py4j-call column form of :func:`_plane_sql`."""
-    return F.expr(_plane_sql(plane))
 
 
 def _proj_sql(vec_sql: str, plane) -> str:
@@ -287,6 +285,32 @@ def hyperplane_lsh_topk(
        third of the candidate volume, QUALITY.md), or use the IVF /
        IVF-PQ operators whose candidate volume is controlled by
        ``n_probes`` instead of collision geometry."""
+    return _lsh_topk(
+        corpus, queries, k, id_col, vec_col, n_planes, n_tables, None, seed,
+        score_decimals, dim,
+    )
+
+
+def _lsh_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    n_planes: int,
+    n_tables: int,
+    n_probes: int | None,
+    seed: int,
+    score_decimals: int,
+    dim: int | None,
+) -> DataFrame:
+    """The body of :func:`hyperplane_lsh_topk` (``n_probes=None``: each
+    query keeps its home bucket per table, :func:`add_lsh_buckets`) and
+    :func:`hyperplane_lsh_multiprobe_topk` (the home bucket plus the
+    cheapest perturbations, :func:`add_lsh_probe_buckets`).  The corpus
+    side is the same in both — one home bucket per table — candidates
+    join on (table, bucket) with the query side broadcast, and the exact
+    cosine re-ranks them."""
     if dim is None:
         dim = len(corpus.select(vec_col).first()[0])
     cb = add_lsh_buckets(
@@ -300,36 +324,24 @@ def hyperplane_lsh_topk(
         seed,
         dim,
     )
-    qb = add_lsh_buckets(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("q_vec"),
-        ),
-        "q_vec",
-        n_planes,
-        n_tables,
-        seed,
-        dim,
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("q_vec"),
     )
+    if n_probes is None:
+        qb = add_lsh_buckets(q, "q_vec", n_planes, n_tables, seed, dim)
+    else:
+        qb = add_lsh_probe_buckets(
+            q, "q_vec", n_planes, n_tables, n_probes, seed, dim
+        )
     cands = (
         cb.join(F.broadcast(qb), ["table", "bucket"])
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", "q_vec", "c_vec")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("q_vec"), F.col("c_vec")), score_decimals).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    score = F.round(cosine(F.col("q_vec"), F.col("c_vec")), score_decimals)
+    return _top_k(cands, "neighbor_id", score, k)
 
 
 def add_lsh_probe_buckets(
@@ -439,49 +451,9 @@ def hyperplane_lsh_multiprobe_topk(
     dense default's recall band at a third of its candidate volume; see
     the table for the grid.
     """
-    if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
-    cb = add_lsh_buckets(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("c_vec"),
-        ),
-        "c_vec",
-        n_planes,
-        n_tables,
-        seed,
-        dim,
-    )
-    qb = add_lsh_probe_buckets(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("q_vec"),
-        ),
-        "q_vec",
-        n_planes,
-        n_tables,
-        n_probes,
-        seed,
-        dim,
-    )
-    cands = (
-        cb.join(F.broadcast(qb), ["table", "bucket"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "q_vec", "c_vec")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("q_vec"), F.col("c_vec")), score_decimals).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+    return _lsh_topk(
+        corpus, queries, k, id_col, vec_col, n_planes, n_tables, n_probes,
+        seed, score_decimals, dim,
     )
 
 
@@ -748,19 +720,8 @@ def ivf_topk(
     cands = c_cells.join(F.broadcast(q_cells), ["cell"]).where(
         F.col("query_id") != F.col("neighbor_id")
     )
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine(F.col("q_vec"), F.col("c_vec")), score_decimals).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    score = F.round(cosine(F.col("q_vec"), F.col("c_vec")), score_decimals)
+    return _top_k(cands, "neighbor_id", score, k)
 
 
 def cosine_near_duplicates(
@@ -1096,24 +1057,30 @@ def _exact_rerank(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("_qv"),
     )
-    exact = (
-        c.join(F.broadcast(approx.select("query_id", "neighbor_id")), ["neighbor_id"])
-        .join(F.broadcast(qv), ["query_id"])
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("_qv"), F.col("_cv")), score_decimals).alias(
-                "score"
-            ),
-        )
+    cands = c.join(
+        F.broadcast(approx.select("query_id", "neighbor_id")), ["neighbor_id"]
+    ).join(F.broadcast(qv), ["query_id"])
+    score = F.round(cosine(F.col("_qv"), F.col("_cv")), score_decimals)
+    return _top_k(cands, "neighbor_id", score, k)
+
+
+def _adc_topk(
+    scored: DataFrame, nid: str, m: int, k: int, score_decimals: int
+) -> DataFrame:
+    """The ADC score-and-rank step of :func:`pq_adc_topk` and
+    :func:`ivf_pq_topk`: over (query, candidate) rows carrying the
+    query's ``_luts`` map array and the candidate's codes ``c0..c{m-1}``,
+    score = the ``m`` per-subspace LUT lookups summed in FIXED subspace
+    order (left-associated) and rounded, so it replays exactly in the SQL
+    oracle; self-pairs excluded; top ``k`` per query."""
+    score_sql = " + ".join(
+        f"element_at(element_at(_luts, {s + 1}), c{s})" for s in range(m)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+    return _top_k(
+        scored.where(F.col("query_id") != F.col(nid)),
+        nid,
+        F.expr(f"round({score_sql}, {score_decimals})"),
+        k,
     )
 
 
@@ -1162,7 +1129,7 @@ def pq_adc_topk(
     if rerank_from and rerank_from < k:
         raise ValueError(f"rerank_from {rerank_from} must be >= k {k}")
     width = dim // m
-    scored = pq_encode(corpus, codebooks, id_col, vec_col, dim, m, score_decimals)
+    enc = pq_encode(corpus, codebooks, id_col, vec_col, dim, m, score_decimals)
     luts = (
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -1174,23 +1141,9 @@ def pq_adc_topk(
             _lut_maps_expr(m, width, "_q", score_decimals).alias("_luts"),
         )
     )
-    scored = scored.join(F.broadcast(luts))
-    score_sql = " + ".join(
-        f"element_at(element_at(_luts, {s + 1}), c{s})" for s in range(m)
-    )
-    adc = (
-        scored.where(F.col("query_id") != F.col(id_col))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.expr(f"round({score_sql}, {score_decimals})").alias("score"),
-        )
-        .withColumn("rank", F.row_number().over(
-            Window.partitionBy("query_id").orderBy(
-                F.desc("score"), F.col("neighbor_id")
-            )
-        ).cast("int"))
-        .where(F.col("rank") <= (rerank_from or k))
+    adc = _adc_topk(
+        enc.join(F.broadcast(luts)), id_col, m, rerank_from or k,
+        score_decimals,
     )
     if not rerank_from:
         return adc
@@ -1270,30 +1223,9 @@ def ivf_pq_topk(
             _lut_maps_expr(m, width, "_q", score_decimals).alias("_luts"),
         )
     )
-    scored = (
-        enc.join(F.broadcast(probes), ["cell"])
-        .where(F.col("query_id") != F.col("_nid"))
-    )
-    score_sql = " + ".join(
-        f"element_at(element_at(_luts, {s + 1}), c{s})" for s in range(m)
-    )
-    adc = (
-        scored.select(
-            "query_id",
-            F.col("_nid").alias("neighbor_id"),
-            F.expr(f"round({score_sql}, {score_decimals})").alias("score"),
-        )
-        .withColumn(
-            "rank",
-            F.row_number()
-            .over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("score"), F.col("neighbor_id")
-                )
-            )
-            .cast("int"),
-        )
-        .where(F.col("rank") <= (rerank_from or k))
+    adc = _adc_topk(
+        enc.join(F.broadcast(probes), ["cell"]), "_nid", m, rerank_from or k,
+        score_decimals,
     )
     if not rerank_from:
         return adc

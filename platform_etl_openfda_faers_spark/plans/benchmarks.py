@@ -1805,8 +1805,8 @@ _SIMHASH16_SQL = f"""
 def dedup_simhash16(spark: SparkSession, sf: str) -> DataFrame:
     """Portable 16-bit SimHash signature per document, computed row-local
     (map-only — no explode/shuffle; bit-identical to the exploded
-    ``simhash_portable``, asserted in pytest).  The 64-bit xxhash64 path is
-    the Spark-only fast variant."""
+    ``simhash_portable``, asserted in pytest).  The 64-bit form is
+    ``simhash_local64`` (two 32-bit md5 halves)."""
     docs = load_docs(spark, sf)
     return dedup.simhash_local(docs, "text", "doc_id", bits=16)
 

@@ -27,6 +27,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from platform_etl_openfda_faers_spark.operators import dedup
+from platform_etl_openfda_faers_spark.operators.cache import unpersist_cached
 from platform_etl_openfda_faers_spark.streaming.ingest import (
     compact_ingest_index,
     dedup_ingest_batch,
@@ -64,13 +65,13 @@ def _serve_pairs(spark, idx_path, probe_rows):
     probe = spark.createDataFrame(probe_rows, _SCHEMA)
     spark.catalog.refreshByPath(idx_path)
     stored = spark.read.parquet(idx_path)
-    return {
-        (r.id_a, r.id_b)
-        for r in dedup.simhash_near_duplicates_incremental64(
-            probe, None, "text", "doc_id", max_hamming=3,
-            max_bucket_size=None, corpus_index=stored,
-        ).collect()
-    }
+    pairs = dedup.simhash_near_duplicates_incremental64(
+        probe, None, "text", "doc_id", max_hamming=3,
+        max_bucket_size=None, corpus_index=stored,
+    )
+    got = {(r.id_a, r.id_b) for r in pairs.collect()}
+    unpersist_cached(pairs)
+    return got
 
 
 def _parquet_files(path: str) -> list[Path]:

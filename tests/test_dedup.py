@@ -41,8 +41,8 @@ def test_jaccard_pairs_exact_values(docs):
 
 
 def test_minhash_lsh_finds_near_dups(docs):
-    got = dedup.minhash_near_duplicates(
-        docs, "text", "doc_id", bands=4, rows_per_band=4, threshold=0.5
+    got = dedup.minhash_near_duplicates_shared(
+        docs, "text", "doc_id", n=1, bands=4, rows_per_band=4, threshold=0.5
     )
     pairs = {(r.id_a, r.id_b) for r in got.collect()}
     assert (1, 2) in pairs  # identical token sets always collide
@@ -87,10 +87,77 @@ def test_minhash_signature_stability(spark, docs):
 
 
 def test_simhash_near_duplicates(docs):
-    got = dedup.simhash_near_duplicates(docs, "text", "doc_id", max_hamming=10)
+    got = dedup.simhash_near_duplicates_portable(
+        docs, "text", "doc_id", max_hamming=3
+    )
     pairs = {(r.id_a, r.id_b): r.hamming for r in got.collect()}
     assert pairs[(1, 2)] == 0  # identical token sets -> identical simhash
     assert pairs[(4, 5)] == 0
+
+
+@pytest.mark.parametrize(
+    "form",
+    [
+        "simhash_near_duplicates_portable",
+        "simhash_near_duplicates_incremental",
+        "simhash_near_duplicates_incremental64",
+        "dhash_near_duplicates",
+        "dhash_near_duplicates_incremental",
+        "video_near_duplicates",
+        "video_near_duplicates_incremental",
+    ],
+)
+def test_hamming_beyond_pigeonhole_bound_raises(spark, docs, form):
+    """Every 4-chunk Hamming join rejects max_hamming=4 with ValueError:
+    two hashes at Hamming 4 can share no 16-bit chunk, so the join would
+    silently miss them — and a bare assert vanishes under ``python -O``."""
+    from platform_etl_openfda_faers_spark.operators import multimodal as mm
+
+    new, corpus = docs.where("doc_id <= 3"), docs.where("doc_id > 3")
+    # Hamming 4: lo differs in the low 4 bits only
+    hashes = spark.createDataFrame(
+        [(1, 0, 0), (2, 0, 15)], ["media_id", "dhash_hi", "dhash_lo"]
+    )
+    frames = hashes.withColumn("frame_idx", F.lit(0))
+    call = {
+        "simhash_near_duplicates_portable": lambda: (
+            dedup.simhash_near_duplicates_portable(
+                docs, "text", "doc_id", max_hamming=4
+            )
+        ),
+        "simhash_near_duplicates_incremental": lambda: (
+            dedup.simhash_near_duplicates_incremental(
+                new, corpus, "text", "doc_id", max_hamming=4
+            )
+        ),
+        "simhash_near_duplicates_incremental64": lambda: (
+            dedup.simhash_near_duplicates_incremental64(
+                new, corpus, "text", "doc_id", max_hamming=4
+            )
+        ),
+        "dhash_near_duplicates": lambda: mm.dhash_near_duplicates(
+            hashes, max_hamming=4
+        ),
+        "dhash_near_duplicates_incremental": lambda: (
+            mm.dhash_near_duplicates_incremental(
+                hashes.where("media_id = 2"),
+                hashes.where("media_id = 1"),
+                max_hamming=4,
+            )
+        ),
+        "video_near_duplicates": lambda: mm.video_near_duplicates(
+            frames, max_hamming=4
+        ),
+        "video_near_duplicates_incremental": lambda: (
+            mm.video_near_duplicates_incremental(
+                frames.where("media_id = 2"),
+                frames.where("media_id = 1"),
+                max_hamming=4,
+            )
+        ),
+    }[form]
+    with pytest.raises(ValueError, match="max_hamming=4"):
+        call()
 
 
 def test_prune_df_above(spark):
@@ -100,20 +167,10 @@ def test_prune_df_above(spark):
     assert {r.token for r in pruned.collect()} == {"rare", "rare2"}
 
 
-def test_prune_df_join_matches_anti_join_form(spark):
-    rows = [(i, "hot") for i in range(10)] + [(1, "rare"), (2, "rare2")]
-    index = spark.createDataFrame(rows, ["doc_id", "token"])
-    a = sorted(map(tuple, dedup.prune_df_above(index, "token", 5).collect()))
-    b = sorted(map(tuple, dedup.prune_df_join(index, "token", 5).collect()))
-    assert a == b
-    # column order preserved for positional consumers
-    assert dedup.prune_df_join(index, "token", 5).columns == ["doc_id", "token"]
-
-
 def test_prune_df_window_matches_join_form(spark):
     rows = [(i, "hot") for i in range(10)] + [(1, "rare"), (2, "rare2")]
     index = spark.createDataFrame(rows, ["doc_id", "token"])
-    a = sorted(map(tuple, dedup.prune_df_join(index, "token", 5).collect()))
+    a = sorted(map(tuple, dedup.prune_df_above(index, "token", 5).collect()))
     b = sorted(map(tuple, dedup.prune_df_window(index, "token", 5).collect()))
     assert a == b
     assert dedup.prune_df_window(index, "token", 5).columns == ["doc_id", "token"]
@@ -121,7 +178,7 @@ def test_prune_df_window_matches_join_form(spark):
 
 def test_prune_df_window_keeps_null_keys(spark):
     # NULLs form a window partition and survive the cap (prune_df_above
-    # semantics); prune_df_join's inner join would drop them
+    # semantics)
     rows = [(i, "hot") for i in range(10)] + [(1, None), (2, "rare")]
     index = spark.createDataFrame(rows, ["doc_id", "token"])
     got = sorted(
@@ -145,17 +202,26 @@ def test_word_shingles_short_doc(spark):
     assert got == {(2, "a b c"), (2, "b c d")}  # doc 1 too short -> no rows
 
 
+def _shingle_hashes(docs, n):
+    """(doc_id, _h) — the per-shingle hash arrays the MinHash-LSH forms
+    fold into signatures."""
+    return docs.select(
+        "doc_id",
+        F.transform(dedup.shingle_array(F.col("text"), n), dedup.token_hash32)
+        .alias("_h"),
+    )
+
+
 def test_minhash_local_equals_index_route(spark, sf_dir):
-    """Row-local (map-only) signatures must be bit-identical to the
-    inverted-index route for the same shingle sets."""
+    """Row-local (map-only) signatures — the fold both MinHash-LSH forms
+    run — must be bit-identical to the inverted-index route for the same
+    shingle sets."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     index = dedup.word_shingles(docs, "text", "doc_id", n=3).withColumnRenamed(
         "shingle", "token"
     )
     a = dedup.minhash_signatures(index, "doc_id", num_hashes=8, seed=7)
-    b = dedup.minhash_signatures_local(
-        docs, "text", "doc_id", n=3, num_hashes=8, seed=7
-    )
+    b = dedup._minhash_fold(_shingle_hashes(docs, 3), ["doc_id"], 8, 7)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -823,8 +889,8 @@ def test_simhash_sql_matches_columnwise(spark, sf_dir):
         )
         return hashed.select(
             "doc_id",
-            dedup._simhash_sig32("_hhi").alias("sim_hi"),
-            dedup._simhash_sig32("_hlo").alias("sim_lo"),
+            dedup._simhash_sig_counts("_hhi", 32).alias("sim_hi"),
+            dedup._simhash_sig_counts("_hlo", 32).alias("sim_lo"),
         )
 
     new64 = {

@@ -60,14 +60,28 @@ def test_frames_suite_single_shuffle(spark, sf_dir):
     assert n_exchanges == 1, plan
 
 
+def _minhash_fold_over_scan(docs):
+    """The row-local MinHash signature fold both MinHash-LSH forms run,
+    over a plain scan of the document table."""
+    from pyspark.sql import functions as F
+
+    from platform_etl_openfda_faers_spark.operators import dedup
+
+    hashes = docs.select(
+        "doc_id",
+        F.transform(dedup.shingle_array(F.col("text"), 3), dedup.token_hash32)
+        .alias("_h"),
+    )
+    return dedup._minhash_fold(hashes, ["doc_id"], 16, 42)
+
+
 def test_minhash_signatures_map_only(spark, sf_dir):
     """Row-local MinHash signatures must be a map-only plan: zero
     exchanges between the scan and the signature projection."""
-    from platform_etl_openfda_faers_spark.operators import dedup
     from platform_etl_openfda_faers_spark.sources.readers import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    sigs = dedup.minhash_signatures_local(docs, "text", "doc_id")
+    sigs = _minhash_fold_over_scan(docs)
     plan = plan_of(sigs)
     assert "Exchange" not in plan, plan
 
@@ -122,11 +136,10 @@ def test_runtime_map_only_stage_moves_zero_shuffle_bytes(spark, sf_dir):
     """The map-only contract, enforced at runtime: row-local MinHash
     signatures over a plain table scan must complete with ZERO shuffle
     bytes written — not just zero Exchange nodes in the plan."""
-    from platform_etl_openfda_faers_spark.operators import dedup
     from platform_etl_openfda_faers_spark.sources.readers import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    sigs = dedup.minhash_signatures_local(docs, "text", "doc_id")
+    sigs = _minhash_fold_over_scan(docs)
     b = _run_bytes(spark, sigs)
     assert b["shuffle_write"] == 0 and b["shuffle_read"] == 0, b
 

@@ -361,14 +361,15 @@ def test_exif_orientation_group_laws(h, w, color, seed):
     cap=st.integers(min_value=1, max_value=6),
 )
 def test_prune_df_window_equals_join_form_law(spark, rows, cap):
-    """The single-derivation window prune and the frequency-join prune are
-    the same operator on NULL-free indexes — for any index and any cap."""
+    """The single-derivation window prune and the anti-join prune
+    (``prune_df_above``, the law reference) are the same operator — for
+    any index and any cap."""
     from platform_etl_openfda_faers_spark.operators import dedup
 
     index = spark.createDataFrame(
         [(d, f"t{t}") for d, t in rows], ["doc_id", "token"]
     )
-    a = sorted(map(tuple, dedup.prune_df_join(index, "token", cap).collect()))
+    a = sorted(map(tuple, dedup.prune_df_above(index, "token", cap).collect()))
     b = sorted(map(tuple, dedup.prune_df_window(index, "token", cap).collect()))
     assert a == b
 

@@ -437,7 +437,7 @@ def test_cell_occupancy_invariants(spark, sf_dir):
 
 
 def test_plane_lit_bit_identical(spark):
-    """r16 #18: the one-call SQL-literal hyperplane (`_plane_lit`) must
+    """r16 #18: the one-call SQL-literal hyperplane (`_plane_sql`) must
     produce the BIT-identical array<double> the former element-wise
     ``F.array(*[F.lit(float(x))])`` form produced — repr is the shortest
     round-trip decimal and the ``...D`` literal parses it back exactly.
@@ -448,7 +448,7 @@ def test_plane_lit_bit_identical(spark):
     from pyspark.sql import functions as F
 
     from platform_etl_openfda_faers_spark.operators.similarity import (
-        _plane_lit,
+        _plane_sql,
         random_hyperplanes,
     )
 
@@ -465,7 +465,7 @@ def test_plane_lit_bit_identical(spark):
     for i in range(0, len(planes), 16):
         batch = planes[i : i + 16]
         row = one.select(
-            *[_plane_lit(p).alias(f"n{j}") for j, p in enumerate(batch)],
+            *[F.expr(_plane_sql(p)).alias(f"n{j}") for j, p in enumerate(batch)],
             *[
                 F.array(*[F.lit(float(x)) for x in p]).alias(f"o{j}")
                 for j, p in enumerate(batch)
@@ -488,7 +488,7 @@ def test_bucket_key_sql_matches_columnwise(spark, sf_dir):
     from platform_etl_openfda_faers_spark.functions.vectors import dot
     from platform_etl_openfda_faers_spark.operators.similarity import (
         _bucket_key,
-        _plane_lit,
+        _plane_sql,
         random_hyperplanes,
     )
 
@@ -496,7 +496,7 @@ def test_bucket_key_sql_matches_columnwise(spark, sf_dir):
         key = F.lit(0).cast("long")
         for i, plane in enumerate(planes):
             bit = F.when(
-                F.round(dot(vec_col, _plane_lit(plane)), 6) >= 0,
+                F.round(dot(vec_col, F.expr(_plane_sql(plane))), 6) >= 0,
                 F.lit(1 << i),
             ).otherwise(F.lit(0))
             key = key + bit.cast("long")

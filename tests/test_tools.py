@@ -144,3 +144,22 @@ def test_stored_serve_core_is_the_only_occupancy_caller():
     names = {"guard_occupancy_fresh", "kept_keys_with_stored_occupancy"}
     core = [("operators/dedup.py", "_serve_rows")]
     assert _call_sites(names) == {n: core for n in names}
+
+
+def test_capture_plans_writes_physical_plan(spark, sf_dir, tmp_path, monkeypatch):
+    """The plan-capture CLI, run in-process on the test session, writes
+    the formatted physical plan into the directory it is given."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "capture_plans", REPO / "tools" / "capture_plans.py"
+    )
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    monkeypatch.setattr(
+        sys, "argv",
+        ["capture_plans.py", "smoke", "q1_pricing_summary",
+         "--sf", sf_dir, "--out", str(tmp_path)],
+    )
+    tool.main()
+    assert "Physical Plan" in (tmp_path / "q1_pricing_summary_smoke.txt").read_text()

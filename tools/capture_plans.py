@@ -1,18 +1,23 @@
 """Capture ``explain("formatted")`` for named registry queries into
-``plans/<round>/<query>_<tag>.txt`` — the optimization round's
-before/after plan evidence (the judge checks plan claims against these
-files).
+``<out>/<query>_<tag>.txt`` — before/after physical-plan evidence for a
+change.
 
-Usage: python tools/capture_plans.py TAG QUERY [QUERY ...] [--sf SF_DIR]
-       [--dir ROUND_DIR]   (default r17)
+Usage: python tools/capture_plans.py TAG QUERY [QUERY ...] --sf SF_DIR
+       --out DIR
 
-TAG is typically ``before`` or ``after``.  Queries whose registry callable
-eagerly builds a stored index (the BUILD_SERVE families) run those builds
-as a side effect — do not run this while a timed bench is in flight.
+TAG is typically ``before`` or ``after``.  Both ``--sf`` and ``--out`` are
+required: the committed plan evidence under ``plans/`` is only overwritten
+when that directory is named explicitly.  For a plan-identity check, run
+each query in a fresh process on both trees and diff the files after
+masking expression ids (``#123``) and exchange ``plan_id``s.  Queries
+whose registry callable eagerly builds a stored index (the BUILD_SERVE
+families) run those builds as a side effect — do not run this while a
+timed bench is in flight.
 """
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import sys
@@ -22,18 +27,12 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    sf_dir = "/root/testdata/sf0.1"
-    if "--sf" in args:
-        i = args.index("--sf")
-        sf_dir = args[i + 1]
-        del args[i : i + 2]
-    round_dir = "r17"
-    if "--dir" in args:
-        i = args.index("--dir")
-        round_dir = args[i + 1]
-        del args[i : i + 2]
-    tag, names = args[0], args[1:]
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("tag", help="file suffix, e.g. before or after")
+    ap.add_argument("queries", nargs="+", metavar="QUERY")
+    ap.add_argument("--sf", required=True, help="scale-factor data directory")
+    ap.add_argument("--out", required=True, type=Path, help="output directory")
+    args = ap.parse_args()
 
     from platform_etl_openfda_faers_spark.plans import benchmarks
     from platform_etl_openfda_faers_spark.session import get_spark
@@ -48,15 +47,15 @@ def main() -> None:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    out_dir = Path(__file__).resolve().parent.parent / "plans" / round_dir
-    out_dir.mkdir(parents=True, exist_ok=True)
-    for name in names:
-        df = benchmarks.SPARK_QUERIES[name](spark, sf_dir)
+    args.out.mkdir(parents=True, exist_ok=True)
+    for name in args.queries:
+        df = benchmarks.SPARK_QUERIES[name](spark, args.sf)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        (out_dir / f"{name}_{tag}.txt").write_text(buf.getvalue())
-        print(f"wrote plans/{round_dir}/{name}_{tag}.txt", file=sys.stderr)
+        path = args.out / f"{name}_{args.tag}.txt"
+        path.write_text(buf.getvalue())
+        print(f"wrote {path}", file=sys.stderr)
         spark.catalog.clearCache()
 
 
