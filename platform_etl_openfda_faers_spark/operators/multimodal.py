@@ -1,19 +1,30 @@
 """Multimodal (image/audio/video) column plumbing (beyond-reference).
 
 Media payloads are opaque ``binary`` columns with a typed metadata struct
-alongside.  The Spark-side plumbing — schemas, Arrow-batched ``mapInPandas``
-UDF signatures, partitioning — is real and tested.  The codec step has real
-pure-NumPy decoders for 24-bit BI_RGB **BMP** (bottom-up rows, 4-byte
-stride padding, BGR order), binary **PPM** (P6), PCM-16 **WAV** (RIFF
-chunk walk), **PNG** (stdlib-zlib inflate + all five unfilters), and
-**JPEG** — baseline AND progressive (DQT/DHT marker walk, Huffman
-decode, dequant, batched float IDCT, restart markers, 4:4:4/4:2:2/4:2:0
-chroma, T.81 Annex-G spectral selection + successive approximation), and
-**GIF** (variable-width LSB-first LZW incl. dictionary reset and KwKwK,
-interlacing, global/local color tables); mp3 and video genuinely need
-external codec libraries, which are not in this container, so those
-raise ``NotImplementedError``.  ``fake=True``
-keeps the digest-derived deterministic stub for arbitrary payloads.
+alongside.  The Spark-side plumbing — schemas, one Arrow-batched
+``mapInPandas`` row map (``_map_rows``), partitioning — is real and tested.
+The codecs are pure NumPy + stdlib and decode for real:
+
+- images: 24-bit BI_RGB **BMP** (bottom-up rows, 4-byte stride padding,
+  BGR order), binary **PPM** (P6), **PNG** (stdlib-zlib inflate + all five
+  unfilters), **JPEG** baseline, progressive and 12-bit extended
+  sequential (DQT/DHT marker walk, Huffman decode, dequant, batched float
+  IDCT, restart markers, 4:4:4/4:2:2/4:2:0 chroma, T.81 Annex-G spectral
+  selection + successive approximation), and **GIF** still and animated
+  (variable-width LSB-first LZW incl. dictionary reset and KwKwK,
+  interlacing, global/local color tables, disposal-composited frames);
+- audio: PCM-16 **WAV** (RIFF chunk walk);
+- video: **MJPEG-in-AVI** frames (RIFF walk, each frame a JPEG); every
+  other video codec goes through a deployment-registered
+  ``EXTERNAL_VIDEO_DECODERS`` wrapper and otherwise raises
+  ``NotImplementedError``;
+- metadata: **MP4** container boxes (duration, dims, codec fourcc) and
+  JPEG **EXIF** (both byte orders, orientation applied on request).
+
+mp3 and other compressed audio need external codec libraries, which are
+not in this container, so those raise ``NotImplementedError``.
+``fake=True`` keeps the digest-derived deterministic stub for arbitrary
+payloads.
 
 Scale notes: media rows are fat — ``mapInPandas`` streams Arrow batches, so
 per-task memory is bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch``
@@ -23,10 +34,11 @@ heavy decode so stragglers don't concentrate.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import numbers
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -70,6 +82,57 @@ DECODED_SCHEMA = T.StructType(
     ]
 )
 
+#: the (media_id, content) output of every ``synthetic_*`` generator
+_SYNTH_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType()),
+        T.StructField("content", T.BinaryType()),
+    ]
+)
+
+
+def _map_rows(
+    df: DataFrame,
+    cols: list,
+    schema: T.StructType,
+    fn: Callable[..., Iterable[tuple]],
+) -> DataFrame:
+    """``df.select(*cols)`` mapped row by row in Arrow batches: ``fn(*row)``
+    yields zero or more output tuples in ``schema`` order.  The one
+    ``mapInPandas`` loop behind every media operator and generator —
+    map-only, no shuffle, per-task memory one Arrow batch."""
+    names = schema.fieldNames()
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [
+                    out
+                    for row in pdf.itertuples(index=False, name=None)
+                    for out in fn(*row)
+                ],
+                columns=names,
+            )
+
+    return df.select(*cols).mapInPandas(gen, schema=schema)
+
+
+def _keyed_cols(
+    id_col: str, seed_col: str | None, offset_col: str | None
+) -> tuple[list, Callable[..., tuple]]:
+    """Select list and row unpacker for the generators whose content is
+    keyed by optional seed / offset columns: ``unpack(*row)`` returns
+    ``(id, seed, offset)`` as plain ints, ``None`` for a column not
+    named."""
+    keys = (id_col, seed_col, offset_col)
+    cols = list(dict.fromkeys(c for c in keys if c is not None))
+
+    def unpack(*row):
+        v = dict(zip(cols, row))
+        return tuple(None if c is None else int(v[c]) for c in keys)
+
+    return cols, unpack
+
 
 def attach_binary(
     df: DataFrame, payload_col: str, id_col: str, fmt: str = "utf8-text"
@@ -90,18 +153,18 @@ def attach_binary(
     )
 
 
-def _fake_decode(payload: bytes, n_features: int) -> tuple[int, int, int, np.ndarray]:
+def _fake_decode(payload: bytes) -> tuple[int, int, int, np.ndarray]:
     """Deterministic stand-in for a real image decoder (STUB).
 
-    Dimensions and features derive from the sha256 digest — stable across
-    runs and machines, so tests can assert exact values.
+    Dimensions and the 8 features derive from the sha256 digest — stable
+    across runs and machines, so tests can assert exact values.
     """
     digest = hashlib.sha256(payload).digest()
     width = 64 + digest[0] % 192
     height = 64 + digest[1] % 192
     n_channels = 1 + digest[2] % 4
     feats = (
-        np.frombuffer(digest[: n_features * 2], dtype=np.uint16).astype(np.float32)
+        np.frombuffer(digest[:16], dtype=np.uint16).astype(np.float32)
         / 65535.0
     )
     return width, height, n_channels, feats
@@ -1830,45 +1893,26 @@ GIF_FRAMES_SCHEMA = T.StructType(
 )
 
 
-def gif_frames(
-    df: DataFrame,
-    id_col: str = "media_id",
-    content_col: str = "content",
-    every_n: int = 1,
-) -> DataFrame:
+def gif_frames(df: DataFrame, every_n: int = 1) -> DataFrame:
     """Animated-GIF frame extraction + sampling: one output row per
     sampled DISPLAYED frame (full disposal-composited canvas, not the raw
     sub-rectangle) with decoded pixel stats — the GIF counterpart of
     ``video_frames``.  Arrow-batched ``mapInPandas``; map-only at any
     scale (each payload composites where it lives, no shuffle)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                canvases = decode_gif_frames(bytes(payload))
-                nf = len(canvases)
-                for idx, img in enumerate(canvases):
-                    if idx % every_n:
-                        continue
-                    rows.append(
-                        (
-                            int(mid), idx, nf, img.shape[1], img.shape[0],
-                            int(img.astype(np.int64).sum()),
-                            int(img[0, 0, 0]),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "n_frames",
-                    "width", "height", "sum_vals", "first_r",
-                ],
+    def row(mid, payload):
+        canvases = decode_gif_frames(bytes(payload))
+        nf = len(canvases)
+        for idx, img in enumerate(canvases):
+            if idx % every_n:
+                continue
+            yield (
+                int(mid), idx, nf, img.shape[1], img.shape[0],
+                int(img.astype(np.int64).sum()),
+                int(img[0, 0, 0]),
             )
 
-    return df.select(F.col(id_col), F.col(content_col)).mapInPandas(
-        gen, schema=GIF_FRAMES_SCHEMA
-    )
+    return _map_rows(df, ["media_id", "content"], GIF_FRAMES_SCHEMA, row)
 
 
 def synthetic_gif_anim_media(df: DataFrame, id_col: str) -> DataFrame:
@@ -1890,45 +1934,31 @@ def synthetic_gif_anim_media(df: DataFrame, id_col: str) -> DataFrame:
     restored-to-base by its disposal method, base elsewhere — no
     sequential state needed."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        i = np.arange(8)
-        pal = np.stack(
-            [(i * 31) % 256, (i * 57 + 11) % 256, (i * 89 + 7) % 256], axis=1
-        ).astype(np.uint8)
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                y, x = np.ogrid[0:10, 0:16]
-                base = ((x + y + mid) % 8).astype(np.uint8)
-                frames = [(0, 0, base, 1, None)]
-                for f in range(1, 2 + mid % 3):
-                    yl, xl = np.ogrid[0:3, 0:4]
-                    rect = ((xl + 2 * yl + f + mid) % 8).astype(np.uint8)
-                    frames.append(
-                        (
-                            4 * (f - 1),
-                            (mid + f) % 7,
-                            rect,
-                            1 + (mid + f) % 3,
-                            7 if (mid + f) % 2 else None,
-                        )
-                    )
-                rows.append(
-                    (
-                        mid,
-                        encode_gif_anim(16, 10, pal, frames, bg_index=mid % 8),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    i = np.arange(8)
+    pal = np.stack(
+        [(i * 31) % 256, (i * 57 + 11) % 256, (i * 89 + 7) % 256], axis=1
+    ).astype(np.uint8)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    return df.select(F.col(id_col)).mapInPandas(gen, schema=schema)
+    def row(mid):
+        mid = int(mid)
+        y, x = np.ogrid[0:10, 0:16]
+        base = ((x + y + mid) % 8).astype(np.uint8)
+        frames = [(0, 0, base, 1, None)]
+        for f in range(1, 2 + mid % 3):
+            yl, xl = np.ogrid[0:3, 0:4]
+            rect = ((xl + 2 * yl + f + mid) % 8).astype(np.uint8)
+            frames.append(
+                (
+                    4 * (f - 1),
+                    (mid + f) % 7,
+                    rect,
+                    1 + (mid + f) % 3,
+                    7 if (mid + f) % 2 else None,
+                )
+            )
+        yield mid, encode_gif_anim(16, 10, pal, frames, bg_index=mid % 8)
+
+    return _map_rows(df, [id_col], _SYNTH_SCHEMA, row)
 
 
 # ---------------------------------------------------------------------------
@@ -2055,35 +2085,23 @@ def parse_mp4_meta(payload: bytes) -> dict:
     return out
 
 
-def mp4_meta(df: DataFrame, id_col: str = "media_id", content_col: str = "content") -> DataFrame:
+def mp4_meta(df: DataFrame) -> DataFrame:
     """Arrow-batched container-metadata extraction over binary payloads:
     (media_id, brand, codec, n_tracks, width, height, duration_ms).
     Map-only at any scale — same plumbing contract as ``decode_media``."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                m = parse_mp4_meta(bytes(payload))
-                rows.append(
-                    (
-                        int(mid),
-                        m["brand"],
-                        m["codec"],
-                        m["n_tracks"],
-                        m["width"],
-                        m["height"],
-                        # integer-exact ms (floor) — oracle-replayable
-                        m["duration"] * 1000 // m["timescale"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "brand", "codec", "n_tracks",
-                    "width", "height", "duration_ms",
-                ],
-            )
+    def row(mid, payload):
+        m = parse_mp4_meta(bytes(payload))
+        yield (
+            int(mid),
+            m["brand"],
+            m["codec"],
+            m["n_tracks"],
+            m["width"],
+            m["height"],
+            # integer-exact ms (floor) — oracle-replayable
+            m["duration"] * 1000 // m["timescale"],
+        )
 
     schema = T.StructType(
         [
@@ -2096,9 +2114,7 @@ def mp4_meta(df: DataFrame, id_col: str = "media_id", content_col: str = "conten
             T.StructField("duration_ms", T.LongType()),
         ]
     )
-    return df.select(F.col(id_col), F.col(content_col)).mapInPandas(
-        gen, schema=schema
-    )
+    return _map_rows(df, ["media_id", "content"], schema, row)
 
 
 def synthetic_mp4_media(df: DataFrame, id_col: str) -> DataFrame:
@@ -2106,32 +2122,17 @@ def synthetic_mp4_media(df: DataFrame, id_col: str) -> DataFrame:
     ``1000 + 37*id`` ticks at timescale 600, dims ``(320 + 16*(id%4)) x
     (240 + 16*(id%3))``, codec avc1/hvc1 alternating by id parity."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                rows.append(
-                    (
-                        mid,
-                        encode_mp4_meta(
-                            duration=1000 + 37 * mid,
-                            timescale=600,
-                            width=320 + 16 * (mid % 4),
-                            height=240 + 16 * (mid % 3),
-                            codec=b"avc1" if mid % 2 == 0 else b"hvc1",
-                        ),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def row(mid):
+        mid = int(mid)
+        yield mid, encode_mp4_meta(
+            duration=1000 + 37 * mid,
+            timescale=600,
+            width=320 + 16 * (mid % 4),
+            height=240 + 16 * (mid % 3),
+            codec=b"avc1" if mid % 2 == 0 else b"hvc1",
+        )
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    return df.select(F.col(id_col)).mapInPandas(gen, schema=schema)
+    return _map_rows(df, [id_col], _SYNTH_SCHEMA, row)
 
 
 # ---------------------------------------------------------------------------
@@ -2373,44 +2374,25 @@ VIDEO_FRAMES_SCHEMA = T.StructType(
 )
 
 
-def video_frames(
-    df: DataFrame,
-    id_col: str = "media_id",
-    content_col: str = "content",
-    every_n: int = 1,
-) -> DataFrame:
+def video_frames(df: DataFrame, every_n: int = 1) -> DataFrame:
     """MJPEG-in-AVI frame extraction + sampling: one output row per
     sampled frame with decoded pixel stats — the vision-LM training-data
     primitive (sample every Nth frame of each clip).  Arrow-batched
     ``mapInPandas``; map-only at any scale (each payload is decoded
     where it lives, no shuffle; output rows ≈ frames/every_n)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                payload = bytes(payload)
-                meta = parse_avi_meta(payload)
-                for idx, img in decode_avi_frames(payload, every_n):
-                    first = img[(0,) * img.ndim]
-                    rows.append(
-                        (
-                            int(mid), idx, meta["n_frames"], meta["fps"],
-                            img.shape[1], img.shape[0],
-                            int(img.astype(np.int64).sum()), int(first),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "n_frames", "fps",
-                    "width", "height", "sum_vals", "first_px",
-                ],
+    def row(mid, payload):
+        payload = bytes(payload)
+        meta = parse_avi_meta(payload)
+        for idx, img in decode_avi_frames(payload, every_n):
+            first = img[(0,) * img.ndim]
+            yield (
+                int(mid), idx, meta["n_frames"], meta["fps"],
+                img.shape[1], img.shape[0],
+                int(img.astype(np.int64).sum()), int(first),
             )
 
-    return df.select(F.col(id_col), F.col(content_col)).mapInPandas(
-        gen, schema=VIDEO_FRAMES_SCHEMA
-    )
+    return _map_rows(df, ["media_id", "content"], VIDEO_FRAMES_SCHEMA, row)
 
 
 def synthetic_avi_media(df: DataFrame, id_col: str) -> DataFrame:
@@ -2420,29 +2402,17 @@ def synthetic_avi_media(df: DataFrame, id_col: str) -> DataFrame:
     ``(id + 31*f + 17*bx) % 256`` — exact through the all-ones-qtable
     JPEG path, so frame pixels are analytically predictable."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                wb = 1 + mid % 2
-                frames = []
-                for f in range(3 + mid % 4):
-                    bx = np.arange(wb)
-                    blocks = ((mid + 31 * f + 17 * bx) % 256).astype(np.uint8)
-                    frames.append(
-                        np.kron(blocks[None, :], np.ones((8, 8), np.uint8))
-                    )
-                rows.append((mid, encode_avi_mjpeg(frames, fps=5 + mid % 3)))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def row(mid):
+        mid = int(mid)
+        wb = 1 + mid % 2
+        frames = []
+        for f in range(3 + mid % 4):
+            bx = np.arange(wb)
+            blocks = ((mid + 31 * f + 17 * bx) % 256).astype(np.uint8)
+            frames.append(np.kron(blocks[None, :], np.ones((8, 8), np.uint8)))
+        yield mid, encode_avi_mjpeg(frames, fps=5 + mid % 3)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    return df.select(F.col(id_col)).mapInPandas(gen, schema=schema)
+    return _map_rows(df, [id_col], _SYNTH_SCHEMA, row)
 
 
 # ---------------------------------------------------------------------------
@@ -2577,32 +2547,18 @@ def parse_exif(payload: bytes) -> dict:
     return out
 
 
-def exif_meta(
-    df: DataFrame, id_col: str = "media_id", content_col: str = "content"
-) -> DataFrame:
+def exif_meta(df: DataFrame) -> DataFrame:
     """Arrow-batched EXIF extraction over JPEG payloads: (media_id,
     byte_order, make, model, orientation, dt, pixel_x, pixel_y).
     Map-only at any scale."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                m = parse_exif(bytes(payload))
-                rows.append(
-                    (
-                        int(mid), m["byte_order"], m["make"], m["model"],
-                        m["orientation"], m["datetime"],
-                        m["pixel_x"], m["pixel_y"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "byte_order", "make", "model",
-                    "orientation", "dt", "pixel_x", "pixel_y",
-                ],
-            )
+    def row(mid, payload):
+        m = parse_exif(bytes(payload))
+        yield (
+            int(mid), m["byte_order"], m["make"], m["model"],
+            m["orientation"], m["datetime"],
+            m["pixel_x"], m["pixel_y"],
+        )
 
     schema = T.StructType(
         [
@@ -2616,9 +2572,7 @@ def exif_meta(
             T.StructField("pixel_y", T.LongType()),
         ]
     )
-    return df.select(F.col(id_col), F.col(content_col)).mapInPandas(
-        gen, schema=schema
-    )
+    return _map_rows(df, ["media_id", "content"], schema, row)
 
 
 def synthetic_exif_media(df: DataFrame, id_col: str) -> DataFrame:
@@ -2628,33 +2582,23 @@ def synthetic_exif_media(df: DataFrame, id_col: str) -> DataFrame:
     odd big-endian (MM) — both byte-order paths exercised in one table."""
     base = encode_jpeg(np.full((8, 8), 128, dtype=np.uint8))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                dt_s = "2024:01:%02d %02d:%02d:%02d" % (
-                    1 + mid % 28, mid % 24, mid % 60, (mid * 7) % 60,
-                )
-                tiff = build_tiff_exif(
-                    make=f"Cam{mid % 7}",
-                    model=f"M{mid % 5}",
-                    orientation=1 + mid % 8,
-                    datetime_s=dt_s,
-                    px=320 + mid % 32,
-                    py=240 + mid % 24,
-                    little=(mid % 2 == 0),
-                )
-                rows.append((mid, embed_exif_jpeg(base, tiff)))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def row(mid):
+        mid = int(mid)
+        dt_s = "2024:01:%02d %02d:%02d:%02d" % (
+            1 + mid % 28, mid % 24, mid % 60, (mid * 7) % 60,
+        )
+        tiff = build_tiff_exif(
+            make=f"Cam{mid % 7}",
+            model=f"M{mid % 5}",
+            orientation=1 + mid % 8,
+            datetime_s=dt_s,
+            px=320 + mid % 32,
+            py=240 + mid % 24,
+            little=(mid % 2 == 0),
+        )
+        yield mid, embed_exif_jpeg(base, tiff)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    return df.select(F.col(id_col)).mapInPandas(gen, schema=schema)
+    return _map_rows(df, [id_col], _SYNTH_SCHEMA, row)
 
 
 def apply_exif_orientation(img: np.ndarray, orientation: int) -> np.ndarray:
@@ -2698,9 +2642,7 @@ ORIENTED_SCHEMA = T.StructType(
 )
 
 
-def decode_media_oriented(
-    df: DataFrame, id_col: str = "media_id", content_col: str = "content"
-) -> DataFrame:
+def decode_media_oriented(df: DataFrame) -> DataFrame:
     """JPEG decode with the EXIF orientation APPLIED: each payload's APP1
     orientation (default 1 when absent/unparseable) drives a NumPy
     flip/rotate of the decoded pixels, so width/height and pixel
@@ -2709,44 +2651,30 @@ def decode_media_oriented(
     [0, w-1]) — together they pin down which of the 8 transforms ran.
     Arrow-batched ``mapInPandas``; map-only at any scale."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                payload = bytes(payload)
-                try:
-                    orient = parse_exif(payload)["orientation"] or 1
-                except (ValueError, struct.error):
-                    # truncated APP1 raises struct.error from unpack_from,
-                    # which is NOT a ValueError subclass — both default to 1
-                    orient = 1
-                if not 1 <= orient <= 8:
-                    # out-of-range tag value would raise from
-                    # apply_exif_orientation and kill the whole task
-                    orient = 1
-                img = apply_exif_orientation(decode_jpeg(payload), orient)
-                h, w = img.shape[:2]
-                c = 1 if img.ndim == 2 else img.shape[2]
-                first = img[0, 0] if img.ndim == 2 else img[0, 0, 0]
-                topright = img[0, w - 1] if img.ndim == 2 else img[0, w - 1, 0]
-                rows.append(
-                    (
-                        int(mid), int(orient), w, h, c,
-                        int(img.astype(np.int64).sum()),
-                        int(first), int(topright),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "orientation", "width", "height",
-                    "n_channels", "sum_vals", "first_px", "topright_px",
-                ],
-            )
+    def row(mid, payload):
+        payload = bytes(payload)
+        try:
+            orient = parse_exif(payload)["orientation"] or 1
+        except (ValueError, struct.error):
+            # truncated APP1 raises struct.error from unpack_from,
+            # which is NOT a ValueError subclass — both default to 1
+            orient = 1
+        if not 1 <= orient <= 8:
+            # out-of-range tag value would raise from
+            # apply_exif_orientation and kill the whole task
+            orient = 1
+        img = apply_exif_orientation(decode_jpeg(payload), orient)
+        h, w = img.shape[:2]
+        c = 1 if img.ndim == 2 else img.shape[2]
+        first = img[0, 0] if img.ndim == 2 else img[0, 0, 0]
+        topright = img[0, w - 1] if img.ndim == 2 else img[0, w - 1, 0]
+        yield (
+            int(mid), int(orient), w, h, c,
+            int(img.astype(np.int64).sum()),
+            int(first), int(topright),
+        )
 
-    return df.select(F.col(id_col), F.col(content_col)).mapInPandas(
-        gen, schema=ORIENTED_SCHEMA
-    )
+    return _map_rows(df, ["media_id", "content"], ORIENTED_SCHEMA, row)
 
 
 def synthetic_oriented_media(df: DataFrame, id_col: str) -> DataFrame:
@@ -2755,30 +2683,20 @@ def synthetic_oriented_media(df: DataFrame, id_col: str) -> DataFrame:
     with an APP1 orientation tag of 1 + id % 8 — all eight transforms
     exercised across ids, alternating II/MM byte order."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                wb, hb = 1 + mid % 3, 1 + mid % 2
-                by, bx = np.ogrid[0:hb, 0:wb]
-                blocks = ((mid + 17 * bx + 23 * by) % 256).astype(np.uint8)
-                img = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
-                tiff = build_tiff_exif(
-                    make="Cam", model="M", orientation=1 + mid % 8,
-                    datetime_s="2024:01:01 00:00:00",
-                    px=8 * wb, py=8 * hb, little=(mid % 2 == 0),
-                )
-                rows.append((mid, embed_exif_jpeg(encode_jpeg(img), tiff)))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def row(mid):
+        mid = int(mid)
+        wb, hb = 1 + mid % 3, 1 + mid % 2
+        by, bx = np.ogrid[0:hb, 0:wb]
+        blocks = ((mid + 17 * bx + 23 * by) % 256).astype(np.uint8)
+        img = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
+        tiff = build_tiff_exif(
+            make="Cam", model="M", orientation=1 + mid % 8,
+            datetime_s="2024:01:01 00:00:00",
+            px=8 * wb, py=8 * hb, little=(mid % 2 == 0),
+        )
+        yield mid, embed_exif_jpeg(encode_jpeg(img), tiff)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    return df.select(F.col(id_col)).mapInPandas(gen, schema=schema)
+    return _map_rows(df, [id_col], _SYNTH_SCHEMA, row)
 
 
 def _real_decode(payload: bytes) -> tuple[int, int, int, np.ndarray]:
@@ -2818,41 +2736,32 @@ def _real_decode(payload: bytes) -> tuple[int, int, int, np.ndarray]:
     )
 
 
-def decode_media(
-    df: DataFrame, n_features: int = 8, fake: bool = True
-) -> DataFrame:
+def decode_media(df: DataFrame, fake: bool = True) -> DataFrame:
     """Decode + feature-extract media payloads via Arrow-batched mapInPandas.
 
     ``fake=False`` runs the REAL pure-NumPy decoders (BMP-24 / PPM-P6 /
     WAV-PCM16, dispatched on magic bytes); features are
     ``[sum(values), values[0], values[1], values[2]]`` — integer-valued, so
     they're exact in float32 and SQL-predictable for synthetic payloads.
-    ``fake=True`` keeps the digest-derived stub for arbitrary payloads.
+    ``fake=True`` keeps the digest-derived stub (8 features) for
+    arbitrary payloads.
     """
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["content"]):
-                if fake:
-                    w, h, c, feats = _fake_decode(bytes(payload), n_features)
-                    feats = feats.tolist()
-                else:
-                    w, h, c, vals = _real_decode(bytes(payload))
-                    feats = [
-                        float(vals.sum()),
-                        float(vals[0]),
-                        float(vals[1]),
-                        float(vals[2]),
-                    ]
-                rows.append((media_id, w, h, c, feats))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "n_channels", "features"]
-            )
+    def row(media_id, payload):
+        if fake:
+            w, h, c, feats = _fake_decode(bytes(payload))
+            feats = feats.tolist()
+        else:
+            w, h, c, vals = _real_decode(bytes(payload))
+            feats = [
+                float(vals.sum()),
+                float(vals[0]),
+                float(vals[1]),
+                float(vals[2]),
+            ]
+        yield media_id, w, h, c, feats
 
-    return df.select("media_id", "content").mapInPandas(
-        decode_batches, schema=DECODED_SCHEMA
-    )
+    return _map_rows(df, ["media_id", "content"], DECODED_SCHEMA, row)
 
 
 AUDIO_FEATURES_SCHEMA = T.StructType(
@@ -2888,37 +2797,25 @@ def audio_features(
     volume is O(total_frames / window).
     """
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["content"]):
-                samples, channels, _ = decode_wav(bytes(payload))
-                ch0 = samples[:: max(channels, 1)].astype(np.int64)
-                n_full = len(ch0) // window
-                for w_idx in range(n_full):
-                    v = ch0[w_idx * window : (w_idx + 1) * window]
-                    rms = float(np.sqrt(float((v * v).sum()) / window))
-                    zc = int(np.sum((v[1:] >= 0) != (v[:-1] >= 0)))
-                    dom = None
-                    if include_fft:
-                        power = np.abs(np.fft.rfft(v.astype(np.float64))) ** 2
-                        dom = int(np.argmax(power))
-                    rows.append(
-                        (
-                            int(media_id), w_idx, window, rms,
-                            int(np.abs(v).max()), zc, dom,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "win", "n", "rms", "peak",
-                    "zero_crossings", "dom_bin",
-                ],
+    def row(media_id, payload):
+        samples, channels, _ = decode_wav(bytes(payload))
+        ch0 = samples[:: max(channels, 1)].astype(np.int64)
+        n_full = len(ch0) // window
+        for w_idx in range(n_full):
+            v = ch0[w_idx * window : (w_idx + 1) * window]
+            rms = float(np.sqrt(float((v * v).sum()) / window))
+            zc = int(np.sum((v[1:] >= 0) != (v[:-1] >= 0)))
+            dom = None
+            if include_fft:
+                power = np.abs(np.fft.rfft(v.astype(np.float64))) ** 2
+                dom = int(np.argmax(power))
+            yield (
+                int(media_id), w_idx, window, rms,
+                int(np.abs(v).max()), zc, dom,
             )
 
-    return df.select("media_id", "content").mapInPandas(
-        feats, schema=AUDIO_FEATURES_SCHEMA
+    return _map_rows(
+        df, ["media_id", "content"], AUDIO_FEATURES_SCHEMA, row
     )
 
 
@@ -2932,24 +2829,14 @@ def synthetic_bmp_media(df: DataFrame, id_col: str) -> DataFrame:
     breaks the oracle match.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                w, h = 4 + mid % 9, 3 + mid % 5
-                y, x, c = np.ogrid[0:h, 0:w, 0:3]
-                rgb = ((mid + 7 * x + 13 * y + 29 * c) % 256).astype(np.uint8)
-                rows.append((mid, encode_bmp(rgb)))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def row(mid):
+        mid = int(mid)
+        w, h = 4 + mid % 9, 3 + mid % 5
+        y, x, c = np.ogrid[0:h, 0:w, 0:3]
+        rgb = ((mid + 7 * x + 13 * y + 29 * c) % 256).astype(np.uint8)
+        yield mid, encode_bmp(rgb)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    return df.select(F.col(id_col)).mapInPandas(gen, schema=schema)
+    return _map_rows(df, [id_col], _SYNTH_SCHEMA, row)
 
 
 _PERTURB_BLOCKS = {1: (2, 2), 2: (5, 6)}  # (block-row, block-col) per copy
@@ -2959,14 +2846,12 @@ def synthetic_bmp_media_perceptual(
     df: DataFrame,
     id_col: str,
     group_mod: int = 50,
-    w: int = 36,
-    h: int = 32,
     perturb: bool = False,
     seed_col: str | None = None,
     offset_col: str | None = None,
 ) -> DataFrame:
     """Deterministic BMPs with BUILT-IN perceptual-duplicate structure
-    (test/oracle harness for image dedup): content depends only on
+    (test/oracle harness for image dedup), 36x32: content depends only on
     ``gid = id % group_mod``, and ``delta = (id // group_mod) % 3`` adds a
     uniform brightness shift — so every ``group_mod``-th id is a
     brightness-shifted copy of the same image.
@@ -2995,44 +2880,25 @@ def synthetic_bmp_media_perceptual(
     non-empty at scale (VERDICT r12 #3).  Content math is unchanged.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            gids = (
-                pdf[seed_col] if seed_col is not None
-                else pdf[id_col] % group_mod
-            )
-            deltas = (
-                pdf[offset_col] if offset_col is not None
-                else (pdf[id_col] // group_mod) % 3
-            )
-            for mid, gid, delta in zip(pdf[id_col], gids, deltas):
-                mid, gid, delta = int(mid), int(gid), int(delta)
-                y, x, c = np.ogrid[0:h, 0:w, 0:3]
-                rgb = (
-                    ((gid * 13 + 7) * x + (gid * 5 + 3) * y) % 240
-                    + 2 * c + delta
-                ).astype(np.uint8)
-                if perturb and delta > 0:
-                    # one distinctive 4x4 block per copy index: copies are
-                    # NEAR-duplicates (a few gradient bits), not exact
-                    yb, xb = _PERTURB_BLOCKS[delta]
-                    rgb[yb * 4 : yb * 4 + 4, xb * 4 : xb * 4 + 4, :] = 250
-                rows.append((mid, encode_bmp(rgb)))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    cols, unpack = _keyed_cols(id_col, seed_col, offset_col)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    cols = [F.col(id_col)]
-    if seed_col is not None:
-        cols.append(F.col(seed_col))
-    if offset_col is not None:
-        cols.append(F.col(offset_col))
-    return df.select(*cols).mapInPandas(gen, schema=schema)
+    def row(*r):
+        mid, gid, delta = unpack(*r)
+        gid = mid % group_mod if gid is None else gid
+        delta = (mid // group_mod) % 3 if delta is None else delta
+        y, x, c = np.ogrid[0:32, 0:36, 0:3]
+        rgb = (
+            ((gid * 13 + 7) * x + (gid * 5 + 3) * y) % 240
+            + 2 * c + delta
+        ).astype(np.uint8)
+        if perturb and delta > 0:
+            # one distinctive 4x4 block per copy index: copies are
+            # NEAR-duplicates (a few gradient bits), not exact
+            yb, xb = _PERTURB_BLOCKS[delta]
+            rgb[yb * 4 : yb * 4 + 4, xb * 4 : xb * 4 + 4, :] = 250
+        yield mid, encode_bmp(rgb)
+
+    return _map_rows(df, cols, _SYNTH_SCHEMA, row)
 
 
 def synthetic_bmp_media_ragged(
@@ -3049,28 +2915,18 @@ def synthetic_bmp_media_ragged(
     box-averaging exactly: floor((s + delta*area)/area) =
     floor(s/area) + delta)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                gid, delta = mid % group_mod, (mid // group_mod) % 3
-                w, h = 40 + gid % 7, 33 + gid % 5
-                y, x, c = np.ogrid[0:h, 0:w, 0:3]
-                rgb = (
-                    ((gid * 13 + 7) * x + (gid * 5 + 3) * y) % 240
-                    + 2 * c + delta
-                ).astype(np.uint8)
-                rows.append((mid, encode_bmp(rgb)))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def row(mid):
+        mid = int(mid)
+        gid, delta = mid % group_mod, (mid // group_mod) % 3
+        w, h = 40 + gid % 7, 33 + gid % 5
+        y, x, c = np.ogrid[0:h, 0:w, 0:3]
+        rgb = (
+            ((gid * 13 + 7) * x + (gid * 5 + 3) * y) % 240
+            + 2 * c + delta
+        ).astype(np.uint8)
+        yield mid, encode_bmp(rgb)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    return df.select(F.col(id_col)).mapInPandas(gen, schema=schema)
+    return _map_rows(df, [id_col], _SYNTH_SCHEMA, row)
 
 
 RESIZE_SCHEMA = T.StructType(
@@ -3083,13 +2939,7 @@ RESIZE_SCHEMA = T.StructType(
 )
 
 
-def image_resize_box(
-    df: DataFrame,
-    out_w: int,
-    out_h: int,
-    id_col: str = "media_id",
-    content_col: str = "content",
-) -> DataFrame:
+def image_resize_box(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Integer box-average thumbnail resize — the upstream ``image_dhash``
     needs for arbitrary-sized images (real image dedup hashes thumbnails;
     the dHash grid requires dims that tile evenly, which a thumbnail of
@@ -3118,45 +2968,35 @@ def image_resize_box(
     if out_w < 1 or out_h < 1:
         raise ValueError("output dimensions must be >= 1")
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[content_col]):
-                w, h, c, vals = _real_decode(bytes(payload))
-                if out_w > w or out_h > h:
-                    raise ValueError(
-                        f"image {int(mid)} is {w}x{h}; box resize is "
-                        f"downsample-only (requested {out_w}x{out_h})"
-                    )
-                img = vals.reshape(h, w, c).astype(np.int64)
-                if c == 1:
-                    img = np.repeat(img, 3, axis=2)
-                # integral image -> box sums at floor boundaries, then
-                # integer floor division by the per-box area
-                cs = img.cumsum(axis=0).cumsum(axis=1)
-                cs = np.pad(cs, ((1, 0), (1, 0), (0, 0)))
-                yb = (np.arange(out_h + 1) * h) // out_h
-                xb = (np.arange(out_w + 1) * w) // out_w
-                sums = (
-                    cs[yb[1:, None], xb[None, 1:]]
-                    - cs[yb[:-1, None], xb[None, 1:]]
-                    - cs[yb[1:, None], xb[None, :-1]]
-                    + cs[yb[:-1, None], xb[None, :-1]]
-                )
-                areas = (
-                    (yb[1:] - yb[:-1])[:, None] * (xb[1:] - xb[:-1])[None, :]
-                )[:, :, None]
-                out = (sums // areas).astype(np.uint8)
-                rows.append(
-                    (int(mid), out_w, out_h, encode_bmp(np.ascontiguousarray(out)))
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "content"]
+    def row(mid, payload):
+        w, h, c, vals = _real_decode(bytes(payload))
+        if out_w > w or out_h > h:
+            raise ValueError(
+                f"image {int(mid)} is {w}x{h}; box resize is "
+                f"downsample-only (requested {out_w}x{out_h})"
             )
+        img = vals.reshape(h, w, c).astype(np.int64)
+        if c == 1:
+            img = np.repeat(img, 3, axis=2)
+        # integral image -> box sums at floor boundaries, then
+        # integer floor division by the per-box area
+        cs = img.cumsum(axis=0).cumsum(axis=1)
+        cs = np.pad(cs, ((1, 0), (1, 0), (0, 0)))
+        yb = (np.arange(out_h + 1) * h) // out_h
+        xb = (np.arange(out_w + 1) * w) // out_w
+        sums = (
+            cs[yb[1:, None], xb[None, 1:]]
+            - cs[yb[:-1, None], xb[None, 1:]]
+            - cs[yb[1:, None], xb[None, :-1]]
+            + cs[yb[:-1, None], xb[None, :-1]]
+        )
+        areas = (
+            (yb[1:] - yb[:-1])[:, None] * (xb[1:] - xb[:-1])[None, :]
+        )[:, :, None]
+        out = (sums // areas).astype(np.uint8)
+        yield int(mid), out_w, out_h, encode_bmp(np.ascontiguousarray(out))
 
-    return df.select(F.col(id_col), F.col(content_col)).mapInPandas(
-        resize, schema=RESIZE_SCHEMA
-    )
+    return _map_rows(df, ["media_id", "content"], RESIZE_SCHEMA, row)
 
 
 DHASH_SCHEMA = T.StructType(
@@ -3170,14 +3010,36 @@ DHASH_SCHEMA = T.StructType(
 )
 
 
-def image_dhash(
-    df: DataFrame, grid_w: int = 9, grid_h: int = 8
-) -> DataFrame:
+def _dhash64(img: np.ndarray, what: str) -> tuple[int, int]:
+    """64-bit dHash of an (h, w) or (h, w, c) integer image as its
+    (hi, lo) 32-bit halves: gray is the channel SUM, the 9x8 grid's
+    block SUMS stand in for block averages, and bit i = y * 8 + x is set
+    where block x+1 of row y exceeds block x.  Exactly 64 bits: the
+    (hi, lo) packing and the 4x16-bit chunk pigeonhole both assume it.
+    Images must tile evenly into the grid; ``what`` names the image in
+    the reject."""
+    gray = (
+        img.sum(axis=2, dtype=np.int64) if img.ndim == 3
+        else img.astype(np.int64)
+    )
+    h, w = gray.shape
+    if w % 9 or h % 8:
+        raise ValueError(
+            f"{what} is {w}x{h}; dhash needs multiples of 9x8 "
+            f"— resize upstream"
+        )
+    blocks = gray.reshape(8, h // 8, 9, w // 9).sum(axis=(1, 3))
+    bits = (blocks[:, 1:] > blocks[:, :-1]).astype(np.int64).reshape(-1)
+    ks = np.arange(32, dtype=np.int64)
+    return int((bits[32:] << ks).sum()), int((bits[:32] << ks).sum())
+
+
+def image_dhash(df: DataFrame) -> DataFrame:
     """Perceptual difference-hash (dHash) per image — the image-dedup
-    primitive: decode, box-average to a ``grid_w x grid_h`` gray grid, emit
-    one bit per horizontal gradient (``(grid_w-1) x grid_h`` = 64 bits at
-    the 9x8 default), packed as two 32-bit halves (``dhash_hi`` carries
-    bits 32..63 — no signed-overflow edge at bit 63).
+    primitive: decode, box-average to a 9x8 gray grid, emit one bit per
+    horizontal gradient (8 x 8 = 64 bits), packed as two 32-bit halves
+    (``dhash_hi`` carries bits 32..63 — no signed-overflow edge at bit
+    63); :func:`_dhash64` computes it.
 
     INTEGER-EXACT by construction: gray is the channel SUM (no /3), block
     "averages" compare as block SUMS (equal block sizes — a > b/16 iff
@@ -3192,48 +3054,18 @@ def image_dhash(
     ``dedup.simhash_near_duplicates_incremental64``.  This operator emits
     the hash; exact dedup is a groupBy on (dhash_hi, dhash_lo).
 
-    Images must tile evenly (width % grid_w == 0, height % grid_h == 0);
-    ragged sizes raise — resize upstream (real pipelines hash thumbnails).
+    Images must tile evenly (width % 9 == 0, height % 8 == 0); ragged
+    sizes raise — resize upstream (real pipelines hash thumbnails).
     Arrow-batched mapInPandas, map-only: the 100 TB shape is one decode
     pass then an exact-dedup shuffle on 16 bytes per image.
     """
-    if (grid_w - 1) * grid_h != 64:
-        # the (hi, lo) packing and dhash_near_duplicates' 4x16-bit
-        # pigeonhole both assume exactly 64 bits; a larger grid would
-        # silently overflow dhash_hi past 2^32 and void the Hamming<=3
-        # bucketing guarantee
-        raise ValueError(
-            f"dhash grid must yield exactly 64 bits, got "
-            f"({grid_w}-1)x{grid_h} = {(grid_w - 1) * grid_h}"
-        )
 
-    def hashes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["content"]):
-                w, h, c, vals = _real_decode(bytes(payload))
-                if w % grid_w or h % grid_h:
-                    raise ValueError(
-                        f"image {int(media_id)} is {w}x{h}; dhash needs "
-                        f"multiples of {grid_w}x{grid_h} — resize upstream"
-                    )
-                bw, bh = w // grid_w, h // grid_h
-                gray = vals.reshape(h, w, c).sum(axis=2, dtype=np.int64)
-                blocks = gray.reshape(grid_h, bh, grid_w, bw).sum(axis=(1, 3))
-                bits = (blocks[:, 1:] > blocks[:, :-1]).astype(np.int64)
-                flat = bits.reshape(-1)  # bit i = y * (grid_w-1) + xg
-                idx = np.arange(flat.size, dtype=np.int64)
-                lo = int((flat[idx < 32] << idx[idx < 32]).sum())
-                hi = int((flat[idx >= 32] << (idx[idx >= 32] - 32)).sum())
-                rows.append((int(media_id), w, h, hi, lo))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "dhash_hi", "dhash_lo"],
-            )
+    def row(media_id, payload):
+        w, h, c, vals = _real_decode(bytes(payload))
+        hi, lo = _dhash64(vals.reshape(h, w, c), f"image {int(media_id)}")
+        yield int(media_id), w, h, hi, lo
 
-    return df.select("media_id", "content").mapInPandas(
-        hashes, schema=DHASH_SCHEMA
-    )
+    return _map_rows(df, ["media_id", "content"], DHASH_SCHEMA, row)
 
 
 # the split 64-bit dHash columns of image and video-frame hash tables
@@ -3374,72 +3206,26 @@ VIDEO_DHASH_SCHEMA = T.StructType(
 )
 
 
-def video_frame_dhash(
-    df: DataFrame,
-    grid_w: int = 9,
-    grid_h: int = 8,
-    every_n: int = 1,
-) -> DataFrame:
+def video_frame_dhash(df: DataFrame) -> DataFrame:
     """Per-frame perceptual dHash over MJPEG-in-AVI video payloads — the
     video-dedup primitive: one RIFF walk + JPEG decode + 64-bit dHash per
     sampled frame, ALL inside one Arrow-batched ``mapInPandas`` pass, so
     frame pixels never leave the task that decoded them (at 100 TB the
     only thing that ever shuffles is 16 bytes + 2 ints per frame).
 
-    The hash uses ``image_dhash``'s exact integer discipline — gray is
-    the channel SUM, block averages compare as block SUMS, bit i =
-    ``y * (grid_w-1) + x`` packed into two 32-bit halves — so a frame's
-    hash here equals ``image_dhash`` of that frame exported as a still,
-    and the same 4x16-bit chunk machinery does retrieval.  Frames must
-    tile evenly into the grid (resize upstream otherwise); sampling via
-    ``every_n`` mirrors :func:`video_frames`.
+    The hash is :func:`_dhash64`, the one ``image_dhash`` uses, so a
+    frame's hash here equals ``image_dhash`` of that frame exported as a
+    still, and the same 4x16-bit chunk machinery does retrieval.  Frames
+    must tile evenly into the 9x8 grid (resize upstream otherwise).
     Output: (media_id, frame_idx, width, height, dhash_hi, dhash_lo).
     """
-    if (grid_w - 1) * grid_h != 64:
-        raise ValueError(
-            f"dhash grid must yield exactly 64 bits, got "
-            f"({grid_w}-1)x{grid_h} = {(grid_w - 1) * grid_h}"
-        )
 
-    def hashes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["content"]):
-                for idx, img in decode_avi_frames(bytes(payload), every_n):
-                    gray = (
-                        img.sum(axis=2, dtype=np.int64)
-                        if img.ndim == 3
-                        else img.astype(np.int64)
-                    )
-                    h, w = gray.shape
-                    if w % grid_w or h % grid_h:
-                        raise ValueError(
-                            f"video {int(mid)} frame {idx} is {w}x{h}; "
-                            f"dhash needs multiples of {grid_w}x{grid_h} "
-                            f"— resize upstream"
-                        )
-                    bw, bh = w // grid_w, h // grid_h
-                    blocks = gray.reshape(grid_h, bh, grid_w, bw).sum(
-                        axis=(1, 3)
-                    )
-                    bits = (blocks[:, 1:] > blocks[:, :-1]).astype(
-                        np.int64
-                    ).reshape(-1)
-                    ks = np.arange(bits.size, dtype=np.int64)
-                    lo = int((bits[ks < 32] << ks[ks < 32]).sum())
-                    hi = int((bits[ks >= 32] << (ks[ks >= 32] - 32)).sum())
-                    rows.append((int(mid), idx, w, h, hi, lo))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height",
-                    "dhash_hi", "dhash_lo",
-                ],
-            )
+    def row(mid, payload):
+        for idx, img in decode_avi_frames(bytes(payload)):
+            hi, lo = _dhash64(img, f"video {int(mid)} frame {idx}")
+            yield int(mid), idx, img.shape[1], img.shape[0], hi, lo
 
-    return df.select("media_id", "content").mapInPandas(
-        hashes, schema=VIDEO_DHASH_SCHEMA
-    )
+    return _map_rows(df, ["media_id", "content"], VIDEO_DHASH_SCHEMA, row)
 
 
 def video_near_duplicates(
@@ -3606,9 +3392,9 @@ def video_fingerprint(frame_hashes: DataFrame) -> DataFrame:
     encoder differences that preserve every frame's perceptual content
     collapse to one fingerprint, while :func:`video_near_duplicates`
     handles the shifted/trimmed tail the global digest deliberately
-    splits.  Input: a :func:`video_frame_dhash` table (so sampling via
-    ``every_n`` composes).  One 16-byte-per-video aggregate shuffle;
-    exact dedup is a groupBy on the fingerprint."""
+    splits.  Input: a :func:`video_frame_dhash` table.  One
+    16-byte-per-video aggregate shuffle; exact dedup is a groupBy on the
+    fingerprint."""
     seq = F.transform(
         F.array_sort(
             F.collect_list(F.struct("frame_idx", "dhash_hi", "dhash_lo"))
@@ -3624,12 +3410,36 @@ def video_fingerprint(frame_hashes: DataFrame) -> DataFrame:
     )
 
 
+@functools.lru_cache(maxsize=4096)
+def _avi_grid_payload(s: int, off: int) -> bytes:
+    """The ``synthetic_avi_media_grid`` clip of content seed ``s`` at
+    frame offset ``off``: 4 frames, frame f carrying content (s, off + f).
+
+    Memoized per Python worker: the AVI bytes are a PURE function of
+    (seed, offset) — media_id only labels the row — and the harness keys
+    deliberately form small content classes (duplicate payloads under
+    distinct ids is the dedup case itself), so one task re-encoded the
+    identical clip hundreds of times.  Bounded (payloads are KBs; a
+    high-cardinality seed column just makes it a per-key build again)."""
+    ks = np.arange(64, dtype=np.int64)
+    frames = []
+    for f in range(4):
+        t = off + f
+        b = (((s * 41 + t * 17 + ks) ** 2 * 37 + s * 131 + t * 73) % 251) % 2
+        bg = b.reshape(8, 8)
+        v = np.empty((8, 9), dtype=np.int64)
+        v[:, 0] = 116
+        np.cumsum(14 * (2 * bg - 1), axis=1, out=v[:, 1:])
+        v[:, 1:] += 116
+        frames.append(np.kron(v, np.ones((8, 8), np.int64)).astype(np.uint8))
+    return encode_avi_mjpeg(frames, fps=10)
+
+
 def synthetic_avi_media_grid(
     df: DataFrame,
     id_col: str,
     seed_col: str | None = None,
     offset_col: str | None = None,
-    n_frames: int = 4,
 ) -> DataFrame:
     """Deterministic MJPEG AVIs whose per-frame dHash is ANALYTIC — the
     video harness for :func:`video_frame_dhash` /
@@ -3651,63 +3461,13 @@ def synthetic_avi_media_grid(
     ``(s, o + f)``: offset-shifted renditions share all but one frame
     content while any whole-file digest separates them.
     """
+    cols, unpack = _keyed_cols(id_col, seed_col, offset_col)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ks = np.arange(64, dtype=np.int64)
-        # per-task payload memo (r16 optimization, guide §4.5): the AVI
-        # bytes are a PURE function of (seed, offset) — media_id only
-        # labels the row — and the harness keys deliberately form small
-        # content classes (duplicate payloads under distinct ids is the
-        # dedup case itself), so one task re-encoded the identical clip
-        # hundreds of times.  Bounded (payloads are KBs; a high-
-        # cardinality seed column just makes it a per-key build again).
-        cache: dict[tuple[int, int], bytes] = {}
-        for pdf in batches:
-            rows = []
-            seeds = pdf[seed_col] if seed_col else pdf[id_col]
-            offs = pdf[offset_col] if offset_col else np.zeros(len(pdf))
-            for mid, s, off in zip(pdf[id_col], seeds, offs):
-                mid, s, off = int(mid), int(s), int(off)
-                content = cache.get((s, off))
-                if content is None:
-                    frames = []
-                    for f in range(n_frames):
-                        t = off + f
-                        b = (
-                            ((s * 41 + t * 17 + ks) ** 2 * 37
-                             + s * 131 + t * 73)
-                            % 251
-                        ) % 2
-                        bg = b.reshape(8, 8)
-                        v = np.empty((8, 9), dtype=np.int64)
-                        v[:, 0] = 116
-                        np.cumsum(
-                            14 * (2 * bg - 1), axis=1, out=v[:, 1:]
-                        )
-                        v[:, 1:] += 116
-                        frames.append(
-                            np.kron(v, np.ones((8, 8), np.int64)).astype(
-                                np.uint8
-                            )
-                        )
-                    content = encode_avi_mjpeg(frames, fps=10)
-                    if len(cache) >= 4096:
-                        cache.clear()
-                    cache[(s, off)] = content
-                rows.append((mid, content))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def row(*r):
+        mid, s, off = unpack(*r)
+        yield mid, _avi_grid_payload(mid if s is None else s, off or 0)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    return df.select(
-        *dict.fromkeys(
-            c for c in (id_col, seed_col, offset_col) if c is not None
-        )
-    ).mapInPandas(gen, schema=schema)
+    return _map_rows(df, cols, _SYNTH_SCHEMA, row)
 
 
 def synthetic_png_media(df: DataFrame, id_col: str) -> DataFrame:
@@ -3720,25 +3480,15 @@ def synthetic_png_media(df: DataFrame, id_col: str) -> DataFrame:
     DEFLATE-prefilter paths, and any unfilter bug breaks the value hash.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                w, h = 4 + mid % 11, 3 + mid % 6
-                y, x, c = np.ogrid[0:h, 0:w, 0:3]
-                rgb = ((mid + 7 * x + 13 * y + 29 * c) % 256).astype(np.uint8)
-                filters = [(mid + yy) % 5 for yy in range(h)]
-                rows.append((mid, encode_png(rgb, filters=filters)))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def row(mid):
+        mid = int(mid)
+        w, h = 4 + mid % 11, 3 + mid % 6
+        y, x, c = np.ogrid[0:h, 0:w, 0:3]
+        rgb = ((mid + 7 * x + 13 * y + 29 * c) % 256).astype(np.uint8)
+        filters = [(mid + yy) % 5 for yy in range(h)]
+        yield mid, encode_png(rgb, filters=filters)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    return df.select(F.col(id_col)).mapInPandas(gen, schema=schema)
+    return _map_rows(df, [id_col], _SYNTH_SCHEMA, row)
 
 
 def synthetic_jpeg_media(df: DataFrame, id_col: str) -> DataFrame:
@@ -3754,25 +3504,15 @@ def synthetic_jpeg_media(df: DataFrame, id_col: str) -> DataFrame:
     Huffman/zigzag/dequant/IDCT bug breaks the value hash.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                wb, hb = 1 + mid % 3, 1 + mid % 2
-                by, bx = np.ogrid[0:hb, 0:wb]
-                blocks = ((mid + 17 * bx + 23 * by) % 256).astype(np.uint8)
-                img = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
-                rows.append((mid, encode_jpeg(img)))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def row(mid):
+        mid = int(mid)
+        wb, hb = 1 + mid % 3, 1 + mid % 2
+        by, bx = np.ogrid[0:hb, 0:wb]
+        blocks = ((mid + 17 * bx + 23 * by) % 256).astype(np.uint8)
+        img = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
+        yield mid, encode_jpeg(img)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    return df.select(F.col(id_col)).mapInPandas(gen, schema=schema)
+    return _map_rows(df, [id_col], _SYNTH_SCHEMA, row)
 
 
 def synthetic_jpeg12_media(df: DataFrame, id_col: str) -> DataFrame:
@@ -3783,27 +3523,17 @@ def synthetic_jpeg12_media(df: DataFrame, id_col: str) -> DataFrame:
     exact integer, so the 12-bit lossy path round-trips exactly under
     the all-ones quant table and the oracle stays analytic."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                wb, hb = 1 + mid % 3, 1 + mid % 2
-                by, bx = np.ogrid[0:hb, 0:wb]
-                blocks = (
-                    (700 + 29 * mid + 137 * bx + 401 * by) % 4096
-                ).astype(np.uint16)
-                img = np.kron(blocks, np.ones((8, 8), dtype=np.uint16))
-                rows.append((mid, encode_jpeg(img, precision=12)))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def row(mid):
+        mid = int(mid)
+        wb, hb = 1 + mid % 3, 1 + mid % 2
+        by, bx = np.ogrid[0:hb, 0:wb]
+        blocks = (
+            (700 + 29 * mid + 137 * bx + 401 * by) % 4096
+        ).astype(np.uint16)
+        img = np.kron(blocks, np.ones((8, 8), dtype=np.uint16))
+        yield mid, encode_jpeg(img, precision=12)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    return df.select(F.col(id_col)).mapInPandas(gen, schema=schema)
+    return _map_rows(df, [id_col], _SYNTH_SCHEMA, row)
 
 
 def synthetic_jpeg_media_420(df: DataFrame, id_col: str) -> DataFrame:
@@ -3821,32 +3551,22 @@ def synthetic_jpeg_media_420(df: DataFrame, id_col: str) -> DataFrame:
     chroma-upsample, or component-order bug breaks the value hash.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                nx, ny = 1 + mid % 2, 1 + mid % 3
-                cy, cx = np.ogrid[0:ny, 0:nx]
-                cells = np.stack(
-                    [
-                        (mid + 11 * cx + 17 * cy) % 256,
-                        (3 * mid + 5 * cx + 7 * cy) % 256,
-                        (7 * mid + 13 * cx + 3 * cy) % 256,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                img = np.repeat(np.repeat(cells, 16, axis=0), 16, axis=1)
-                rows.append((mid, encode_jpeg(img, subsampling="420")))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def row(mid):
+        mid = int(mid)
+        nx, ny = 1 + mid % 2, 1 + mid % 3
+        cy, cx = np.ogrid[0:ny, 0:nx]
+        cells = np.stack(
+            [
+                (mid + 11 * cx + 17 * cy) % 256,
+                (3 * mid + 5 * cx + 7 * cy) % 256,
+                (7 * mid + 13 * cx + 3 * cy) % 256,
+            ],
+            axis=-1,
+        ).astype(np.uint8)
+        img = np.repeat(np.repeat(cells, 16, axis=0), 16, axis=1)
+        yield mid, encode_jpeg(img, subsampling="420")
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    return df.select(F.col(id_col)).mapInPandas(gen, schema=schema)
+    return _map_rows(df, [id_col], _SYNTH_SCHEMA, row)
 
 
 def synthetic_jpeg_media_prog(df: DataFrame, id_col: str) -> DataFrame:
@@ -3865,34 +3585,22 @@ def synthetic_jpeg_media_prog(df: DataFrame, id_col: str) -> DataFrame:
     bitplane shift, or non-interleaved band walk breaks the value hash.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                nx, ny = 1 + mid % 3, 1 + mid % 2
-                cy, cx = np.ogrid[0:ny, 0:nx]
-                cells = np.stack(
-                    [
-                        (5 * mid + 13 * cx + 7 * cy) % 256,
-                        (2 * mid + 3 * cx + 11 * cy) % 256,
-                        (4 * mid + 9 * cx + 5 * cy) % 256,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                img = np.repeat(np.repeat(cells, 16, axis=0), 16, axis=1)
-                rows.append(
-                    (mid, encode_jpeg_progressive(img, subsampling="420"))
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def row(mid):
+        mid = int(mid)
+        nx, ny = 1 + mid % 3, 1 + mid % 2
+        cy, cx = np.ogrid[0:ny, 0:nx]
+        cells = np.stack(
+            [
+                (5 * mid + 13 * cx + 7 * cy) % 256,
+                (2 * mid + 3 * cx + 11 * cy) % 256,
+                (4 * mid + 9 * cx + 5 * cy) % 256,
+            ],
+            axis=-1,
+        ).astype(np.uint8)
+        img = np.repeat(np.repeat(cells, 16, axis=0), 16, axis=1)
+        yield mid, encode_jpeg_progressive(img, subsampling="420")
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    return df.select(F.col(id_col)).mapInPandas(gen, schema=schema)
+    return _map_rows(df, [id_col], _SYNTH_SCHEMA, row)
 
 
 def synthetic_gif_media(df: DataFrame, id_col: str) -> DataFrame:
@@ -3907,35 +3615,23 @@ def synthetic_gif_media(df: DataFrame, id_col: str) -> DataFrame:
     four-pass de-interlace (output is identical by construction).
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                w, h = 8 + mid % 8, 4 + mid % 4
-                y, x = np.ogrid[0:h, 0:w]
-                idx = ((13 * mid + 5 * x + 11 * y) % 64).astype(np.uint8)
-                i = np.arange(64)
-                pal = np.stack(
-                    [
-                        (37 * i + mid) % 256,
-                        (11 * i + 2 * mid) % 256,
-                        (53 * i + 3 * mid) % 256,
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                rows.append(
-                    (mid, encode_gif(idx, pal, interlace=bool(mid % 2)))
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def row(mid):
+        mid = int(mid)
+        w, h = 8 + mid % 8, 4 + mid % 4
+        y, x = np.ogrid[0:h, 0:w]
+        idx = ((13 * mid + 5 * x + 11 * y) % 64).astype(np.uint8)
+        i = np.arange(64)
+        pal = np.stack(
+            [
+                (37 * i + mid) % 256,
+                (11 * i + 2 * mid) % 256,
+                (53 * i + 3 * mid) % 256,
+            ],
+            axis=-1,
+        ).astype(np.uint8)
+        yield mid, encode_gif(idx, pal, interlace=bool(mid % 2))
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    return df.select(F.col(id_col)).mapInPandas(gen, schema=schema)
+    return _map_rows(df, [id_col], _SYNTH_SCHEMA, row)
 
 
 def synthetic_wav_media(
@@ -3950,45 +3646,54 @@ def synthetic_wav_media(
     content from identity, so e.g. ``seed = id % 300`` yields a corpus
     with REAL duplicate payloads under distinct media ids (the dedup
     harness case)."""
-    seed_src = seed_col or id_col
+    cols, unpack = _keyed_cols(id_col, seed_col, None)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, sd in zip(pdf[id_col], pdf[seed_src]):
-                mid, sd = int(mid), int(sd)
-                channels = 1 + sd % 2
-                n = channels * (60 + sd % 40)
-                j = np.arange(n, dtype=np.int64)
-                samples = ((sd * 31 + j * 7) % 2001 - 1000).astype(np.int16)
-                rows.append((mid, encode_wav(samples, channels=channels)))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def row(*r):
+        mid, sd, _ = unpack(*r)
+        sd = mid if sd is None else sd
+        channels = 1 + sd % 2
+        n = channels * (60 + sd % 40)
+        j = np.arange(n, dtype=np.int64)
+        samples = ((sd * 31 + j * 7) % 2001 - 1000).astype(np.int16)
+        yield mid, encode_wav(samples, channels=channels)
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    cols = [F.col(id_col)] + ([F.col(seed_src)] if seed_col else [])
-    return df.select(*cols).mapInPandas(gen, schema=schema)
+    return _map_rows(df, cols, _SYNTH_SCHEMA, row)
+
+
+@functools.lru_cache(maxsize=4096)
+def _tonal_wav_payload(sd: int, off: int, n_windows: int) -> bytes:
+    """The ``synthetic_wav_media_tonal`` track of seed ``sd`` starting at
+    logical window ``off``.
+
+    Memoized per Python worker: the WAV bytes are a pure function of
+    (seed, offset) — the harness's seed classes (e.g. doc_id % 50) mean
+    one task synthesized the identical track many times.  Bounded like
+    the AVI memo."""
+    j = np.arange(64, dtype=np.float64)
+    step = 3 + 2 * (sd % 14)
+    chunks = []
+    for w in range(n_windows):
+        k = 1 + (sd * 7 + (off + w) * step) % 31
+        chunks.append(
+            np.round(8000.0 * np.sin(2.0 * np.pi * k * j / 64)).astype(np.int16)
+        )
+    return encode_wav(np.concatenate(chunks), channels=1)
 
 
 def synthetic_wav_media_tonal(
     df: DataFrame,
     id_col: str,
     seed_col: str | None = None,
-    window: int = 64,
     n_windows: int = 8,
     offset_col: str | None = None,
 ) -> DataFrame:
     """Deterministic TONAL mono PCM-16 WAV payloads (test/oracle harness
     for the spectral-fingerprint path).  Each payload is ``n_windows``
-    non-overlapping ``window``-sample windows; window ``w`` holds an
-    exact-bin sine ``round(8000 * sin(2*pi*k*j/window))`` with
-    ``k = 1 + (seed*7 + w*(3 + 2*(seed % 14))) % (window//2 - 1)`` —
-    a per-seed bin STEP (odd, 3..29, never 0 mod the prime 31 at the
-    default window), so different seeds trace different chain
+    non-overlapping 64-sample windows; window ``w`` holds an
+    exact-bin sine ``round(8000 * sin(2*pi*k*j/64))`` with
+    ``k = 1 + (seed*7 + w*(3 + 2*(seed % 14))) % 31`` —
+    a per-seed bin STEP (odd, 3..29, never 0 mod the prime 31), so
+    different seeds trace different chain
     directions and a landmark pair (bin_w, bin_{w+dt}) pins its seed,
     not just a phase.  (A seed-independent step is the audio analogue
     of the fixed-direction gradient ramp that collided under dHash:
@@ -4008,56 +3713,15 @@ def synthetic_wav_media_tonal(
     time-shifted ("clipped intro") rendition of the same content, the
     case landmark retrieval handles and the global fingerprint does
     not."""
-    seed_src = seed_col or id_col
-    half = window // 2 - 1
+    cols, unpack = _keyed_cols(id_col, seed_col, offset_col)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        j = np.arange(window, dtype=np.float64)
-        # per-task payload memo (r16 optimization, guide §4.5): the WAV
-        # bytes are a pure function of (seed, offset) — the harness's
-        # seed classes (e.g. doc_id % 50) mean one task synthesized the
-        # identical track many times.  Bounded like the AVI memo.
-        cache: dict[tuple[int, int], bytes] = {}
-        for pdf in batches:
-            rows = []
-            offs = (
-                pdf[offset_col] if offset_col is not None
-                else [0] * len(pdf)
-            )
-            for mid, sd, off in zip(pdf[id_col], pdf[seed_src], offs):
-                mid, sd, off = int(mid), int(sd), int(off)
-                content = cache.get((sd, off))
-                if content is None:
-                    step = 3 + 2 * (sd % 14)
-                    chunks = []
-                    for w in range(n_windows):
-                        k = 1 + (sd * 7 + (off + w) * step) % half
-                        chunks.append(
-                            np.round(
-                                8000.0 * np.sin(2.0 * np.pi * k * j / window)
-                            ).astype(np.int16)
-                        )
-                    samples = np.concatenate(chunks)
-                    content = encode_wav(samples, channels=1)
-                    if len(cache) >= 4096:
-                        cache.clear()
-                    cache[(sd, off)] = content
-                rows.append((mid, content))
-            yield pd.DataFrame(rows, columns=["media_id", "content"])
+    def row(*r):
+        mid, sd, off = unpack(*r)
+        yield mid, _tonal_wav_payload(
+            mid if sd is None else sd, off or 0, n_windows
+        )
 
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("content", T.BinaryType()),
-        ]
-    )
-    names = [id_col]
-    for extra in (seed_col, offset_col):
-        if extra and extra not in names:
-            names.append(extra)
-    return df.select(*[F.col(c) for c in names]).mapInPandas(
-        gen, schema=schema
-    )
+    return _map_rows(df, cols, _SYNTH_SCHEMA, row)
 
 
 def audio_spectral_peaks(df: DataFrame, window: int = 64) -> DataFrame:
@@ -4072,24 +3736,16 @@ def audio_spectral_peaks(df: DataFrame, window: int = 64) -> DataFrame:
     O(total_frames / window) integer rows.
     """
 
-    def peaks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_win, out_bin = [], [], []
-            for media_id, payload in zip(pdf["media_id"], pdf["content"]):
-                samples, channels, _ = decode_wav(bytes(payload))
-                ch0 = samples[:: max(channels, 1)].astype(np.float64)
-                n_full = len(ch0) // window
-                if not n_full:
-                    continue
-                frames = ch0[: n_full * window].reshape(n_full, window)
-                power = np.abs(np.fft.rfft(frames, axis=1)) ** 2
-                dom = power.argmax(axis=1)
-                out_id.extend([int(media_id)] * n_full)
-                out_win.extend(range(n_full))
-                out_bin.extend(int(b) for b in dom)
-            yield pd.DataFrame(
-                {"media_id": out_id, "win": out_win, "peak_bin": out_bin}
-            )
+    def row(media_id, payload):
+        samples, channels, _ = decode_wav(bytes(payload))
+        ch0 = samples[:: max(channels, 1)].astype(np.float64)
+        n_full = len(ch0) // window
+        if not n_full:
+            return
+        frames = ch0[: n_full * window].reshape(n_full, window)
+        power = np.abs(np.fft.rfft(frames, axis=1)) ** 2
+        for w_idx, b in enumerate(power.argmax(axis=1)):
+            yield int(media_id), w_idx, int(b)
 
     schema = T.StructType(
         [
@@ -4098,7 +3754,7 @@ def audio_spectral_peaks(df: DataFrame, window: int = 64) -> DataFrame:
             T.StructField("peak_bin", T.IntegerType()),
         ]
     )
-    return df.select("media_id", "content").mapInPandas(peaks, schema=schema)
+    return _map_rows(df, ["media_id", "content"], schema, row)
 
 
 def audio_fingerprint(df: DataFrame, window: int = 64) -> DataFrame:

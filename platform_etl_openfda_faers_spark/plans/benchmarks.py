@@ -6169,7 +6169,7 @@ def multimodal_image_dedup_resized(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_docs(spark, sf).select("doc_id").where(F.col("doc_id") % 3 == 0)
     media = multimodal.synthetic_bmp_media_ragged(docs, "doc_id")
     resized = multimodal.image_resize_box(media, 18, 16)
-    hashes = multimodal.image_dhash(resized, grid_w=9, grid_h=8)
+    hashes = multimodal.image_dhash(resized)
     return hashes.groupBy("dhash_hi", "dhash_lo").agg(
         F.count("*").alias("n_images"),
         F.min("media_id").alias("first_id"),

@@ -68,7 +68,7 @@ def test_attach_binary_and_decode(spark):
     assert m[1].meta.byte_len == 11
     assert len(m[1].meta.sha256) == 64
 
-    decoded = multimodal.decode_media(media, n_features=8)
+    decoded = multimodal.decode_media(media)
     d = {r.media_id: r for r in decoded.collect()}
     assert set(d) == {1, 2}
     for r in d.values():
@@ -1010,12 +1010,44 @@ def test_image_dhash_brightness_invariance(spark):
     with _pytest.raises(Exception, match="dhash needs"):
         multimodal.image_dhash(bdf).collect()
 
-    # non-64-bit grids are rejected up front: the (hi, lo) packing and
-    # the 4x16-bit pigeonhole both assume exactly 64 bits
-    with _pytest.raises(ValueError, match="64 bits"):
-        multimodal.image_dhash(mdf, grid_w=17, grid_h=8)
-    with _pytest.raises(ValueError, match="64 bits"):
-        multimodal.image_dhash(mdf, grid_w=9, grid_h=4)
+
+def test_video_frame_dhash_equals_still_dhash(spark):
+    """A video frame's dHash equals ``image_dhash`` of the same frame
+    exported as a still: both run the one ``_dhash64``.  Gray frames are
+    replicated to 3 channels for the BMP export, which triples every
+    block sum and so keeps every gradient comparison."""
+    import pandas as pd
+
+    ids = spark.range(12).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") % 5).alias("gid"),
+        (F.col("id") % 3).alias("off"),
+    )
+    media = multimodal.synthetic_avi_media_grid(
+        ids, "doc_id", seed_col="gid", offset_col="off"
+    )
+    video = {
+        (r.media_id, r.frame_idx): (r.dhash_hi, r.dhash_lo)
+        for r in multimodal.video_frame_dhash(media).collect()
+    }
+    stills = []
+    for r in media.collect():
+        for idx, img in multimodal.decode_avi_frames(bytes(r.content)):
+            rgb = np.repeat(img[:, :, None], 3, axis=2) if img.ndim == 2 else img
+            stills.append(
+                (r.media_id * 100 + idx,
+                 multimodal.encode_bmp(np.ascontiguousarray(rgb)))
+            )
+    sdf = spark.createDataFrame(
+        pd.DataFrame(stills, columns=["media_id", "content"])
+    )
+    still = {
+        divmod(r.media_id, 100): (r.dhash_hi, r.dhash_lo)
+        for r in multimodal.image_dhash(sdf).collect()
+    }
+    assert len(video) == 12 * 4
+    assert still == video
+    assert len(set(video.values())) > 1
 
 
 def test_dhash_bucket_cap_drops_mega_clusters(spark):
@@ -1888,3 +1920,121 @@ def test_video_incremental_from_stored_parquet_index(spark, sf_dir, tmp_path):
         )
     with pytest.raises(AssertionError):
         multimodal.video_near_duplicates_incremental(hashes(is_new), None)
+
+
+# sha256 over the (media_id, len, content) stream of ids 0..63, ordered by
+# id, per synthesizer call — the byte-for-byte pin on every generator.
+_SYNTH_DIGESTS = {
+    "bmp":
+        "cf0c1383822ca6df1015165c5983b4495878c0f9e8df32aafaa75e6e3018003b",
+    "bmp_perceptual":
+        "d8709388770317c013365c9c484de7da9eb5438bd38448697c71bc7d9827f39f",
+    "bmp_perceptual_group6":
+        "88910b25a27883f32a69caf7d653a8902a5d4650212e0564c0ea92f7f36aa4e4",
+    "bmp_perceptual_perturb":
+        "594776615f68310defd615ad4137943802d9e1a458924e105e49f8a2677fb2cf",
+    "bmp_perceptual_seed_offset":
+        "34d682f68373f484c3e03235670b2b0cf0cf67b41f74268bb8d71400eb51bbe7",
+    "bmp_ragged":
+        "7664cda2a625f153a8df996c914fc8f40050e6c725b428da30aea5024b1ef71e",
+    "png":
+        "8d12c8319ee91c04ea0b24d0a31e661bd1aae87752f8767d5bf2023220abf4e0",
+    "jpeg":
+        "b2d99820636275eb9f71cb9deb4d457a9344b437d10f76cd8473d069a217fe58",
+    "jpeg12":
+        "da805ec5f51b58baf2bce1090f4c6e1acaa7e63d8cb9c5697bcae003e85898f8",
+    "jpeg_420":
+        "c0a09a0464eb9b375629491b28e94ae82052af9a30462ca4218b60c5a1b12060",
+    "jpeg_prog":
+        "60f179538bb46c11a29c0e4923102638540547fe478493d263fd3d27c3ea4015",
+    "gif":
+        "d6f4c3fe11fc3d0355d7562ba5c404706131d4d019b24dd73606c7994c6b0d81",
+    "gif_anim":
+        "d90d4130758b17400fe434873fee949b46724f312e58a867efd7ddadb0ac25a9",
+    "mp4":
+        "426125fe013f47f844a4ef926b34e286b170a246080f02dbda873ca990312b8d",
+    "avi":
+        "82321cdced4b45ceb15953e2b72f4306c0bbdf5daa1a130785bdad12cb4f2afa",
+    "exif":
+        "4875e716b8a115ff323d43f2cf6941bd9a40db9f817e50d9a8ee4ebe70327250",
+    "oriented":
+        "dc7a81c1a16720143c4dd264ecf449d61153b999ff6c6122a3040a8b26297fd5",
+    "wav":
+        "5a082529e2665f3fb3e1f8d0a35cb0eb05b4a86f1ce6bef12e5ce58281cc31dd",
+    "wav_seed":
+        "5ff233c1748f33f2270301ee29612b65213a5af2f621f3319976f1a0eb0016d8",
+    "wav_tonal":
+        "2a2da6e2486b0d9dba194369f44091c2d8aa9e3e172168b0a2b53b60b330ccd7",
+    "wav_tonal_seed":
+        "8269932197e732a4a051b353f3702bb93fa68baaf3bcb87b694928886248837a",
+    "wav_tonal_seed_offset":
+        "dc7263c4b4f943c42ad0de782fcf2b5c215e27823fb78adbc12145c5505576b7",
+    "wav_tonal_one_window":
+        "ae3758994ef72668a1b2f3b2fa529abee026d660539df412c53eb25f7a802a90",
+    "avi_grid":
+        "4483f37f7751d6b94b956ec4147ede27e9ba4e53edb0ed1187af3b2d57804728",
+    "avi_grid_seed":
+        "b6afd2d175d61f3b318f47c21866bde71c45ee07af22fb8a7215fb5d2a780b5a",
+    "avi_grid_seed_offset":
+        "3c187acafa38a96495156feb4ac2294e815019582baeb104d46563ee00722a82",
+}
+
+_SYNTH_CALLS = {
+    "bmp": lambda d: multimodal.synthetic_bmp_media(d, "doc_id"),
+    "bmp_perceptual": lambda d: multimodal.synthetic_bmp_media_perceptual(
+        d, "doc_id"),
+    "bmp_perceptual_group6": lambda d: (
+        multimodal.synthetic_bmp_media_perceptual(d, "doc_id", group_mod=6)),
+    "bmp_perceptual_perturb": lambda d: (
+        multimodal.synthetic_bmp_media_perceptual(d, "doc_id", perturb=True)),
+    "bmp_perceptual_seed_offset": lambda d: (
+        multimodal.synthetic_bmp_media_perceptual(
+            d, "doc_id", perturb=True, seed_col="gid", offset_col="off")),
+    "bmp_ragged": lambda d: multimodal.synthetic_bmp_media_ragged(d, "doc_id"),
+    "png": lambda d: multimodal.synthetic_png_media(d, "doc_id"),
+    "jpeg": lambda d: multimodal.synthetic_jpeg_media(d, "doc_id"),
+    "jpeg12": lambda d: multimodal.synthetic_jpeg12_media(d, "doc_id"),
+    "jpeg_420": lambda d: multimodal.synthetic_jpeg_media_420(d, "doc_id"),
+    "jpeg_prog": lambda d: multimodal.synthetic_jpeg_media_prog(d, "doc_id"),
+    "gif": lambda d: multimodal.synthetic_gif_media(d, "doc_id"),
+    "gif_anim": lambda d: multimodal.synthetic_gif_anim_media(d, "doc_id"),
+    "mp4": lambda d: multimodal.synthetic_mp4_media(d, "doc_id"),
+    "avi": lambda d: multimodal.synthetic_avi_media(d, "doc_id"),
+    "exif": lambda d: multimodal.synthetic_exif_media(d, "doc_id"),
+    "oriented": lambda d: multimodal.synthetic_oriented_media(d, "doc_id"),
+    "wav": lambda d: multimodal.synthetic_wav_media(d, "doc_id"),
+    "wav_seed": lambda d: multimodal.synthetic_wav_media(
+        d, "doc_id", seed_col="gid"),
+    "wav_tonal": lambda d: multimodal.synthetic_wav_media_tonal(d, "doc_id"),
+    "wav_tonal_seed": lambda d: multimodal.synthetic_wav_media_tonal(
+        d, "doc_id", seed_col="gid"),
+    "wav_tonal_seed_offset": lambda d: multimodal.synthetic_wav_media_tonal(
+        d, "doc_id", seed_col="gid", offset_col="off"),
+    "wav_tonal_one_window": lambda d: multimodal.synthetic_wav_media_tonal(
+        d, "doc_id", n_windows=1),
+    "avi_grid": lambda d: multimodal.synthetic_avi_media_grid(d, "doc_id"),
+    "avi_grid_seed": lambda d: multimodal.synthetic_avi_media_grid(
+        d, "doc_id", seed_col="gid"),
+    "avi_grid_seed_offset": lambda d: multimodal.synthetic_avi_media_grid(
+        d, "doc_id", seed_col="gid", offset_col="off"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SYNTH_CALLS))
+def test_synthesizers_pinned_byte_for_byte(spark, name):
+    """Every synthetic_* payload stream is pinned by a committed sha256,
+    including the seed_col / offset_col / perturb variants the registry
+    runs: a change to a generator's plumbing must not move one byte."""
+    import hashlib
+    import struct
+
+    docs = spark.range(64).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") % 5).alias("gid"),
+        (F.col("id") % 3).alias("off"),
+    )
+    h = hashlib.sha256()
+    for r in _SYNTH_CALLS[name](docs).orderBy("media_id").collect():
+        content = bytes(r.content)
+        h.update(struct.pack("<qI", r.media_id, len(content)) + content)
+    assert h.hexdigest() == _SYNTH_DIGESTS[name]
