@@ -16,7 +16,8 @@ Flags / env:
   (default 2 warm, 3 cold).
 - SPARK_GRAFT_BENCH_QUERIES: comma-separated subset of the headline
   queries to run (default: all) — used for the sf10 spot-runs where only
-  the scale-sensitive queries are re-measured.
+  the scale-sensitive queries are re-measured.  An unknown name exits 2
+  before Spark starts.
 
 Output contract (r7 — fixes the r6 ``parsed: null`` driver record): the
 LAST stdout line is a COMPACT machine-readable JSON summary
@@ -259,6 +260,32 @@ from platform_etl_openfda_faers_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
+    subset = os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "")
+    # legacy-20 + the v2 extras (r10): the summary keeps "value"/"queries"
+    # as the FROZEN legacy set (cross-round comparable back to r5) and
+    # adds a "headline_v2" block with the extended total + extra timings
+    names = [
+        *benchmarks.HEADLINE,
+        *benchmarks.HEADLINE_V2_EXTRA,
+        *benchmarks.HEADLINE_V3_EXTRA,
+        *benchmarks.HEADLINE_V4_EXTRA,
+    ]
+    if subset:
+        wanted = [q.strip() for q in subset.split(",") if q.strip()]
+        unknown = [q for q in wanted if q not in benchmarks.SPARK_QUERIES]
+        if unknown:
+            # rejected before the load gates and the JVM start
+            print(f"unknown bench queries: {unknown}", file=sys.stderr)
+            sys.exit(2)
+        names = wanted
+    else:
+        # CPU-storm queries run LAST in the full suite (r12 measured the
+        # v3 extras at 1.4-1.9x solo cost from running behind
+        # multimodal_video_dedup's decode storm — totals are
+        # order-independent, per-query numbers are not).  Explicit
+        # subsets keep the caller's order.
+        storm = [n for n in benchmarks.RUN_LAST if n in names]
+        names = [n for n in names if n not in storm] + storm
     cold = "--cold" in sys.argv or os.environ.get(
         "SPARK_GRAFT_BENCH_COLD", ""
     ) not in ("", "0")
@@ -363,29 +390,6 @@ def main() -> None:
     firsts: dict[str, float] = {}
     shuffle: dict[str, dict[str, int]] = {}
     errors: dict[str, str] = {}
-    subset = os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "")
-    # legacy-20 + the v2 extras (r10): the summary keeps "value"/"queries"
-    # as the FROZEN legacy set (cross-round comparable back to r5) and
-    # adds a "headline_v2" block with the extended total + extra timings
-    names = [
-        *benchmarks.HEADLINE,
-        *benchmarks.HEADLINE_V2_EXTRA,
-        *benchmarks.HEADLINE_V3_EXTRA,
-        *benchmarks.HEADLINE_V4_EXTRA,
-    ]
-    if subset:
-        wanted = [q.strip() for q in subset.split(",") if q.strip()]
-        unknown = [q for q in wanted if q not in benchmarks.SPARK_QUERIES]
-        assert not unknown, f"unknown bench queries: {unknown}"
-        names = wanted
-    else:
-        # CPU-storm queries run LAST in the full suite (r12 measured the
-        # v3 extras at 1.4-1.9x solo cost from running behind
-        # multimodal_video_dedup's decode storm — totals are
-        # order-independent, per-query numbers are not).  Explicit
-        # subsets keep the caller's order.
-        storm = [n for n in benchmarks.RUN_LAST if n in names]
-        names = [n for n in names if n not in storm] + storm
     for name in names:
         fn = benchmarks.SPARK_QUERIES[name]
         runs: list[float] = []

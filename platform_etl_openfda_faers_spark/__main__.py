@@ -7,7 +7,8 @@
         [--permutations N] [--percentile P] [--seed S] \
         [--master local[*]]
 
-Unknown steps are rejected up front (the reference logs-and-skips,
+Unknown ``--outputs`` formats are rejected by argparse ``choices`` before
+Spark starts (the reference logs-and-skips unknown steps,
 ``ETL.scala:61-65``; failing fast is kinder on a 1000-executor cluster).
 Config validation happens before any Spark job is submitted, mirroring the
 reference's pureconfig ``require`` guards (``config/Configuration.scala``).

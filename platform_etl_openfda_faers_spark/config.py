@@ -68,9 +68,9 @@ def load_config(path: str) -> EngineConfig:
     """Config-file loading — the HOCON-driven deployment path of the
     reference (``config/Configuration.scala:47-54`` + ``reference.conf``),
     re-expressed as a JSON subset of HOCON: ``//`` and ``#`` comments and
-    ``${ENV_VAR}`` substitutions are supported; keys mirror the dataclass
-    fields.  Validation still runs through ``__post_init__`` before any
-    Spark job is submitted.
+    ``${ENV_VAR}`` substitutions are supported (an unset variable raises
+    ``ValueError``); keys mirror the dataclass fields.  Validation still
+    runs through ``__post_init__`` before any Spark job is submitted.
 
     Example file::
 
@@ -98,11 +98,14 @@ def load_config(path: str) -> EngineConfig:
         if stripped.startswith("//") or stripped.startswith("#"):
             continue
         raw.append(line)
-    text = re.sub(
-        r"\$\{(\w+)\}",
-        lambda m: os.environ.get(m.group(1), m.group(0)),
-        "".join(raw),
-    )
+
+    def substitute(m: re.Match) -> str:
+        # as in HOCON, an unresolved substitution is an error, not text
+        if m.group(1) not in os.environ:
+            raise ValueError(f"{path}: environment variable {m.group(1)} is not set")
+        return os.environ[m.group(1)]
+
+    text = re.sub(r"\$\{(\w+)\}", substitute, "".join(raw))
     data = json.loads(text)
 
     def build(cls, d: dict):

@@ -30,7 +30,7 @@ import shutil
 import tempfile
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import STOPWORDS
@@ -3044,6 +3044,69 @@ def text_chunking(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+# token capacity of a packed bin, and the number of packed streams
+_PACK_CAP, _PACK_SHARDS = 2048, 16
+
+
+def _doc_stream(spark: SparkSession, sf: str) -> DataFrame:
+    """Every document's token count on its packing shard (doc_id % 16)."""
+    from ..functions.text import token_count
+
+    return load_docs(spark, sf).select(
+        "doc_id",
+        (F.col("doc_id") % _PACK_SHARDS).cast("int").alias("shard"),
+        token_count(F.col("text")).alias("n_tokens"),
+    )
+
+
+def _token_start(order: str) -> Column:
+    """Tokens laid before the row in its shard's stream, in ``order``: the
+    per-shard running sum of ``n_tokens`` minus its own."""
+    w = (
+        Window.partitionBy("shard")
+        .orderBy(order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return F.sum("n_tokens").over(w) - F.col("n_tokens")
+
+
+def _packed_bins(stream: DataFrame, order: str, *cols: str | Column) -> DataFrame:
+    """``cols`` plus each document's (bin_id, bin_offset): its start in the
+    shard's stream DIV and MOD the bin capacity."""
+    start = _token_start(order)
+    return stream.select(
+        *cols,
+        (start / _PACK_CAP).cast("int").alias("bin_id"),
+        (start % _PACK_CAP).cast("int").alias("bin_offset"),
+    )
+
+
+def _packed_spans(stream: DataFrame, order: str, *keys: str) -> DataFrame:
+    """``keys`` plus one (bin_id, bin_offset, doc_tok_start, n_span_tokens)
+    row per bin a non-empty document touches in its shard's stream."""
+    cap = _PACK_CAP
+    s = stream.select(
+        *keys, "n_tokens", _token_start(order).alias("tok_start")
+    ).where(F.col("n_tokens") > 0)
+    s = s.withColumn("tok_end", F.col("tok_start") + F.col("n_tokens") - 1)
+    bin_id = F.explode(
+        F.sequence(
+            (F.col("tok_start") / cap).cast("long"),
+            (F.col("tok_end") / cap).cast("long"),
+        )
+    )
+    s = s.select(*keys, "tok_start", "tok_end", bin_id.alias("bin_id"))
+    span_lo = F.greatest(F.col("tok_start"), F.col("bin_id") * cap)
+    span_hi = F.least(F.col("tok_end"), F.col("bin_id") * cap + (cap - 1))
+    return s.select(
+        *keys,
+        F.col("bin_id").cast("int").alias("bin_id"),
+        (span_lo - F.col("bin_id") * cap).cast("int").alias("bin_offset"),
+        (span_lo - F.col("tok_start")).cast("int").alias("doc_tok_start"),
+        (span_hi - span_lo + 1).cast("int").alias("n_span_tokens"),
+    )
+
+
 @query(
     "text_packing",
     f"""
@@ -3074,27 +3137,27 @@ def text_packing(spark: SparkSession, sf: str) -> DataFrame:
     partition at 100 TB, while per-shard packing parallelizes and is what
     training pipelines do anyway (one packed stream per data shard).
     """
-    from ..functions.text import token_count
+    return _packed_bins(
+        _doc_stream(spark, sf), "doc_id", "doc_id", "shard", "n_tokens"
+    )
 
-    cap, shards = 2048, 16
-    t = load_docs(spark, sf).select(
-        "doc_id",
-        (F.col("doc_id") % shards).cast("int").alias("shard"),
-        token_count(F.col("text")).alias("n_tokens"),
-    )
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    run = F.sum("n_tokens").over(w)
-    return t.select(
-        "doc_id",
-        "shard",
-        "n_tokens",
-        ((run - F.col("n_tokens")) / cap).cast("int").alias("bin_id"),
-        ((run - F.col("n_tokens")) % cap).cast("int").alias("bin_offset"),
-    )
+
+# the per-bin span rows of the packing-spans oracles, after their
+# SELECT's key columns, over s (tok_start, tok_end per non-empty doc)
+_SPANS_SELECT_SQL = """
+      CAST(b.bin_id AS INT) AS bin_id,
+      CAST(GREATEST(tok_start, b.bin_id * 2048) - b.bin_id * 2048 AS INT)
+        AS bin_offset,
+      CAST(GREATEST(tok_start, b.bin_id * 2048) - tok_start AS INT)
+        AS doc_tok_start,
+      CAST(LEAST(tok_end, b.bin_id * 2048 + 2047)
+           - GREATEST(tok_start, b.bin_id * 2048) + 1 AS INT)
+        AS n_span_tokens
+    FROM s, LATERAL (
+      SELECT unnest(generate_series(tok_start // 2048, tok_end // 2048))
+        AS bin_id
+    ) b
+    """
 
 
 @query(
@@ -3116,20 +3179,7 @@ def text_packing(spark: SparkSession, sf: str) -> DataFrame:
         CAST(tok_start + n_tokens - 1 AS BIGINT) AS tok_end
       FROM r WHERE n_tokens > 0
     )
-    SELECT doc_id, CAST(shard AS INT) AS shard,
-      CAST(b.bin_id AS INT) AS bin_id,
-      CAST(GREATEST(tok_start, b.bin_id * 2048) - b.bin_id * 2048 AS INT)
-        AS bin_offset,
-      CAST(GREATEST(tok_start, b.bin_id * 2048) - tok_start AS INT)
-        AS doc_tok_start,
-      CAST(LEAST(tok_end, b.bin_id * 2048 + 2047)
-           - GREATEST(tok_start, b.bin_id * 2048) + 1 AS INT)
-        AS n_span_tokens
-    FROM s, LATERAL (
-      SELECT unnest(generate_series(tok_start // 2048, tok_end // 2048))
-        AS bin_id
-    ) b
-    """,
+    SELECT doc_id, CAST(shard AS INT) AS shard,{_SPANS_SELECT_SQL}""",
 )
 def text_packing_spans(spark: SparkSession, sf: str) -> DataFrame:
     """Tokenizer-aware packing v2 (VERDICT r12 #9): the (bin, offset,
@@ -3148,43 +3198,7 @@ def text_packing_spans(spark: SparkSession, sf: str) -> DataFrame:
     fan-out is (n_tokens / capacity) + 1 ≈ 1 row per doc, so the output
     stays linear in the corpus.  All-integer, hash-exact across
     engines."""
-    from ..functions.text import token_count
-
-    cap, shards = 2048, 16
-    t = load_docs(spark, sf).select(
-        "doc_id",
-        (F.col("doc_id") % shards).cast("int").alias("shard"),
-        token_count(F.col("text")).alias("n_tokens"),
-    )
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    s = t.select(
-        "doc_id",
-        "shard",
-        "n_tokens",
-        (F.sum("n_tokens").over(w) - F.col("n_tokens")).alias("tok_start"),
-    ).where(F.col("n_tokens") > 0)
-    s = s.withColumn("tok_end", F.col("tok_start") + F.col("n_tokens") - 1)
-    bin_id = F.explode(
-        F.sequence(
-            (F.col("tok_start") / cap).cast("long"),
-            (F.col("tok_end") / cap).cast("long"),
-        )
-    )
-    s = s.select("doc_id", "shard", "tok_start", "tok_end", bin_id.alias("bin_id"))
-    span_lo = F.greatest(F.col("tok_start"), F.col("bin_id") * cap)
-    span_hi = F.least(F.col("tok_end"), F.col("bin_id") * cap + (cap - 1))
-    return s.select(
-        "doc_id",
-        "shard",
-        F.col("bin_id").cast("int").alias("bin_id"),
-        (span_lo - F.col("bin_id") * cap).cast("int").alias("bin_offset"),
-        (span_lo - F.col("tok_start")).cast("int").alias("doc_tok_start"),
-        (span_hi - span_lo + 1).cast("int").alias("n_span_tokens"),
-    )
+    return _packed_spans(_doc_stream(spark, sf), "doc_id", "doc_id", "shard")
 
 
 def _cm_hash_sql(var: str, seed: int, buckets: int) -> str:
@@ -3612,10 +3626,32 @@ def corpus_curation_pipeline(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Embedding similarity search
 
-_COS_SQL = (
-    "round(list_dot_product(q.e, v.e)"
-    " / (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(v.e, v.e))), 6)"
+_IVF_COS = (
+    "round(list_dot_product({a}, {b})"
+    " / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
 )
+# the embeddings as DOUBLE[] and the 20 query vectors (vec_id < 20)
+_V_CTE = "v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)"
+_Q_CTE = "q AS (SELECT vec_id, e FROM v WHERE vec_id < 20)"
+
+
+def _topk_sql(ctes: list[str], scored: str, topk: int) -> str:
+    """``WITH ctes`` and the per-query top ``topk`` of the CTE ``scored``
+    (query_id, neighbor_id, score): score descending, ties by
+    neighbor_id."""
+    body = ",\n    ".join(ctes)
+    return f"""
+    WITH {body}
+    SELECT query_id, neighbor_id, score, rank FROM (
+      SELECT query_id, neighbor_id, score,
+        CAST(row_number() OVER (
+          PARTITION BY query_id ORDER BY score DESC, neighbor_id
+        ) AS INT) AS rank
+      FROM {scored}) WHERE rank <= {topk}
+    """
+
+
+_COS_SQL = _IVF_COS.format(a="q.e", b="v.e")
 
 
 @query(
@@ -3767,6 +3803,43 @@ def emb_quantize_int8(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _plane_lits(dim: int, n_planes: int, seed: int) -> list[str]:
+    """SQL list literals of ``similarity.random_hyperplanes(dim, n_planes,
+    seed)``."""
+    return [
+        "[" + ", ".join(repr(float(x)) for x in plane) + "]"
+        for plane in similarity.random_hyperplanes(dim, n_planes, seed)
+    ]
+
+
+def _lsh_rerank_sql(corpus_buckets: str, query_buckets: str) -> str:
+    """The LSH oracles' candidate join and re-rank: query/corpus pairs
+    that share a (table, bucket) of the two bucket queries (vec_id, tbl,
+    bucket), scored by exact cosine, top 5 per query."""
+    cos = _IVF_COS.format(a="qv.e", b="nv.e")
+    return _topk_sql(
+        [
+            _V_CTE,
+            _Q_CTE,
+            f"cb AS ({corpus_buckets})",
+            f"qb AS ({query_buckets})",
+            """cand AS (
+      SELECT DISTINCT qb.vec_id AS query_id, cb.vec_id AS neighbor_id
+      FROM qb JOIN cb ON qb.tbl = cb.tbl AND qb.bucket = cb.bucket
+      WHERE qb.vec_id <> cb.vec_id
+    )""",
+            f"""s AS (
+      SELECT c.query_id, c.neighbor_id, {cos} AS score
+      FROM cand c
+      JOIN v qv ON qv.vec_id = c.query_id
+      JOIN v nv ON nv.vec_id = c.neighbor_id
+    )""",
+        ],
+        "s",
+        5,
+    )
+
+
 def _lsh_oracle_sql(
     dim: int = 64, n_planes: int = 6, n_tables: int = 3, seed: int = 42
 ) -> str:
@@ -3774,15 +3847,11 @@ def _lsh_oracle_sql(
     rounded-projection sign bits, same exact-cosine re-rank."""
 
     def bucket_expr(var: str, table: int) -> str:
-        planes = similarity.random_hyperplanes(dim, n_planes, seed + table)
-        bits = []
-        for i, plane in enumerate(planes):
-            lit = "[" + ", ".join(repr(float(x)) for x in plane) + "]"
-            bits.append(
-                f"(CASE WHEN round(list_dot_product({var}, {lit}), 6) >= 0 "
-                f"THEN {1 << i} ELSE 0 END)"
-            )
-        return " + ".join(bits)
+        return " + ".join(
+            f"(CASE WHEN round(list_dot_product({var}, {lit}), 6) >= 0 "
+            f"THEN {1 << i} ELSE 0 END)"
+            for i, lit in enumerate(_plane_lits(dim, n_planes, seed + table))
+        )
 
     def bucket_cte(src: str, var: str) -> str:
         return "\n      UNION ALL ".join(
@@ -3790,34 +3859,7 @@ def _lsh_oracle_sql(
             for t in range(n_tables)
         )
 
-    cos = (
-        "round(list_dot_product(qv.e, nv.e)"
-        " / (sqrt(list_dot_product(qv.e, qv.e))"
-        " * sqrt(list_dot_product(nv.e, nv.e))), 6)"
-    )
-    return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    q AS (SELECT vec_id, e FROM v WHERE vec_id < 20),
-    cb AS ({bucket_cte("v", "e")}),
-    qb AS ({bucket_cte("q", "e")}),
-    cand AS (
-      SELECT DISTINCT qb.vec_id AS query_id, cb.vec_id AS neighbor_id
-      FROM qb JOIN cb ON qb.tbl = cb.tbl AND qb.bucket = cb.bucket
-      WHERE qb.vec_id <> cb.vec_id
-    ),
-    s AS (
-      SELECT c.query_id, c.neighbor_id, {cos} AS score
-      FROM cand c
-      JOIN v qv ON qv.vec_id = c.query_id
-      JOIN v nv ON nv.vec_id = c.neighbor_id
-    )
-    SELECT query_id, neighbor_id, score, rank FROM (
-      SELECT query_id, neighbor_id, score,
-        CAST(row_number() OVER (
-          PARTITION BY query_id ORDER BY score DESC, neighbor_id
-        ) AS INT) AS rank
-      FROM s) WHERE rank <= 5
-    """
+    return _lsh_rerank_sql(bucket_cte("v", "e"), bucket_cte("q", "e"))
 
 
 @query("emb_lsh_ann", _lsh_oracle_sql(n_planes=4, n_tables=8))
@@ -3866,25 +3908,16 @@ def _lsh_multiprobe_oracle_sql(
     same plane constants and the same round-6 discipline, then the
     exact-cosine re-rank."""
 
-    def plane_lits(table: int) -> list[str]:
-        planes = similarity.random_hyperplanes(dim, n_planes, seed + table)
-        return [
-            "[" + ", ".join(repr(float(x)) for x in plane) + "]" for plane in planes
-        ]
-
     def proj_cte(src: str, table: int) -> str:
         cols = ", ".join(
             f"round(list_dot_product(e, {lit}), 6) AS p{i}"
-            for i, lit in enumerate(plane_lits(table))
+            for i, lit in enumerate(_plane_lits(dim, n_planes, seed + table))
         )
         return f"SELECT vec_id, {cols} FROM {src}"
 
-    def home_expr() -> str:
-        return " + ".join(
-            f"(CASE WHEN p{i} >= 0 THEN {1 << i} ELSE 0 END)"
-            for i in range(n_planes)
-        )
-
+    home = " + ".join(
+        f"(CASE WHEN p{i} >= 0 THEN {1 << i} ELSE 0 END)" for i in range(n_planes)
+    )
     singles = [
         f"{{'m': abs(p{i}), 'mask': {1 << i}}}" for i in range(n_planes)
     ]
@@ -3894,62 +3927,22 @@ def _lsh_multiprobe_oracle_sql(
         for j in range(i + 1, n_planes)
     ]
     margins = "[" + ", ".join(singles + pairs_) + "]"
-
-    def corpus_bucket_cte(src: str) -> str:
-        return "\n      UNION ALL ".join(
-            f"SELECT vec_id, {t} AS tbl, {hb} AS bucket FROM "
-            f"(SELECT vec_id, "
-            + ", ".join(
-                f"round(list_dot_product(e, {lit}), 6) AS p{i}"
-                for i, lit in enumerate(plane_lits(t))
-            )
-            + f" FROM {src})"
-            for t, hb in ((t, home_expr()) for t in range(n_tables))
-        )
-
-    def query_probe_cte(src: str) -> str:
-        pcols = ", ".join(f"p{i}" for i in range(n_planes))
-        parts = []
-        for t in range(n_tables):
-            parts.append(
-                f"""SELECT vec_id, {t} AS tbl, unnest(list_distinct(list_prepend(
+    corpus_buckets = "\n      UNION ALL ".join(
+        f"SELECT vec_id, {t} AS tbl, {home} AS bucket FROM ({proj_cte('v', t)})"
+        for t in range(n_tables)
+    )
+    pcols = ", ".join(f"p{i}" for i in range(n_planes))
+    query_probes = "\n      UNION ALL ".join(
+        f"""SELECT vec_id, {t} AS tbl, unnest(list_distinct(list_prepend(
         home, list_transform(
           list_sort({margins})[1:{n_probes - 1}],
           s -> xor(home, s.mask)
         )))) AS bucket
-      FROM (SELECT vec_id, {home_expr()} AS home, {pcols}
-            FROM ({proj_cte(src, t)}))"""
-            )
-        return "\n      UNION ALL ".join(parts)
-
-    cos = (
-        "round(list_dot_product(qv.e, nv.e)"
-        " / (sqrt(list_dot_product(qv.e, qv.e))"
-        " * sqrt(list_dot_product(nv.e, nv.e))), 6)"
+      FROM (SELECT vec_id, {home} AS home, {pcols}
+            FROM ({proj_cte('q', t)}))"""
+        for t in range(n_tables)
     )
-    return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    q AS (SELECT vec_id, e FROM v WHERE vec_id < 20),
-    cb AS ({corpus_bucket_cte("v")}),
-    qb AS ({query_probe_cte("q")}),
-    cand AS (
-      SELECT DISTINCT qb.vec_id AS query_id, cb.vec_id AS neighbor_id
-      FROM qb JOIN cb ON qb.tbl = cb.tbl AND qb.bucket = cb.bucket
-      WHERE qb.vec_id <> cb.vec_id
-    ),
-    s AS (
-      SELECT c.query_id, c.neighbor_id, {cos} AS score
-      FROM cand c
-      JOIN v qv ON qv.vec_id = c.query_id
-      JOIN v nv ON nv.vec_id = c.neighbor_id
-    )
-    SELECT query_id, neighbor_id, score, rank FROM (
-      SELECT query_id, neighbor_id, score,
-        CAST(row_number() OVER (
-          PARTITION BY query_id ORDER BY score DESC, neighbor_id
-        ) AS INT) AS rank
-      FROM s) WHERE rank <= 5
-    """
+    return _lsh_rerank_sql(corpus_buckets, query_probes)
 
 
 @query(
@@ -3982,12 +3975,6 @@ def emb_lsh_multiprobe_topk(spark: SparkSession, sf: str) -> DataFrame:
         n_probes=7,
         dim=64,
     )
-
-
-_IVF_COS = (
-    "round(list_dot_product({a}, {b})"
-    " / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))), 6)"
-)
 
 
 @query(
@@ -4043,45 +4030,43 @@ def emb_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _kmeans_prefix_ctes(k: int, iterations: int) -> tuple[list[str], str]:
-    """Shared CTE prefix replaying ``similarity.kmeans_centroids`` in SQL:
-    one (assign, per-dim, mean) CTE triple per Lloyd iteration.  Returns
-    (ctes, name-of-final-centroid-CTE); reused by the trained-IVF and
-    semantic-dedup oracles so both engines share one k-means definition."""
-    ctes = [
-        "v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)",
-        f"cent0 AS (SELECT vec_id AS cell, e AS c FROM v WHERE vec_id < {k})",
-    ]
-    for i in range(1, iterations + 1):
-        p = f"cent{i - 1}"
-        cos = _IVF_COS.format(a="v.e", b=f"{p}.c")
-        ctes.append(
-            f"""asg{i} AS (
-      SELECT vec_id, e, cell FROM (
-        SELECT v.vec_id, v.e, {p}.cell,
+    """The embeddings CTE ``v`` and ``_kmeans_ctes_for`` over it: (ctes,
+    name-of-final-centroid-CTE) for the trained-IVF, cell-occupancy and
+    semantic-dedup oracles."""
+    ctes, last = _kmeans_ctes_for("v", "", k, iterations)
+    return [_V_CTE] + ctes, last
+
+
+def _ivf_probe_sql(ctes: list[str], last: str, nprobe: int, topk: int) -> str:
+    """``ctes`` (holding ``v`` and the centroid CTE ``last``), then the IVF
+    search over those cells: every vector to its nearest cell, each query
+    to its ``nprobe`` nearest, exact-cosine top ``topk`` within them."""
+    c_cos = _IVF_COS.format(a="v.e", b=f"{last}.c")
+    q_cos = _IVF_COS.format(a="q.e", b=f"{last}.c")
+    s_cos = _IVF_COS.format(a="qa.e", b="ca.e")
+    probe = [
+        _Q_CTE,
+        f"""c_assign AS (
+      SELECT neighbor_id, e, cell FROM (
+        SELECT v.vec_id AS neighbor_id, v.e, {last}.cell,
           row_number() OVER (PARTITION BY v.vec_id
-            ORDER BY {cos} DESC, {p}.cell) AS r
-        FROM v, {p}) WHERE r = 1
-    )"""
-        )
-        ctes.append(
-            f"""pd{i} AS (
-      SELECT a.cell, gs.i AS pos, a.e[gs.i] AS val
-      FROM asg{i} a,
-      LATERAL (SELECT unnest(generate_series(1, len(a.e))) AS i) gs
-    )"""
-        )
-        # MATERIALIZED — same multi-reference re-inlining guard as
-        # _kmeans_ctes_for (r7)
-        ctes.append(
-            f"""cent{i} AS MATERIALIZED (
-      SELECT cell, list(m ORDER BY pos) AS c FROM (
-        SELECT cell, pos,
-          round(CAST(SUM(CAST(val AS DECIMAL(27,10))) AS DOUBLE) / COUNT(*),
-                6) AS m
-        FROM pd{i} GROUP BY cell, pos) GROUP BY cell
-    )"""
-        )
-    return ctes, f"cent{iterations}"
+            ORDER BY {c_cos} DESC, {last}.cell) AS r
+        FROM v, {last}) WHERE r = 1
+    )""",
+        f"""q_assign AS (
+      SELECT query_id, e, cell FROM (
+        SELECT q.vec_id AS query_id, q.e, {last}.cell,
+          row_number() OVER (PARTITION BY q.vec_id
+            ORDER BY {q_cos} DESC, {last}.cell) AS r
+        FROM q, {last}) WHERE r <= {nprobe}
+    )""",
+        f"""s AS (
+      SELECT qa.query_id, ca.neighbor_id, {s_cos} AS score
+      FROM q_assign qa JOIN c_assign ca USING (cell)
+      WHERE qa.query_id <> ca.neighbor_id
+    )""",
+    ]
+    return _topk_sql(ctes + probe, "s", topk)
 
 
 def _ivf_kmeans_oracle_sql(
@@ -4091,45 +4076,7 @@ def _ivf_kmeans_oracle_sql(
     iteration (argmax assign, decimal-exact per-dim mean), then the same
     probe/re-rank tail as the static-centroid oracle."""
     ctes, last = _kmeans_prefix_ctes(k, iterations)
-    c_cos = _IVF_COS.format(a="v.e", b=f"{last}.c")
-    q_cos = _IVF_COS.format(a="q.e", b=f"{last}.c")
-    s_cos = _IVF_COS.format(a="qa.e", b="ca.e")
-    ctes.append("q AS (SELECT vec_id, e FROM v WHERE vec_id < 20)")
-    ctes.append(
-        f"""c_assign AS (
-      SELECT neighbor_id, e, cell FROM (
-        SELECT v.vec_id AS neighbor_id, v.e, {last}.cell,
-          row_number() OVER (PARTITION BY v.vec_id
-            ORDER BY {c_cos} DESC, {last}.cell) AS r
-        FROM v, {last}) WHERE r = 1
-    )"""
-    )
-    ctes.append(
-        f"""q_assign AS (
-      SELECT query_id, e, cell FROM (
-        SELECT q.vec_id AS query_id, q.e, {last}.cell,
-          row_number() OVER (PARTITION BY q.vec_id
-            ORDER BY {q_cos} DESC, {last}.cell) AS r
-        FROM q, {last}) WHERE r <= {nprobe}
-    )"""
-    )
-    ctes.append(
-        f"""s AS (
-      SELECT qa.query_id, ca.neighbor_id, {s_cos} AS score
-      FROM q_assign qa JOIN c_assign ca USING (cell)
-      WHERE qa.query_id <> ca.neighbor_id
-    )"""
-    )
-    body = ",\n    ".join(ctes)
-    return f"""
-    WITH {body}
-    SELECT query_id, neighbor_id, score, rank FROM (
-      SELECT query_id, neighbor_id, score,
-        CAST(row_number() OVER (
-          PARTITION BY query_id ORDER BY score DESC, neighbor_id
-        ) AS INT) AS rank
-      FROM s) WHERE rank <= {topk}
-    """
+    return _ivf_probe_sql(ctes, last, nprobe, topk)
 
 
 def _kmeans_ctes_for(
@@ -4177,68 +4124,20 @@ def _kmeans_ctes_for(
     return ctes, f"{prefix}cent{iterations}"
 
 
-def _pq_rerank_tail(ctes: list[str], topk: int, rerank_from: int) -> str:
-    """Shared final-SELECT builder for the PQ oracles: pure-ADC ranking,
-    or (rerank_from=R > 0) the ADC top-R pool re-scored with the EXACT
-    cosine — the SQL twin of ``similarity._exact_rerank``."""
-    if not rerank_from:
-        body = ",\n    ".join(ctes)
-        return f"""
-    WITH {body}
-    SELECT query_id, neighbor_id, score, rank FROM (
-      SELECT query_id, neighbor_id, score,
-        CAST(row_number() OVER (
-          PARTITION BY query_id ORDER BY score DESC, neighbor_id
-        ) AS INT) AS rank
-      FROM sc) WHERE rank <= {topk}
-    """
-    cos = _IVF_COS.format(a="qv.e", b="nv.e")
-    ctes = ctes + [
-        f"""adc AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-          row_number() OVER (
-            PARTITION BY query_id ORDER BY score DESC, neighbor_id
-          ) AS r
-        FROM sc) WHERE r <= {rerank_from}
-    )""",
-        f"""ex AS (
-      SELECT a.query_id, a.neighbor_id, {cos} AS score
-      FROM adc a
-      JOIN v qv ON qv.vec_id = a.query_id
-      JOIN v nv ON nv.vec_id = a.neighbor_id
-    )""",
-    ]
-    body = ",\n    ".join(ctes)
-    return f"""
-    WITH {body}
-    SELECT query_id, neighbor_id, score, rank FROM (
-      SELECT query_id, neighbor_id, score,
-        CAST(row_number() OVER (
-          PARTITION BY query_id ORDER BY score DESC, neighbor_id
-        ) AS INT) AS rank
-      FROM ex) WHERE rank <= {topk}
-    """
+def _pq_code_ctes(
+    dim: int, m: int, k: int, iterations: int
+) -> tuple[list[str], str]:
+    """The PQ encode over ``v``, and its ADC score expression.
 
-
-def _pq_oracle_sql(
-    dim: int = 64, m: int = 4, k: int = 8, iterations: int = 1, topk: int = 5,
-    rerank_from: int = 0,
-) -> str:
-    """DuckDB twin of pq_codebooks + pq_encode + pq_adc_topk: per subspace
-    a full Lloyd replay, an argmax-cosine encode, and a dot-product LUT;
-    final score is the FIXED-ORDER (left-associated) sum of the rounded
-    per-subspace LUT entries — the same float discipline as the Spark
-    side, so the whole train-encode-score pipeline value-checks.
-    ``rerank_from=R`` appends the exact-cosine re-rank of the ADC top-R
-    pool (the ``_exact_rerank`` twin)."""
+    Per subspace s: the slice ``v{s}``, its Lloyd replay, the argmax
+    encode ``enc{s}`` and the query LUT ``lut{s}`` (column ``l{s}``);
+    then ``enc``, every vector's m codes.  The score is the FIXED-ORDER
+    (left-associated) sum of l0..l{m-1}."""
     width = dim // m
-    ctes = ["v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)"]
+    ctes = []
     for s in range(m):
         lo, hi = s * width + 1, (s + 1) * width
-        ctes.append(
-            f"v{s} AS (SELECT vec_id, e[{lo}:{hi}] AS e FROM v)"
-        )
+        ctes.append(f"v{s} AS (SELECT vec_id, e[{lo}:{hi}] AS e FROM v)")
         kc, last = _kmeans_ctes_for(f"v{s}", f"s{s}_", k, iterations)
         ctes += kc
         cos = _IVF_COS.format(a=f"v{s}.e", b=f"{last}.c")
@@ -4260,28 +4159,63 @@ def _pq_oracle_sql(
         )
     joins = " ".join(f"JOIN enc{s} USING (vec_id)" for s in range(1, m))
     ctes.append(
-        f"enc AS (SELECT enc0.vec_id, "
+        "enc AS (SELECT enc0.vec_id, "
         + ", ".join(f"c{s}" for s in range(m))
         + f" FROM enc0 {joins})"
     )
-    lut_joins = ["JOIN lut0 ON lut0.code = enc.c0"]
-    for s in range(1, m):
-        lut_joins.append(
-            f"JOIN lut{s} ON lut{s}.query_id = lut0.query_id"
-            f" AND lut{s}.code = enc.c{s}"
-        )
-    score = "l0"
-    for s in range(1, m):
-        score = f"({score} + l{s})"
-    ctes.append(
-        f"""sc AS (
+    score = functools.reduce(lambda a, s: f"({a} + l{s})", range(1, m), "l0")
+    return ctes, score
+
+
+def _pq_rerank_tail(ctes: list[str], topk: int, rerank_from: int) -> str:
+    """Shared final-SELECT builder for the PQ oracles: pure-ADC ranking,
+    or (rerank_from=R > 0) the ADC top-R pool re-scored with the EXACT
+    cosine — the SQL twin of ``similarity._exact_rerank``."""
+    if not rerank_from:
+        return _topk_sql(ctes, "sc", topk)
+    cos = _IVF_COS.format(a="qv.e", b="nv.e")
+    ctes = ctes + [
+        f"""adc AS (
+      SELECT query_id, neighbor_id FROM (
+        SELECT query_id, neighbor_id,
+          row_number() OVER (
+            PARTITION BY query_id ORDER BY score DESC, neighbor_id
+          ) AS r
+        FROM sc) WHERE r <= {rerank_from}
+    )""",
+        f"""ex AS (
+      SELECT a.query_id, a.neighbor_id, {cos} AS score
+      FROM adc a
+      JOIN v qv ON qv.vec_id = a.query_id
+      JOIN v nv ON nv.vec_id = a.neighbor_id
+    )""",
+    ]
+    return _topk_sql(ctes, "ex", topk)
+
+
+def _pq_oracle_sql(
+    dim: int = 64, m: int = 4, k: int = 8, iterations: int = 1, topk: int = 5,
+    rerank_from: int = 0,
+) -> str:
+    """DuckDB twin of pq_codebooks + pq_encode + pq_adc_topk: per subspace
+    a full Lloyd replay, an argmax-cosine encode, and a dot-product LUT;
+    final score is the FIXED-ORDER (left-associated) sum of the rounded
+    per-subspace LUT entries — the same float discipline as the Spark
+    side, so the whole train-encode-score pipeline value-checks.
+    ``rerank_from=R`` appends the exact-cosine re-rank of the ADC top-R
+    pool (the ``_exact_rerank`` twin)."""
+    codes, score = _pq_code_ctes(dim, m, k, iterations)
+    lut_joins = ["JOIN lut0 ON lut0.code = enc.c0"] + [
+        f"JOIN lut{s} ON lut{s}.query_id = lut0.query_id AND lut{s}.code = enc.c{s}"
+        for s in range(1, m)
+    ]
+    sc = f"""sc AS (
       SELECT lut0.query_id, enc.vec_id AS neighbor_id,
         round({score}, 6) AS score
       FROM enc {' '.join(lut_joins)}
       WHERE lut0.query_id <> enc.vec_id
     )"""
-    )
-    return _pq_rerank_tail(ctes, topk, rerank_from)
+    return _pq_rerank_tail([_V_CTE] + codes + [sc], topk, rerank_from)
 
 
 def _ivf_pq_oracle_sql(
@@ -4298,13 +4232,12 @@ def _ivf_pq_oracle_sql(
     whole vectors (cell pruning), per-subspace Lloyd replays (codebooks),
     argmax encode, per-query LUTs, and ADC scoring restricted to the
     probed cells' candidates."""
-    width = dim // m
-    ctes = ["v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)"]
+    ctes = [_V_CTE]
     kc, glast = _kmeans_ctes_for("v", "g_", coarse_k, iterations)
     ctes += kc
     c_cos = _IVF_COS.format(a="v.e", b=f"{glast}.c")
     q_cos = _IVF_COS.format(a="q.e", b=f"{glast}.c")
-    ctes.append("q AS (SELECT vec_id, e FROM v WHERE vec_id < 20)")
+    ctes.append(_Q_CTE)
     ctes.append(
         f"""c_assign AS (
       SELECT neighbor_id, cell FROM (
@@ -4323,34 +4256,8 @@ def _ivf_pq_oracle_sql(
         FROM q, {glast}) WHERE r <= {nprobe}
     )"""
     )
-    for s in range(m):
-        lo, hi = s * width + 1, (s + 1) * width
-        ctes.append(f"v{s} AS (SELECT vec_id, e[{lo}:{hi}] AS e FROM v)")
-        skc, slast = _kmeans_ctes_for(f"v{s}", f"s{s}_", k_codes, iterations)
-        ctes += skc
-        cos = _IVF_COS.format(a=f"v{s}.e", b=f"{slast}.c")
-        ctes.append(
-            f"""enc{s} AS (
-      SELECT vec_id, cell AS c{s} FROM (
-        SELECT v{s}.vec_id, {slast}.cell,
-          row_number() OVER (PARTITION BY v{s}.vec_id
-            ORDER BY {cos} DESC, {slast}.cell) AS r
-        FROM v{s}, {slast}) WHERE r = 1
-    )"""
-        )
-        ctes.append(
-            f"""lut{s} AS (
-      SELECT q.vec_id AS query_id, {slast}.cell AS code,
-        round(list_dot_product(q.e, {slast}.c), 6) AS l{s}
-      FROM (SELECT vec_id, e FROM v{s} WHERE vec_id < 20) q, {slast}
-    )"""
-        )
-    joins = " ".join(f"JOIN enc{s} USING (vec_id)" for s in range(1, m))
-    ctes.append(
-        "enc AS (SELECT enc0.vec_id, "
-        + ", ".join(f"c{s}" for s in range(m))
-        + f" FROM enc0 {joins})"
-    )
+    codes, score = _pq_code_ctes(dim, m, k_codes, iterations)
+    ctes += codes
     ctes.append(
         """cand AS (
       SELECT qa.query_id, ca.neighbor_id
@@ -4358,15 +4265,10 @@ def _ivf_pq_oracle_sql(
       WHERE qa.query_id <> ca.neighbor_id
     )"""
     )
-    lut_joins = ["JOIN lut0 ON lut0.query_id = cand.query_id AND lut0.code = enc.c0"]
-    for s in range(1, m):
-        lut_joins.append(
-            f"JOIN lut{s} ON lut{s}.query_id = cand.query_id"
-            f" AND lut{s}.code = enc.c{s}"
-        )
-    score = "l0"
-    for s in range(1, m):
-        score = f"({score} + l{s})"
+    lut_joins = [
+        f"JOIN lut{s} ON lut{s}.query_id = cand.query_id AND lut{s}.code = enc.c{s}"
+        for s in range(m)
+    ]
     ctes.append(
         f"""sc AS (
       SELECT cand.query_id, cand.neighbor_id, round({score}, 6) AS score
@@ -4640,51 +4542,12 @@ def _ivf_incremental_oracle_sql(
     with the standard probe/re-rank tail.  Composes the shared
     ``_kmeans_ctes_for`` generator over a corpus CTE — one k-means
     definition across all trained-centroid oracles."""
-    ctes = [
-        "v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)",
-        f"cv AS (SELECT vec_id, e FROM v WHERE vec_id % {batch_mod} <> 0)",
-    ]
     kc, last = _kmeans_ctes_for("cv", "inc_", k, iterations)
-    ctes += kc
-    c_cos = _IVF_COS.format(a="v.e", b=f"{last}.c")
-    q_cos = _IVF_COS.format(a="q.e", b=f"{last}.c")
-    s_cos = _IVF_COS.format(a="qa.e", b="ca.e")
-    ctes.append("q AS (SELECT vec_id, e FROM v WHERE vec_id < 20)")
-    ctes.append(
-        f"""c_assign AS (
-      SELECT neighbor_id, e, cell FROM (
-        SELECT v.vec_id AS neighbor_id, v.e, {last}.cell,
-          row_number() OVER (PARTITION BY v.vec_id
-            ORDER BY {c_cos} DESC, {last}.cell) AS r
-        FROM v, {last}) WHERE r = 1
-    )"""
-    )
-    ctes.append(
-        f"""q_assign AS (
-      SELECT query_id, e, cell FROM (
-        SELECT q.vec_id AS query_id, q.e, {last}.cell,
-          row_number() OVER (PARTITION BY q.vec_id
-            ORDER BY {q_cos} DESC, {last}.cell) AS r
-        FROM q, {last}) WHERE r <= {nprobe}
-    )"""
-    )
-    ctes.append(
-        f"""s AS (
-      SELECT qa.query_id, ca.neighbor_id, {s_cos} AS score
-      FROM q_assign qa JOIN c_assign ca USING (cell)
-      WHERE qa.query_id <> ca.neighbor_id
-    )"""
-    )
-    body = ",\n    ".join(ctes)
-    return f"""
-    WITH {body}
-    SELECT query_id, neighbor_id, score, rank FROM (
-      SELECT query_id, neighbor_id, score,
-        CAST(row_number() OVER (
-          PARTITION BY query_id ORDER BY score DESC, neighbor_id
-        ) AS INT) AS rank
-      FROM s) WHERE rank <= {topk}
-    """
+    ctes = [
+        _V_CTE,
+        f"cv AS (SELECT vec_id, e FROM v WHERE vec_id % {batch_mod} <> 0)",
+    ] + kc
+    return _ivf_probe_sql(ctes, last, nprobe, topk)
 
 
 @query("emb_ivf_incremental_topk", _ivf_incremental_oracle_sql())
@@ -5501,7 +5364,7 @@ def _semantic_incremental_oracle_sql(
     batch-touching — batch-batch doubles collapsed by DISTINCT over the
     orientation-normalized projection (cosine commutes exactly)."""
     ctes = [
-        "v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)",
+        _V_CTE,
         f"cv AS (SELECT vec_id, e FROM v WHERE vec_id % {batch_mod} <> 0)",
     ]
     kc, last = _kmeans_ctes_for("cv", "sem_", k, iterations)
@@ -5985,6 +5848,39 @@ def multimodal_decode(spark: SparkSession, sf: str) -> DataFrame:
     return decoded.select("media_id", "width", "height", "n_channels")
 
 
+def _decoded(
+    spark: SparkSession, sf: str, synthesize: Callable[[DataFrame, str], DataFrame]
+) -> DataFrame:
+    """REAL decode (``decode_media(fake=False)``) of the media the
+    ``multimodal.synthetic_*`` generator ``synthesize`` renders per doc_id."""
+    media = synthesize(load_docs(spark, sf).select("doc_id"), "doc_id")
+    return multimodal.decode_media(media, fake=False)
+
+
+_FIRST_RGB = ("first_r", "first_g", "first_b")
+
+
+def _decoded_image(
+    spark: SparkSession,
+    sf: str,
+    synthesize: Callable[[DataFrame, str], DataFrame],
+    *firsts: str,
+) -> DataFrame:
+    """``_decoded`` images as media_id, geometry, the pixel sum
+    (``sum_vals``) and the first-pixel samples named ``firsts``."""
+    return _decoded(spark, sf, synthesize).select(
+        "media_id",
+        "width",
+        "height",
+        "n_channels",
+        F.element_at("features", 1).cast("long").alias("sum_vals"),
+        *(
+            F.element_at("features", i).cast("int").alias(name)
+            for i, name in enumerate(firsts, 2)
+        ),
+    )
+
+
 @query(
     "multimodal_decode_bmp",
     """
@@ -6014,19 +5910,7 @@ def multimodal_decode_bmp(spark: SparkSession, sf: str) -> DataFrame:
     oracle predicts width/height/pixel-sum/first-pixel analytically from
     the generator formula, so any codec bug (row order, channel order,
     padding) breaks the value hash."""
-    docs = load_docs(spark, sf).select("doc_id")
-    media = multimodal.synthetic_bmp_media(docs, "doc_id")
-    dec = multimodal.decode_media(media, fake=False)
-    return dec.select(
-        "media_id",
-        "width",
-        "height",
-        "n_channels",
-        F.element_at("features", 1).cast("long").alias("sum_vals"),
-        F.element_at("features", 2).cast("int").alias("first_r"),
-        F.element_at("features", 3).cast("int").alias("first_g"),
-        F.element_at("features", 4).cast("int").alias("first_b"),
-    )
+    return _decoded_image(spark, sf, multimodal.synthetic_bmp_media, *_FIRST_RGB)
 
 
 @query(
@@ -6504,19 +6388,7 @@ def multimodal_decode_png(spark: SparkSession, sf: str) -> DataFrame:
     Average/Paeth unfilters.  The oracle predicts width/height/pixel-sum/
     first-pixel analytically from the generator formula, so an unfilter or
     inflate bug breaks the value hash."""
-    docs = load_docs(spark, sf).select("doc_id")
-    media = multimodal.synthetic_png_media(docs, "doc_id")
-    dec = multimodal.decode_media(media, fake=False)
-    return dec.select(
-        "media_id",
-        "width",
-        "height",
-        "n_channels",
-        F.element_at("features", 1).cast("long").alias("sum_vals"),
-        F.element_at("features", 2).cast("int").alias("first_r"),
-        F.element_at("features", 3).cast("int").alias("first_g"),
-        F.element_at("features", 4).cast("int").alias("first_b"),
-    )
+    return _decoded_image(spark, sf, multimodal.synthetic_png_media, *_FIRST_RGB)
 
 
 @query(
@@ -6549,17 +6421,7 @@ def multimodal_decode_jpeg(spark: SparkSession, sf: str) -> DataFrame:
     width/height/pixel-sum/first-pixel analytically from the block
     formula; any Huffman/zigzag/IDCT bug breaks the value hash.  Closes
     the compressed-codec boundary beyond PNG (VERDICT r4 #5)."""
-    docs = load_docs(spark, sf).select("doc_id")
-    media = multimodal.synthetic_jpeg_media(docs, "doc_id")
-    dec = multimodal.decode_media(media, fake=False)
-    return dec.select(
-        "media_id",
-        "width",
-        "height",
-        "n_channels",
-        F.element_at("features", 1).cast("long").alias("sum_vals"),
-        F.element_at("features", 2).cast("int").alias("first_px"),
-    )
+    return _decoded_image(spark, sf, multimodal.synthetic_jpeg_media, "first_px")
 
 
 @query(
@@ -6591,17 +6453,7 @@ def multimodal_decode_jpeg12(spark: SparkSession, sf: str) -> DataFrame:
     predicts geometry, 12-bit pixel sums, and the first sample
     analytically.  uint16 sample values flow through the same
     decode_media feature contract (integers are exact in doubles)."""
-    docs = load_docs(spark, sf).select("doc_id")
-    media = multimodal.synthetic_jpeg12_media(docs, "doc_id")
-    dec = multimodal.decode_media(media, fake=False)
-    return dec.select(
-        "media_id",
-        "width",
-        "height",
-        "n_channels",
-        F.element_at("features", 1).cast("long").alias("sum_vals"),
-        F.element_at("features", 2).cast("int").alias("first_px"),
-    )
+    return _decoded_image(spark, sf, multimodal.synthetic_jpeg12_media, "first_px")
 
 
 @query(
@@ -6666,19 +6518,7 @@ def multimodal_decode_jpeg_420(spark: SparkSession, sf: str) -> DataFrame:
     including both color-conversion roundings, bit-for-bit via
     ``round_even`` (NumPy banker's rounding).  A wrong MCU block order,
     chroma-plane swap, or upsample misalignment breaks the value hash."""
-    docs = load_docs(spark, sf).select("doc_id")
-    media = multimodal.synthetic_jpeg_media_420(docs, "doc_id")
-    dec = multimodal.decode_media(media, fake=False)
-    return dec.select(
-        "media_id",
-        "width",
-        "height",
-        "n_channels",
-        F.element_at("features", 1).cast("long").alias("sum_vals"),
-        F.element_at("features", 2).cast("int").alias("first_r"),
-        F.element_at("features", 3).cast("int").alias("first_g"),
-        F.element_at("features", 4).cast("int").alias("first_b"),
-    )
+    return _decoded_image(spark, sf, multimodal.synthetic_jpeg_media_420, *_FIRST_RGB)
 
 
 @query(
@@ -6743,19 +6583,7 @@ def multimodal_decode_jpeg_prog(spark: SparkSession, sf: str) -> DataFrame:
     coefficient chain exact, so the oracle replays the decode
     analytically like the 4:2:0 oracle; a wrong bitplane shift, EOB-run
     length, or band walk breaks the value hash."""
-    docs = load_docs(spark, sf).select("doc_id")
-    media = multimodal.synthetic_jpeg_media_prog(docs, "doc_id")
-    dec = multimodal.decode_media(media, fake=False)
-    return dec.select(
-        "media_id",
-        "width",
-        "height",
-        "n_channels",
-        F.element_at("features", 1).cast("long").alias("sum_vals"),
-        F.element_at("features", 2).cast("int").alias("first_r"),
-        F.element_at("features", 3).cast("int").alias("first_g"),
-        F.element_at("features", 4).cast("int").alias("first_b"),
-    )
+    return _decoded_image(spark, sf, multimodal.synthetic_jpeg_media_prog, *_FIRST_RGB)
 
 
 @query(
@@ -6795,19 +6623,7 @@ def multimodal_decode_gif(spark: SparkSession, sf: str) -> DataFrame:
     de-interlace, palette mapping.  GIF is lossless, so the oracle
     replays the modular pixel formula exactly; a wrong code-width bump,
     interlace row order, or palette index breaks the value hash."""
-    docs = load_docs(spark, sf).select("doc_id")
-    media = multimodal.synthetic_gif_media(docs, "doc_id")
-    dec = multimodal.decode_media(media, fake=False)
-    return dec.select(
-        "media_id",
-        "width",
-        "height",
-        "n_channels",
-        F.element_at("features", 1).cast("long").alias("sum_vals"),
-        F.element_at("features", 2).cast("int").alias("first_r"),
-        F.element_at("features", 3).cast("int").alias("first_g"),
-        F.element_at("features", 4).cast("int").alias("first_b"),
-    )
+    return _decoded_image(spark, sf, multimodal.synthetic_gif_media, *_FIRST_RGB)
 
 
 @query(
@@ -6960,10 +6776,7 @@ def multimodal_decode_wav(spark: SparkSession, sf: str) -> DataFrame:
     (mono/stereo alternating), parsed back by the RIFF chunk-walk decoder.
     The oracle predicts frame count / channel count / sample sum / first
     samples analytically from the generator formula."""
-    docs = load_docs(spark, sf).select("doc_id")
-    media = multimodal.synthetic_wav_media(docs, "doc_id")
-    dec = multimodal.decode_media(media, fake=False)
-    return dec.select(
+    return _decoded(spark, sf, multimodal.synthetic_wav_media).select(
         F.col("media_id"),
         F.col("width").alias("n_frames"),
         F.col("n_channels"),
@@ -7232,61 +7045,31 @@ def corpus_mix_allocation(spark: SparkSession, sf: str) -> DataFrame:
     return attach_cached(out, perdoc, quota)
 
 
-@query(
-    "corpus_curriculum_order",
-    f"""
-    WITH t AS (
-      SELECT doc_id, lang, {_quality_logit_sql("text", "toks")} AS logit_micro
-      FROM (SELECT doc_id, lang, text, {_TOKENS_SQL} AS toks FROM documents)
-    ),
-    kept AS (SELECT doc_id, lang, logit_micro FROM t WHERE logit_micro >= 0),
-    r AS (
-      SELECT doc_id, lang, logit_micro,
-        CAST(row_number() OVER (PARTITION BY lang
-            ORDER BY logit_micro DESC, doc_id) AS INT) AS lang_rank
-      FROM kept
-    )
-    SELECT doc_id, lang, logit_micro, lang_rank,
-      CAST(row_number() OVER (ORDER BY lang_rank, lang) AS BIGINT)
-        AS global_pos
-    FROM r
-    """,
-)
-def corpus_curriculum_order(spark: SparkSession, sf: str) -> DataFrame:
-    """Training curriculum order (r13): compose the frozen quality gate
-    into the position every kept document occupies in the training
-    stream — best-first within each language, round-robin-interleaved
-    ACROSS languages so a loader reading positions 1..N in order sees a
-    language-balanced, quality-annealed curriculum (the standard
-    data-ordering stage between curation and sharding).
+def _curriculum_positions(
+    spark: SparkSession, sf: str, **extra: Column
+) -> tuple[DataFrame, DataFrame]:
+    """Every kept document's curriculum position, and the persisted scored
+    table it reads (attach it to the query's result).
 
-    The oracle states the semantics as a single global sort
-    (``row_number() OVER (ORDER BY lang_rank, lang)``), but the Spark
-    plan computes ``global_pos`` ARITHMETICALLY: for a doc at per-language
-    rank r in language l,
+    The scored table holds doc_id, lang, logit_micro and the ``extra``
+    columns (name=expression); the position frame holds doc_id, lang,
+    the ``extra`` columns, logit_micro, ``lang_rank`` (best-first within
+    the language) and ``global_pos``, computed ARITHMETICALLY: for a doc
+    at per-language rank r in language l,
 
         global_pos = SUM_l' min(c_l', r-1)          (full levels below r)
                    + #{l' < l : c_l' >= r} + 1      (same level, earlier lang)
 
-    where c_l' are the per-language kept counts.  Those counts are a
-    bounded collect (one row per language code — a domain of dozens even
-    at 100 TB corpus scale, the same labeled-bounded-collect idiom as the
-    Bloom build), folded into literal column arithmetic.  The ONLY
-    shuffles are the per-language rank window and the tiny count
-    aggregate — there is NO single-partition global window anywhere in
-    the plan, which is what makes the curriculum assignable at 100 TB
-    (a global ``row_number`` would serialize the entire corpus through
-    one task).  The (lang_rank, lang) pair is unique per row, so the
-    arithmetic position equals the oracle's sort position exactly —
-    hash-exact across engines."""
+    where c_l' are the per-language kept counts — a bounded collect (one
+    row per language code), folded into literal column arithmetic.  The
+    only shuffles are the per-language rank window and the tiny count
+    aggregate; no single-partition global window."""
     from functools import reduce
 
     from pyspark.storagelevel import StorageLevel
 
     from ..functions.text import quality_logit_micro
-    from ..operators.cache import attach_cached
 
-    docs = load_docs(spark, sf)
     # persisted BEFORE the keep filter: consumed by the rank window AND
     # the per-language count aggregate, and — the load-bearing part —
     # the cache boundary stops Catalyst from pushing `logit >= 0` below
@@ -7294,15 +7077,17 @@ def corpus_curriculum_order(spark: SparkSession, sf: str) -> DataFrame:
     # expression TWICE per row (Filter + Project; measured 26s -> 13s
     # per cold pass at sf10).  The filter lands on the cached long
     # instead — one fold, three cheap cached scans.
-    scored = docs.select(
+    scored = load_docs(spark, sf).select(
         "doc_id",
         "lang",
         quality_logit_micro(F.col("text")).alias("logit_micro"),
+        *(col.alias(name) for name, col in extra.items()),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     kept = scored.where(F.col("logit_micro") >= 0)
     ranked = kept.select(
         "doc_id",
         "lang",
+        *extra,
         "logit_micro",
         F.row_number()
         .over(
@@ -7338,19 +7123,76 @@ def corpus_curriculum_order(spark: SparkSession, sf: str) -> DataFrame:
         ],
         F.lit(0).cast("long"),
     )
-    out = ranked.select(
-        "doc_id",
-        "lang",
-        "logit_micro",
-        "lang_rank",
-        (below + ahead + 1).cast("long").alias("global_pos"),
+    positions = ranked.select(
+        "*", (below + ahead + 1).cast("long").alias("global_pos")
     )
-    return attach_cached(out, scored)
+    return positions, scored
+
+
+def _curriculum_stream(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
+    """The curriculum stream striped round-robin over the packing shards
+    (``shard = (global_pos - 1) % 16``) with each doc's token count, and
+    the persisted scored table to attach."""
+    from ..functions.text import token_count
+
+    positions, scored = _curriculum_positions(
+        spark, sf, n_tokens=token_count(F.col("text"))
+    )
+    stream = positions.select(
+        "doc_id", "lang", "n_tokens", "global_pos"
+    ).withColumn(
+        "shard", F.pmod(F.col("global_pos") - 1, F.lit(_PACK_SHARDS)).cast("int")
+    )
+    return stream, scored
 
 
 @query(
-    "corpus_curriculum_packing",
+    "corpus_curriculum_order",
     f"""
+    WITH t AS (
+      SELECT doc_id, lang, {_quality_logit_sql("text", "toks")} AS logit_micro
+      FROM (SELECT doc_id, lang, text, {_TOKENS_SQL} AS toks FROM documents)
+    ),
+    kept AS (SELECT doc_id, lang, logit_micro FROM t WHERE logit_micro >= 0),
+    r AS (
+      SELECT doc_id, lang, logit_micro,
+        CAST(row_number() OVER (PARTITION BY lang
+            ORDER BY logit_micro DESC, doc_id) AS INT) AS lang_rank
+      FROM kept
+    )
+    SELECT doc_id, lang, logit_micro, lang_rank,
+      CAST(row_number() OVER (ORDER BY lang_rank, lang) AS BIGINT)
+        AS global_pos
+    FROM r
+    """,
+)
+def corpus_curriculum_order(spark: SparkSession, sf: str) -> DataFrame:
+    """Training curriculum order (r13): compose the frozen quality gate
+    into the position every kept document occupies in the training
+    stream — best-first within each language, round-robin-interleaved
+    ACROSS languages so a loader reading positions 1..N in order sees a
+    language-balanced, quality-annealed curriculum (the standard
+    data-ordering stage between curation and sharding).
+
+    The oracle states the semantics as a single global sort
+    (``row_number() OVER (ORDER BY lang_rank, lang)``), but the Spark
+    plan computes ``global_pos`` ARITHMETICALLY from the bounded
+    per-language kept counts (``_curriculum_positions``).  There is NO
+    single-partition global window anywhere in the plan, which is what
+    makes the curriculum assignable at 100 TB (a global ``row_number``
+    would serialize the entire corpus through one task).  The
+    (lang_rank, lang) pair is unique per row, so the arithmetic position
+    equals the oracle's sort position exactly — hash-exact across
+    engines."""
+    from ..operators.cache import attach_cached
+
+    out, scored = _curriculum_positions(spark, sf)
+    return attach_cached(out, scored)
+
+
+# t/kept/r/g of the curriculum packing oracles: the quality-gated
+# documents with their token counts, at their global curriculum position
+_CURRICULUM_POS_CTES = f"""
     WITH t AS (
       SELECT doc_id, lang, {_quality_logit_sql("text", "toks")} AS logit_micro,
         len(toks) AS n_tokens
@@ -7368,7 +7210,12 @@ def corpus_curriculum_order(spark: SparkSession, sf: str) -> DataFrame:
         CAST(row_number() OVER (ORDER BY lang_rank, lang) AS BIGINT)
           AS global_pos
       FROM r
-    ),
+    ),"""
+
+
+@query(
+    "corpus_curriculum_packing",
+    f"""{_CURRICULUM_POS_CTES}
     p AS (
       SELECT doc_id, lang, n_tokens, global_pos,
         CAST((global_pos - 1) % 16 AS INT) AS shard,
@@ -7404,118 +7251,30 @@ def corpus_curriculum_packing(spark: SparkSession, sf: str) -> DataFrame:
     No-global-window discipline (the r13 rule): the oracle states
     ``global_pos`` as a global ``row_number``, but the Spark plan
     computes it ARITHMETICALLY from the bounded per-language kept
-    counts (≤ |langs| collected rows folded into literal column
-    arithmetic — see ``corpus_curriculum_order``'s derivation).  The
-    only shuffles are the per-language rank window, the tiny count
-    aggregate, and the per-shard packing window; nothing serializes the
-    corpus through one task.  (lang_rank, lang) is unique per row, so
-    the arithmetic position — and therefore every bin assignment —
-    equals the oracle's sort exactly: all-integer, hash-exact."""
-    from functools import reduce
-
-    from pyspark.storagelevel import StorageLevel
-
-    from ..functions.text import quality_logit_micro, token_count
+    counts (``_curriculum_positions``).  The only shuffles are the
+    per-language rank window, the tiny count aggregate, and the
+    per-shard packing window; nothing serializes the corpus through one
+    task.  (lang_rank, lang) is unique per row, so the arithmetic
+    position — and therefore every bin assignment — equals the oracle's
+    sort exactly: all-integer, hash-exact."""
     from ..operators.cache import attach_cached
 
-    cap, shards = 2048, 16
-    docs = load_docs(spark, sf)
-    # persisted before the keep filter for the same two reasons as
-    # corpus_curriculum_order: two consumers (rank window + count
-    # aggregate), and the cache boundary keeps Catalyst from pushing
-    # `logit >= 0` below the projection and evaluating the
-    # tokenize-heavy logit twice per row (measured 2x at sf10 there)
-    scored = docs.select(
-        "doc_id",
-        "lang",
-        quality_logit_micro(F.col("text")).alias("logit_micro"),
-        token_count(F.col("text")).alias("n_tokens"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    kept = scored.where(F.col("logit_micro") >= 0)
-    ranked = kept.select(
-        "doc_id",
-        "lang",
-        "n_tokens",
-        F.row_number()
-        .over(
-            Window.partitionBy("lang").orderBy(
-                F.col("logit_micro").desc(), "doc_id"
-            )
-        )
-        .cast("int")
-        .alias("lang_rank"),
-    )
-    # bounded collect: one (lang, count) row per language code
-    counts = sorted(
-        (row["lang"], int(row["cnt"]))
-        for row in kept.groupBy("lang").agg(F.count("*").alias("cnt")).collect()
-    )
-    rank_l = F.col("lang_rank").cast("long")
-    below = reduce(
-        lambda a, b: a + b,
-        [F.least(F.lit(c).cast("long"), rank_l - 1) for _, c in counts],
-        F.lit(0).cast("long"),
-    )
-    ahead = reduce(
-        lambda a, b: a + b,
-        [
-            F.when(
-                (F.lit(lg) < F.col("lang")) & (F.lit(c) >= F.col("lang_rank")),
-                1,
-            )
-            .otherwise(0)
-            .cast("long")
-            for lg, c in counts
-        ],
-        F.lit(0).cast("long"),
-    )
-    positioned = ranked.select(
-        "doc_id",
-        "lang",
-        "n_tokens",
-        (below + ahead + 1).cast("long").alias("global_pos"),
-    ).withColumn(
-        "shard", F.pmod(F.col("global_pos") - 1, F.lit(shards)).cast("int")
-    )
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("global_pos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    run = F.sum("n_tokens").over(w)
-    out = positioned.select(
+    stream, scored = _curriculum_stream(spark, sf)
+    out = _packed_bins(
+        stream,
+        "global_pos",
         "doc_id",
         "lang",
         "global_pos",
         "shard",
         F.col("n_tokens").cast("int").alias("n_tokens"),
-        ((run - F.col("n_tokens")) / cap).cast("int").alias("bin_id"),
-        ((run - F.col("n_tokens")) % cap).cast("int").alias("bin_offset"),
     )
     return attach_cached(out, scored)
 
 
 @query(
     "corpus_curriculum_packing_spans",
-    f"""
-    WITH t AS (
-      SELECT doc_id, lang, {_quality_logit_sql("text", "toks")} AS logit_micro,
-        len(toks) AS n_tokens
-      FROM (SELECT doc_id, lang, text, {_TOKENS_SQL} AS toks FROM documents)
-    ),
-    kept AS (SELECT * FROM t WHERE logit_micro >= 0),
-    r AS (
-      SELECT doc_id, lang, n_tokens,
-        CAST(row_number() OVER (PARTITION BY lang
-            ORDER BY logit_micro DESC, doc_id) AS INT) AS lang_rank
-      FROM kept
-    ),
-    g AS (
-      SELECT doc_id, lang, n_tokens,
-        CAST(row_number() OVER (ORDER BY lang_rank, lang) AS BIGINT)
-          AS global_pos
-      FROM r
-    ),
+    f"""{_CURRICULUM_POS_CTES}
     p AS (
       SELECT doc_id, lang, n_tokens, global_pos,
         CAST((global_pos - 1) % 16 AS INT) AS shard,
@@ -7529,20 +7288,7 @@ def corpus_curriculum_packing(spark: SparkSession, sf: str) -> DataFrame:
         CAST(tok_start + n_tokens - 1 AS BIGINT) AS tok_end
       FROM p WHERE n_tokens > 0
     )
-    SELECT doc_id, lang, global_pos, shard,
-      CAST(b.bin_id AS INT) AS bin_id,
-      CAST(GREATEST(tok_start, b.bin_id * 2048) - b.bin_id * 2048 AS INT)
-        AS bin_offset,
-      CAST(GREATEST(tok_start, b.bin_id * 2048) - tok_start AS INT)
-        AS doc_tok_start,
-      CAST(LEAST(tok_end, b.bin_id * 2048 + 2047)
-           - GREATEST(tok_start, b.bin_id * 2048) + 1 AS INT)
-        AS n_span_tokens
-    FROM s, LATERAL (
-      SELECT unnest(generate_series(tok_start // 2048, tok_end // 2048))
-        AS bin_id
-    ) b
-    """,
+    SELECT doc_id, lang, global_pos, shard,{_SPANS_SELECT_SQL}""",
 )
 def corpus_curriculum_packing_spans(spark: SparkSession, sf: str) -> DataFrame:
     """Curriculum-ordered packing, SPAN form (VERDICT r14 #7) — the last
@@ -7564,106 +7310,10 @@ def corpus_curriculum_packing_spans(spark: SparkSession, sf: str) -> DataFrame:
     ``(global_pos - 1) % 16``, then the row-local ``sequence`` +
     ``explode`` over the bins each doc touches (fan-out ≈ 1 row/doc).
     All-integer, hash-exact across engines."""
-    from functools import reduce
-
-    from pyspark.storagelevel import StorageLevel
-
-    from ..functions.text import quality_logit_micro, token_count
     from ..operators.cache import attach_cached
 
-    cap, shards = 2048, 16
-    docs = load_docs(spark, sf)
-    # same persist rationale as corpus_curriculum_packing: two consumers
-    # (rank window + count aggregate) and the cache boundary stops
-    # Catalyst from evaluating the tokenize-heavy logit twice per row
-    scored = docs.select(
-        "doc_id",
-        "lang",
-        quality_logit_micro(F.col("text")).alias("logit_micro"),
-        token_count(F.col("text")).alias("n_tokens"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    kept = scored.where(F.col("logit_micro") >= 0)
-    ranked = kept.select(
-        "doc_id",
-        "lang",
-        "n_tokens",
-        F.row_number()
-        .over(
-            Window.partitionBy("lang").orderBy(
-                F.col("logit_micro").desc(), "doc_id"
-            )
-        )
-        .cast("int")
-        .alias("lang_rank"),
-    )
-    # bounded collect: one (lang, count) row per language code
-    counts = sorted(
-        (row["lang"], int(row["cnt"]))
-        for row in kept.groupBy("lang").agg(F.count("*").alias("cnt")).collect()
-    )
-    rank_l = F.col("lang_rank").cast("long")
-    below = reduce(
-        lambda a, b: a + b,
-        [F.least(F.lit(c).cast("long"), rank_l - 1) for _, c in counts],
-        F.lit(0).cast("long"),
-    )
-    ahead = reduce(
-        lambda a, b: a + b,
-        [
-            F.when(
-                (F.lit(lg) < F.col("lang")) & (F.lit(c) >= F.col("lang_rank")),
-                1,
-            )
-            .otherwise(0)
-            .cast("long")
-            for lg, c in counts
-        ],
-        F.lit(0).cast("long"),
-    )
-    positioned = ranked.select(
-        "doc_id",
-        "lang",
-        "n_tokens",
-        (below + ahead + 1).cast("long").alias("global_pos"),
-    ).withColumn(
-        "shard", F.pmod(F.col("global_pos") - 1, F.lit(shards)).cast("int")
-    )
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("global_pos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    s = positioned.select(
-        "doc_id",
-        "lang",
-        "global_pos",
-        "shard",
-        "n_tokens",
-        (F.sum("n_tokens").over(w) - F.col("n_tokens")).alias("tok_start"),
-    ).where(F.col("n_tokens") > 0)
-    s = s.withColumn("tok_end", F.col("tok_start") + F.col("n_tokens") - 1)
-    bin_id = F.explode(
-        F.sequence(
-            (F.col("tok_start") / cap).cast("long"),
-            (F.col("tok_end") / cap).cast("long"),
-        )
-    )
-    s = s.select(
-        "doc_id", "lang", "global_pos", "shard", "tok_start", "tok_end",
-        bin_id.alias("bin_id"),
-    )
-    span_lo = F.greatest(F.col("tok_start"), F.col("bin_id") * cap)
-    span_hi = F.least(F.col("tok_end"), F.col("bin_id") * cap + (cap - 1))
-    out = s.select(
-        "doc_id",
-        "lang",
-        "global_pos",
-        "shard",
-        F.col("bin_id").cast("int").alias("bin_id"),
-        (span_lo - F.col("bin_id") * cap).cast("int").alias("bin_offset"),
-        (span_lo - F.col("tok_start")).cast("int").alias("doc_tok_start"),
-        (span_hi - span_lo + 1).cast("int").alias("n_span_tokens"),
-    )
+    stream, scored = _curriculum_stream(spark, sf)
+    out = _packed_spans(stream, "global_pos", "doc_id", "lang", "global_pos", "shard")
     return attach_cached(out, scored)
 
 
@@ -8111,6 +7761,17 @@ def multimodal_audio_dedup(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _harness_docs(spark: SparkSession, sf: str) -> DataFrame:
+    """The shifted-rendition harness keys of the audio and video near-dup
+    queries: content repeats every 10 ids (``gid``) and half the copies
+    are shifted one window or frame (``off`` = (doc_id // 10) % 2)."""
+    return load_docs(spark, sf).select(
+        "doc_id",
+        (F.col("doc_id") % 10).alias("gid"),
+        ((F.col("doc_id") / 10).cast("long") % 2).alias("off"),
+    )
+
+
 @query(
     "multimodal_audio_neardup",
     """
@@ -8160,11 +7821,7 @@ def multimodal_audio_neardup(spark: SparkSession, sf: str) -> DataFrame:
     belong to the fingerprint groupBy, replayed in the oracle's sized
     CTE), and the oracle recomputes bins-from-formula, the landmark
     triangle, the cap, and the match counts in SQL."""
-    docs = load_docs(spark, sf).select(
-        "doc_id",
-        (F.col("doc_id") % 10).alias("gid"),
-        ((F.col("doc_id") / 10).cast("long") % 2).alias("off"),
-    )
+    docs = _harness_docs(spark, sf)
     media = multimodal.synthetic_wav_media_tonal(
         docs, "doc_id", seed_col="gid", offset_col="off"
     )
@@ -8234,11 +7891,7 @@ def multimodal_audio_neardup_incremental(
     rows and 0.5-weighted back to exact set intersections, and the
     oracle replays bins-from-formula, the landmark triangle, the cap,
     the asymmetric restriction, and the weighted counts in SQL."""
-    docs = load_docs(spark, sf).select(
-        "doc_id",
-        (F.col("doc_id") % 10).alias("gid"),
-        ((F.col("doc_id") / 10).cast("long") % 2).alias("off"),
-    )
+    docs = _harness_docs(spark, sf)
     is_new = F.col("doc_id") % 7 == 0
     batch = multimodal.synthetic_wav_media_tonal(
         docs.where(is_new), "doc_id", seed_col="gid", offset_col="off"
@@ -8259,17 +7912,6 @@ def multimodal_audio_neardup_incremental(
     return attach_cached(out, *cached_deps(matched))
 
 
-def _audio_harness_docs(spark: SparkSession, sf: str) -> DataFrame:
-    """The shifted-rendition tonal WAV harness keys shared by the audio
-    near-dup queries: (gid, off) pick each track's tone sequence and
-    one-window time shift."""
-    return load_docs(spark, sf).select(
-        "doc_id",
-        (F.col("doc_id") % 10).alias("gid"),
-        ((F.col("doc_id") / 10).cast("long") % 2).alias("off"),
-    )
-
-
 def audio_serving_index_build(spark: SparkSession, sf: str) -> str:
     """BUILD leg of the audio stored-index serving query (VERDICT r14
     #3): synthesize + WAV-decode + FFT + landmark-triangle the CATALOG's
@@ -8281,7 +7923,7 @@ def audio_serving_index_build(spark: SparkSession, sf: str) -> str:
     once.  The r14 dial already measured the serve win (−63% at sf10
     with 7,153 real tail pairs); this leg makes the build
     driver-visible."""
-    catalog = _audio_harness_docs(spark, sf).where(F.col("doc_id") % 7 != 0)
+    catalog = _harness_docs(spark, sf).where(F.col("doc_id") % 7 != 0)
     media = multimodal.synthetic_wav_media_tonal(
         catalog, "doc_id", seed_col="gid", offset_col="off"
     )
@@ -8303,7 +7945,7 @@ def audio_serving_index_serve(
     + FFT + landmark build only for its own tracks and the catalog side
     is a decode-free parquet scan of the stamped index (``max_dt``
     asserted by ``indexstamp.guard_index`` at serve time)."""
-    batch = _audio_harness_docs(spark, sf).where(F.col("doc_id") % 7 == 0)
+    batch = _harness_docs(spark, sf).where(F.col("doc_id") % 7 == 0)
     media = multimodal.synthetic_wav_media_tonal(
         batch, "doc_id", seed_col="gid", offset_col="off"
     )
@@ -8356,9 +7998,9 @@ BUILD_SERVE["multimodal_audio_stored_serve"] = (
 )
 
 
-@query(
-    "multimodal_video_neardup",
-    """
+# d/bits/hash of the video near-dup and dedup oracles: each harness
+# frame's 64 dHash bits from their closed-form formula, packed to (hi, lo)
+_VIDEO_FRAME_HASH_CTES = """
     WITH d AS (
       SELECT doc_id, doc_id % 10 AS sd, (doc_id // 10) % 2 AS off
       FROM documents
@@ -8379,7 +8021,12 @@ BUILD_SERVE["multimodal_audio_stored_serve"] = (
         CAST(SUM(CASE WHEN k >= 32 THEN b * (1::BIGINT << (k - 32))
                  ELSE 0 END) AS BIGINT) AS hi
       FROM bits GROUP BY doc_id, f
-    ),
+    ),"""
+
+
+@query(
+    "multimodal_video_neardup",
+    f"""{_VIDEO_FRAME_HASH_CTES}
     keyed AS (
       SELECT doc_id, f, hi, lo, cs.ci,
         CASE cs.ci WHEN 0 THEN lo & 65535 WHEN 1 THEN (lo >> 16) & 65535
@@ -8422,11 +8069,7 @@ def multimodal_video_neardup(spark: SparkSession, sf: str) -> DataFrame:
     pigeonhole -> cap -> exact Hamming -> frame vote in pure SQL.  Any
     AVI-walk, JPEG-decode, block-sum, packing, bucketing, or vote bug
     breaks the value hash."""
-    docs = load_docs(spark, sf).select(
-        "doc_id",
-        (F.col("doc_id") % 10).alias("gid"),
-        ((F.col("doc_id") / 10).cast("long") % 2).alias("off"),
-    )
+    docs = _harness_docs(spark, sf)
     media = multimodal.synthetic_avi_media_grid(
         docs, "doc_id", seed_col="gid", offset_col="off"
     )
@@ -8438,28 +8081,7 @@ def multimodal_video_neardup(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "multimodal_video_dedup",
-    """
-    WITH d AS (
-      SELECT doc_id, doc_id % 10 AS sd, (doc_id // 10) % 2 AS off
-      FROM documents
-    ),
-    bits AS (
-      SELECT d.doc_id, fs.f, ks.k,
-        ((((d.sd*41 + (d.off+fs.f)*17 + ks.k)
-           * (d.sd*41 + (d.off+fs.f)*17 + ks.k)) * 37
-          + d.sd*131 + (d.off+fs.f)*73) % 251) % 2 AS b
-      FROM d,
-      LATERAL (SELECT unnest(generate_series(0, 3)) AS f) fs,
-      LATERAL (SELECT unnest(generate_series(0, 63)) AS k) ks
-    ),
-    hash AS (
-      SELECT doc_id, f,
-        CAST(SUM(CASE WHEN k < 32 THEN b * (1::BIGINT << k)
-                 ELSE 0 END) AS BIGINT) AS lo,
-        CAST(SUM(CASE WHEN k >= 32 THEN b * (1::BIGINT << (k - 32))
-                 ELSE 0 END) AS BIGINT) AS hi
-      FROM bits GROUP BY doc_id, f
-    ),
+    f"""{_VIDEO_FRAME_HASH_CTES}
     fp AS (
       SELECT doc_id,
         md5(string_agg(CAST(hi AS VARCHAR) || ':' || CAST(lo AS VARCHAR),
@@ -8483,11 +8105,7 @@ def multimodal_video_dedup(spark: SparkSession, sf: str) -> DataFrame:
     repairs.  The oracle replays bits -> (hi, lo) -> ordered
     string_agg -> md5 in SQL, checking fingerprint VALUES, not just
     group sizes."""
-    docs = load_docs(spark, sf).select(
-        "doc_id",
-        (F.col("doc_id") % 10).alias("gid"),
-        ((F.col("doc_id") / 10).cast("long") % 2).alias("off"),
-    )
+    docs = _harness_docs(spark, sf)
     media = multimodal.synthetic_avi_media_grid(
         docs, "doc_id", seed_col="gid", offset_col="off"
     )
@@ -8590,11 +8208,7 @@ def multimodal_video_neardup_incremental(
 
     from ..operators.cache import attach_cached, cached_deps
 
-    docs = load_docs(spark, sf).select(
-        "doc_id",
-        (F.col("doc_id") % 10).alias("gid"),
-        ((F.col("doc_id") / 10).cast("long") % 2).alias("off"),
-    )
+    docs = _harness_docs(spark, sf)
     media = multimodal.synthetic_avi_media_grid(
         docs, "doc_id", seed_col="gid", offset_col="off"
     )
@@ -8616,16 +8230,6 @@ def multimodal_video_neardup_incremental(
     return attach_cached(out, hashes, *cached_deps(matched))
 
 
-def _video_harness_docs(spark: SparkSession, sf: str) -> DataFrame:
-    """The shifted-rendition AVI harness keys shared by every video
-    near-dup query: (gid, off) pick each clip's frame contents."""
-    return load_docs(spark, sf).select(
-        "doc_id",
-        (F.col("doc_id") % 10).alias("gid"),
-        ((F.col("doc_id") / 10).cast("long") % 2).alias("off"),
-    )
-
-
 def video_serving_index_build(spark: SparkSession, sf: str) -> str:
     """BUILD leg of the video stored-index serving query (VERDICT r13
     #3): synthesize + container-walk + per-frame-JPEG-decode + dHash the
@@ -8637,7 +8241,7 @@ def video_serving_index_build(spark: SparkSession, sf: str) -> str:
     ``multimodal_video_dedup``'s sf10 cost), which is exactly why this
     family's stored serve is the biggest amortization (−72% at sf1 in
     the r13 dial)."""
-    catalog = _video_harness_docs(spark, sf).where(F.col("doc_id") % 7 != 0)
+    catalog = _harness_docs(spark, sf).where(F.col("doc_id") % 7 != 0)
     media = multimodal.synthetic_avi_media_grid(
         catalog, "doc_id", seed_col="gid", offset_col="off"
     )
@@ -8658,7 +8262,7 @@ def video_serving_index_serve(
     parquet scan of the stamped index."""
     from ..operators.cache import attach_cached, cached_deps
 
-    batch = _video_harness_docs(spark, sf).where(F.col("doc_id") % 7 == 0)
+    batch = _harness_docs(spark, sf).where(F.col("doc_id") % 7 == 0)
     media = multimodal.synthetic_avi_media_grid(
         batch, "doc_id", seed_col="gid", offset_col="off"
     )

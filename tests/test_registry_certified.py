@@ -2,6 +2,7 @@
 --json`` runs over every ``queries()`` entry at sf0.001 and sf0.01 must
 cover the registry as it stands, every row green (read here, no Spark)."""
 
+import hashlib
 import json
 from pathlib import Path
 
@@ -73,3 +74,20 @@ def test_certificate_problems_names_each_tampering(case):
     tamper(doc)
     problems = certificate_problems(doc, NAMES, ORACLES)
     assert len(problems) == 1 and named in problems[0], problems
+
+
+# sha256 of the name -> oracle SQL map (items in registration order) and of
+# the ``queries()`` key order. A refactor of the registry keeps both; an
+# intended oracle or registry edit recomputes both and re-runs both
+# certificates above.
+ORACLE_SQL_SHA256 = "1c9b348420d7dbecce55c40a99ab4ff51737101c838b9690a7990bd890da1802"
+QUERY_ORDER_SHA256 = "65aa6e688c968a92328e3272f6c9bd57853b45cead643a321daae56b6f5bec85"
+
+
+def _sha256_json(value) -> str:
+    return hashlib.sha256(json.dumps(value).encode()).hexdigest()
+
+
+def test_registry_pinned_byte_for_byte():
+    assert _sha256_json(list(benchmarks.ORACLE_SQL.items())) == ORACLE_SQL_SHA256
+    assert _sha256_json(list(benchmarks.SPARK_QUERIES)) == QUERY_ORDER_SHA256

@@ -272,8 +272,9 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
 
 
 def test_load_config_file(tmp_path, monkeypatch):
-    """Config-file deployment path: comments stripped, ${ENV} substituted,
-    nested dataclasses built, validation + unknown-key rejection intact."""
+    """Config-file deployment path: comments stripped, ${ENV} substituted
+    (an unset one rejected), nested dataclasses built, validation +
+    unknown-key rejection intact."""
     import pytest
 
     from platform_etl_openfda_faers_spark.config import load_config
@@ -313,6 +314,13 @@ def test_load_config_file(tmp_path, monkeypatch):
     unknown.write_text('{"fda": {"not_a_key": 1}}')
     with pytest.raises(ValueError, match="unknown FdaConfig keys"):
         load_config(str(unknown))
+
+    # an unset ${VAR} fails here, not later as a literal missing path
+    monkeypatch.delenv("NO_SUCH_VAR_X", raising=False)
+    unset = tmp_path / "unset.conf"
+    unset.write_text('{"fda": {"fda_data": "${NO_SUCH_VAR_X}/fda/*.jsonl"}}')
+    with pytest.raises(ValueError, match="NO_SUCH_VAR_X"):
+        load_config(str(unset))
 
 
 def test_load_table_normalizes_ntz_timestamps(spark, sf_dir):

@@ -8,6 +8,7 @@ CLI also gets one end-to-end smoke run.
 
 import ast
 import importlib
+import os
 import subprocess
 import sys
 from pathlib import Path
@@ -107,6 +108,23 @@ def test_check_correctness_rejects_unknown_query(sf_dir):
         cwd=REPO, capture_output=True, text=True, timeout=300,
     )
     assert out.returncode == 2, out.stdout[-2000:]
+    assert "no_such_query" in out.stderr
+    assert "q1_pricing_summary" not in out.stderr
+
+
+def test_bench_rejects_unknown_query_before_spark():
+    """``SPARK_GRAFT_BENCH_QUERIES`` names are checked before the JVM
+    starts: an unknown one exits 2 naming it, also under ``python -O``."""
+    env = {
+        **os.environ,
+        "SPARK_GRAFT_CPUS": "1",
+        "SPARK_GRAFT_BENCH_QUERIES": "q1_pricing_summary,no_such_query",
+    }
+    out = subprocess.run(
+        [sys.executable, "-O", "bench.py"],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 2, out.stderr[-2000:]
     assert "no_such_query" in out.stderr
     assert "q1_pricing_summary" not in out.stderr
 
