@@ -6,25 +6,31 @@ Each query is forced to full execution with a noop sink (no driver collect
 skew, no result materialization cost in the measurement).
 
 Flags / env:
-- ``--cold`` (or SPARK_GRAFT_BENCH_COLD=1): clear every cache/persist
-  between ITERATIONS too (not just between queries), so the number is a
-  cold-cache number.  Cold per-query values are the MEDIAN over
-  iterations (cold runs vary ±40% on heavy persisting queries — r6
-  SCALING.md; a min-of-N cold is a lucky draw, the median is the
-  representative cost).  Warm mode keeps min (steady-state plan cost).
-- ``--iters N`` (or SPARK_GRAFT_BENCH_ITERS): iterations per query
-  (default 2 warm, 3 cold).
+- ``--cold``: clear every cache/persist between ITERATIONS too (not just
+  between queries), so the number is a cold-cache number.  Cold
+  per-query values are the MEDIAN over iterations (cold runs vary ±40%
+  on heavy persisting queries — r6 SCALING.md; a min-of-N cold is a
+  lucky draw, the median is the representative cost).  Warm mode keeps
+  min (steady-state plan cost).  A cold run refuses to start on a busy
+  box (see LOAD_GATE and STEAL_GATE_PCT); SPARK_GRAFT_BENCH_FORCE=1 runs
+  it anyway and tags ``box_state.gate``.
+- ``--iters N``: iterations per query, a positive integer (default 2
+  warm, 3 cold).  Flags are parsed before the start gates and the JVM
+  start: an unknown flag or a bad value exits 2.
 - SPARK_GRAFT_BENCH_QUERIES: comma-separated subset of the headline
   queries to run (default: all) — used for the sf10 spot-runs where only
   the scale-sensitive queries are re-measured.  An unknown name exits 2
   before Spark starts.
+- SPARK_GRAFT_BENCH_PARTITIONS: shuffle partitions (default: the core
+  count, at least 8).
 
 Output contract (r7 — fixes the r6 ``parsed: null`` driver record): the
-LAST stdout line is a COMPACT machine-readable JSON summary
-(metric/value/unit/queries/sf/cold/complete only — it must fit the
-driver's tail-capture window).  Everything else — per-iteration times,
-first-run times, per-query shuffle bytes/spill, error detail — goes to a
-side file (``SPARK_GRAFT_BENCH_DETAIL`` path, default
+LAST stdout line is a COMPACT machine-readable JSON summary (the
+headline series of ``headline_summary`` plus sf/cold/complete and the
+box-state verdicts only — it must fit a caller that keeps only the
+tail of stdout).  Everything else — per-iteration times, first-run times,
+per-query shuffle bytes/spill, the build/serve split, error detail —
+goes to a side file (``SPARK_GRAFT_BENCH_DETAIL`` path, default
 ``BENCH_DETAIL.json`` next to this script).
 
 Shuffle accounting: every run also records per-query shuffle bytes
@@ -40,6 +46,7 @@ can legitimately shuffle less).
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
@@ -105,70 +112,6 @@ LOAD_GATE = 1.0
 # visibly-slowed video solo and <0.5% on the clean solos — 2% splits
 # those populations with margin.
 STEAL_GATE_PCT = 2.0
-
-
-# Auto-promotion threshold for the rule below: a cold per-query
-# iteration spread (max/min) above this in TWO consecutive committed
-# suites at the same SF promotes the query into the flapper set.
-FLAPPER_AUTO_SPREAD = 2.0
-FLAPPER_AUTO_ITERS = 5
-
-
-def auto_promoted_flappers(sf_dir: str) -> dict[str, dict]:
-    """General flapper rule (VERDICT r14 #6): any query whose cold
-    ``queries_spread`` exceeded ``FLAPPER_AUTO_SPREAD`` in the TWO most
-    recent committed cold suites at this scale factor is promoted to
-    ``FLAPPER_AUTO_ITERS`` minimum cold iterations automatically —
-    heavy-persisting folds on this box flap structurally, and the manual
-    per-round judge/builder ping-pong (faers_llr r8,
-    dedup_incremental_minhash r14) is now the mechanical rule's first
-    instances.  Returns {query: {"rounds": [r, r'], "spreads": [s, s']}}
-    — recorded verbatim in the detail artifact as
-    ``flapper_auto_promoted`` so the promotion is self-describing.
-
-    Evidence source: the committed ``BENCH_DETAIL_r{N}_sf{X}.json``
-    cold-suite artifacts in the repo root (the files the judge already
-    reads); a query must appear with spread > threshold in BOTH of the
-    two most recent rounds that have a cold suite at this SF."""
-    import re
-
-    tag = "sf" + sf_dir.rstrip("/").rsplit("sf", 1)[-1].replace(".", "")
-    per_round: dict[int, dict] = {}
-    root = Path(__file__).resolve().parent
-    # current + previous round's suites live in the repo root; older
-    # rounds move to artifacts/r{NN}/ at round close (BASELINE.md
-    # retention policy) — scan both so the two-round evidence window
-    # survives the rotation
-    # ARTIFACTS FIRST, repo root second: per_round is keyed by round
-    # number and later reads overwrite, so mid-rotation (the same
-    # round's suite present in BOTH places) the repo-root copy — the
-    # authoritative, most recently committed one — wins deterministically
-    # instead of depending on scan order (ADVICE r15 low)
-    candidates = list(
-        root.glob(f"artifacts/r*/BENCH_DETAIL_r*_{tag}.json")
-    ) + list(root.glob(f"BENCH_DETAIL_r*_{tag}.json"))
-    for p in candidates:
-        m = re.fullmatch(r"BENCH_DETAIL_r(\d+)_" + re.escape(tag) + r"\.json",
-                         p.name)
-        if not m:
-            continue  # solo/dial/probe artifacts carry extra name parts
-        try:
-            d = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        if d.get("cold") and isinstance(d.get("queries_spread"), dict):
-            per_round[int(m.group(1))] = d["queries_spread"]
-    if len(per_round) < 2:
-        return {}
-    r_prev, r_last = sorted(per_round)[-2:]
-    a, b = per_round[r_prev], per_round[r_last]
-    return {
-        q: {"rounds": [r_prev, r_last], "spreads": [a[q], b[q]]}
-        for q in sorted(set(a) & set(b))
-        if a[q] > FLAPPER_AUTO_SPREAD
-        and b[q] > FLAPPER_AUTO_SPREAD
-        and q not in FLAPPER_MIN_ITERS
-    }
 
 
 def err_summary(exc: Exception) -> str:
@@ -259,11 +202,132 @@ from platform_etl_openfda_faers_spark.plans.metrics import (  # noqa: E402
 from platform_etl_openfda_faers_spark.session import get_spark  # noqa: E402
 
 
+def _positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1, got {n}")
+    return n
+
+
+def _release(spark) -> None:
+    """Drop every cached/persisted intermediate and hint a JVM GC.
+    Between queries this stops one query's persists leaking memory
+    pressure into the next (r3: ngram-jaccard timed 3x its isolated cost
+    mid-suite); between cold iterations it keeps iteration 2+ off
+    iteration 1's intermediates (the OS page cache is out of scope)."""
+    spark.catalog.clearCache()
+    spark.sparkContext._jvm.System.gc()
+
+
+def _refuse_or_force(box: dict, reason: str, tag: str) -> None:
+    """Start gate of a ``--cold`` run on a busy box: exit 2 naming
+    ``reason``, unless SPARK_GRAFT_BENCH_FORCE=1, which runs anyway and
+    adds ``tag`` to ``box["gate"]``.  Labels accumulate, so a box both
+    loaded and stealing reads ``forced_loaded+forced_steal``."""
+    if os.environ.get("SPARK_GRAFT_BENCH_FORCE", "") in ("", "0"):
+        print(
+            f"REFUSING cold bench: {reason} — a busy box measures "
+            "contention, not the plan.  Wait for the box to quiesce, or "
+            "set SPARK_GRAFT_BENCH_FORCE=1 to run anyway (the artifact "
+            f"will be tagged {tag}).",
+            file=sys.stderr,
+        )
+        sys.exit(2)
+    box["gate"] = tag if box["gate"] == "ok" else f"{box['gate']}+{tag}"
+
+
+def headline_summary(
+    timings: dict[str, float],
+    build_serve: dict[str, dict],
+    subset: list[str] | None,
+) -> dict:
+    """The series fields of the stdout line, from the per-query times.
+
+    ``value``/``queries`` is the FROZEN legacy-20 series (comparable back
+    to r5).  v2 (r10), v3 (r12) and v4 (r15) each add their extra members
+    to the series before them, and a ``headline_vN`` block appears when at
+    least one of its extras ran: the running ``value`` and the extras'
+    own times (only those, so the line stays short enough for a caller
+    that keeps only the tail of stdout).  A v-series total is never compared with a
+    total from before its round.  From v4 on, a ``BUILD_SERVE`` member
+    counts its SERVE-ONLY leg — the per-batch serving cost the series
+    tracks; its one-time build stays in ``queries_build_serve`` — and the
+    block lists every member's ``contrib``; a member whose split failed
+    counts its full time and is named in ``serve_leg_missing``.  Every
+    series names the members it should sum but could not (errored) in
+    ``missing_members``, so a partial total is never compared silently
+    (VERDICT r15 #2b).  An explicit-subset run sums what ran, names its
+    queries under ``subset`` and has no series blocks: its ``value`` is
+    not legacy-comparable (r10 ADVICE)."""
+    legacy = (
+        timings
+        if subset
+        else {n: t for n, t in timings.items() if n in benchmarks.HEADLINE}
+    )
+    total = sum(legacy.values())
+    out: dict = {
+        "metric": "headline-queries wall time",
+        "value": round(total, 3),
+        "unit": "sec",
+        "queries": legacy,
+    }
+    if subset:
+        out["subset"] = subset
+        return out
+    members = list(benchmarks.HEADLINE)
+    missing = [n for n in members if n not in timings]
+    if missing:
+        out["missing_members"] = missing
+    series = (
+        (2, benchmarks.HEADLINE_V2_EXTRA),
+        (3, benchmarks.HEADLINE_V3_EXTRA),
+        (4, benchmarks.HEADLINE_V4_EXTRA),
+    )
+    for version, extras in series:
+        members += extras
+        extra = {n: t for n, t in timings.items() if n in extras}
+        legs = {
+            n: build_serve.get(n, {}).get("serve_only_s")
+            for n in extra
+            if version >= 4 and n in benchmarks.BUILD_SERVE
+        }
+        leg_missing = [n for n, leg in legs.items() if leg is None]
+        contrib = {
+            n: t if legs.get(n) is None else legs[n] for n, t in extra.items()
+        }
+        total += sum(contrib.values())
+        if not extra:
+            continue
+        block: dict = {"value": round(total, 3), "extra_queries": extra}
+        if version >= 4:
+            block["contrib"] = {n: round(v, 3) for n, v in contrib.items()}
+        if leg_missing:
+            block["serve_leg_missing"] = leg_missing
+        missing = [n for n in members if n not in timings]
+        if missing:
+            block["missing_members"] = missing
+        out[f"headline_v{version}"] = block
+    return out
+
+
 def main() -> None:
+    parser = argparse.ArgumentParser(
+        description="Time the headline queries; print one JSON line."
+    )
+    parser.add_argument(
+        "--cold", action="store_true",
+        help="clear caches between iterations too; report the median",
+    )
+    # warm: min over iterations (steady-state plan cost, not first-run
+    # JIT / codegen / GC noise).  cold: median (see module docstring).
+    parser.add_argument(
+        "--iters", type=_positive_int,
+        help="iterations per query (default 2 warm, 3 cold)",
+    )
+    args = parser.parse_args()
+    cold = args.cold
+    iters = args.iters or (3 if cold else 2)
     subset = os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "")
-    # legacy-20 + the v2 extras (r10): the summary keeps "value"/"queries"
-    # as the FROZEN legacy set (cross-round comparable back to r5) and
-    # adds a "headline_v2" block with the extended total + extra timings
     names = [
         *benchmarks.HEADLINE,
         *benchmarks.HEADLINE_V2_EXTRA,
@@ -286,9 +350,6 @@ def main() -> None:
         # subsets keep the caller's order.
         storm = [n for n in benchmarks.RUN_LAST if n in names]
         names = [n for n in names if n not in storm] + storm
-    cold = "--cold" in sys.argv or os.environ.get(
-        "SPARK_GRAFT_BENCH_COLD", ""
-    ) not in ("", "0")
     box = read_box_state()
     ticks0 = read_cpu_ticks()
     # the load gate only applies to --cold runs; a warm artifact must not
@@ -296,17 +357,9 @@ def main() -> None:
     # reading the field must never invite) — label warm runs distinctly
     box["gate"] = "ok" if cold else "ungated_warm"
     if cold and box["load1"] > LOAD_GATE:
-        if os.environ.get("SPARK_GRAFT_BENCH_FORCE", "") in ("", "0"):
-            print(
-                f"REFUSING cold bench: 1-min load {box['load1']} > "
-                f"{LOAD_GATE} — a loaded box measures contention, not the "
-                "plan.  Wait for the box to quiesce, or set "
-                "SPARK_GRAFT_BENCH_FORCE=1 to run anyway (the artifact "
-                "will be tagged forced_loaded).",
-                file=sys.stderr,
-            )
-            sys.exit(2)
-        box["gate"] = "forced_loaded"
+        _refuse_or_force(
+            box, f"1-min load {box['load1']} > {LOAD_GATE}", "forced_loaded"
+        )
     if cold:
         # 1-second steal probe before committing to a timed run (see
         # STEAL_GATE_PCT above) — the bracket is instantaneous-ish, so
@@ -317,24 +370,11 @@ def main() -> None:
         start_steal = steal_summary(probe0, read_cpu_ticks())
         box["steal_start"] = start_steal
         if start_steal and start_steal["steal_pct"] > STEAL_GATE_PCT:
-            if os.environ.get("SPARK_GRAFT_BENCH_FORCE", "") in ("", "0"):
-                print(
-                    f"REFUSING cold bench: start-probe steal "
-                    f"{start_steal['steal_pct']}% > {STEAL_GATE_PCT}% — a "
-                    "noisy hypervisor neighbor measures contention, not "
-                    "the plan.  Wait for the box to quiesce, or set "
-                    "SPARK_GRAFT_BENCH_FORCE=1 (the artifact will be "
-                    "tagged forced_steal).",
-                    file=sys.stderr,
-                )
-                sys.exit(2)
-            # accumulate gate labels — a box that is BOTH loaded and
-            # stealing keeps both provenance tags in the artifact
-            # (previously 'forced_steal' overwrote 'forced_loaded')
-            box["gate"] = (
-                "forced_steal"
-                if box["gate"] == "ok"
-                else box["gate"] + "+forced_steal"
+            _refuse_or_force(
+                box,
+                f"start-probe steal {start_steal['steal_pct']}% > "
+                f"{STEAL_GATE_PCT}%",
+                "forced_steal",
             )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -347,18 +387,6 @@ def main() -> None:
     parts = os.environ.get(
         "SPARK_GRAFT_BENCH_PARTITIONS", str(max(int(cpus), 8))
     )
-    # effective flapper set = manual pins + the mechanical two-round
-    # spread rule (cold mode only — warm min-of-N doesn't flap)
-    auto_flap = auto_promoted_flappers(sf_dir) if cold else {}
-    flapper_iters = dict(FLAPPER_MIN_ITERS)
-    flapper_iters.update({q: FLAPPER_AUTO_ITERS for q in auto_flap})
-    if auto_flap:
-        print(
-            f"flapper auto-promotion: {sorted(auto_flap)} exceed "
-            f"{FLAPPER_AUTO_SPREAD}x cold spread in two consecutive "
-            f"committed suites -> min {FLAPPER_AUTO_ITERS} iterations",
-            file=sys.stderr,
-        )
     spark = get_spark(
         "bench",
         master=f"local[{cpus}]",
@@ -376,14 +404,6 @@ def main() -> None:
         "noop"
     ).mode("overwrite").save()
 
-    # warm: min over iterations (steady-state plan cost, not first-run
-    # JIT / codegen / GC noise).  cold: median (see module docstring).
-    if "--iters" in sys.argv:
-        iters = int(sys.argv[sys.argv.index("--iters") + 1])
-    else:
-        iters = int(
-            os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3" if cold else "2")
-        )
     metrics = StageMetrics(spark)
     timings: dict[str, float] = {}
     all_iters: dict[str, list[float]] = {}
@@ -395,15 +415,11 @@ def main() -> None:
         runs: list[float] = []
         # one failing query must not sink the whole bench (r3: a single
         # analysis error -> rc=1 -> no official number for the round)
-        q_iters = max(iters, flapper_iters.get(name, 0)) if cold else iters
+        q_iters = max(iters, FLAPPER_MIN_ITERS.get(name, 0)) if cold else iters
         try:
             for i in range(q_iters):
                 if cold and i:
-                    # cold mode: iteration 2+ must not ride iteration 1's
-                    # persisted intermediates or OS-warm JVM buffers we
-                    # control; page cache is out of scope (no root drop)
-                    spark.catalog.clearCache()
-                    spark.sparkContext._jvm.System.gc()
+                    _release(spark)
                 if i == 0:
                     metrics.snapshot()
                 t0 = time.time()
@@ -421,11 +437,7 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 — report and continue
             errors[name] = err_summary(exc)
         finally:
-            # cached/persisted intermediates from one query otherwise leak
-            # memory pressure into the next (r3: ngram-jaccard timed 3x its
-            # isolated cost mid-suite); JVM GC hint clears humongous refs
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
+            _release(spark)
 
     # build-vs-serve split (VERDICT r12 #4): for registry queries that
     # deliberately time a one-time index BUILD plus the per-batch SERVE
@@ -439,15 +451,13 @@ def main() -> None:
         if name not in timings:
             continue
         try:
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
+            _release(spark)
             t0 = time.time()
             idx = build_fn(spark, sf_dir)
             build_s = round(time.time() - t0, 3)
             serve_runs: list[float] = []
             for _ in range(iters):
-                spark.catalog.clearCache()
-                spark.sparkContext._jvm.System.gc()
+                _release(spark)
                 t0 = time.time()
                 serve_fn(spark, sf_dir, idx).write.format("noop").mode(
                     "overwrite"
@@ -462,8 +472,7 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 — the split is auxiliary
             errors[f"{name}__build_serve"] = err_summary(exc)
         finally:
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
+            _release(spark)
 
     # whole-run steal/iowait share (hypervisor contention the load gate
     # cannot see) — recorded into box_state so the committed artifact
@@ -493,7 +502,7 @@ def main() -> None:
     # that was 100% warm-up; the raw all-iterations ratio stays in the
     # detail file as queries_spread_all for adjudication).
     def _spread_core(n: str, rs: list[float]) -> list[float]:
-        if cold and n in flapper_iters and len(rs) >= 3:
+        if cold and n in FLAPPER_MIN_ITERS and len(rs) >= 3:
             return rs[1:]
         return rs
 
@@ -527,14 +536,10 @@ def main() -> None:
         "queries_spread": spread,
         "queries_spread_all": spread_all,
         "spread_policy": (
-            "flapper queries (FLAPPER_MIN_ITERS + flapper_auto_promoted) "
-            "exclude iteration 1 from queries_spread in cold mode; "
-            "queries_spread_all is the raw all-iterations ratio"
+            "flapper queries (FLAPPER_MIN_ITERS) exclude iteration 1 from "
+            "queries_spread in cold mode; queries_spread_all is the raw "
+            "all-iterations ratio"
         ),
-        # the mechanical promotion rule's evidence (VERDICT r14 #6):
-        # {query: {rounds: [r, r'], spreads: [s, s']}} from the two most
-        # recent committed cold suites at this SF
-        "flapper_auto_promoted": auto_flap,
         # actual run order — per-query numbers are position-aware
         # (CPU-storm queries are scheduled last in full-suite runs)
         "run_order": names,
@@ -551,273 +556,23 @@ def main() -> None:
     )
     Path(detail_path).write_text(json.dumps(detail, indent=1))
     print(f"detail -> {detail_path}", file=sys.stderr)
-    # explicit-subset spot runs keep the old whole-result contract; only
-    # the default full-suite run splits legacy vs v2-extra
-    legacy = (
-        timings
-        if subset
-        else {n: t for n, t in timings.items() if n in benchmarks.HEADLINE}
-    )
-    extra = (
-        {}
-        if subset
-        else {
-            n: t
-            for n, t in timings.items()
-            if n in benchmarks.HEADLINE_V2_EXTRA
-        }
-    )
-    extra3 = (
-        {}
-        if subset
-        else {
-            n: t
-            for n, t in timings.items()
-            if n in benchmarks.HEADLINE_V3_EXTRA
-        }
-    )
-    extra4 = (
-        {}
-        if subset
-        else {
-            n: t
-            for n, t in timings.items()
-            if n in benchmarks.HEADLINE_V4_EXTRA
-        }
-    )
-    out = {
-        "metric": "headline-queries wall time",
-        "value": round(sum(legacy.values()), 3),
-        "unit": "sec",
-        "queries": legacy,
-        "sf": sf_val,
-        "cold": cold,
-        # a partial total is NOT comparable to a complete one (a failing
-        # slow query would read as a speedup) — flag it loudly
-        "complete": not errors,
-        # box state at start: 1-min load + gate verdict (full triple in
-        # the detail/summary files) — "was the box quiet" is part of the
-        # number, not a footnote
-        # start gate + end-of-run steal verdict (full triple, probe and
-        # cpu_run detail live in the detail/summary files)
-        "box_state": {
+    out = headline_summary(timings, build_serve, names if subset else None)
+    # a partial total is NOT comparable to a complete one (a failing slow
+    # query would read as a speedup) — flag it loudly; the start gate and
+    # the end-of-run steal verdict are part of the number, not a footnote
+    # (full triple, probe and cpu_run live in the detail file)
+    out.update(
+        sf=sf_val,
+        cold=cold,
+        complete=not errors,
+        box_state={
             "load1": box["load1"],
             "gate": box["gate"],
             "steal_gate": box["steal_gate"],
         },
-    }
-    if subset:
-        # an explicit-subset spot run's "value" is NOT legacy-comparable;
-        # mark the artifact itself so downstream round-over-round
-        # comparisons can mechanically exclude it (r10 ADVICE)
-        out["subset"] = names
-
-    def _missing(*member_sets) -> list[str]:
-        """Members a series total SHOULD sum but can't (errored) — a
-        partial v-series total silently compared across rounds misled
-        the r15 warm anchor (VERDICT r15 #2b); every block now names
-        its absences so a reader/diff tool can exclude it mechanically."""
-        want = [n for s in member_sets for n in s]
-        return [n for n in want if n not in timings]
-
-    legacy_missing = [] if subset else _missing(benchmarks.HEADLINE)
-    if legacy_missing:
-        out["missing_members"] = legacy_missing
-    if extra:
-        # the v2 total sums the legacy set AND the family representatives;
-        # only the four extra per-query timings are repeated here (the
-        # stdout line must stay inside the driver's tail-capture window)
-        out["headline_v2"] = {
-            "value": round(sum(legacy.values()) + sum(extra.values()), 3),
-            "extra_queries": extra,
-        }
-        m = _missing(benchmarks.HEADLINE, benchmarks.HEADLINE_V2_EXTRA)
-        if m:
-            out["headline_v2"]["missing_members"] = m
-    if extra3:
-        # v3 (r12): v2 plus the r11/r12 family representatives — a frozen
-        # cross-round series from r12 on, never compared to pre-r12 totals
-        out["headline_v3"] = {
-            "value": round(
-                sum(legacy.values()) + sum(extra.values())
-                + sum(extra3.values()),
-                3,
-            ),
-            "extra_queries": extra3,
-        }
-        m = _missing(
-            benchmarks.HEADLINE,
-            benchmarks.HEADLINE_V2_EXTRA,
-            benchmarks.HEADLINE_V3_EXTRA,
-        )
-        if m:
-            out["headline_v3"]["missing_members"] = m
-    if extra4:
-        # v4 (r15, VERDICT r14 #4): v3 plus the r13-r15 family
-        # representatives — first measured in r15, never compared to
-        # pre-r15 totals.  The two BUILD_SERVE members contribute their
-        # SERVE-ONLY leg (per-batch serving cost — the thing the series
-        # should track; their one-time build legs stay in
-        # queries_build_serve); if a serve split failed, the full query
-        # time is used and the member is named in serve_leg_missing.
-        v4_contrib: dict[str, float] = {}
-        leg_missing: list[str] = []
-        for n, t in extra4.items():
-            if n in benchmarks.BUILD_SERVE:
-                leg = build_serve.get(n, {}).get("serve_only_s")
-                if leg is None:
-                    leg_missing.append(n)
-                    v4_contrib[n] = t
-                else:
-                    v4_contrib[n] = leg
-            else:
-                v4_contrib[n] = t
-        out["headline_v4"] = {
-            "value": round(
-                sum(legacy.values()) + sum(extra.values())
-                + sum(extra3.values()) + sum(v4_contrib.values()),
-                3,
-            ),
-            "extra_queries": extra4,
-            "contrib": {n: round(v, 3) for n, v in v4_contrib.items()},
-        }
-        if leg_missing:
-            out["headline_v4"]["serve_leg_missing"] = leg_missing
-        m = _missing(
-            benchmarks.HEADLINE,
-            benchmarks.HEADLINE_V2_EXTRA,
-            benchmarks.HEADLINE_V3_EXTRA,
-            benchmarks.HEADLINE_V4_EXTRA,
-        )
-        if m:
-            out["headline_v4"]["missing_members"] = m
-    # committed-artifact form (SPARK_GRAFT_BENCH_SUMMARY=path): the
-    # summary ENRICHED with full box state, per-query iteration spreads,
-    # and per-query shuffle-byte totals — so the "byte-identical shuffles,
-    # uniform inflation" adjudication is machine-checkable from the
-    # committed BENCH_LOCAL_* file alone.  stdout stays compact (driver
-    # tail-capture window, r7 contract).
-    summary_path = os.environ.get("SPARK_GRAFT_BENCH_SUMMARY", "")
-    if summary_path:
-        enriched = {
-            **out,
-            "box_state": box,
-            "iters": iters,
-            "queries_effective_iters": {
-                n: len(rs) for n, rs in all_iters.items()
-            },
-            "queries_spread": spread,
-            "run_order": names,
-            "shuffle_bytes": shuffle,
-        }
-        if build_serve:
-            enriched["queries_build_serve"] = build_serve
-        Path(summary_path).write_text(json.dumps(enriched, indent=1))
-        print(f"summary -> {summary_path}", file=sys.stderr)
+    )
     print(json.dumps(out))
 
 
-# Whole-run steal share above which --retry-until-clean convicts an
-# attempt even though the 2% hard gate passed: the r15 adjudication
-# measured ~1.5% integrated steal inflating cold totals ~10% — runs in
-# the 1-2% band are gate-green but not comparison-grade.
-RETRY_STEAL_PCT = 1.0
-
-
-def retry_until_clean(max_attempts: int) -> int:
-    """Self-retrying cold-suite driver (VERDICT r15 #8): re-run the
-    bench as a SUBPROCESS (a fresh JVM per attempt — cold means cold)
-    until the committed artifact is comparison-grade, keeping every
-    convicted attempt under a suffixed name so the retry history stays
-    auditable.  An attempt is convicted when:
-
-    - the bench refused to start (load/steal start gate, exit 2) — no
-      artifact; wait for the box to decay and try again;
-    - ``box_state.steal_gate`` == "exceeded" (the 2% hard gate); or
-    - whole-run steal > ``RETRY_STEAL_PCT`` (gate-green but inflated —
-      the r13-r15 rounds all lost adjudication time to this band).
-
-    Convicted artifacts are renamed ``*_steal_exceeded_a<k>.json`` (the
-    name the round protocol already treats as self-convicting); the
-    clean attempt keeps the caller's configured paths.  This replaces
-    the manual probe-run-rename-retry loop two of three r15 suites
-    needed."""
-    import subprocess
-
-    args = [a for a in sys.argv[1:]]
-    i = args.index("--retry-until-clean")
-    del args[i : i + 2]
-    detail_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_DETAIL",
-        str(Path(__file__).resolve().parent / "BENCH_DETAIL.json"),
-    )
-    summary_path = os.environ.get("SPARK_GRAFT_BENCH_SUMMARY", "")
-    for attempt in range(1, max_attempts + 1):
-        # wait out obvious guest-side load before burning an attempt
-        for _ in range(40):
-            if read_box_state()["load1"] <= LOAD_GATE:
-                break
-            time.sleep(15)
-        proc = subprocess.run(
-            [sys.executable, str(Path(__file__).resolve()), *args]
-        )
-        if proc.returncode == 2:  # start gate refused — nothing written
-            print(
-                f"retry-until-clean: attempt {attempt} refused by the "
-                "start gate; waiting for the box to quiesce",
-                file=sys.stderr,
-            )
-            time.sleep(120)
-            continue
-        if proc.returncode != 0:
-            return proc.returncode  # real failure, not contention
-        try:
-            box = json.loads(Path(detail_path).read_text())["box_state"]
-        except (OSError, ValueError, KeyError):
-            print(
-                "retry-until-clean: bench exited 0 but the detail "
-                f"artifact at {detail_path} is unreadable",
-                file=sys.stderr,
-            )
-            return 1
-        run_steal = (box.get("cpu_run") or {}).get("steal_pct")
-        clean = box.get("steal_gate") == "ok" and (
-            run_steal is None or run_steal <= RETRY_STEAL_PCT
-        )
-        if clean:
-            print(
-                f"retry-until-clean: attempt {attempt} clean "
-                f"(steal {run_steal}%)",
-                file=sys.stderr,
-            )
-            return 0
-        for p in (detail_path, summary_path):
-            if p and Path(p).exists():
-                Path(p).rename(
-                    p[: -len(".json")] + f"_steal_exceeded_a{attempt}.json"
-                    if p.endswith(".json")
-                    else p + f"_steal_exceeded_a{attempt}"
-                )
-        print(
-            f"retry-until-clean: attempt {attempt} convicted "
-            f"(steal_gate={box.get('steal_gate')}, run steal "
-            f"{run_steal}%) — artifacts kept under _steal_exceeded_a"
-            f"{attempt}; retrying",
-            file=sys.stderr,
-        )
-        time.sleep(60)
-    print(
-        f"retry-until-clean: no clean run in {max_attempts} attempts",
-        file=sys.stderr,
-    )
-    return 3
-
-
 if __name__ == "__main__":
-    if "--retry-until-clean" in sys.argv:
-        sys.exit(
-            retry_until_clean(
-                int(sys.argv[sys.argv.index("--retry-until-clean") + 1])
-            )
-        )
     main()

@@ -136,15 +136,7 @@ def dedup_ingest_batch(
     ``ingest_batch=<id>`` partition directory (idempotent replay).
     """
     spark = batch.sparkSession
-    # the try guards ONLY the index read (ADVICE r12: a broader scope
-    # silently swallowed AnalysisExceptions raised by the dedup operator
-    # itself — a renamed index column or bad text_col/id_col would have
-    # been treated as "first batch, empty corpus" and duplicates
-    # accepted); operator errors must propagate loudly.
-    try:
-        stored = spark.read.parquet(index_path)
-    except AnalysisException:
-        stored = None  # no index yet: first batch ever
+    stored = _read_stored_index(spark, index_path, "dedup ingest")
     # a batch id at or below the compaction watermark is a replay from a
     # lost lineage whose rows already live in the consolidated base
     _guard_not_compacted(index_path, batch_id, "dedup ingest")
@@ -309,10 +301,7 @@ def emb_ingest_batch(
     from ..operators import similarity
 
     spark = batch.sparkSession
-    try:
-        stored = spark.read.parquet(cells_path)
-    except AnalysisException:
-        stored = None  # no index yet: first batch ever
+    stored = _read_stored_index(spark, cells_path, "embedding ingest")
     _guard_not_compacted(cells_path, batch_id, "embedding ingest")
     if stored is not None and batch_id == 0:
         raise ValueError(
@@ -448,6 +437,28 @@ def _as_local_path(index_path: str, what: str) -> Path:
             f"host {parsed.netloc!r} — local-FS only."
         )
     return Path(unquote(parsed.path))
+
+
+def _read_stored_index(
+    spark: SparkSession, index_path: str, what: str
+) -> DataFrame | None:
+    """The stored index at ``index_path``, or None before the first batch
+    wrote one.  A path that does not exist is not read: Spark's sink
+    metadata probe would log a ``FileNotFoundException`` stack trace for
+    it.  A directory that exists but holds no data yet still raises
+    ``AnalysisException`` and also means no index.
+
+    The try guards ONLY the read (ADVICE r12: a broader scope silently
+    swallowed AnalysisExceptions raised by the dedup operator itself — a
+    renamed index column or bad text_col/id_col would have been treated
+    as "first batch, empty corpus" and duplicates accepted); operator
+    errors must propagate loudly."""
+    if not _as_local_path(index_path, what).exists():
+        return None
+    try:
+        return spark.read.parquet(index_path)
+    except AnalysisException:
+        return None
 
 
 def _compacted_through(index_path: str) -> int | None:

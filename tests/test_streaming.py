@@ -604,6 +604,54 @@ def test_dedup_ingest_checkpoint_loss_fails_loudly(spark, tmp_path):
     assert raised is not None and "load-bearing" in raised
 
 
+def test_ingest_first_batch_never_reads_a_missing_index(
+    spark, tmp_path, monkeypatch
+):
+    """The first micro-batch of each ingest loop (text SimHash and
+    embedding IVF) finds no stored index on a fresh path and must not
+    read it: Spark's sink metadata probe logs a FileNotFoundException
+    stack trace for a missing parquet path."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from platform_etl_openfda_faers_spark.streaming.ingest import (
+        dedup_ingest_batch,
+        emb_ingest_batch,
+    )
+
+    reads = []
+    real_parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        reads.extend((str(p), os.path.exists(p)) for p in paths)
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    docs = spark.createDataFrame(
+        [(0, "tok0a tok0b tok0c tok0d"), (1, "tok1a tok1b tok1c tok1d")],
+        "doc_id LONG, text STRING",
+    )
+    dedup_ingest_batch(
+        docs, 0, str(tmp_path / "index"), str(tmp_path / "accepted")
+    )
+    vecs = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+        "vec_id LONG, embedding ARRAY<DOUBLE>",
+    )
+    cent = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cell INT, centroid ARRAY<DOUBLE>"
+    )
+    emb_ingest_batch(
+        vecs, 0, str(tmp_path / "cells"), str(tmp_path / "emb_accepted"),
+        cent,
+    )
+    assert [p for p, exists in reads if not exists] == []
+    monkeypatch.undo()
+    for acc in ("accepted", "emb_accepted"):
+        assert spark.read.parquet(str(tmp_path / acc)).count() == 2
+
+
 def test_emb_ingest_loop_multi_batch_equals_batch_twin(spark, tmp_path):
     """The embedding-index maintenance loop (streaming/ingest.py,
     VERDICT r12 #5): three micro-batches flow through foreachBatch ->

@@ -1,13 +1,16 @@
 """The command-line tools and benchmark scripts stay runnable.
 
-No test imports ``tools/``, ``faersbench/`` or ``bench.py``, so an engine
-refactor could silently break one.  Every such script is parsed (not
-executed) and each engine import it makes must resolve; the profiling
-CLI also gets one end-to-end smoke run.
+The engine's own tests do not run ``tools/``, ``faersbench/`` or
+``bench.py``, so an engine refactor could silently break one.  Every such
+script is parsed (not executed) and each engine import it makes must
+resolve.  The profiling CLI and ``bench.py`` also get one end-to-end
+smoke run each, and ``bench.py``'s headline-series fold is pinned
+without Spark.
 """
 
 import ast
 import importlib
+import json
 import os
 import subprocess
 import sys
@@ -112,21 +115,132 @@ def test_check_correctness_rejects_unknown_query(sf_dir):
     assert "q1_pricing_summary" not in out.stderr
 
 
-def test_bench_rejects_unknown_query_before_spark():
-    """``SPARK_GRAFT_BENCH_QUERIES`` names are checked before the JVM
-    starts: an unknown one exits 2 naming it, also under ``python -O``."""
+@pytest.mark.parametrize(
+    "args, queries, named",
+    [
+        ([], "q1_pricing_summary,no_such_query", "no_such_query"),
+        (["--iters", "0"], "q1_pricing_summary", "--iters"),
+    ],
+    ids=["unknown_query", "iters_0"],
+)
+def test_bench_rejects_unknown_query_before_spark(args, queries, named):
+    """``SPARK_GRAFT_BENCH_QUERIES`` names and the flags are checked
+    before the JVM starts: an unknown query or a bad ``--iters`` exits 2
+    naming it, also under ``python -O``."""
     env = {
         **os.environ,
         "SPARK_GRAFT_CPUS": "1",
-        "SPARK_GRAFT_BENCH_QUERIES": "q1_pricing_summary,no_such_query",
+        "SPARK_GRAFT_BENCH_QUERIES": queries,
     }
     out = subprocess.run(
-        [sys.executable, "-O", "bench.py"],
+        [sys.executable, "-O", "bench.py", *args],
         cwd=REPO, env=env, capture_output=True, text=True, timeout=300,
     )
     assert out.returncode == 2, out.stderr[-2000:]
-    assert "no_such_query" in out.stderr
+    assert named in out.stderr
     assert "q1_pricing_summary" not in out.stderr
+
+
+def test_bench_headline_summary_fold():
+    """The stdout line's series fold, with every query at 1.0 s and every
+    serve leg at 0.25 s.  By hand: legacy 20 queries = 20.0; v2 adds 4
+    extras = 24.0; v3 adds 3 = 27.0 (its stored-index serve query counts
+    in full); v4 adds one full query and two serve-only legs = 28.5.  An
+    errored legacy member is named in every block; a failed serve split
+    counts the full query time and is named in ``serve_leg_missing``."""
+    import bench
+    from platform_etl_openfda_faers_spark.plans import benchmarks as b
+
+    series = (b.HEADLINE, b.HEADLINE_V2_EXTRA, b.HEADLINE_V3_EXTRA,
+              b.HEADLINE_V4_EXTRA)
+    assert [len(s) for s in series] == [20, 4, 3, 3]
+    timings = {n: 1.0 for s in series for n in s}
+    legs = {n: {"build_s": 3.0, "serve_only_s": 0.25} for n in b.BUILD_SERVE}
+    assert set(b.HEADLINE_V4_EXTRA) & set(b.BUILD_SERVE) == {
+        "multimodal_video_stored_serve", "dedup_compacted_serve"}
+
+    def ones(names, drop=()):
+        return {n: 1.0 for n in names if n not in drop}
+
+    assert bench.headline_summary(timings, legs, None) == {
+        "metric": "headline-queries wall time",
+        "value": 20.0,
+        "unit": "sec",
+        "queries": ones(b.HEADLINE),
+        "headline_v2": {"value": 24.0, "extra_queries": ones(series[1])},
+        "headline_v3": {"value": 27.0, "extra_queries": ones(series[2])},
+        "headline_v4": {
+            "value": 28.5,
+            "extra_queries": ones(series[3]),
+            "contrib": {
+                "corpus_curriculum_packing": 1.0,
+                "multimodal_video_stored_serve": 0.25,
+                "dedup_compacted_serve": 0.25,
+            },
+        },
+    }
+
+    del timings["faers_llr"]
+    del legs["dedup_compacted_serve"]
+    gone = ["faers_llr"]
+    assert bench.headline_summary(timings, legs, None) == {
+        "metric": "headline-queries wall time",
+        "value": 19.0,
+        "unit": "sec",
+        "queries": ones(b.HEADLINE, gone),
+        "missing_members": gone,
+        "headline_v2": {"value": 23.0, "extra_queries": ones(series[1]),
+                        "missing_members": gone},
+        "headline_v3": {"value": 26.0, "extra_queries": ones(series[2]),
+                        "missing_members": gone},
+        "headline_v4": {
+            "value": 28.25,
+            "extra_queries": ones(series[3]),
+            "contrib": {
+                "corpus_curriculum_packing": 1.0,
+                "multimodal_video_stored_serve": 0.25,
+                "dedup_compacted_serve": 1.0,
+            },
+            "serve_leg_missing": ["dedup_compacted_serve"],
+            "missing_members": gone,
+        },
+    }
+
+    subset = ["dedup_stored_index_serve", "q1_pricing_summary"]
+    assert bench.headline_summary(ones(subset), legs, subset) == {
+        "metric": "headline-queries wall time",
+        "value": 2.0,
+        "unit": "sec",
+        "queries": ones(subset),
+        "subset": subset,
+    }
+
+
+def test_bench_smoke_run(sf_dir, tmp_path):
+    """One ``bench.py`` run on a cheap query and a build/serve query:
+    exit 0, a complete subset line last on stdout, and the build/serve
+    split in the detail file, written under ``tmp_path`` so the committed
+    ``BENCH_DETAIL.json`` is never overwritten."""
+    names = ["q1_pricing_summary", "dedup_stored_index_serve"]
+    detail = tmp_path / "detail.json"
+    env = {
+        **os.environ,
+        "SPARK_GRAFT_SF_DIR": sf_dir,
+        "SPARK_GRAFT_CPUS": "2",
+        "SPARK_GRAFT_BENCH_QUERIES": ",".join(names),
+        "SPARK_GRAFT_BENCH_DETAIL": str(detail),
+    }
+    out = subprocess.run(
+        [sys.executable, "bench.py", "--iters", "1"],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    line = json.loads(out.stdout.splitlines()[-1])
+    assert line["complete"] is True, line
+    assert line["subset"] == names
+    assert set(line["queries"]) == set(names)
+    split = json.loads(detail.read_text())["queries_build_serve"]
+    assert split["dedup_stored_index_serve"]["serve_only_s"] > 0
 
 
 def _call_sites(names: set[str]) -> dict[str, list[tuple[str, str]]]:
