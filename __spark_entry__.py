@@ -1,11 +1,13 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract of the engine (PySpark target).
 
 ``entry(spark)`` runs the flagship FAERS-LRT disproportionality query on
 sf0.001; ``queries()`` exposes one callable per implemented operator from
-SURVEY §2 (plus the beyond-reference dedup / similarity / text / multimodal
-/ streaming surface); ``oracle_sql()`` gives each one's DuckDB twin (the
-two queries without a twin — the Monte-Carlo filter and the HLL++ approx
-window — get the weaker rows-only check, by design).
+SURVEY §2, plus the beyond-reference dedup / similarity / text /
+multimodal surface and the event-window operators (``stream_*``: written
+for batch or streaming input, registered on their batch twin);
+``oracle_sql()`` gives each one's DuckDB twin (the two queries without a
+twin — the Monte-Carlo filter and the HLL++ approx window — get the
+weaker rows-only check, by design).
 """
 
 from __future__ import annotations

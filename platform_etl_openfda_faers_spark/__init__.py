@@ -10,7 +10,7 @@ operator Spark-first (DataFrame API, Catalyst-optimizable, AQE-friendly)
 and extends the surface with the operators a 100 TB training-data pipeline
 needs: dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard), similarity
 search over embeddings, text analysis, multimodal binary columns, and
-Structured Streaming over event tables.
+event-window operators that take a batch or a streaming frame alike.
 
 Layout
 ------
@@ -20,7 +20,8 @@ Layout
                  contingency, montecarlo, meddra, sampling, dedup, similarity,
                  asof, multimodal)
 - ``plans``      end-to-end pipeline composers (the reference's ETL.scala role)
-- ``streaming``  Structured Streaming over event streams (beyond-reference)
+- ``streaming``  event-window operators for batch or stream input, and the
+                 dedup-at-ingest step over a stored index (beyond-reference)
 """
 
 __version__ = "0.1.0"

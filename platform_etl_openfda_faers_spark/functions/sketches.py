@@ -1,68 +1,18 @@
-"""Probabilistic-sketch surface beyond HLL (``approx_count_distinct``) and
-the Bloom-prefilter join: Count-Min frequency estimation, Greenwald-Khanna
-approximate quantiles, and FP-growth-style frequent items.
+"""Portable, mergeable sketches beyond HLL++ (``approx_count_distinct``)
+and the Bloom-prefilter join: KMV/theta set-expression sketches and a
+portable HyperLogLog.
 
-These wrap Spark's built-in sketch machinery (JVM-side, mergeable across
-partitions — the property that makes them 100 TB-safe: each executor folds
-its partition into a fixed-size summary and the driver merges summaries,
-so driver traffic is O(sketch), not O(data)).  Sketch binaries are
-engine-specific, so correctness is pinned by pytest ERROR-BOUND tests
-(`tests/test_sketches.py`) rather than a DuckDB oracle:
-
-- Count-Min: estimate >= true count, and <= true + eps*N w.h.p.
-- approxQuantile: rank error <= relativeError * N (the GK guarantee).
-- freqItems: every item with frequency > support threshold is returned
-  (false positives allowed, false negatives not).
+Every sketch is a fixed-size summary per group (mergeable across
+partitions — the property that makes them 100 TB-safe: each executor
+folds its partition and only summaries move, so driver traffic is
+O(sketch), not O(data)), and every hash is the repo's portable 60-bit
+md5 primitive, so each sketch replays bit-for-bit in the DuckDB oracle.
+Error bounds are pinned by ``tests/test_sketches.py``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def count_min_estimate(
-    df: DataFrame,
-    col: str,
-    items: list,
-    eps: float = 0.01,
-    confidence: float = 0.95,
-    seed: int = 42,
-) -> dict:
-    """{item: estimated count} from a single distributed Count-Min pass.
-
-    The sketch is built by the SQL aggregate ``count_min_sketch`` (map-side
-    partial sketches merged by the aggregate — only the fixed-size binary
-    reaches the driver), then deserialized with the JVM sketch class for
-    point queries.
-    """
-    from pyspark.sql import functions as F
-
-    binary = df.agg(
-        F.expr(
-            f"count_min_sketch({col}, cast({eps} as double), "
-            f"cast({confidence} as double), {seed})"
-        )
-    ).first()[0]
-    jvm = df.sparkSession._jvm
-    bais = jvm.java.io.ByteArrayInputStream(bytes(binary))
-    cms = jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(bais)
-    return {it: cms.estimateCount(it) for it in items}
-
-
-def approx_quantiles(
-    df: DataFrame, col: str, probabilities: list[float], relative_error: float = 0.01
-) -> list[float]:
-    """Greenwald-Khanna approximate quantiles (single pass, mergeable)."""
-    return df.approxQuantile(col, probabilities, relative_error)
-
-
-def frequent_items(df: DataFrame, cols: list[str], support: float = 0.01) -> dict:
-    """{col: [items with frequency possibly > support]} — superset of the
-    true heavy hitters (proportional-frequency sketch; no false negatives).
-    """
-    row = df.freqItems(cols, support).first()
-    return {c: row[f"{c}_freqItems"] for c in cols}
-
 
 _TWO60 = 1 << 60  # hash space of the 60-bit md5 primitive
 
@@ -103,27 +53,6 @@ def kmv_hashes(
     d = df.select(F.col(group_col).alias("grp"), h.alias("hv")).distinct()
     w = Window.partitionBy("grp").orderBy("hv")
     return d.withColumn("pos", F.row_number().over(w)).where(F.col("pos") <= k)
-
-
-def kmv_estimate(regs: DataFrame, k: int = 256) -> DataFrame:
-    """(grp, kmv_est) off ``kmv_hashes``: (k-1) * 2^60 / h_k when the group
-    filled the sketch, else the EXACT count (an unfilled sketch holds every
-    hash the group produced).
-
-    Float discipline: (k-1)*2^60 is one exact double constant (small int
-    times a power of two); h_k converts int64 -> double by IEEE
-    round-to-nearest identically in Spark and DuckDB; ONE correctly-
-    rounded division, round 6 — replays bit-for-bit.
-    """
-    from pyspark.sql import functions as F
-
-    per = regs.groupBy("grp").agg(
-        F.count("*").alias("n"), F.max("hv").alias("hk")
-    )
-    est = F.when(F.col("n") < k, F.col("n").cast("double")).otherwise(
-        F.round(F.lit(float(k - 1) * float(_TWO60)) / F.col("hk"), 6)
-    )
-    return per.select("grp", est.alias("kmv_est"))
 
 
 def kmv_pair_overlap(regs: DataFrame, k: int = 256) -> DataFrame:

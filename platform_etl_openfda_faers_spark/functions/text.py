@@ -171,19 +171,3 @@ def word_ngrams(c: Column, n: int = 3) -> Column:
         ),
     ).otherwise(F.array().cast("array<string>"))
     return F.filter(grams, lambda s: s != "")
-
-
-def repetition_ratio(c: Column, n: int = 3) -> Column:
-    """Repeated-n-gram fraction: 1 - distinct/total word n-grams.
-
-    The canonical boilerplate/spam signal of LLM corpus curation — high
-    values mean the document repeats itself.  Entirely row-local (array
-    exprs, no explode/shuffle): a map-only scan at any corpus size.
-    NULL for documents with no n-gram (fewer than ``n`` tokens).
-    """
-    grams = word_ngrams(c, n)
-    total = F.size(grams)
-    return F.when(
-        total > 0,
-        F.lit(1.0) - F.size(F.array_distinct(grams)) / total.cast("double"),
-    )

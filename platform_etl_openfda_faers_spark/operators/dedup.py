@@ -76,27 +76,6 @@ def exact_duplicate_groups(df: DataFrame, text_col: str, id_col: str) -> DataFra
     )
 
 
-def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Keep exactly one (min-id) row per normalized-text fingerprint.
-
-    Keep-lowest via a min window over the fingerprint (r16, guide §2.4):
-    the former ``exact_duplicate_groups`` + left-semi-join-back scanned
-    the corpus twice and shuffled the PAYLOAD rows twice (once into the
-    keep-set aggregate's exchange, once into the semi join on the id —
-    the keep set is one row per distinct text, corpus-sized, never
-    broadcastable), where the window moves the payload exactly once, on
-    the fingerprint.  Ids are unique, so ``id == min(id) over fp`` keeps
-    exactly the former semi-join rows."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(fingerprint(F.col(text_col)))
-    return (
-        df.withColumn("_keep", F.min(id_col).over(w))
-        .where(F.col(id_col) == F.col("_keep"))
-        .drop("_keep")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Token / shingle sets
 

@@ -1,22 +1,16 @@
 """Stored-index parameter-stamp contract (ADVICE r12).
 
 Every stored-index family writes tables that a LATER session reads back
-and serves from (``corpus_index=`` / ``corpus_cells=``).  A table built
-with different parameters — an audio landmark index built with a
-smaller ``max_dt`` than the serve-time value, a chunk table from an
-older geometry — would silently drop matches or change results.  The
-IVF family solved this in r12 with a centroid fingerprint asserted at
-serve time; this module generalizes the discipline to the other
-families: the builder stamps an ``index_fp`` column (md5 over the
-family name + sorted build parameters), and the serving path asserts it
-row-wise with a filter-side ``assert_true`` — lazy, one constant
-comparison per index row, and (unlike a projected-then-dropped assert
-column) NOT prunable by Catalyst.
-
-The IVF family keeps its own fingerprint (the centroids themselves are
-part of its identity — see ``similarity.centroid_fingerprint``); the
-four families here have fixed geometries identified by family name +
-scalar build params.
+and serves from (``corpus_index=``).  A table built with different
+parameters — an audio landmark index built with a smaller ``max_dt``
+than the serve-time value, a chunk table from an older geometry — would
+silently drop matches or change results.  The builder therefore stamps
+an ``index_fp`` column (md5 over the family name + sorted build
+parameters), and the serving path asserts it row-wise with a
+filter-side ``assert_true`` — lazy, one constant comparison per index
+row, and (unlike a projected-then-dropped assert column) NOT prunable by
+Catalyst.  The four families here have fixed geometries identified by
+family name + scalar build params.
 """
 
 from __future__ import annotations

@@ -31,8 +31,8 @@ Semantics (ANSI MERGE with all-column UPDATE SET):
                             so bad input fails loudly, not silently.
 
 Scale notes: one shuffle per side on the merge keys (AQE handles skew);
-with both sides bucketed on the keys (``writers.write_bucketed``) the
-exchange disappears entirely.  At 100 TB the target never rewrites in
+with both sides stored as tables bucketed on the keys
+(``DataFrameWriter.bucketBy``) the exchange disappears entirely.  At 100 TB the target never rewrites in
 place — write the merged result partition-wise and swap, or hand the same
 plan to a table format's commit protocol.
 """
@@ -87,7 +87,7 @@ def snapshot_diff(
     same lazy ``raise_error`` guard as ``merge_upsert``.
 
     Scale shape: one shuffle per side on the key (none if both snapshots
-    are bucketed on it — ``writers.write_bucketed``); the change
+    are bucketed on it — ``DataFrameWriter.bucketBy``); the change
     classification is a row-local CASE over null-safe comparisons, fully
     codegen.  This is the diff half of incremental ingestion; feed the
     result to ``merge_upsert`` / ``scd2`` to apply it.

@@ -55,23 +55,6 @@ from .dedup import (
     prune_df_window,
 )
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("format", T.StringType()),
-                    T.StructField("byte_len", T.LongType()),
-                    T.StructField("sha256", T.StringType()),
-                ]
-            ),
-        ),
-    ]
-)
-
 DECODED_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -210,12 +193,6 @@ def decode_bmp(payload: bytes) -> np.ndarray:
     if bottom_up:
         bgr = bgr[::-1]
     return bgr[:, :, ::-1].copy()
-
-
-def encode_ppm(rgb: np.ndarray) -> bytes:
-    """(h, w, 3) uint8 RGB -> binary PPM (P6, maxval 255)."""
-    h, w, _ = rgb.shape
-    return f"P6\n{w} {h}\n255\n".encode() + rgb.tobytes()
 
 
 def decode_ppm(payload: bytes) -> np.ndarray:
@@ -3881,80 +3858,6 @@ def audio_landmark_matches(
         .agg(F.count("*").cast("long").alias("n_matches"))
         .where(F.col("n_matches") >= min_matches)
     )
-
-
-def audio_tail_spacing(
-    n_docs: int,
-    keys_eff: int = 2900,
-    lm_per_track: int = 18,
-    target_occ: int = 16,
-    base: int = 50,
-) -> int:
-    """Keyspace-scaled spacing for the mixed-geometry NEAR-MISS TAIL of
-    the audio dial/test harness (VERDICT r13 #5): every how-many ids a
-    tail track is planted so the landmark buckets the tail occupies stay
-    UNDER the combined-occupancy cap as the corpus grows.
-
-    The arithmetic (the same catalog-scale keyspace reasoning
-    :func:`audio_landmarks` documents): the test geometry's window=64 /
-    max_dt=3 landmarks live in an EFFECTIVE keyspace of ~``keys_eff``
-    distinct (a_bin, b_bin, dt) keys (~2.9k measured — the 31-residue
-    chain structure times 14 distinct per-seed steps times dt, minus
-    chain intersections), and every track contributes ~``lm_per_track``
-    keys; tail buckets therefore carry a mean occupancy of
-    ``n_tail x lm_per_track / keys_eff``.  Holding that at
-    ``target_occ`` (cap 64 with 4x margin — shared-key counts must also
-    clear ``min_matches`` AFTER hot-key pruning) bounds the tail
-    population, and the spacing follows:
-
-        max_tail = keys_eff x target_occ / lm_per_track   (~2.6k tracks)
-        spacing  = max(base, ceil(n_docs / max_tail / base) x base)
-
-    At the committed scales: 50 at sf0.1/sf1 (unchanged from r12 — its
-    sf1 evidence stands) and 200 at sf10, where the r12 fixed spacing
-    of 50 planted 10k tail tracks -> mean occupancy ~62 -> the cap
-    pruned every tail bucket and the sf10 dial read ``pair_rows: 0``.
-    The dHash/video families never needed this because their chunk
-    keyspace is 65,536 per chunk index — planting density was never the
-    binding constraint.  Rounded to a multiple of ``base`` so sub-group
-    membership stays aligned with the batch stripe (doc_id % 7)."""
-    import math
-
-    max_tail = max(1, (keys_eff * target_occ) // lm_per_track)
-    return max(base, math.ceil(n_docs / max_tail / base) * base)
-
-
-def video_tail_spacing(
-    n_docs: int,
-    classes: int = 251,
-    target_occ: int = 16,
-    base: int = 25,
-) -> int:
-    """Keyspace-scaled spacing for the mixed-geometry near-miss tail of
-    the VIDEO dial/test harness — the frame-chunk analogue of
-    :func:`audio_tail_spacing`, needed for the same reason at a
-    different modulus: the synthetic grid harness's frame bits are
-    ``(...) % 251 % 2`` expressions, so a seed enters the frame content
-    only MOD 251 — two tail gids 251 apart render BYTE-IDENTICAL frames
-    (pinned in ``test_mixed_geometry.py``).  The effective content
-    keyspace is therefore ~251 classes per frame index, not the 65,536
-    values a 16-bit chunk slice could take; every video in a class
-    lands one row in each of its frames' chunk buckets, so bucket
-    occupancy is ~``n_tail / classes`` and crossing the cap (64) prunes
-    the whole tail — the r14 first video sf10 mixed dial measured
-    exactly that (20k tail videos -> ~80 rows/bucket -> pair_rows 0).
-
-    Holding occupancy at ``target_occ`` (4x margin under the cap):
-
-        max_tail = classes x target_occ                (~4.0k videos)
-        spacing  = max(base, ceil(n_docs / max_tail / base) x base)
-
-    25 at sf0.1/sf1 (the r12 geometry, whose sf1 evidence stands —
-    1,890 pairs) and 125 at sf10."""
-    import math
-
-    max_tail = max(1, classes * target_occ)
-    return max(base, math.ceil(n_docs / max_tail / base) * base)
 
 
 def audio_landmark_table(peaks: DataFrame, max_dt: int = 3) -> DataFrame:

@@ -27,13 +27,11 @@ beam walk over that adjacency state, again unshardable row-parallel.
 node — this engine already covers with the distributed-native
 composition measured in QUALITY.md: IVF (trained coarse cells, nprobe
 probing) + PQ/ADC compression + exact re-rank, each stage a shuffle-
-bounded DataFrame op with recall floors CI-pinned, plus the stored
-cell-assignment index (``ivf_index_table``/``corpus_cells=``) as the
-frozen serving shape.  (d) The revisit seam mirrors
-``EXTERNAL_VIDEO_DECODERS``: a deployment that needs graph-ANN serves it
-from an EXTERNAL index process (FAISS/HNSW service) fed by this engine's
-embedding pipeline, behind the same kind of validated serving contract —
-the engine's job is the distributed side (embedding extraction, cell
+bounded DataFrame op with recall floors CI-pinned.  (d) The revisit seam
+mirrors ``EXTERNAL_VIDEO_DECODERS``: a deployment that needs graph-ANN
+serves it from an EXTERNAL index process (FAISS/HNSW service) fed by this
+engine's embedding pipeline, behind the same kind of validated serving
+contract — the engine's job is the distributed side (embedding extraction, cell
 assignment, candidate generation, exact re-rank), not a sequential
 in-memory data structure.
 """
@@ -581,88 +579,8 @@ def kmeans_centroids(
     return cent
 
 
-def centroid_fingerprint(centroids: DataFrame, score_decimals: int) -> str:
-    """md5 over the sorted (cell, exact-double centroid) rows plus the
-    assignment's ``score_decimals`` — the identity of an IVF index's
-    build parameters.  Collect is bounded by design: centroid tables are
-    the small broadcast side (tens of rows), already materialized on the
-    driver by every trained-centroid caller."""
-    import hashlib
-
-    rows = sorted(
-        (int(r[0]), tuple(float(x) for x in r[1]))
-        for r in centroids.select("cell", "centroid").collect()
-    )
-    text = ";".join(
-        f"{cell}:{','.join(repr(x) for x in vec)}" for cell, vec in rows
-    )
-    return hashlib.md5(f"{text}|sd={score_decimals}".encode()).hexdigest()
-
-
-def ivf_index_table(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    score_decimals: int = 6,
-) -> DataFrame:
-    """(neighbor_id, c_vec, cell, index_fp) — the corpus-side IVF
-    cell-assignment table: exactly what a production vector index computes
-    ONCE at ingest and stores (partitioned on ``cell``) next to its frozen
-    centroids.  Feed a stored copy back to :func:`ivf_topk` via
-    ``corpus_cells`` so a query batch pays only its own nprobe assignment;
-    the corpus side is then an embedding-source-free parquet scan of the
-    index, pruned to the probed cell partitions.  ``index_fp`` is the
-    :func:`centroid_fingerprint` of (centroids, score_decimals) — the
-    serving path asserts it against the query-side centroids so a stale
-    or differently-parameterized index fails loudly instead of silently
-    changing results."""
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("c_vec"),
-    )
-    fp = centroid_fingerprint(centroids, score_decimals)
-    return ivf_cells(
-        c, centroids, "neighbor_id", "c_vec", nprobe=1,
-        score_decimals=score_decimals,
-    ).withColumn("index_fp", F.lit(fp))
-
-
-def _guard_stored_cells(
-    corpus_cells: DataFrame, cent: DataFrame, score_decimals: int
-) -> DataFrame:
-    """Stale-index guard (consistency contract): the stored table must
-    carry the fingerprint of the centroids + score_decimals it was
-    built with, and it must match the query-side parameters — a
-    differently-built index silently changes results otherwise.  The
-    row-level assert_true is lazy (no extra action) and costs one
-    constant comparison per index row; expressing it as a filter
-    predicate (always-true when healthy) keeps it alive through column
-    pruning, unlike an unreferenced projected column.  Shared by
-    :func:`ivf_topk` and :func:`semantic_near_duplicates_incremental`
-    (the two ``corpus_cells=`` / ``corpus_index=`` serving paths over
-    the :func:`ivf_index_table` shape)."""
-    assert "index_fp" in corpus_cells.columns, (
-        "corpus_cells lacks index_fp — rebuild the stored index with "
-        "ivf_index_table (pre-fingerprint indexes cannot be checked "
-        "against the query-side centroids)"
-    )
-    expected_fp = centroid_fingerprint(cent, score_decimals)
-    guarded = corpus_cells.where(
-        F.assert_true(
-            F.col("index_fp") == F.lit(expected_fp),
-            F.lit(
-                "stale IVF index: stored index_fp does not match the "
-                "fingerprint of the centroids/score_decimals passed by "
-                "the serving call — rebuild with ivf_index_table"
-            ),
-        ).isNull()
-    )
-    return guarded.select("neighbor_id", "c_vec", "cell")
-
-
 def ivf_topk(
-    corpus: DataFrame | None,
+    corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
     id_col: str = "vec_id",
@@ -671,7 +589,6 @@ def ivf_topk(
     nprobe: int = 4,
     score_decimals: int = 6,
     centroids: DataFrame | None = None,
-    corpus_cells: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-style approximate top-k: coarse-quantize the corpus into centroid
     cells, probe only the query's ``nprobe`` nearest cells, exact-rerank.
@@ -682,20 +599,9 @@ def ivf_topk(
     vectors — deterministic and oracle-replicable; pass
     ``centroids=kmeans_centroids(...)`` for trained cells (same plan
     shape, better recall).
-
-    ``corpus_cells`` — a STORED corpus assignment table (the
-    :func:`ivf_index_table` shape, typically parquet partitioned on
-    ``cell``).  When given, ``corpus`` must be None and the corpus side
-    becomes a scan of the stored index: no corpus embedding source is
-    read and no corpus-side assignment is recomputed — the deployment
-    shape where centroids are frozen and ingest wrote the cells once.
     """
-    assert (corpus is None) != (corpus_cells is None), (
-        "pass exactly one of corpus= (recompute) or corpus_cells= (stored)"
-    )
     cent = centroids
     if cent is None:
-        assert corpus is not None, "default seed centroids need the corpus"
         cent = corpus.where(F.col(id_col) < n_centroids).select(
             F.col(id_col).alias("cell"),
             F.col(vec_col).cast("array<double>").alias("centroid"),
@@ -704,14 +610,11 @@ def ivf_topk(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("q_vec"),
     )
-    if corpus_cells is not None:
-        c_cells = _guard_stored_cells(corpus_cells, cent, score_decimals)
-    else:
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("c_vec"),
-        )
-        c_cells = ivf_cells(c, cent, "neighbor_id", "c_vec", nprobe=1, score_decimals=score_decimals)
+    c = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).cast("array<double>").alias("c_vec"),
+    )
+    c_cells = ivf_cells(c, cent, "neighbor_id", "c_vec", nprobe=1, score_decimals=score_decimals)
     q_cells = ivf_cells(q, cent, "query_id", "q_vec", nprobe=nprobe, score_decimals=score_decimals)
     # no pair-dedup needed: each corpus vector lives in exactly one cell
     # (nprobe=1 on the corpus side), so a (query, neighbor) pair appears at
@@ -764,26 +667,23 @@ def cosine_near_duplicates(
 
 def semantic_near_duplicates_incremental(
     new_vectors: DataFrame,
-    corpus_vectors: DataFrame | None,
+    corpus_vectors: DataFrame,
     threshold: float = 0.4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 8,
     iterations: int = 2,
     score_decimals: int = 6,
-    centroids: DataFrame | None = None,
-    corpus_index: DataFrame | None = None,
 ) -> DataFrame:
     """INCREMENTAL SemDeDup: an incoming embedding batch is compared
-    against itself and the existing corpus WITHIN FROZEN k-means cells —
-    never corpus x corpus, and never a retrain.  The embedding-space
-    member of the incremental near-dup family (Jaccard, MinHash,
-    SimHash, dHash, landmarks, frame votes, and now semantic cells).
+    against itself and the existing corpus WITHIN k-means cells trained
+    on the corpus alone (the batch never moves them) — never corpus x
+    corpus.  The embedding-space member of the incremental near-dup
+    family (Jaccard, MinHash, SimHash, dHash, landmarks, frame votes, and
+    now semantic cells).
 
-    Production shape: centroids train once on the corpus (or pass
-    ``centroids=`` from a stored index — same frozen-geometry contract
-    as ``ivf_topk``'s incremental use), the batch gets a MAP-ONLY
-    broadcast cell assignment, and candidate volume per cell is
+    Production shape: centroids train once on the corpus, the batch gets
+    a MAP-ONLY broadcast cell assignment, and candidate volume per cell is
     |cell ∩ batch| x |cell| instead of |cell|^2 — at 100 TB raise ``k``
     so cells stay bounded and the within-cell equi-join stays
     AQE-splittable.  Batch-batch pairs are found from both of their
@@ -792,61 +692,25 @@ def semantic_near_duplicates_incremental(
     dedupes them without weighting.  Ids must be unique across the two
     inputs.  Output: (id_a, id_b, cell, score), id_a < id_b, score >=
     ``threshold``.
-
-    ``corpus_index`` — a STORED corpus cell-assignment table (the
-    :func:`ivf_index_table` shape: (neighbor_id, c_vec, cell,
-    index_fp), typically parquet partitioned on ``cell``, written at
-    ingest).  When given, ``corpus_vectors`` must be None and
-    ``centroids`` must be the FROZEN centroids the index was built with
-    (asserted via the centroid fingerprint — same guard as
-    ``ivf_topk``): the corpus side becomes a scan of the stored index —
-    no corpus embedding source read, no corpus-side assignment
-    recomputed — and the batch pays only its own map-only assignment.
-    This is the embedding-family serving path the dedup-at-ingest loop
-    composes (``streaming.ingest.start_emb_ingest``).
     """
-    assert (corpus_vectors is None) != (corpus_index is None), (
-        "pass exactly one of corpus_vectors (recompute) or corpus_index "
-        "(stored cell-assignment index)"
+    cent = kmeans_centroids(
+        corpus_vectors, k=k, iterations=iterations,
+        id_col=id_col, vec_col=vec_col,
     )
-    cent = centroids
-    if cent is None:
-        assert corpus_vectors is not None, (
-            "corpus_index= requires frozen centroids= (the index was "
-            "built with them; retraining here would desync the cells)"
-        )
-        cent = kmeans_centroids(
-            corpus_vectors, k=k, iterations=iterations,
-            id_col=id_col, vec_col=vec_col,
-        )
     batch = new_vectors.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("e"),
         F.lit(True).alias("_new"),
     )
-    if corpus_index is not None:
-        bcells = ivf_cells(
-            batch, cent, "vid", "e", nprobe=1,
-            score_decimals=score_decimals, keep=("_new",),
-        )
-        cells = _guard_stored_cells(
-            corpus_index, cent, score_decimals
-        ).select(
-            F.col("neighbor_id").alias("vid"),
-            F.col("c_vec").alias("e"),
-            F.lit(False).alias("_new"),
-            "cell",
-        ).unionByName(bcells.select("vid", "e", "_new", "cell"))
-    else:
-        combined = corpus_vectors.select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).cast("array<double>").alias("e"),
-            F.lit(False).alias("_new"),
-        ).unionByName(batch)
-        cells = ivf_cells(
-            combined, cent, "vid", "e", nprobe=1,
-            score_decimals=score_decimals, keep=("_new",),
-        )
+    combined = corpus_vectors.select(
+        F.col(id_col).alias("vid"),
+        F.col(vec_col).cast("array<double>").alias("e"),
+        F.lit(False).alias("_new"),
+    ).unionByName(batch)
+    cells = ivf_cells(
+        combined, cent, "vid", "e", nprobe=1,
+        score_decimals=score_decimals, keep=("_new",),
+    )
     a = cells.where(F.col("_new")).select(
         F.col("vid").alias("id_a"), F.col("e").alias("e_a"), "cell"
     )

@@ -6,11 +6,11 @@ read everything.  Interleaving the bits of several quantized columns into
 one Morton key and range-partition-sorting by it clusters the data so
 EVERY participating column has tight per-row-group ranges — the same
 data-layout technique lakehouse engines (Delta OPTIMIZE ZORDER BY,
-Iceberg sort orders) apply before compaction.  The key is a pure integer
-expression tree — map-only, no shuffle beyond the final range partition,
-and bit-for-bit replayable in the DuckDB oracle (quantization divides
-stay exact: products are < 2^53, and double division + floor of exact
-doubles is correctly rounded in both engines).
+Iceberg sort orders) apply before compaction; the writer range-partitions
+and sorts by :func:`zorder_key`.  The key is a pure integer expression
+tree — map-only, and bit-for-bit replayable in the DuckDB oracle
+(quantization divides stay exact: products are < 2^53, and double
+division + floor of exact doubles is correctly rounded in both engines).
 
 Measured locally (``tests/test_plan_audits.py``): a two-column box filter
 over a Z-ordered layout reads a small fraction of the bytes the same
@@ -19,7 +19,7 @@ filter reads over an insertion-ordered layout, with identical results.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -55,24 +55,3 @@ def zorder_key(
             bit = F.shiftright(q, i).bitwiseAND(F.lit(1))
             z = z.bitwiseOR(F.shiftleft(bit, i * n + j))
     return z
-
-
-def zorder_repartition(
-    df: DataFrame,
-    cols: list[str],
-    bounds: list[tuple[int, int]],
-    bits: int = 8,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Cluster ``df`` for multi-column skipping: range-partition by the
-    Morton key and sort within partitions, so both file-level and
-    row-group-level min/max stats are tight in every participating
-    column.  Write the result with a plain parquet sink; the key column
-    is dropped before return."""
-    z = zorder_key([F.col(c) for c in cols], bounds, bits).alias("_zkey")
-    out = df.select("*", z)
-    if num_partitions:
-        out = out.repartitionByRange(num_partitions, F.col("_zkey"))
-    else:
-        out = out.repartitionByRange(F.col("_zkey"))
-    return out.sortWithinPartitions("_zkey").drop("_zkey")

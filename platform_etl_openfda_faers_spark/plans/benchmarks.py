@@ -2278,8 +2278,8 @@ def dedup_ingest_loop_serve(spark: SparkSession, sf: str) -> DataFrame:
     three stages).  The final join against the analytic signatures means
     the driver's value-hash certifies the INDEX CONTENT (signatures and
     per-doc row counts), not just the accept/reject decisions — the last
-    pytest-only moving part (the foreachBatch handler's acceptance +
-    index update) now has a hash-level certificate.  The outer join on
+    pytest-only moving part (the ingest step's acceptance + index
+    update) now has a hash-level certificate.  The outer join on
     the Spark side makes an index/accepted divergence (a doc in one but
     not the other) surface as a row-count mismatch instead of being
     hidden by an inner join.
@@ -4299,7 +4299,7 @@ def _freeze_trained(df: DataFrame) -> DataFrame:
     fault-tolerance of the intermediate (an executor loss re-runs the
     query instead of replaying lineage) — the right trade for a <=512-row
     table that a production deployment would store next to its index
-    anyway (the stored-index pattern, cf. ``ivf_index_table``).  Storage
+    anyway (the stored-index pattern).  Storage
     is ContextCleaner-owned; the correctness runner itemizes and sweeps
     localCheckpoint residue (the CC-loop discipline)."""
     return df.localCheckpoint(eager=False)

@@ -275,67 +275,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if "ts" in df.columns and dict(df.dtypes)["ts"] == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return normalize_timestamps(df)
-
-
-def load_orc(
-    spark: SparkSession, path: str, columns: list[str] | None = None
-) -> DataFrame:
-    """ORC scan (columnar, predicate-pushdown-capable like parquet).
-
-    ORC is the other first-class columnar format of the lakehouse world
-    (Hive-lineage clusters); Spark's reader pushes filters and prunes
-    columns exactly as for parquet, so everything in SCALING.md about scan
-    shape carries over.  ``columns`` pre-prunes the projection at the scan.
-    """
-    df = spark.read.orc(path)
-    if columns:
-        df = df.select(*columns)
-    return normalize_timestamps(df)
-
-
-def load_binary_files(
-    spark: SparkSession, path: str, glob: str | None = None
-) -> DataFrame:
-    """Raw-media ingest via Spark's built-in ``binaryFile`` source:
-    one row per file with (path, modificationTime, length, content).
-
-    This is the 100 TB front door for the multimodal surface: point it at
-    an image/audio bucket, then hand ``(media_id, content)`` straight to
-    ``operators.multimodal.decode_media`` / ``audio_features`` — no
-    driver-side file listing, scans parallelize over files and the
-    ``pathGlobFilter`` prunes by extension server-side.
-    """
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
-
-
-def load_text_corpus(
-    spark: SparkSession, path: str, whole_file: bool = False
-) -> DataFrame:
-    """Raw-text corpus front door (the text sibling of
-    ``load_binary_files``): Spark's built-in ``text`` source, one row per
-    line (or per file with ``whole_file``), with a DETERMINISTIC doc key
-    derived from the hidden ``_metadata.file_path`` column — stable
-    across partition layouts, task retries, and reruns, unlike
-    ``monotonically_increasing_id`` (whose values depend on partition
-    ids).  Output: (doc_key, source_file, text), ready for the
-    text/dedup/curation operators.
-    """
-    # NB: pass wholetext as the .text() keyword — PySpark's .text() resets
-    # the option to its keyword default, silently clobbering a prior
-    # .option("wholetext", ...) on the reader
-    df = spark.read.text(path, wholetext=whole_file).select(
-        F.col("_metadata.file_path").alias("source_file"), F.col("value").alias("text")
-    )
-    # line docs need a within-file discriminator; md5 over (file, text)
-    # keys identical lines in one file together (dedup-friendly) while
-    # staying layout-independent
-    return df.select(
-        F.md5(F.concat_ws("\x1f", F.col("source_file"), F.col("text"))).alias(
-            "doc_key"
-        ),
-        "source_file",
-        "text",
-    )

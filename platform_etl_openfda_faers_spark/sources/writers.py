@@ -103,29 +103,6 @@ def cluster_for_partitioned_write(
     )
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    num_buckets: int = 32,
-) -> None:
-    """Persist as a bucketed (and bucket-sorted) managed table.
-
-    Co-locates rows by ``hash(bucket_col) % num_buckets`` at WRITE time, so
-    joins/aggregations between tables bucketed on the same key with the same
-    bucket count run with NO shuffle exchange (verified by plan assertion in
-    tests).  The scale pattern for repeatedly-joined fact tables: pay the
-    shuffle once at ingest instead of per query.
-    """
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(num_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .saveAsTable(table)
-    )
-
-
 def write_outputs(df: DataFrame, formats: list[str], path: str) -> None:
     """Dispatch like the reference's per-format loop (``ETL.scala:32-45``)."""
     for fmt in formats:

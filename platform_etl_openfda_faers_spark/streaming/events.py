@@ -14,31 +14,10 @@ growing directory without keeping a cluster hot.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..sources.readers import normalize_timestamps
-
-EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-
-def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
-    """File-source stream over a parquet directory (schema must be explicit)."""
-    return (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(path)
-    )
 
 
 def tumbling_counts(
@@ -122,50 +101,6 @@ def session_counts(
             "n_events",
             "sum_value",
         )
-    )
-
-
-def running_user_totals(df: DataFrame) -> DataFrame:
-    """Custom stateful operator: per-user running (n_events, sum_value).
-
-    The ``applyInPandasWithState`` shape for stateful logic Spark's built-in
-    aggregates can't express (arbitrary per-key state machines).  State is
-    one (long, double) tuple per user — O(|users|) total, partitioned by the
-    grouping key so it scales horizontally.  Each micro-batch emits the
-    updated running totals for the users it touched (update semantics).
-
-    Batch-mode fallback: a plain groupBy with the same output schema (the
-    equivalence of the two is the pytest check).
-    """
-    import pandas as pd  # noqa: PLC0415 — worker-side import
-
-    if not df.isStreaming:
-        return df.groupBy("user_id").agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("sum_value"),
-        )
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = "user_id long, n_events long, sum_value double"
-    state_schema = "n long, s double"
-
-    def update(key, pdf_iter, state: GroupState):
-        n, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdf_iter:
-            n += len(pdf)
-            s += float(pdf["value"].sum())
-        state.update((n, s))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "sum_value": [s]}
-        )
-
-    return df.groupBy("user_id").applyInPandasWithState(
-        update,
-        out_schema,
-        state_schema,
-        "update",
-        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -256,79 +191,6 @@ def click_purchase_join(
     )
 
 
-def running_user_totals_tws(df: DataFrame) -> DataFrame:
-    """Per-user running totals via ``transformWithStateInPandas`` — the
-    Spark 4 arbitrary-stateful-processing API (successor of
-    ``applyInPandasWithState``): explicit typed state handles, timers, and
-    TTL support.  Requires the RocksDB state store provider and the
-    ``protobuf`` package (the driver<->state-server protocol) at runtime.
-
-    Where ``protobuf`` is absent (this container), the call TRANSPARENTLY
-    falls back to ``running_user_totals`` — the ``applyInPandasWithState``
-    twin with identical update-mode semantics and output schema — so
-    callers (and the pytest) exercise a real streaming stateful plan either
-    way instead of skipping.
-
-    Semantics match ``running_user_totals`` exactly (update-mode emission of
-    the running (n_events, sum_value) per touched user per micro-batch);
-    the batch fallback is the same plain aggregate.
-    """
-    import pandas as pd  # noqa: PLC0415 — worker-side import
-
-    if not df.isStreaming:
-        return df.groupBy("user_id").agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("sum_value"),
-        )
-
-    try:
-        import google.protobuf  # noqa: F401, PLC0415 — runtime capability probe
-    except ImportError:
-        return running_user_totals(df)
-
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n BIGINT, s DOUBLE")
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._totals.exists():
-                n, s = self._totals.get()
-            else:
-                n, s = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-            self._totals.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [s]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType="user_id long, n_events long, sum_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def run_available_now(stream_df: DataFrame, query_name: str) -> DataFrame:
-    """Drain the stream into an in-memory table and return it (test helper)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(query_name)
-
-
 def enrich_with_dim(
     df: DataFrame,
     dim: DataFrame,
@@ -371,36 +233,3 @@ def dedup_events(
     if df.isStreaming:
         return df.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
     return df.dropDuplicates(keys)
-
-
-def write_stream_idempotent_parquet(
-    stream_df: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    query_name: str = "idempotent_sink",
-):
-    """Exactly-once-style parquet sink via ``foreachBatch``: each
-    micro-batch writes to ``out_dir/batch_id=N`` with ``overwrite`` mode,
-    so a batch REPLAYED after a failure/restart overwrites its own
-    directory instead of appending duplicates — idempotent-by-path, the
-    standard pattern when the sink itself has no transaction log.
-
-    The checkpoint records which batch ids are committed; on restart
-    Structured Streaming replays at-least-once and the (batch_id)-keyed
-    overwrite turns that into effectively-once output.  Readers get
-    partition pruning on ``batch_id`` for free (hive layout).  Returns
-    the (started) query; caller awaits termination.
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

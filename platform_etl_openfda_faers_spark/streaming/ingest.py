@@ -1,7 +1,8 @@
-"""Dedup-at-ingest: the production loop that composes the STORED
-signature index with Structured Streaming micro-batches (VERDICT r11 #3).
+"""Dedup-at-ingest: one micro-batch step against the STORED signature
+index (VERDICT r11 #3), called once per batch with a monotonic batch id
+(the registry's ``dedup_ingest_loop_serve`` drives it).
 
-Shape: ``foreachBatch`` ingest -> near-dup check against the stored
+Shape: ingest batch -> near-dup check against the stored
 simhash64 chunk index (``corpus_index=`` serving path — the corpus text
 is NEVER re-read; each batch pays the signature fold only for its own
 docs) -> append the ACCEPTED docs and their chunk rows back to the
@@ -20,8 +21,7 @@ canonical survivors, exactly like a batch keep-list.
 Idempotency: each batch's appends land under ``ingest_batch=<id>``
 partition directories with per-directory overwrite — an at-least-once
 replay of a batch WITHIN the same checkpoint lineage rewrites the same
-directories instead of duplicating rows (the
-``write_stream_idempotent_parquet`` discipline).
+directories instead of duplicating rows.
 
 THE CHECKPOINT IS LOAD-BEARING DEDUP STATE (ADVICE r12): batch ids are
 monotonic only within one checkpoint lineage.  After checkpoint LOSS,
@@ -44,7 +44,6 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 
 from ..operators import dedup
@@ -121,12 +120,11 @@ def dedup_ingest_batch(
     batch_id: int,
     index_path: str,
     accepted_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_hamming: int = 3,
     max_bucket_size: int | None = None,
 ) -> None:
-    """Process ONE ingest micro-batch against the stored signature index.
+    """Process ONE ingest micro-batch of (doc_id, text) rows against the
+    stored signature index.
 
     Steps: (1) serve the near-dup check from the stored index
     (``corpus_index=`` — decode-free corpus side; first batch ever uses
@@ -158,7 +156,7 @@ def dedup_ingest_batch(
     # append + sidecar rows.  The pre-r16 handler folded twice — once
     # inside the serve and again in ``simhash64_chunk_table(accepted)``
     # — and the fold is the batch's dominant CPU at scale.
-    chunks_all = dedup.simhash64_chunk_table(batch, text_col, id_col).persist()
+    chunks_all = dedup.simhash64_chunk_table(batch, "text", "doc_id").persist()
     try:
         if stored is not None:
             # serve via the occupancy sidecar when the loop has
@@ -183,15 +181,15 @@ def dedup_ingest_batch(
         pairs = dedup.simhash_near_duplicates_incremental64(
             batch,
             None,
-            text_col,
-            id_col,
+            "text",
+            "doc_id",
             max_hamming=max_hamming,
             max_bucket_size=max_bucket_size,
             corpus_index=corpus_index,
             corpus_occupancy=occ,
             batch_chunks=chunks_all,
         )
-        accepted = _keep_lowest_accept(batch, pairs, id_col)
+        accepted = _keep_lowest_accept(batch, pairs, "doc_id")
         # materialize ONCE: the two writes below would otherwise re-run
         # the batch-side acceptance join per sink
         accepted = accepted.persist()
@@ -204,7 +202,7 @@ def dedup_ingest_batch(
             # second fold.  Persisted: the append write AND the sidecar
             # count below both consume them.
             chunks = chunks_all.join(
-                accepted.select(F.col(id_col)), [id_col], "left_semi"
+                accepted.select("doc_id"), ["doc_id"], "left_semi"
             ).persist()
             try:
                 chunks.write.mode("overwrite").partitionBy("ci").parquet(
@@ -226,7 +224,7 @@ def dedup_ingest_batch(
             # this handler is the TERMINAL consumer of the near-dup pair
             # list — release the operator's attached persists (the
             # capped chunk table and keep set) so a long-lived
-            # foreachBatch session doesn't accrete one cache per
+            # ingest session doesn't accrete one cache per
             # micro-batch (the cache-lifetime contract's caller-owned
             # mode)
             from ..operators.cache import unpersist_cached
@@ -234,170 +232,6 @@ def dedup_ingest_batch(
             unpersist_cached(pairs)
     finally:
         chunks_all.unpersist()
-
-
-def start_dedup_ingest(
-    docs_stream: DataFrame,
-    index_path: str,
-    accepted_path: str,
-    checkpoint: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    max_bucket_size: int | None = None,
-) -> StreamingQuery:
-    """Wire :func:`dedup_ingest_batch` into a ``foreachBatch`` sink with
-    an ``availableNow`` trigger: each run drains the currently-available
-    files as micro-batches, deduping every batch against the index built
-    by all earlier batches (across runs too — the checkpoint carries the
-    source offsets, the index parquet carries the dedup state)."""
-
-    def _handle(batch: DataFrame, batch_id: int) -> None:
-        dedup_ingest_batch(
-            batch,
-            batch_id,
-            index_path,
-            accepted_path,
-            text_col=text_col,
-            id_col=id_col,
-            max_hamming=max_hamming,
-            max_bucket_size=max_bucket_size,
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(_handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def emb_ingest_batch(
-    batch: DataFrame,
-    batch_id: int,
-    cells_path: str,
-    accepted_path: str,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.85,
-    score_decimals: int = 6,
-) -> None:
-    """Process ONE embedding ingest micro-batch against the stored IVF
-    cell index — the embedding-family twin of :func:`dedup_ingest_batch`
-    (VERDICT r12 #5).
-
-    Steps: (1) semantic near-dup check served from the stored
-    cell-assignment table (``corpus_index=`` — no corpus embedding
-    source read; the batch pays only its own map-only assignment under
-    the FROZEN ``centroids``), (2) keep-lowest acceptance, (3) append
-    accepted vectors to ``accepted_path`` and their
-    :func:`ivf_index_table` cell rows to ``cells_path``, both under
-    ``ingest_batch=<id>`` partition directories (idempotent replay
-    within one checkpoint lineage).  The centroid fingerprint rides
-    every appended row, so a later serve with drifted centroids fails
-    loudly.  Same checkpoint-loss guard as the text loop: the
-    checkpoint is load-bearing dedup state."""
-    from ..operators import similarity
-
-    spark = batch.sparkSession
-    stored = _read_stored_index(spark, cells_path, "embedding ingest")
-    _guard_not_compacted(cells_path, batch_id, "embedding ingest")
-    if stored is not None and batch_id == 0:
-        raise ValueError(
-            f"embedding ingest: batch id 0 arrived but {cells_path} "
-            "already holds an index — the checkpoint was lost or the "
-            "index path is being reused.  The checkpoint is load-bearing "
-            "dedup state: clear cells_path and accepted_path before "
-            "replaying from scratch."
-        )
-    if stored is not None:
-        pairs = similarity.semantic_near_duplicates_incremental(
-            batch,
-            None,
-            threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-            score_decimals=score_decimals,
-            centroids=centroids,
-            corpus_index=stored,
-        )
-    else:
-        empty = spark.createDataFrame(
-            [], batch.select(id_col, vec_col).schema
-        )
-        pairs = similarity.semantic_near_duplicates_incremental(
-            batch,
-            empty,
-            threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-            score_decimals=score_decimals,
-            centroids=centroids,
-        )
-    accepted = _keep_lowest_accept(batch, pairs, id_col)
-    # materialize ONCE: the two writes below would otherwise re-run the
-    # batch-side assignment + stored-index join per sink
-    accepted = accepted.persist()
-    try:
-        accepted.write.mode("overwrite").parquet(
-            f"{accepted_path}/ingest_batch={batch_id}"
-        )
-        similarity.ivf_index_table(
-            accepted, centroids, id_col=id_col, vec_col=vec_col,
-            score_decimals=score_decimals,
-        ).write.mode("overwrite").partitionBy("cell").parquet(
-            f"{cells_path}/ingest_batch={batch_id}"
-        )
-    finally:
-        accepted.unpersist()
-        # terminal consumer of the pair list: release any operator-
-        # attached persists (no-op when the operator attached none)
-        from ..operators.cache import unpersist_cached
-
-        unpersist_cached(pairs)
-
-
-def start_emb_ingest(
-    vec_stream: DataFrame,
-    cells_path: str,
-    accepted_path: str,
-    checkpoint: str,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.85,
-    score_decimals: int = 6,
-) -> StreamingQuery:
-    """Wire :func:`emb_ingest_batch` into a ``foreachBatch`` sink with an
-    ``availableNow`` trigger — the embedding-index maintenance loop:
-    each run drains the currently-available vector files as
-    micro-batches, semantic-dedupes every batch against the cell index
-    built by all earlier batches under FROZEN centroids (trained once at
-    bootstrap — retraining mid-stream would desync the stored
-    assignments, which the centroid fingerprint would then catch), and
-    appends accepted vectors' cell rows.  The checkpoint carries source
-    offsets; the cells parquet carries the dedup state."""
-
-    def _handle(batch: DataFrame, batch_id: int) -> None:
-        emb_ingest_batch(
-            batch,
-            batch_id,
-            cells_path,
-            accepted_path,
-            centroids,
-            id_col=id_col,
-            vec_col=vec_col,
-            threshold=threshold,
-            score_decimals=score_decimals,
-        )
-
-    return (
-        vec_stream.writeStream.foreachBatch(_handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def _as_local_path(index_path: str, what: str) -> Path:
@@ -450,8 +284,8 @@ def _read_stored_index(
 
     The try guards ONLY the read (ADVICE r12: a broader scope silently
     swallowed AnalysisExceptions raised by the dedup operator itself — a
-    renamed index column or bad text_col/id_col would have been treated
-    as "first batch, empty corpus" and duplicates accepted); operator
+    renamed index column or a batch without text/doc_id would have been
+    treated as "first batch, empty corpus" and duplicates accepted); operator
     errors must propagate loudly."""
     if not _as_local_path(index_path, what).exists():
         return None
@@ -642,7 +476,6 @@ def compact_ingest_index(
     spark: SparkSession,
     index_path: str,
     partition_cols: tuple[str, ...] = ("ci",),
-    target_partitions: int | None = None,
 ) -> dict:
     """Consolidate an ingest loop's accumulated ``ingest_batch=<id>``
     appends into one ``ingest_batch=-1`` base — the small-files
@@ -664,9 +497,9 @@ def compact_ingest_index(
       the swap before any delete; a crash mid-swap is resumed — never
       recomputed from a half-deleted index — on the next call, and
       compacting an already-compacted index is a no-op.
-    - STAMP-PRESERVING: rows are rewritten verbatim, and any build-stamp
-      column (``index_fp`` from ``indexstamp``, ``centroid_fp`` from the
-      IVF family) is asserted SINGLE-VALUED before the rewrite — a mixed
+    - STAMP-PRESERVING: rows are rewritten verbatim, and the build-stamp
+      column (``index_fp`` from ``indexstamp``) is asserted SINGLE-VALUED
+      before the rewrite — a mixed
       index (two builds appended to one path) fails loudly here rather
       than serving a half-stale result later.
     - SAFE RELATIVE TO THE LOOP: run it while the stream is stopped
@@ -676,13 +509,9 @@ def compact_ingest_index(
       loudly in the ingest guards instead of duplicating rows.
 
     ``partition_cols`` — the secondary partitioning under each batch
-    directory (``("ci",)`` for the SimHash chunk index, ``("cell",)``
-    for IVF cells, ``()`` for the flat accepted-docs table).
-    ``target_partitions`` — output parallelism for the rewrite; None
-    repartitions by ``partition_cols`` (exactly one file per key —
-    right for key domains like ci's 4 or a few hundred IVF cells; for a
-    huge key domain or skewed keys pass an explicit count and accept a
-    few files per key).
+    directory (``("ci",)`` for the SimHash chunk index, ``()`` for the
+    flat accepted-docs table).  The rewrite repartitions by
+    ``partition_cols``: exactly one file per key (ci has 4).
 
     Returns ``{"absorbed_batches", "rows", "files_before",
     "files_after"}``.
@@ -748,7 +577,7 @@ def compact_ingest_index(
             keys = tuple(
                 c
                 for c in spark.read.parquet(str(occ_local)).columns
-                if c not in ("n", "index_fp", "centroid_fp", "occ_through")
+                if c not in ("n", "index_fp", "occ_through")
             )
             refresh_occupancy_sidecar(spark, index_path, keys)
         return {
@@ -790,7 +619,7 @@ def compact_ingest_index(
     # rule: pass iff all rows carry one non-null value, or (the old
     # rule's degenerate acceptance) every row is NULL; an empty index
     # (0 rows) still refuses loudly.
-    stamp_cols = [c for c in ("index_fp", "centroid_fp") if c in df.columns]
+    stamp_cols = ["index_fp"] if "index_fp" in df.columns else []
     agg_row = df.agg(
         F.count(F.lit(1)).alias("_rows"),
         *[
@@ -827,18 +656,14 @@ def compact_ingest_index(
     data_cols = [c for c in df.columns if c != "ingest_batch"]
     out = df.select(*data_cols)
     if partition_cols:
-        out = (
-            out.repartition(*[F.col(c) for c in partition_cols])
-            if target_partitions is None
-            else out.repartition(target_partitions, *partition_cols)
-        )
+        out = out.repartition(*[F.col(c) for c in partition_cols])
         (
             out.write.mode("overwrite")
             .partitionBy(*partition_cols)
             .parquet(str(tmp))
         )
     else:
-        out = out.coalesce(target_partitions or 1)
+        out = out.coalesce(1)
         out.write.mode("overwrite").parquet(str(tmp))
     manifest = {
         "absorbed_batches": batch_ids,

@@ -31,7 +31,6 @@ from platform_etl_openfda_faers_spark.operators.cache import unpersist_cached
 from platform_etl_openfda_faers_spark.streaming.ingest import (
     compact_ingest_index,
     dedup_ingest_batch,
-    start_dedup_ingest,
 )
 
 
@@ -42,21 +41,19 @@ def _text_for(i: int) -> str:
 _SCHEMA = "doc_id LONG, text STRING"
 
 
+def _ingest(spark, idx, acc, batches, first_id=0):
+    """Drive the real ingest step: one call per arriving batch, batch ids
+    counting up from ``first_id``."""
+    for i, rows in enumerate(batches, start=first_id):
+        dedup_ingest_batch(spark.createDataFrame(rows, _SCHEMA), i, idx, acc)
+
+
 def _ingest_files(spark, tmp_path, name, batches):
-    """Drive the real loop: one availableNow run per arriving file."""
-    src = tmp_path / f"src_{name}"
-    src.mkdir()
+    """A fresh index and accepted table holding ``batches``."""
     idx = str(tmp_path / f"index_{name}")
     acc = str(tmp_path / f"acc_{name}")
-    ckpt = str(tmp_path / f"ckpt_{name}")
-    for i, rows in enumerate(batches):
-        (src / f"b{i}.json").write_text(
-            "\n".join(json.dumps({"doc_id": d, "text": t}) for d, t in rows)
-        )
-        stream = spark.readStream.schema(_SCHEMA).json(str(src))
-        q = start_dedup_ingest(stream, idx, acc, ckpt)
-        q.awaitTermination(120)
-    return idx, acc, src, ckpt
+    _ingest(spark, idx, acc, batches)
+    return idx, acc
 
 
 def _serve_pairs(spark, idx_path, probe_rows):
@@ -91,9 +88,7 @@ PROBE = [(100, _text_for(1)), (101, _text_for(4)), (102, _text_for(77))]
 
 
 def test_compaction_serve_identity_and_loop_continuity(spark, tmp_path):
-    idx, acc, src, ckpt = _ingest_files(
-        spark, tmp_path, "main", BATCHES[:2]
-    )
+    idx, acc = _ingest_files(spark, tmp_path, "main", BATCHES[:2])
     before_pairs = _serve_pairs(spark, idx, PROBE)
     assert before_pairs  # non-vacuous: the probe really matches the index
     files_before = len(_parquet_files(idx))
@@ -112,17 +107,10 @@ def test_compaction_serve_identity_and_loop_continuity(spark, tmp_path):
 
     # the loop keeps running: batch 2 arrives AFTER compaction and must
     # dedup against the compacted base (20 dups accepted 0)
-    (src / "b2.json").write_text(
-        "\n".join(
-            json.dumps({"doc_id": d, "text": t}) for d, t in BATCHES[2]
-        )
-    )
-    stream = spark.readStream.schema(_SCHEMA).json(str(src))
-    q = start_dedup_ingest(stream, idx, acc, ckpt)
-    q.awaitTermination(120)
+    _ingest(spark, idx, acc, BATCHES[2:], first_id=2)
     accepted = {r.doc_id for r in spark.read.parquet(acc).collect()}
     # same accepted set as the never-compacted twin run
-    idx2, acc2, _, _ = _ingest_files(spark, tmp_path, "twin", BATCHES)
+    idx2, acc2 = _ingest_files(spark, tmp_path, "twin", BATCHES)
     twin = {r.doc_id for r in spark.read.parquet(acc2).collect()}
     assert accepted == twin == {0, 1, 2, 10, 12, 21, 23}
 
@@ -158,7 +146,7 @@ def test_compaction_serve_identity_and_loop_continuity(spark, tmp_path):
 def test_compaction_flat_table(spark, tmp_path):
     """partition_cols=() — the accepted-docs table: collapses to one
     file, rows identical."""
-    idx, acc, _, _ = _ingest_files(spark, tmp_path, "flat", BATCHES[:2])
+    idx, acc = _ingest_files(spark, tmp_path, "flat", BATCHES[:2])
     rows_before = {
         (r.doc_id, r.text)
         for r in spark.read.parquet(acc).select("doc_id", "text").collect()
@@ -177,7 +165,7 @@ def test_compaction_crash_resume(spark, tmp_path):
     """A crash between manifest write and cleanup is RESUMED from the
     complete scratch copy — never recomputed from the half-deleted
     index (which would silently drop the already-deleted batches)."""
-    idx, _, _, _ = _ingest_files(spark, tmp_path, "crash", BATCHES[:2])
+    idx, _ = _ingest_files(spark, tmp_path, "crash", BATCHES[:2])
     before_pairs = _serve_pairs(spark, idx, PROBE)
     root = Path(idx)
 
@@ -224,21 +212,12 @@ def test_recompaction_crash_after_promotion_keeps_base(spark, tmp_path):
     dirs while the swap is pending (tmp present); a resume after
     promotion must finish watermark + manifest ONLY, leaving the base
     intact."""
-    idx, _, src, ckpt = _ingest_files(spark, tmp_path, "repromote", BATCHES[:2])
+    idx, acc = _ingest_files(spark, tmp_path, "repromote", BATCHES[:2])
     root = Path(idx)
     compact_ingest_index(spark, idx, partition_cols=("ci",))
 
     # batch 2 arrives post-compaction -> dirs are base + ingest_batch=2
-    (src / "b2.json").write_text(
-        "\n".join(
-            json.dumps({"doc_id": d, "text": t}) for d, t in BATCHES[2]
-        )
-    )
-    stream = spark.readStream.schema(_SCHEMA).json(str(src))
-    q = start_dedup_ingest(
-        stream, idx, str(tmp_path / "acc_repromote"), ckpt
-    )
-    q.awaitTermination(120)
+    _ingest(spark, idx, acc, BATCHES[2:], first_id=2)
     spark.catalog.refreshByPath(idx)
     before_pairs = _serve_pairs(spark, idx, PROBE)
     rows_before = spark.read.parquet(idx).count()
@@ -299,7 +278,7 @@ def test_compaction_normalizes_file_uri(spark, tmp_path):
         _compacted_through,
     )
 
-    idx, _, _, _ = _ingest_files(spark, tmp_path, "fileuri", BATCHES[:2])
+    idx, _ = _ingest_files(spark, tmp_path, "fileuri", BATCHES[:2])
     uri = "file://" + idx
     res = compact_ingest_index(spark, uri, partition_cols=("ci",))
     assert res["absorbed_batches"] == [0, 1]
@@ -314,7 +293,7 @@ def test_compaction_normalizes_file_uri(spark, tmp_path):
 def test_compaction_refuses_mixed_stamp(spark, tmp_path):
     """Two different builds appended to one index path: the constant-
     stamp assertion refuses to consolidate them."""
-    idx, _, _, _ = _ingest_files(spark, tmp_path, "mixed", BATCHES[:1])
+    idx, _ = _ingest_files(spark, tmp_path, "mixed", BATCHES[:1])
     poisoned = (
         spark.read.parquet(idx)
         .drop("ingest_batch")
@@ -325,89 +304,3 @@ def test_compaction_refuses_mixed_stamp(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="distinct index_fp"):
         compact_ingest_index(spark, idx, partition_cols=("ci",))
-
-
-def test_compaction_emb_cells(spark, tmp_path):
-    """The embedding loop's cell table: partition_cols=("cell",),
-    centroid-fingerprint-stamped rows.  Serve identity pre/post
-    compaction and loop continuity (a post-compaction batch dedups
-    against the compacted base)."""
-    import json as _json
-
-    from platform_etl_openfda_faers_spark.operators import similarity
-    from platform_etl_openfda_faers_spark.streaming.ingest import (
-        start_emb_ingest,
-    )
-
-    contents = {
-        0: [1.0, 0.0, 0.0, 0.0, 0.0, 0.0],
-        1: [0.0, 1.0, 0.0, 0.0, 0.0, 0.0],
-        2: [0.6, 0.0, 1.0, 0.0, 0.0, 0.0],
-        3: [0.0, 0.6, 0.0, 0.0, 1.0, 0.0],
-        4: [0.6, 0.0, 0.0, 1.0, 0.0, 0.0],
-    }
-
-    def vec(content, jitter=0.0):
-        v = list(contents[content])
-        v[content % 2] += jitter
-        return v
-
-    batches = [
-        [(0, vec(0)), (1, vec(1)), (2, vec(2))],
-        [(10, vec(3)), (11, vec(1, 0.04)), (12, vec(4))],
-    ]
-    cent = spark.createDataFrame(
-        [(0, contents[0]), (1, contents[1])],
-        "cell INT, centroid ARRAY<DOUBLE>",
-    )
-    schema = "vec_id LONG, embedding ARRAY<DOUBLE>"
-    src = tmp_path / "src"
-    src.mkdir()
-    cells, acc, ckpt = (
-        str(tmp_path / "cells"), str(tmp_path / "acc"),
-        str(tmp_path / "ckpt"),
-    )
-    for i, rows in enumerate(batches):
-        (src / f"b{i}.json").write_text(
-            "\n".join(
-                _json.dumps({"vec_id": v, "embedding": e}) for v, e in rows
-            )
-        )
-        stream = spark.readStream.schema(schema).json(str(src))
-        q = start_emb_ingest(stream, cells, acc, ckpt, cent)
-        q.awaitTermination(120)
-
-    probe = spark.createDataFrame(
-        [(100, vec(0, 0.02)), (101, vec(4, 0.03)), (102, vec(1, 0.05))],
-        schema,
-    )
-
-    def serve():
-        spark.catalog.refreshByPath(cells)
-        stored = spark.read.parquet(cells)
-        return {
-            (r.id_a, r.id_b)
-            for r in similarity.semantic_near_duplicates_incremental(
-                probe, None, threshold=0.85, centroids=cent,
-                corpus_index=stored,
-            ).collect()
-        }
-
-    before = serve()
-    assert before  # probe really near-dups indexed vectors
-    res = compact_ingest_index(spark, cells, partition_cols=("cell",))
-    assert res["absorbed_batches"] == [0, 1]
-    assert serve() == before
-
-    # loop continuity: 20 near-dups accepted 0 across the boundary
-    (src / "b2.json").write_text(
-        _json.dumps({"vec_id": 20, "embedding": vec(0, 0.03)})
-        + "\n"
-        + _json.dumps({"vec_id": 21, "embedding": [0.3, 0.3, 0.2, 0.2, 0.2, 0.2]})
-    )
-    stream = spark.readStream.schema(schema).json(str(src))
-    q = start_emb_ingest(stream, cells, acc, ckpt, cent)
-    q.awaitTermination(120)
-    accepted = {r.vec_id for r in spark.read.parquet(acc).collect()}
-    assert 20 not in accepted and 21 in accepted
-    assert accepted == {0, 1, 2, 10, 12, 21}

@@ -1,8 +1,7 @@
 """Mixed-content media geometry (VERDICT r12 #3): mega-cluster head +
 sparse near-miss tail, so the CAPPED pair join is exercised non-empty —
-at sf >= 1 the pure mega-cluster harnesses cap-trim every bucket and
-the stored dials measure only the fold.  The dial's --mixed knob uses
-the same derivations at scale; these tests pin the law at pytest scale:
+at sf >= 1 the pure mega-cluster harnesses cap-trim every bucket.
+These tests pin the law at pytest scale:
 the capped incremental pair list equals an INDEPENDENT Python replay of
 the whole chain (chunk/landmark map, combined-occupancy cap,
 batch-touching pairs, exact verify), is non-empty, and the stored-index
@@ -11,6 +10,7 @@ serve equals recompute at the mixed geometry
 
 from __future__ import annotations
 
+import math
 from collections import Counter, defaultdict
 
 from pyspark.sql import functions as F
@@ -257,16 +257,18 @@ def test_audio_tail_keyspace_scaling(spark):
     landmark KEYSPACE can carry, or the combined-occupancy cap prunes
     every tail bucket (the sf10 ``pair_rows: 0`` failure).  Pins:
 
-    (a) the committed spacing constants of
-        ``multimodal.audio_tail_spacing`` — 50 at sf0.1/sf1 (the r12
-        geometry, unchanged) and 200 at sf10;
-    (b) the failure mode it prevents, reproduced deterministically at
-        pytest scale: an over-dense tail drives mean tail-bucket
-        occupancy over the cap and the capped match list loses the
-        tail entirely — while STILL matching the independent replay
-        (the law holds, the geometry is just useless);
-    (c) the fix: spacing derived by the same arithmetic from the same
-        cap restores non-empty tail matches, again replay-exact.
+    (a) the failure mode, reproduced deterministically at pytest scale:
+        an over-dense tail drives mean tail-bucket occupancy over the
+        cap and the capped match list loses the tail entirely — while
+        STILL matching the independent replay (the law holds, the
+        geometry is just useless);
+    (b) the fix: a spacing derived from the landmark keyspace and the
+        cap restores non-empty tail matches, again replay-exact.  A tail
+        bucket carries ~``n_tail x lm_per_track / keys_eff`` rows, so
+        holding that at ``target_occ`` bounds the tail at
+        ``keys_eff x target_occ / lm_per_track`` tracks, and the spacing
+        is that bound's share of ``n``, rounded up to a multiple of the
+        dense spacing.
     """
     n, cap, min_matches = 3000, 8, 5
     target_occ = max(1, cap // 4)
@@ -308,17 +310,7 @@ def test_audio_tail_keyspace_scaling(spark):
         peaks.unpersist()
         return got, lm_rows
 
-    # --- (a) the committed production constants (keys_eff=2900 etc.)
-    assert multimodal.audio_tail_spacing(5_000) == 50
-    assert multimodal.audio_tail_spacing(50_000) == 50
-    assert multimodal.audio_tail_spacing(500_000) == 200
-    # sf30 (r16, VERDICT r15 #6): the half-decade extension — at 1.5M
-    # docs the same arithmetic yields 600, holding mean tail-bucket
-    # occupancy at target_occ=16 (4x under the 64 cap) so the sf30
-    # harness tail SURVIVES the cap instead of reading pair_rows 0
-    assert multimodal.audio_tail_spacing(1_500_000) == 600
-
-    # --- (b) over-dense tail: law holds but the tail is cap-pruned away
+    # --- (a) over-dense tail: law holds but the tail is cap-pruned away
     dense = 2
     got_d, lm_d = run(dense)
     assert got_d == _audio_replay(lm_d, cap, min_matches)
@@ -329,15 +321,13 @@ def test_audio_tail_keyspace_scaling(spark):
     tails_d = {mid for mid, _ in lm_d if mid % dense == 0}
     assert not any(a in tails_d and b in tails_d for a, b, _ in got_d)
 
-    # --- (c) keyspace-scaled spacing restores the tail, replay-exact.
+    # --- (b) keyspace-scaled spacing restores the tail, replay-exact.
     # keys_eff/lm_per_track measured from THIS corpus's landmarks — the
     # arithmetic is applied, not assumed
     keys_eff = len(set(k for _, k in lm_d))
     lm_per_track = max(1, len(lm_d) // len(set(m for m, _ in lm_d)))
-    scaled = multimodal.audio_tail_spacing(
-        n, keys_eff=keys_eff, lm_per_track=lm_per_track,
-        target_occ=target_occ, base=dense,
-    )
+    max_tail = max(1, (keys_eff * target_occ) // lm_per_track)
+    scaled = max(dense, math.ceil(n / max_tail / dense) * dense)
     assert scaled > dense
     got_s, lm_s = run(scaled)
     assert got_s == _audio_replay(lm_s, cap, min_matches)
@@ -353,10 +343,9 @@ def test_video_tail_keyspace_scaling(spark):
     content keyspace is ~251 classes — NOT the 65,536 values a 16-bit
     chunk slice could take — and a fixed every-25th tail saturates the
     occupancy cap at sf10 (measured: 20k tail videos -> pair_rows 0).
-    Pins (a) the class-collapse premise itself: two gids 251 apart
+    Pins the class-collapse premise itself: two gids 251 apart
     render BYTE-IDENTICAL frame dHashes (the collision that makes
-    buckets fill with corpus size), and (b) the committed spacing
-    constants of ``multimodal.video_tail_spacing``."""
+    buckets fill with corpus size)."""
     ids = spark.createDataFrame(
         [(0, 1000, 0), (1, 1251, 0), (2, 1001, 0)],
         "doc_id LONG, gid LONG, off LONG",
@@ -375,12 +364,3 @@ def test_video_tail_keyspace_scaling(spark):
     }
     assert seq[0] == seq[1], "gids 251 apart must collide (mod-251 bits)"
     assert seq[0] != seq[2], "adjacent gids must differ"
-
-    assert multimodal.video_tail_spacing(5_000) == 25
-    assert multimodal.video_tail_spacing(50_000) == 25
-    assert multimodal.video_tail_spacing(500_000) == 125
-    # sf30 (r16, VERDICT r15 #6): 1.5M docs -> 375; the tail's ~500
-    # distinct gids reduce MOD 251 to ~251 content classes of ~2 gids
-    # x 2 offsets x ~4 clips ≈ 16 rows/bucket = target_occ, 4x under
-    # the 64 cap — a non-empty capped pair join at sf30, by arithmetic
-    assert multimodal.video_tail_spacing(1_500_000) == 375

@@ -198,9 +198,14 @@ def test_zorder_layout_prunes_input_bytes(spark, tmp_path):
     plain, zed = str(tmp_path / "plain"), str(tmp_path / "zed")
     opts = {"parquet.block.size": str(128 * 1024)}
     df.repartition(4).write.options(**opts).parquet(plain)
-    zorder.zorder_repartition(
-        df, ["x", "y"], [(0, 999), (0, 999)], bits=8, num_partitions=4
-    ).write.options(**opts).parquet(zed)
+    # the Z-ordered writer: range-partition and sort by the Morton key
+    z = zorder.zorder_key([F.col("x"), F.col("y")], [(0, 999), (0, 999)], bits=8)
+    (
+        df.repartitionByRange(4, z)
+        .sortWithinPartitions(z)
+        .write.options(**opts)
+        .parquet(zed)
+    )
     flt = "x BETWEEN 100 AND 120 AND y BETWEEN 200 AND 220"
     m = StageMetrics(spark)
     got = {}

@@ -16,10 +16,26 @@ NAMES = set(benchmarks.SPARK_QUERIES)
 ORACLES = set(benchmarks.ORACLE_SQL)
 
 
+# fields whose values change from run to run on an unchanged tree; a
+# certificate holding one is not byte-reproducible
+RUN_VARYING = {"rdd_id", "persistent_rdds_at_end_info"}
+
+
+def _keys(value) -> set[str]:
+    """Every dict key anywhere inside ``value``."""
+    if isinstance(value, dict):
+        return set(value).union(*map(_keys, value.values()))
+    if isinstance(value, list):
+        return set().union(*map(_keys, value))
+    return set()
+
+
 def certificate_problems(doc: dict, names: set[str], oracles: set[str]) -> list[str]:
     """Every reason the checker document ``doc`` does not certify the
     registry ``names`` (``oracles``: those with a DuckDB twin)."""
     problems = []
+    if varying := sorted(RUN_VARYING & _keys(doc)):
+        problems.append(f"run-varying fields recorded: {varying}")
     cache = doc.get("_cache_lifetime")
     if cache is None:
         problems.append("no _cache_lifetime audit block")
@@ -64,6 +80,16 @@ TAMPERINGS = {
         ORACLE_Q,
     ),
     "rows_only_empty": (lambda d: d[ROWS_ONLY].update(spark_rows=0), ROWS_ONLY),
+    "rdd_ids_recorded": (
+        lambda d: d["_cache_lifetime"].update(
+            localcheckpoint_residue_unpersisted=[{"rdd_id": 3072, "name": "None"}]
+        ),
+        "rdd_id",
+    ),
+    "residue_count_recorded": (
+        lambda d: d["_cache_lifetime"].update(persistent_rdds_at_end_info=5),
+        "persistent_rdds_at_end_info",
+    ),
 }
 
 

@@ -8,6 +8,8 @@ from platform_etl_openfda_faers_spark.operators import sampling, similarity
 from platform_etl_openfda_faers_spark.sources.readers import load_table
 from platform_etl_openfda_faers_spark.streaming import events as ev
 
+from .event_stream import EVENT_SCHEMA, read_event_stream, run_available_now
+
 
 # ---------------------------------------------------------------------------
 # hash_sample / stratified_hash_sample
@@ -154,10 +156,10 @@ def test_temperature_sample_keeps_null_group(spark):
 
 
 def test_session_streaming_equals_batch(spark, events_dir):
-    batch = spark.read.schema(ev.EVENT_SCHEMA).parquet(events_dir)
+    batch = spark.read.schema(EVENT_SCHEMA).parquet(events_dir)
     expected = sorted(map(tuple, ev.session_counts(batch).collect()))
-    stream = ev.read_event_stream(spark, events_dir)
-    got_df = ev.run_available_now(ev.session_counts(stream), "sessions_test")
+    stream = read_event_stream(spark, events_dir)
+    got_df = run_available_now(ev.session_counts(stream), "sessions_test")
     got = sorted(map(tuple, got_df.collect()))
     assert got == expected
     assert len(got) > 0

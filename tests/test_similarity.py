@@ -320,95 +320,6 @@ def test_ivf_cells_keep_passthrough(spark):
     assert df.where(F.col("flag")).distinct().count() == 4
 
 
-def test_ivf_topk_from_stored_parquet_index(spark, sf_dir, tmp_path):
-    """The stored-index contract for the ANN family, end-to-end through
-    REAL storage (the IVF analogue of the simhash64 stored-index test):
-    write the corpus's ivf_index_table to parquet partitioned on cell —
-    the assignment table a production vector index computes once at
-    ingest next to its frozen centroids — re-run ivf_topk with
-    corpus_cells= the stored table, and assert (a) results are IDENTICAL
-    to the recompute path and (b) the stored run's plan never touches the
-    corpus embedding source: every embeddings.parquet scan carries the
-    QUERY predicate, the corpus side is the index parquet scan."""
-    from platform_etl_openfda_faers_spark.sources import writers
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    corpus = emb.where(F.col("vec_id") % 7 != 0)
-    queries = emb.where(F.col("vec_id") % 7 == 0)
-    cent = similarity.kmeans_centroids(corpus, k=8, iterations=2)
-    # freeze the trained centroids to a concrete table so both runs (and
-    # the stored index) share bit-identical cells without re-training
-    cent = spark.createDataFrame(cent.collect(), schema=cent.schema)
-
-    idx_path = str(tmp_path / "ivf_index")
-    writers.write_partitioned(
-        similarity.ivf_index_table(corpus, cent), idx_path, ["cell"]
-    )
-    stored_idx = spark.read.parquet(idx_path)
-
-    recompute = similarity.ivf_topk(
-        corpus, queries, k=5, nprobe=3, centroids=cent
-    )
-    from_store = similarity.ivf_topk(
-        None, queries, k=5, nprobe=3, centroids=cent, corpus_cells=stored_idx
-    )
-    a = sorted(map(tuple, recompute.collect()))
-    b = sorted(map(tuple, from_store.collect()))
-    assert a == b
-    assert a, "harness must produce at least one neighbor"
-
-    # Plan contract: the stored run reads embeddings ONLY for the query
-    # batch (vec_id % 7 = 0); the corpus vectors come from the index scan
-    # (c_vec present in a FileScan's read schema).
-    plan = from_store._jdf.queryExecution().executedPlan().toString()
-    emb_scans = [
-        ln for ln in plan.splitlines()
-        if "FileScan" in ln and "embeddings.parquet" in ln
-    ]
-    assert emb_scans, plan
-    for ln in emb_scans:
-        assert "% 7) = 0" in ln and "NOT " not in ln, ln
-    assert any(
-        "FileScan" in ln and "c_vec" in ln for ln in plan.splitlines()
-    ), plan
-    # control: the recompute plan DOES read corpus embeddings (NOT side)
-    rplan = recompute._jdf.queryExecution().executedPlan().toString()
-    assert any(
-        "embeddings.parquet" in ln and "NOT " in ln
-        for ln in rplan.splitlines()
-        if "FileScan" in ln
-    ), rplan
-
-    # misuse guards: exactly one corpus form
-    with pytest.raises(AssertionError):
-        similarity.ivf_topk(corpus, queries, centroids=cent,
-                            corpus_cells=stored_idx)
-    with pytest.raises(AssertionError):
-        similarity.ivf_topk(None, queries, centroids=cent)
-
-    # stale-index guard: serving with centroids that differ from the ones
-    # the stored index was built with must fail LOUDLY at execution, not
-    # silently change results (r11 ADVICE)
-    other_cent = spark.createDataFrame(
-        [(int(r.cell), [float(x) + 0.5 for x in r.centroid])
-         for r in cent.collect()],
-        schema=cent.schema,
-    )
-    stale = similarity.ivf_topk(
-        None, queries, k=5, nprobe=3, centroids=other_cent,
-        corpus_cells=stored_idx,
-    )
-    with pytest.raises(Exception, match="stale IVF index"):
-        stale.collect()
-    # and a fingerprint-less table (pre-contract index) is rejected up
-    # front instead of served unchecked
-    with pytest.raises(AssertionError, match="index_fp"):
-        similarity.ivf_topk(
-            None, queries, centroids=cent,
-            corpus_cells=stored_idx.drop("index_fp"),
-        )
-
-
 def test_cell_occupancy_invariants(spark, sf_dir):
     """emb_cell_occupancy: occupancy accounts for EVERY corpus vector
     exactly once, the integer permille columns replay from the counts,

@@ -78,44 +78,6 @@ def test_config_validation():
     assert FdaConfig(outputs=("parquet", "json", "csv")).montecarlo.permutations == 100
 
 
-def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
-    """Two tables bucketed on the join key with equal bucket counts must
-    join without an Exchange (the pay-shuffle-once-at-ingest pattern)."""
-    import contextlib
-    import io
-
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS bucketdb LOCATION '{tmp_path}/warehouse'"
-    )
-    # disable auto-broadcast so the planner actually uses the bucketed
-    # layout (broadcast would bypass it — fine at this size, but the test
-    # proves the at-scale sort-merge path is shuffle-free)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        li = readers.load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_quantity"
-        )
-        orders = readers.load_table(spark, sf_dir, "orders").select(
-            F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-        )
-        writers.write_bucketed(li, "bucketdb.li_b", "l_orderkey", num_buckets=8)
-        writers.write_bucketed(orders, "bucketdb.ord_b", "l_orderkey", num_buckets=8)
-        joined = spark.table("bucketdb.li_b").join(
-            spark.table("bucketdb.ord_b"), ["l_orderkey"]
-        )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP DATABASE IF EXISTS bucketdb CASCADE")
-
-
 _GOOD_REPORT = (
     '{"safetyreportid": "SR1", "serious": "1", "receivedate": "20200101",'
     ' "primarysource": {"qualification": "1"},'
@@ -337,49 +299,24 @@ def test_load_table_normalizes_ntz_timestamps(spark, sf_dir):
     assert ev.select(F.unix_micros("ts")).first()[0] is not None
 
 
-def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
-    """ORC roundtrip; a filter on the ``load_orc`` scan reaches the ORC
-    reader's PushedFilters (same pushdown contract as parquet)."""
-    import contextlib
-    import io
-    import re
-
-    from platform_etl_openfda_faers_spark.sources.readers import load_orc, load_table
-
-    out = str(tmp_path / "nation_orc")
-    nation = load_table(spark, sf_dir, "nation")
-    nation.write.orc(out)
-
-    back = load_orc(spark, out, columns=["n_nationkey", "n_name"]).where(
-        F.col("n_nationkey") < 5
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        back.explain("formatted")
-    plan = buf.getvalue()
-    m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
-    assert m and "n_nationkey" in m.group(1), plan
-    # column pruning: the read schema carries only the projected columns
-    rs = re.search(r"ReadSchema: ([^\n]*)", plan)
-    assert rs and "n_name" in rs.group(1) and "n_regionkey" not in rs.group(1), plan
-    got = {r.n_nationkey for r in back.collect()}
-    assert got == set(range(5))
-
-
 def test_binary_file_ingest_feeds_audio_features(spark, tmp_path):
-    """binaryFile source -> audio_features: files on disk become
-    (media_id, content) rows with no driver-side listing, glob-pruned."""
+    """Spark's binaryFile source -> audio_features: files on disk become
+    (media_id, content) rows with no driver-side listing, glob-pruned,
+    and the raw WAV bytes decode into the operator's windows."""
     import numpy as np
 
     from platform_etl_openfda_faers_spark.operators import multimodal as mm
-    from platform_etl_openfda_faers_spark.sources.readers import load_binary_files
 
     for i in range(3):
         samples = (np.arange(64 + i) % 7 * 100 - 300).astype(np.int16)
         (tmp_path / f"clip{i}.wav").write_bytes(mm.encode_wav(samples))
     (tmp_path / "junk.txt").write_bytes(b"not audio")
 
-    files = load_binary_files(spark, str(tmp_path), glob="*.wav")
+    files = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.wav")
+        .load(str(tmp_path))
+    )
     assert files.count() == 3  # glob pruned the .txt
     media = files.select(
         F.regexp_extract(F.col("path"), r"clip(\d+)\.wav", 1)
@@ -393,26 +330,3 @@ def test_binary_file_ingest_feeds_audio_features(spark, tmp_path):
         (0, 0), (0, 1), (1, 0), (1, 1), (2, 0), (2, 1)
     ]
     assert all(r.peak <= 300 and r.rms > 0 for r in rows)
-
-
-def test_text_corpus_loader_line_and_wholefile(spark, tmp_path):
-    """text source front door: line mode yields one row per line with a
-    layout-independent doc_key; wholetext mode yields one row per file."""
-    from platform_etl_openfda_faers_spark.sources.readers import load_text_corpus
-
-    (tmp_path / "a.txt").write_text("alpha beta\ngamma\n")
-    (tmp_path / "b.txt").write_text("delta\n")
-
-    lines = load_text_corpus(spark, str(tmp_path))
-    rows = {(r.source_file.rsplit("/", 1)[-1], r.text) for r in lines.collect()}
-    assert rows == {
-        ("a.txt", "alpha beta"), ("a.txt", "gamma"), ("b.txt", "delta")
-    }
-    # doc_key is deterministic: same rows -> same keys under repartition
-    k1 = sorted(r.doc_key for r in lines.collect())
-    k2 = sorted(r.doc_key for r in lines.repartition(7).collect())
-    assert k1 == k2
-
-    whole = load_text_corpus(spark, str(tmp_path), whole_file=True)
-    texts = {r.text for r in whole.collect()}
-    assert texts == {"alpha beta\ngamma\n", "delta\n"}

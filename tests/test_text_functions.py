@@ -3,10 +3,7 @@ ratio) — the row-local quality-signal primitives."""
 
 from pyspark.sql import functions as F
 
-from platform_etl_openfda_faers_spark.functions.text import (
-    repetition_ratio,
-    word_ngrams,
-)
+from platform_etl_openfda_faers_spark.functions.text import word_ngrams
 
 
 def test_word_ngrams_keeps_duplicates(spark):
@@ -24,16 +21,19 @@ def test_word_ngrams_keeps_duplicates(spark):
 
 
 def test_repetition_ratio_values(spark):
+    """The repeated-3-gram ratio ``text_repetition`` computes off the
+    multiset ``word_ngrams``: 1 - distinct/total, no signal (NULL) for a
+    document with no 3-gram."""
     df = spark.createDataFrame(
         [(1, "a b a b a b"), (2, "all distinct words here now"), (3, "x")],
         ["doc_id", "text"],
     )
-    got = {
-        r.doc_id: r.rr
-        for r in df.select(
-            "doc_id", repetition_ratio(F.col("text"), 3).alias("rr")
-        ).collect()
-    }
+    grams = word_ngrams(F.col("text"), 3)
+    rr = F.when(
+        F.size(grams) > 0,
+        F.lit(1.0) - F.size(F.array_distinct(grams)) / F.size(grams).cast("double"),
+    )
+    got = {r.doc_id: r.rr for r in df.select("doc_id", rr.alias("rr")).collect()}
     assert got[1] == 0.5          # 4 grams, 2 distinct
     assert got[2] == 0.0          # no repeats
     assert got[3] is None         # under 3 tokens -> no signal

@@ -1,11 +1,13 @@
-"""The command-line tools and benchmark scripts stay runnable.
+"""The command-line tools and benchmark scripts stay runnable, and the
+engine holds no code they and the registry do not run.
 
 The engine's own tests do not run ``tools/``, ``faersbench/`` or
 ``bench.py``, so an engine refactor could silently break one.  Every such
 script is parsed (not executed) and each engine import it makes must
 resolve.  The profiling CLI and ``bench.py`` also get one end-to-end
 smoke run each, and ``bench.py``'s headline-series fold is pinned
-without Spark.
+without Spark.  In the other direction, every package definition must
+have a caller outside ``tests/`` or be a declared law reference.
 """
 
 import ast
@@ -24,6 +26,26 @@ PKG = "platform_etl_openfda_faers_spark"
 TOOLS = sorted(
     [*REPO.glob("tools/*.py"), *REPO.glob("faersbench/*.py"), REPO / "bench.py"]
 )
+PKG_FILES = sorted((REPO / PKG).rglob("*.py"))
+
+# Package definitions that nothing outside tests/ calls, kept on purpose:
+# each is the simple form a test pins a live operator against.
+# (module, name, the test that pins it)
+LAW_REFERENCES = (
+    ("operators.dedup", "distinct_tokens",
+     "test_index_rowlocal_dedup_equals_global_distinct"),
+    ("operators.dedup", "prune_df_above",
+     "test_prune_df_window_equals_join_form_law"),
+    ("operators.dedup", "minhash_signatures",
+     "test_minhash_local_equals_index_route"),
+    ("operators.dedup", "simhash_portable", "test_simhash_local_equals_exploded"),
+    ("operators.dedup", "_simhash_sig_counts",
+     "test_simhash_sql_matches_columnwise"),
+    ("operators.dedup", "jaccard_for_pairs", "test_array_verify_matches_index_verify"),
+    ("operators.graph", "connected_components",
+     "test_twophase_matches_min_label_on_mixed_graph"),
+    ("operators.multimodal", "dequantize_idct", "test_jpeg_entropy_layer_is_lossless"),
+)
 
 
 def _engine_bindings(tree: ast.Module):
@@ -36,6 +58,76 @@ def _engine_bindings(tree: ast.Module):
         elif isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == PKG:
             for a in node.names:
                 yield node.lineno, a.asname or a.name, f"{node.module}.{a.name}"
+
+
+def _references(paths) -> list[tuple[str, str, tuple[str, ...], bool]]:
+    """(name, file, enclosing definitions, called) for every code
+    reference in ``paths``: each ``Name`` and ``Attribute`` read, and
+    each ``ImportFrom`` alias.  ``file`` is relative to the repo, the
+    enclosing definitions run outermost first from ``"<module>"``, and
+    ``called`` marks the function of a ``Call``.  Docstrings and other
+    strings are not references."""
+    refs = []
+
+    class Visitor(ast.NodeVisitor):
+        def __init__(self, path: str) -> None:
+            self.path, self.stack, self.called = path, ["<module>"], set()
+
+        def visit_FunctionDef(self, node) -> None:
+            self.stack.append(node.name)
+            self.generic_visit(node)
+            self.stack.pop()
+
+        visit_AsyncFunctionDef = visit_ClassDef = visit_FunctionDef
+
+        def visit_Call(self, node: ast.Call) -> None:
+            self.called.add(id(node.func))
+            self.generic_visit(node)
+
+        def _ref(self, node, name: str) -> None:
+            refs.append((name, self.path, tuple(self.stack), id(node) in self.called))
+
+        def visit_Name(self, node: ast.Name) -> None:
+            if isinstance(node.ctx, ast.Load):
+                self._ref(node, node.id)
+
+        def visit_Attribute(self, node: ast.Attribute) -> None:
+            if isinstance(node.ctx, ast.Load):
+                self._ref(node, node.attr)
+            self.generic_visit(node)
+
+        def visit_ImportFrom(self, node: ast.ImportFrom) -> None:
+            for a in node.names:
+                self._ref(node, a.name)
+
+    for path in paths:
+        Visitor(str(path.relative_to(REPO))).visit(ast.parse(path.read_text()))
+    return refs
+
+
+def _definitions(path: Path):
+    """(name, registered) for each module-level ``def``, ``class`` and
+    assigned name in ``path``, dunders excluded.  ``registered`` marks a
+    definition that a decorator defined in the same module registers
+    (the query registry's ``@query``)."""
+    tree = ast.parse(path.read_text())
+    defs = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    local = {node.name for node in tree.body if isinstance(node, defs)}
+    for node in tree.body:
+        if isinstance(node, defs):
+            decorators = {
+                getattr(d.func if isinstance(d, ast.Call) else d, "id", None)
+                for d in node.decorator_list
+            }
+            yield node.name, bool(decorators & local)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for target in targets:
+                for n in ast.walk(target):
+                    if isinstance(n, ast.Name) and not (
+                        n.id.startswith("__") and n.id.endswith("__")
+                    ):
+                        yield n.id, False
 
 
 def _resolve(dotted: str):
@@ -73,6 +165,55 @@ def test_tool_engine_imports_resolve(path):
         ):
             missing.append(f"line {node.lineno}: {node.value.id}.{node.attr}")
     assert not missing, f"{path.name}: " + "; ".join(missing)
+
+
+def test_every_package_definition_has_a_caller():
+    """Each module-level definition in the package has a code reference
+    outside ``tests/`` and outside its own body — from the package,
+    ``tools/``, ``faersbench/``, ``bench.py`` or ``__spark_entry__.py``
+    — unless it is one of the ``LAW_REFERENCES``.  A law reference in
+    turn has no such caller, and the test it names references it.
+    Names are matched without their module, so a name two modules share
+    can hide dead code; the test never flags live code."""
+    callers = [
+        *PKG_FILES, *REPO.glob("tools/**/*.py"), *REPO.glob("faersbench/*.py"),
+        REPO / "bench.py", REPO / "__spark_entry__.py",
+    ]
+    refs: dict[str, set[tuple[str, str]]] = {}
+    for name, path, stack, _ in _references(callers):
+        refs.setdefault(name, set()).add((path, stack[1] if len(stack) > 1 else ""))
+    laws = {(mod, name): test for mod, name, test in LAW_REFERENCES}
+    dead, defined = [], set()
+    for path in PKG_FILES:
+        rel = str(path.relative_to(REPO))
+        mod = ".".join(path.relative_to(REPO / PKG).with_suffix("").parts)
+        for name, registered in _definitions(path):
+            defined.add((mod, name))
+            called = registered or any(
+                (p, top) != (rel, name) for p, top in refs.get(name, ())
+            )
+            if (mod, name) in laws:
+                assert not called, (
+                    f"law reference {mod}.{name} has a caller outside tests/: "
+                    "drop it from LAW_REFERENCES"
+                )
+            elif not called:
+                dead.append(f"{mod}.{name}")
+    assert not dead, "no caller outside tests/: " + ", ".join(dead)
+    assert set(laws) <= defined, set(laws) - defined
+    test_refs = {
+        (name, stack[1])
+        for name, _, stack, _ in _references(sorted(REPO.glob("tests/*.py")))
+        if len(stack) > 1
+    }
+    unpinned = [
+        f"{mod}.{name} ({test})"
+        for (mod, name), test in laws.items()
+        if (name, test) not in test_refs
+    ]
+    assert not unpinned, "law references their test does not name: " + ", ".join(
+        unpinned
+    )
 
 
 def test_profile_query_cli_reports_every_layer(sf_dir):
@@ -244,28 +385,12 @@ def test_bench_smoke_run(sf_dir, tmp_path):
 
 
 def _call_sites(names: set[str]) -> dict[str, list[tuple[str, str]]]:
-    """name -> [(module file, innermost enclosing function)] for every
+    """name -> [(module file, innermost enclosing definition)] for every
     call of ``names`` in the engine package."""
     sites: dict[str, list[tuple[str, str]]] = {n: [] for n in names}
-
-    class Visitor(ast.NodeVisitor):
-        def __init__(self, path: str) -> None:
-            self.path, self.stack = path, ["<module>"]
-
-        def visit_FunctionDef(self, node) -> None:
-            self.stack.append(node.name)
-            self.generic_visit(node)
-            self.stack.pop()
-
-        def visit_Call(self, node: ast.Call) -> None:
-            f = node.func
-            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-            if name in names:
-                sites[name].append((self.path, self.stack[-1]))
-            self.generic_visit(node)
-
-    for path in sorted((REPO / PKG).rglob("*.py")):
-        Visitor(str(path.relative_to(REPO / PKG))).visit(ast.parse(path.read_text()))
+    for name, path, stack, called in _references(PKG_FILES):
+        if called and name in names:
+            sites[name].append((str(Path(path).relative_to(PKG)), stack[-1]))
     return sites
 
 

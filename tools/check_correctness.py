@@ -161,8 +161,10 @@ def main() -> int:
     # released via its handles, or flagged above and force-cleared).
     # Persistent RDDs still left are localCheckpoint residue, which the
     # ContextCleaner reclaims only when the driver GC runs: unpersist
-    # each explicitly (itemized in the output) and gate on the count
-    # after that cleanup, which does not depend on GC timing.
+    # each explicitly (itemized on stdout) and gate on the count after
+    # that cleanup, which does not depend on GC timing.  The certificate
+    # keeps only what a rerun reproduces: the residue's count and RDD
+    # ids vary run to run, so they stay off the file.
     end_empty = sql_cache_empty()
     residue_before = persistent_rdd_count()
     unpersisted: list[dict] = []
@@ -180,8 +182,6 @@ def main() -> int:
     cache_summary = {
         "queries_missing_handles": cache_leaks,
         "sql_cache_empty_at_end": end_empty,
-        "persistent_rdds_at_end_info": residue_before,
-        "localcheckpoint_residue_unpersisted": unpersisted,
         "persistent_rdds_after_cleanup": residue_after,
     }
     if cache_leaks:
@@ -189,7 +189,7 @@ def main() -> int:
               f"handles: {sorted(cache_leaks)}")
     print(f"cache-lifetime: SQL cache empty at end: {end_empty}; "
           f"{residue_before} persistent RDDs before cleanup "
-          f"(localCheckpoint residue, itemized in the artifact), "
+          f"(localCheckpoint residue: {unpersisted}), "
           f"{residue_after} after explicit unpersist")
     if json_out:
         import json
