@@ -92,12 +92,11 @@ def load_config(path: str) -> EngineConfig:
     import os
     import re
 
-    raw = []
-    for line in open(path, encoding="utf-8"):
-        stripped = line.strip()
-        if stripped.startswith("//") or stripped.startswith("#"):
-            continue
-        raw.append(line)
+    with open(path, encoding="utf-8") as f:
+        raw = [
+            line for line in f
+            if not line.strip().startswith(("//", "#"))
+        ]
 
     def substitute(m: re.Match) -> str:
         # as in HOCON, an unresolved substitution is an error, not text

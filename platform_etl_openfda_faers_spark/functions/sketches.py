@@ -155,17 +155,20 @@ def kmv_pair_overlap(regs: DataFrame, k: int = 256) -> DataFrame:
     )
 
 
-def hll_portable_registers(
-    df: DataFrame, key_col: str, group_col: str, m: int = 64
-):
-    """Per-group HyperLogLog registers from a PORTABLE hash — the
+# Registers per HyperLogLog sketch; the portable estimator's constants
+# (alpha_64) are fixed for it.
+_HLL_M = 64
+
+
+def hll_portable_registers(df: DataFrame, key_col: str, group_col: str):
+    """Per-group 64-register HyperLogLog from a PORTABLE hash — the
     HLL analogue of the portable Count-Min below: every step is integer /
     string arithmetic both Spark and an ANSI-SQL oracle compute
     identically, so (unlike ``approx_count_distinct``'s engine-specific
     HLL++ binary) the whole sketch replays bit-for-bit cross-engine.
 
     Hash: the repo's 60-bit md5 primitive (first 15 hex chars as bigint).
-    bucket = h % m; the remaining ``w = h div m`` (< 2^54) yields
+    bucket = h % 64; the remaining ``w = h div 64`` (< 2^54) yields
     rho = 55 - bitlength(w) (w = 0 → 55), computed EXACTLY via the
     binary-string length — no float log2 at bucket boundaries.  Registers
     are a max-aggregate: mergeable across partitions, fixed size per
@@ -183,8 +186,8 @@ def hll_portable_registers(
         F.col(group_col).alias("grp"), h.alias("hv")
     ).select(
         "grp",
-        (F.col("hv") % m).alias("bucket"),
-        F.expr(f"hv div {m}").alias("w"),
+        (F.col("hv") % _HLL_M).alias("bucket"),
+        F.expr(f"hv div {_HLL_M}").alias("w"),
     )
     rho = F.when(F.col("w") == 0, F.lit(55)).otherwise(
         F.lit(55) - F.length(F.bin(F.col("w")))
@@ -194,9 +197,7 @@ def hll_portable_registers(
     ).agg(F.max("rho").alias("m"))
 
 
-def hll_portable_estimate(
-    df: DataFrame, key_col: str, group_col: str, m: int = 64
-) -> DataFrame:
+def hll_portable_estimate(df: DataFrame, key_col: str, group_col: str) -> DataFrame:
     """(grp, hll_est): the HLL estimate off ``hll_portable_registers``.
 
     Float discipline: the harmonic denominator Σ 2^(-M_j) is scaled by
@@ -209,8 +210,7 @@ def hll_portable_estimate(
     """
     from pyspark.sql import functions as F
 
-    assert m == 64, "the portable constants are fixed for m=64 (alpha_64)"
-    regs = hll_portable_registers(df, key_col, group_col, m)
+    regs = hll_portable_registers(df, key_col, group_col)
     hs = regs.groupBy("grp").agg(
         F.sum(F.expr("shiftleft(1L, 55 - m)")).alias("num_present"),
         F.count("*").alias("present"),

@@ -120,12 +120,12 @@ def quality_logit_micro(c: Column) -> Column:
     )
 
 
-def quality_score(c: Column, decimals: int = 6) -> Column:
+def quality_score(c: Column) -> Column:
     """Display probability for the frozen-weight gate: sigmoid of the
     integer logit — the ONE float chain (exact int -> one division, one
-    exp, one rounded division), rounded to ``decimals``."""
+    exp, one rounded division), rounded to 6 decimals."""
     z = quality_logit_micro(c).cast("double") / F.lit(1_000_000.0)
-    return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), decimals)
+    return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
 
 
 def fingerprint(c: Column) -> Column:

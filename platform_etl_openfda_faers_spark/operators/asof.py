@@ -26,12 +26,11 @@ def asof_join(
     by: str,
     right_cols: list[str] | None = None,
     direction: str = "backward",
-    suffix: str = "_right",
 ) -> DataFrame:
     """Point-in-time join.  ``on`` = time column, ``by`` = equi-key.
 
     Returns every left row plus the as-of right payload columns (renamed
-    with ``suffix``), NULL when no right row precedes (backward) / follows
+    with the suffix ``_right``), NULL when no right row precedes (backward) / follows
     (forward) it.
     """
     if direction not in ("backward", "forward"):
@@ -77,5 +76,5 @@ def asof_join(
 
     out = filled.where(F.col("_side") == 1)
     cols = [F.col(f"_left.{c}").alias(c) for c in left.columns]
-    cols += [F.col(f"_match.{c}").alias(f"{c}{suffix}") for c in right_cols]
+    cols += [F.col(f"_match.{c}").alias(f"{c}_right") for c in right_cols]
     return out.select(*cols)

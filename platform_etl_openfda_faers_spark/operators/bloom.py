@@ -9,7 +9,7 @@ the build-side keys, broadcast to the probe side and applied as a map-only
 predicate BEFORE the shuffle, drops ~99% of probe rows for a few KB of
 broadcast state.  This is exactly what Spark's adaptive runtime filter
 injects for you when thresholds allow; having it as an explicit operator
-makes the plan deterministic and lets callers size m/k for their key count.
+makes the plan deterministic.
 
 Spark-first mechanics (no driver-side hashing of data rows):
 
@@ -26,9 +26,9 @@ Spark-first mechanics (no driver-side hashing of data rows):
 4. The real equi-join runs after the pre-filter; Bloom false positives are
    eliminated there, so results are EXACTLY the plain join's (the oracle).
 
-Default sizing m=2^17 bits / k=5 gives ~1% false positives at ~18k build
-keys (n/m ~ 0.14); size m up with the build side, it only costs broadcast
-bytes (m/8 per executor).
+The sizing m=2^17 bits / k=5 gives ~1% false positives at ~18k build
+keys (n/m ~ 0.14); a larger build side needs a larger m, which only costs
+broadcast bytes (m/8 per executor).
 """
 
 from __future__ import annotations
@@ -36,24 +36,22 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_SEEDS = (0x9E3779B9, 0x85EBCA6B, 0xC2B2AE35, 0x27D4EB2F, 0x165667B1)
+# The filter's geometry: 2^17 bits probed at five xxhash64 seeds.
+_M_BITS = 1 << 17
+_SEEDS = (0x9E3779B9, 0x85EBCA6B, 0xC2B2AE35, 0x27D4EB2F, 0x165667B1)
 
 
-def _bit_positions(key: Column, m_bits: int, seeds) -> list[Column]:
-    return [F.pmod(F.xxhash64(key, F.lit(int(s))), F.lit(m_bits)) for s in seeds]
+def _bit_positions(key: Column, m_bits: int) -> list[Column]:
+    return [F.pmod(F.xxhash64(key, F.lit(int(s))), F.lit(m_bits)) for s in _SEEDS]
 
 
-def build_bloom_bitmap(
-    build: DataFrame, key: str, m_bits: int = 1 << 17, seeds=DEFAULT_SEEDS
-) -> list[int]:
-    """Aggregate the build side into an m_bits-bit Bloom bitmap, returned as
-    a list of ``m_bits/64`` signed 64-bit words (Spark LongType semantics).
+def build_bloom_bitmap(build: DataFrame, key: str) -> list[int]:
+    """Aggregate the build side into a 2^17-bit Bloom bitmap, returned as
+    a list of 2^17/64 signed 64-bit words (Spark LongType semantics).
     """
-    if m_bits % 64:
-        raise ValueError("m_bits must be a multiple of 64")
-    pos = F.explode(F.array(*_bit_positions(F.col(key), m_bits, seeds))).alias("pos")
+    pos = F.explode(F.array(*_bit_positions(F.col(key), _M_BITS))).alias("pos")
     set_bits = build.select(pos).distinct().collect()
-    bitmap = [0] * (m_bits // 64)
+    bitmap = [0] * (_M_BITS // 64)
     for r in set_bits:
         p = r["pos"]
         bitmap[p // 64] |= 1 << (p % 64)
@@ -61,13 +59,13 @@ def build_bloom_bitmap(
     return [w - (1 << 64) if w >= (1 << 63) else w for w in bitmap]
 
 
-def might_contain(key: Column, bitmap: list[int], m_bits: int, seeds=DEFAULT_SEEDS) -> Column:
+def might_contain(key: Column, bitmap: list[int], m_bits: int) -> Column:
     """Boolean probe column: True iff every seed position's bit is set."""
     # one JVM parse for the whole array<long> literal — F.lit(list) would
     # issue a py4j call PER ELEMENT (~2s of driver time at m=2^17)
     bm = F.expr("array(" + ",".join(f"{int(w)}L" for w in bitmap) + ")")
     cond = F.lit(True)
-    for p in _bit_positions(key, m_bits, seeds):
+    for p in _bit_positions(key, m_bits):
         word = (p / 64).cast("int") + 1  # element_at is 1-based
         bit = (p % 64).cast("int")
         cond = cond & (F.getbit(F.element_at(bm, word), bit) == 1)
@@ -79,8 +77,6 @@ def bloom_prefilter_join(
     build: DataFrame,
     probe_key: str,
     build_key: str,
-    m_bits: int = 1 << 17,
-    seeds=DEFAULT_SEEDS,
 ) -> DataFrame:
     """Inner equi-join ``probe.probe_key == build.build_key`` with a Bloom
     pre-filter on the probe side.  Result is exactly the plain inner join
@@ -91,10 +87,10 @@ def bloom_prefilter_join(
     can't make the key references ambiguous; when the two key columns share
     a name the build-side copy is dropped from the result.
     """
-    bitmap = build_bloom_bitmap(build, build_key, m_bits, seeds)
+    bitmap = build_bloom_bitmap(build, build_key)
     p = probe.alias("__bloom_p")
     b = build.alias("__bloom_b")
-    pre = p.where(might_contain(F.col(probe_key), bitmap, m_bits, seeds))
+    pre = p.where(might_contain(F.col(probe_key), bitmap, _M_BITS))
     out = pre.join(
         b, F.col(f"__bloom_p.{probe_key}") == F.col(f"__bloom_b.{build_key}")
     )

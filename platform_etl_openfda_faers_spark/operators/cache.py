@@ -43,11 +43,12 @@ def cached_deps(df: DataFrame) -> list[DataFrame]:
     return list(getattr(df, _ATTR, ()))
 
 
-def unpersist_cached(df: DataFrame, blocking: bool = False) -> int:
-    """Unpersist every attached dependency of ``df``; returns how many
-    handles were released.  Safe to call twice (second call is a no-op)."""
+def unpersist_cached(df: DataFrame) -> int:
+    """Unpersist every attached dependency of ``df`` without blocking;
+    returns how many handles were released.  Safe to call twice (second
+    call is a no-op)."""
     deps = cached_deps(df)
     for h in deps:
-        h.unpersist(blocking)
+        h.unpersist(False)
     setattr(df, _ATTR, [])
     return len(deps)

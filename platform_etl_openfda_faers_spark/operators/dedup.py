@@ -58,8 +58,9 @@ def token_hash32(tok):
 
 
 def _sql_ident(name: str) -> str:
-    """Backtick-quote a column name for a SQL fragment (escapes embedded
-    backticks — same helper as ``operators.similarity``)."""
+    """Backtick-quote a column name for embedding in a SQL fragment.
+    Escapes embedded backticks (`` ` `` -> ```` `` ````) so any column
+    name round-trips (the similarity operators use it too)."""
     return "`" + name.replace("`", "``") + "`"
 
 
@@ -182,15 +183,19 @@ def prune_df_window(
     )
 
 
+# The key column of every inverted index the Jaccard and containment
+# pair operators read.
+_TOKEN = "token"
+
+
 def jaccard_pairs(
     index: DataFrame,
     id_col: str,
-    key: str = "token",
     threshold: float = 0.5,
     sizes: DataFrame | None = None,
     max_doc_freq: int | None = 1000,
 ) -> DataFrame:
-    """Exact pairwise Jaccard over an inverted index (id, key).
+    """Exact pairwise Jaccard over an inverted index (id, token).
 
     Candidates = pairs sharing >=1 key (inverted-index self-join — never an
     all-pairs cross join); |A∩B| from the join, |A|,|B| from per-doc sizes.
@@ -222,18 +227,26 @@ def jaccard_pairs(
         # isNotNull preserves the documented drop-NULL-keys contract the
         # former join prune gave for free; the window prune would keep them
         index = prune_df_window(
-            index.where(F.col(key).isNotNull()), key, max_doc_freq
+            index.where(F.col(_TOKEN).isNotNull()), _TOKEN, max_doc_freq
         )
     if sizes is None:
         sizes = index.groupBy(id_col).agg(F.count("*").alias("set_size"))
-    a = index.toDF("id_a", key)
-    b = index.toDF("id_b", key)
+    a = index.toDF("id_a", _TOKEN)
+    b = index.toDF("id_b", _TOKEN)
     shared = (
-        a.join(b, [key])
+        a.join(b, [_TOKEN])
         .where(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("inter"))
     )
+    return _jaccard_above(shared, sizes, threshold)
+
+
+def _jaccard_above(inter: DataFrame, sizes: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, inter) pair counts joined to both sides' set sizes,
+    with ``jaccard`` = inter / (size_a + size_b - inter) >= ``threshold``
+    — the scoring tail of :func:`jaccard_pairs` and
+    :func:`jaccard_pairs_incremental`."""
     sz_a = sizes.toDF("id_a", "size_a")
     sz_b = sizes.toDF("id_b", "size_b")
     # no broadcast hint: `sizes` is one row per DOCUMENT, unbounded at
@@ -241,7 +254,7 @@ def jaccard_pairs(
     # whole corpus to every executor at 100 TB.  AQE broadcasts it anyway
     # whenever the measured size is under the threshold.
     return (
-        shared.join(sz_a, ["id_a"])
+        inter.join(sz_a, ["id_a"])
         .join(sz_b, ["id_b"])
         .withColumn(
             "jaccard",
@@ -252,11 +265,24 @@ def jaccard_pairs(
     )
 
 
+def _containment_above(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Jaccard pair rows re-scored as ``containment`` = inter /
+    min(size_a, size_b) >= ``threshold`` — the tail of
+    :func:`containment_pairs` and :func:`containment_pairs_incremental`."""
+    return (
+        pairs.drop("jaccard")
+        .withColumn(
+            "containment",
+            F.col("inter") / F.least("size_a", "size_b").cast("double"),
+        )
+        .where(F.col("containment") >= threshold)
+    )
+
+
 def containment_pairs(
     index: DataFrame,
     id_col: str,
     threshold: float = 0.8,
-    key: str = "token",
     max_doc_freq: int | None = 1000,
     sizes: DataFrame | None = None,
 ) -> DataFrame:
@@ -279,31 +305,19 @@ def containment_pairs(
     as :func:`jaccard_pairs` (the cap applies to BOTH numerator and
     denominators — replayed identically in the oracle).  The score is
     one exact-integer division, reproducible bit-for-bit across engines.
+    The index keys its rows by ``token``.
     Output: (id_a, id_b, inter, size_a, size_b, containment), id_a <
     id_b."""
     base = jaccard_pairs(
-        index,
-        id_col,
-        threshold=0.0,
-        key=key,
-        max_doc_freq=max_doc_freq,
-        sizes=sizes,
+        index, id_col, threshold=0.0, max_doc_freq=max_doc_freq, sizes=sizes
     )
-    return (
-        base.drop("jaccard")
-        .withColumn(
-            "containment",
-            F.col("inter") / F.least("size_a", "size_b").cast("double"),
-        )
-        .where(F.col("containment") >= threshold)
-    )
+    return _containment_above(base, threshold)
 
 
 def jaccard_pairs_incremental(
     new_index: DataFrame,
     corpus_index: DataFrame,
     id_col: str,
-    key: str = "token",
     threshold: float = 0.5,
     max_doc_freq: int | None = 1000,
 ) -> DataFrame:
@@ -329,13 +343,13 @@ def jaccard_pairs_incremental(
     across the two inputs (they share one id space).
     """
     combined = corpus_index.select(
-        F.col(id_col), F.col(key), F.lit(False).alias("_new")
+        F.col(id_col), F.col(_TOKEN), F.lit(False).alias("_new")
     ).unionByName(
-        new_index.select(F.col(id_col), F.col(key), F.lit(True).alias("_new"))
+        new_index.select(F.col(id_col), F.col(_TOKEN), F.lit(True).alias("_new"))
     )
     if max_doc_freq is not None:
         combined = prune_df_window(
-            combined.where(F.col(key).isNotNull()), key, max_doc_freq
+            combined.where(F.col(_TOKEN).isNotNull()), _TOKEN, max_doc_freq
         )
     # persist the pruned combined index: it feeds FOUR consumers below —
     # the a/b candidate sides AND both size joins — whose pruned schemas
@@ -355,15 +369,15 @@ def jaccard_pairs_incremental(
     # when the probe side is a batch row makes the summed intersection
     # exact in both cases (0.5 is exact in binary, the sum is integral).
     a = combined.where(F.col("_new")).select(
-        F.col(id_col).alias("id_a"), key
+        F.col(id_col).alias("id_a"), _TOKEN
     )
     b = combined.select(
         F.col(id_col).alias("id_b"),
-        key,
+        _TOKEN,
         F.when(F.col("_new"), F.lit(0.5)).otherwise(F.lit(1.0)).alias("_w"),
     )
     inter = (
-        a.join(b, [key])
+        a.join(b, [_TOKEN])
         .where(F.col("id_a") != F.col("id_b"))
         .select(
             F.least("id_a", "id_b").alias("id_a"),
@@ -378,28 +392,15 @@ def jaccard_pairs_incremental(
         # rounding turns the break into an oracle value mismatch
         .agg(F.round(F.sum("_w")).cast("long").alias("inter"))
     )
-    sz_a = sizes.toDF("id_a", "size_a")
-    sz_b = sizes.toDF("id_b", "size_b")
-    out = (
-        inter.join(sz_a, ["id_a"])
-        .join(sz_b, ["id_b"])
-        .withColumn(
-            "jaccard",
-            F.col("inter")
-            / (F.col("size_a") + F.col("size_b") - F.col("inter")).cast("double"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
     from .cache import attach_cached
 
-    return attach_cached(out, combined)
+    return attach_cached(_jaccard_above(inter, sizes, threshold), combined)
 
 
 def containment_pairs_incremental(
     new_index: DataFrame,
     corpus_index: DataFrame,
     id_col: str,
-    key: str = "token",
     threshold: float = 0.8,
     max_doc_freq: int | None = 1000,
 ) -> DataFrame:
@@ -415,26 +416,14 @@ def containment_pairs_incremental(
     Output rows equal :func:`containment_pairs` over the union index
     restricted to pairs touching the batch (the family law pinned in
     ``test_dedup.py``): (id_a, id_b, inter, size_a, size_b,
-    containment), id_a < id_b.  Ids must be unique across inputs."""
+    containment), id_a < id_b.  Ids must be unique across inputs; both
+    indexes key their rows by ``token``."""
     from .cache import attach_cached, cached_deps
 
     base = jaccard_pairs_incremental(
-        new_index,
-        corpus_index,
-        id_col,
-        key=key,
-        threshold=0.0,
-        max_doc_freq=max_doc_freq,
+        new_index, corpus_index, id_col, threshold=0.0, max_doc_freq=max_doc_freq
     )
-    out = (
-        base.drop("jaccard")
-        .withColumn(
-            "containment",
-            F.col("inter") / F.least("size_a", "size_b").cast("double"),
-        )
-        .where(F.col("containment") >= threshold)
-    )
-    return attach_cached(out, *cached_deps(base))
+    return attach_cached(_containment_above(base, threshold), *cached_deps(base))
 
 
 def jaccard_for_pairs(
@@ -633,15 +622,17 @@ def lsh_candidate_pairs(
     )
 
 
+# The banding of both MinHash near-dup operators: 4 bands of 4 rows (16
+# hashes), hash constants drawn with seed 42.
+_BANDS, _ROWS_PER_BAND, _MINHASH_SEED = 4, 4, 42
+
+
 def minhash_near_duplicates_shared(
     docs: DataFrame,
     text_col: str,
     id_col: str,
     n: int = 3,
-    bands: int = 4,
-    rows_per_band: int = 4,
     threshold: float = 0.5,
-    seed: int = 42,
     max_bucket_size: int | None = 32,
 ) -> DataFrame:
     """MinHash-LSH near-dup with the shingle arrays computed EXACTLY ONCE.
@@ -673,9 +664,9 @@ def minhash_near_duplicates_shared(
         .withColumn("_h", F.transform(F.col("_arr"), lambda s: token_hash32(s)))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    sigs = _minhash_fold(base, [id_col], bands * rows_per_band, seed)
+    sigs = _minhash_fold(base, [id_col], _BANDS * _ROWS_PER_BAND, _MINHASH_SEED)
     cands = lsh_candidate_pairs(
-        sigs, id_col, bands, rows_per_band, max_bucket_size=max_bucket_size
+        sigs, id_col, _BANDS, _ROWS_PER_BAND, max_bucket_size=max_bucket_size
     )
     verified = jaccard_verify_arrays(
         cands, docs, text_col, id_col, n=n, arrays=base
@@ -694,10 +685,7 @@ def minhash_near_duplicates_incremental(
     text_col: str,
     id_col: str,
     n: int = 3,
-    bands: int = 4,
-    rows_per_band: int = 4,
     threshold: float = 0.5,
-    seed: int = 42,
     max_bucket_size: int | None = 32,
 ) -> DataFrame:
     """INCREMENTAL MinHash-LSH near-dup — the form a 100 TB pipeline runs
@@ -748,8 +736,10 @@ def minhash_near_duplicates_incremental(
         .withColumn("_h", F.transform(F.col("_arr"), lambda s: token_hash32(s)))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    sigs = _minhash_fold(base, [id_col, "_new"], bands * rows_per_band, seed)
-    buckets = _band_buckets(sigs, [id_col, "_new"], bands, rows_per_band)
+    sigs = _minhash_fold(
+        base, [id_col, "_new"], _BANDS * _ROWS_PER_BAND, _MINHASH_SEED
+    )
+    buckets = _band_buckets(sigs, [id_col, "_new"], _BANDS, _ROWS_PER_BAND)
     if max_bucket_size is not None:
         # combined occupancy: the window counts batch + corpus rows per
         # (band, bucket) in one derivation, pre-partitioned on the join key
@@ -967,7 +957,6 @@ def simhash_near_duplicates_portable(
     text_col: str,
     id_col: str,
     max_hamming: int = 3,
-    bits: int = 16,
 ) -> DataFrame:
     """Oracle-checkable SimHash near-dup pairs: portable md5-based 16-bit
     signatures (row-local, map-only) + chunk-bucketed Hamming self-join.
@@ -977,8 +966,8 @@ def simhash_near_duplicates_portable(
     filter keeps the result lossless.  Output: (id_a, id_b, hamming)."""
     from .cache import attach_cached
 
-    sigs = simhash_local(df, text_col, id_col, bits=bits)
-    keyed, handles = _chunk_rows(sigs, [id_col], bits, 4, max_hamming)
+    sigs = simhash_local(df, text_col, id_col, bits=16)
+    keyed, handles = _chunk_rows(sigs, [id_col], 16, 4, max_hamming)
     a = keyed.toDF("id_a", "sig_a", "ci", "cv")
     b = keyed.toDF("id_b", "sig_b", "ci", "cv")
     out = (
@@ -1001,8 +990,6 @@ def simhash_near_duplicates_incremental(
     text_col: str,
     id_col: str,
     max_hamming: int = 3,
-    bits: int = 16,
-    n_chunks: int = 4,
 ) -> DataFrame:
     """INCREMENTAL SimHash near-dup — the asymmetric batch-vs-corpus
     shape of :func:`minhash_near_duplicates_incremental` applied to the
@@ -1012,15 +999,15 @@ def simhash_near_duplicates_incremental(
     Signatures are the portable row-local form (``simhash_local`` —
     map-only, no shuffle; the batch flag rides through via ``keep``), so
     the only shuffles are the chunk-bucket join's.  Pigeonhole: two
-    signatures within Hamming <= ``n_chunks - 1`` share at least one
-    exact bit-chunk, so candidates join on (chunk_idx, chunk_value) with
+    16-bit signatures within Hamming <= 3 share at least one of 4 exact
+    bit-chunks, so candidates join on (chunk_idx, chunk_value) with
     the BATCH side as build side — per bucket the candidate volume is
     O(|bucket ∩ batch| x |bucket|), vanishing as batch/corpus shrinks —
     and the exact ``bit_count(xor)`` filter keeps the result lossless.
     Semantics equal :func:`simhash_near_duplicates_portable` over the
     UNION of the two inputs restricted to pairs with at least one batch
     document (the law ``test_dedup.py`` pins).  No bucket cap, matching
-    the full-form generator: at ``bits=16``/4 chunks the bucket keyspace
+    the full-form generator: at 16 bits in 4 chunks the bucket keyspace
     is 4 bits, so ANY useful occupancy cap would prune everything — the
     cap slot belongs to wide-signature deployments (64-bit simhash,
     16-bit chunks), where ``prune_df_window`` on (ci, cv) drops
@@ -1032,14 +1019,13 @@ def simhash_near_duplicates_incremental(
     """
     from .cache import attach_cached
 
-    assert bits % n_chunks == 0
     combined = corpus_docs.select(
         F.col(id_col), F.col(text_col), F.lit(False).alias("_new")
     ).unionByName(
         new_docs.select(F.col(id_col), F.col(text_col), F.lit(True).alias("_new"))
     )
-    sigs = simhash_local(combined, text_col, id_col, bits=bits, keep=("_new",))
-    keyed, handles = _chunk_rows(sigs, [id_col, "_new"], bits, n_chunks, max_hamming)
+    sigs = simhash_local(combined, text_col, id_col, bits=16, keep=("_new",))
+    keyed, handles = _chunk_rows(sigs, [id_col, "_new"], 16, 4, max_hamming)
     a = keyed.where(F.col("_new")).select(
         F.col(id_col).alias("id_a"), F.col("simhash").alias("sig_a"), "ci", "cv"
     )

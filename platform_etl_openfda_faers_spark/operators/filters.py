@@ -12,13 +12,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def anti_join_blacklist(
-    pairs: DataFrame,
-    blacklist: DataFrame,
-    pair_col: str = "reaction_reactionmeddrapt",
-    blacklist_col: str = "reactions",
-) -> DataFrame:
-    """Drop rows whose reaction appears in the blacklist (J1).
+def anti_join_blacklist(pairs: DataFrame, blacklist: DataFrame) -> DataFrame:
+    """Drop rows whose ``reaction_reactionmeddrapt`` appears in the
+    blacklist's ``reactions`` column (J1).
 
     The blacklist is tiny (hundreds of terms) -> broadcast; the anti-join is
     then a map-side hash probe with zero shuffle of the large side — the
@@ -26,7 +22,7 @@ def anti_join_blacklist(
     """
     return pairs.join(
         F.broadcast(blacklist),
-        pairs[pair_col] == blacklist[blacklist_col],
+        pairs["reaction_reactionmeddrapt"] == blacklist["reactions"],
         "left_anti",
     )
 

@@ -123,12 +123,11 @@ def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
-def connected_components_twophase(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    max_iterations: int = 30,
-) -> DataFrame:
+# The round budget of the two-phase components: past it, raise.
+_TWOPHASE_MAX_ROUNDS = 30
+
+
+def connected_components_twophase(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """(id, component) via alternating large-star / small-star rewrites —
     the Kiveris et al. two-phase algorithm, converging in O(log^2 n) rounds
     worst case (O(log n) in practice) versus min-label propagation's
@@ -165,7 +164,7 @@ def connected_components_twophase(
 
     converged = False
     cur_count: int | None = initial_count
-    for _ in range(max_iterations):
+    for _ in range(_TWOPHASE_MAX_ROUNDS):
         # Each star phase needs "per node u: m = min over u's rows, attached
         # back to every row of u" — written as groupBy(min) + equi-join that
         # is TWO shuffles of the edge set (the aggregate's and the join
@@ -241,7 +240,7 @@ def connected_components_twophase(
     if not converged:
         raise RuntimeError(
             f"connected_components_twophase did not converge within "
-            f"{max_iterations} rounds"
+            f"{_TWOPHASE_MAX_ROUNDS} rounds"
         )
     # stars: every non-min node points directly at its component min
     direct = cur.groupBy("u").agg(F.min("v").alias("comp"))
@@ -250,16 +249,15 @@ def connected_components_twophase(
     ).select("id", F.coalesce("comp", F.col("id")).alias("comp"))
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 3,
-    damping: float = 0.85,
-) -> DataFrame:
-    """Fixed-iteration PageRank over a directed edge list — the second
-    iterative-algorithm pattern in this engine (after Lloyd k-means):
-    a PURELY declarative composition, no driver-side convergence actions.
+# PageRank's fixed schedule: 3 iterations at damping 0.85.
+_PAGERANK_ITERATIONS, _DAMPING = 3, 0.85
+
+
+def pagerank(edges: DataFrame) -> DataFrame:
+    """Fixed-iteration PageRank over a directed ``(src, dst)`` edge list
+    — the second iterative-algorithm pattern in this engine (after Lloyd
+    k-means): a PURELY declarative composition, no driver-side
+    convergence actions.
 
     Cross-engine float discipline (see ``plans/benchmarks.py`` header):
     per-edge contributions round to 12 decimals, the per-node sum runs
@@ -274,7 +272,7 @@ def pagerank(
     Plan shape at scale: per iteration one join of edges to ranks on src
     (+ a broadcast-sized outdeg join), one hash aggregate on dst, one
     left join back to the node list; N rides a 1-row lazy-scalar
-    broadcast.  ``iterations`` is fixed so the whole run is one lazy DAG,
+    broadcast.  The iteration count is fixed so the whole run is one lazy DAG,
     never checkpointed: measured at sf0.1 (16k-node purchase graph), a
     ``localCheckpoint`` every few iterations was SLOWER on wall time
     (10 iter: 3.0s vs 9.4s; 40 iter: 8.0s vs 29.2s) because each eager
@@ -294,7 +292,7 @@ def pagerank(
     # query at sf0.1 (9.6s -> 5.5s), ~flat at sf1 where the distinct-pair
     # set is large enough that caching trades recompute for
     # (de)serialization.
-    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")).persist(
+    e = edges.select(F.col("src").alias("_src"), F.col("dst").alias("_dst")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     nodes = (
@@ -308,7 +306,7 @@ def pagerank(
     ranks = nodes.crossJoin(F.broadcast(n_tab)).select(
         "node", F.round(F.lit(1.0) / F.col("n"), 10).alias("rank")
     )
-    for _ in range(iterations):
+    for _ in range(_PAGERANK_ITERATIONS):
         contribs = (
             e.join(ranks, e["_src"] == ranks["node"])
             .join(outdeg, "_src")
@@ -326,8 +324,8 @@ def pagerank(
             .select(
                 "node",
                 F.round(
-                    F.lit(1.0 - damping) / F.col("n")
-                    + damping * F.coalesce(F.col("s"), F.lit(0.0)),
+                    F.lit(1.0 - _DAMPING) / F.col("n")
+                    + _DAMPING * F.coalesce(F.col("s"), F.lit(0.0)),
                     10,
                 ).alias("rank"),
             )

@@ -18,10 +18,10 @@ def add_meddra_codes(
     df: DataFrame,
     preferred_terms: DataFrame,
     low_level_terms: DataFrame,
-    drug_col: str = "chembl_id",
-    reaction_col: str = "reaction_reactionmeddrapt",
 ) -> DataFrame:
-    """Attach ``meddraCode`` and dedup to one row per (drug, reaction)."""
+    """Attach ``meddraCode`` and dedup to one row per (``chembl_id``,
+    ``reaction_reactionmeddrapt``)."""
+    reaction_col = "reaction_reactionmeddrapt"
     joined = (
         df.join(
             F.broadcast(preferred_terms),
@@ -37,7 +37,7 @@ def add_meddra_codes(
         .drop("pt_name", "llt_name", "pt_code", "llt_code")
     )
     # A3 — dropDuplicates on the pair key (OpenFdaEtl.scala:189).
-    return joined.dropDuplicates([drug_col, reaction_col])
+    return joined.dropDuplicates(["chembl_id", reaction_col])
 
 
 def stub_meddra_code(df: DataFrame) -> DataFrame:

@@ -63,28 +63,26 @@ def _guard_null_keys(
     return df
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    keys: list[str],
-    compare_cols: list[str] | None = None,
-    change_col: str = "change",
-) -> DataFrame:
+# The change-label column that snapshot_diff writes and apply_changes reads.
+_CHANGE = "change"
+
+
+def snapshot_diff(old: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
     """CDC between two snapshots of the same table: one row per key whose
     state changed, classified ``insert`` (key only in ``new``), ``delete``
-    (key only in ``old``) or ``update`` (key in both, any ``compare_cols``
+    (key only in ``old``) or ``update`` (key in both, any non-key
     value differs under NULL-SAFE equality — NULL -> value and
     value -> NULL are real updates, NULL -> NULL is not).
 
-    Output: keys + ``change_col`` + the non-key columns, carrying the NEW
+    Output: keys + ``change`` + the non-key columns, carrying the NEW
     side for inserts/updates and the OLD side for deletes (what a
     downstream MERGE or tombstone writer needs).  Matched-equal rows are
     classified ``unchanged`` and dropped: at snapshot scale the unchanged
     set IS the table.
 
-    ``compare_cols`` defaults to every non-key column (schemas must
-    match).  NULL snapshot keys are rejected at execution time via the
-    same lazy ``raise_error`` guard as ``merge_upsert``.
+    The two schemas must match.  NULL snapshot keys are rejected at
+    execution time via the same lazy ``raise_error`` guard as
+    ``merge_upsert``.
 
     Scale shape: one shuffle per side on the key (none if both snapshots
     are bucketed on it — ``DataFrameWriter.bucketBy``); the change
@@ -98,10 +96,8 @@ def snapshot_diff(
             f"{sorted(new.columns)}"
         )
     non_keys = [c for c in old.columns if c not in keys]
-    if compare_cols is None:
-        compare_cols = non_keys
-    if change_col in old.columns:
-        raise ValueError(f"change_col {change_col!r} collides with a column")
+    if _CHANGE in old.columns:
+        raise ValueError(f"the {_CHANGE!r} output column collides with an input column")
 
     o = _guard_null_keys(old, keys, "old", "snapshot_diff").withColumn(
         "__o_present", F.lit(1)
@@ -118,8 +114,8 @@ def snapshot_diff(
     n_absent = F.col("n.__n_present").isNull()
     differs = reduce(
         lambda a, b: a | b,
-        [~F.col(f"o.{c}").eqNullSafe(F.col(f"n.{c}")) for c in compare_cols],
-    ) if compare_cols else F.lit(False)
+        [~F.col(f"o.{c}").eqNullSafe(F.col(f"n.{c}")) for c in non_keys],
+    ) if non_keys else F.lit(False)
     change = (
         F.when(o_absent, F.lit("insert"))
         .when(n_absent, F.lit("delete"))
@@ -129,20 +125,15 @@ def snapshot_diff(
     cols = [
         F.coalesce(F.col(f"n.{k}"), F.col(f"o.{k}")).alias(k) for k in keys
     ]
-    cols.append(change.alias(change_col))
+    cols.append(change.alias(_CHANGE))
     for c in non_keys:
         cols.append(
             F.when(n_absent, F.col(f"o.{c}")).otherwise(F.col(f"n.{c}")).alias(c)
         )
-    return joined.select(*cols).where(F.col(change_col) != "unchanged")
+    return joined.select(*cols).where(F.col(_CHANGE) != "unchanged")
 
 
-def apply_changes(
-    target: DataFrame,
-    changes: DataFrame,
-    keys: list[str],
-    change_col: str = "change",
-) -> DataFrame:
+def apply_changes(target: DataFrame, changes: DataFrame, keys: list[str]) -> DataFrame:
     """Apply a :func:`snapshot_diff` result to a target snapshot — the
     composed incremental-ingest step: upsert ``insert``/``update`` rows,
     tombstone ``delete`` keys.  ``apply_changes(old, snapshot_diff(old,
@@ -151,7 +142,7 @@ def apply_changes(
     including NULL->value / value->NULL transitions).
 
     ``unchanged`` rows are harmless no-op upserts.  Any OTHER
-    ``change_col`` value fails loudly via a lazy distributed
+    ``change`` value fails loudly via a lazy distributed
     ``raise_error`` — a misspelled label silently treated as an upsert
     would corrupt the target.
 
@@ -162,20 +153,18 @@ def apply_changes(
     """
     known = ["insert", "update", "delete", "unchanged"]
     guarded = changes.withColumn(
-        change_col,
-        F.when(F.col(change_col).isin(known), F.col(change_col)).otherwise(
+        _CHANGE,
+        F.when(F.col(_CHANGE).isin(known), F.col(_CHANGE)).otherwise(
             F.raise_error(
                 F.concat(
-                    F.lit(
-                        f"apply_changes: unknown {change_col!r} value "
-                    ),
-                    F.coalesce(F.col(change_col), F.lit("NULL")),
+                    F.lit(f"apply_changes: unknown {_CHANGE!r} value "),
+                    F.coalesce(F.col(_CHANGE), F.lit("NULL")),
                 )
             )
         ),
     )
-    upserts = guarded.where(F.col(change_col) != "delete").drop(change_col)
-    deletes = guarded.where(F.col(change_col) == "delete").select(*keys)
+    upserts = guarded.where(F.col(_CHANGE) != "delete").drop(_CHANGE)
+    deletes = guarded.where(F.col(_CHANGE) == "delete").select(*keys)
     merged = merge_upsert(target, upserts, keys)
     return merged.join(deletes, keys, "left_anti")
 

@@ -117,10 +117,9 @@ def _keyed_cols(
     return cols, unpack
 
 
-def attach_binary(
-    df: DataFrame, payload_col: str, id_col: str, fmt: str = "utf8-text"
-) -> DataFrame:
-    """Wrap a column as an opaque media payload with typed metadata.
+def attach_binary(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
+    """Wrap a text column as an opaque ``utf8-text`` media payload with
+    typed metadata.
 
     All metadata is computed JVM-side (``encode``/``sha2``/``octet_length``).
     """
@@ -129,7 +128,7 @@ def attach_binary(
         F.col(id_col).cast("long").alias("media_id"),
         content.alias("content"),
         F.struct(
-            F.lit(fmt).alias("format"),
+            F.lit("utf8-text").alias("format"),
             F.octet_length(content).cast("long").alias("byte_len"),
             F.sha2(F.col(payload_col), 256).alias("sha256"),
         ).alias("meta"),
@@ -1959,11 +1958,11 @@ def encode_mp4_meta(
     width: int,
     height: int,
     codec: bytes = b"avc1",
-    brand: bytes = b"isom",
 ) -> bytes:
-    """Minimal well-formed single-video-track MP4 (ftyp + moov tree + a
-    stub mdat) — the fixture side of the metadata parser."""
-    ftyp = _mp4_box(b"ftyp", brand + struct.pack(">I", 0x200) + brand + b"iso2")
+    """Minimal well-formed single-video-track MP4 (ftyp with brand
+    ``isom`` + moov tree + a stub mdat) — the fixture side of the
+    metadata parser."""
+    ftyp = _mp4_box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isomiso2")
     vf = b"\x00\x00\x00\x00"
     unity = struct.pack(
         ">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000
@@ -2878,9 +2877,7 @@ def synthetic_bmp_media_perceptual(
     return _map_rows(df, cols, _SYNTH_SCHEMA, row)
 
 
-def synthetic_bmp_media_ragged(
-    df: DataFrame, id_col: str, group_mod: int = 50
-) -> DataFrame:
+def synthetic_bmp_media_ragged(df: DataFrame, id_col: str) -> DataFrame:
     """The perceptual-duplicate harness at RAGGED, group-dependent sizes
     (test/oracle harness for resize-then-hash): same content formula as
     ``synthetic_bmp_media_perceptual`` — pixel(x, y, c) =
@@ -2890,11 +2887,11 @@ def synthetic_bmp_media_ragged(
     group, so brightness-shifted copies stay provably hash-identical
     AFTER a deterministic resize (a uniform +delta survives integer
     box-averaging exactly: floor((s + delta*area)/area) =
-    floor(s/area) + delta)."""
+    floor(s/area) + delta).  Content groups: ``gid = id % 50``."""
 
     def row(mid):
         mid = int(mid)
-        gid, delta = mid % group_mod, (mid // group_mod) % 3
+        gid, delta = mid % 50, (mid // 50) % 3
         w, h = 40 + gid % 7, 33 + gid % 5
         y, x, c = np.ogrid[0:h, 0:w, 0:3]
         rgb = (
@@ -3049,10 +3046,8 @@ def image_dhash(df: DataFrame) -> DataFrame:
 _DHASH = ("dhash_hi", "dhash_lo")
 
 
-def dhash_chunk_table(
-    hashes: DataFrame, id_col: str = "media_id"
-) -> DataFrame:
-    """(id, dhash_hi, dhash_lo, ci, cv) — the UNCAPPED dHash chunk table
+def dhash_chunk_table(hashes: DataFrame) -> DataFrame:
+    """(media_id, dhash_hi, dhash_lo, ci, cv) — the UNCAPPED dHash chunk table
     for an image set: what a production deployment computes ONCE at
     ingest (decode + hash + chunk) and stores partitioned on ``ci`` as
     the corpus image-signature index.  Feed a stored copy back to
@@ -3066,7 +3061,7 @@ def dhash_chunk_table(
     from .indexstamp import stamp_index
 
     return stamp_index(
-        chunks_4x16(hashes.select(id_col, *_DHASH), *_DHASH),
+        chunks_4x16(hashes.select("media_id", *_DHASH), *_DHASH),
         "dhash_chunk_table",
     )
 
@@ -3074,7 +3069,6 @@ def dhash_chunk_table(
 def dhash_near_duplicates(
     hashes: DataFrame,
     max_hamming: int = 3,
-    id_col: str = "media_id",
     max_bucket_size: int | None = 64,
 ) -> DataFrame:
     """Hamming-near image pairs from an ``image_dhash`` table — the same
@@ -3102,7 +3096,7 @@ def dhash_near_duplicates(
     Spark and the SQL oracle).  Output: (id_a, id_b, hamming).
     """
     _pigeonhole_bound(max_hamming, 4)
-    keyed = chunks_4x16(hashes.select(id_col, *_DHASH), *_DHASH)
+    keyed = chunks_4x16(hashes.select("media_id", *_DHASH), *_DHASH)
     if max_bucket_size is not None:
         keyed = prune_df_window(keyed, ["ci", "cv"], max_bucket_size)
     a = keyed.toDF("id_a", "hi_a", "lo_a", "ci", "cv")
@@ -3208,11 +3202,10 @@ def video_frame_dhash(df: DataFrame) -> DataFrame:
 def video_near_duplicates(
     frame_hashes: DataFrame,
     max_hamming: int = 3,
-    min_frames: int = 2,
     max_bucket_size: int | None = 64,
 ) -> DataFrame:
     """Video near-dup retrieval by frame voting: two videos are near
-    duplicates when at least ``min_frames`` of their frame pairs are
+    duplicates when at least 2 of their frame pairs are
     within Hamming <= ``max_hamming`` of each other — the property a
     re-encoded, trimmed, or time-shifted copy keeps while every global
     digest of the byte stream breaks.
@@ -3247,7 +3240,7 @@ def video_near_duplicates(
     return (
         frame_pairs.groupBy("id_a", "id_b")
         .agg(F.count("*").cast("long").alias("n_frame_matches"))
-        .where(F.col("n_frame_matches") >= min_frames)
+        .where(F.col("n_frame_matches") >= 2)
     )
 
 
@@ -3701,17 +3694,18 @@ def synthetic_wav_media_tonal(
     return _map_rows(df, cols, _SYNTH_SCHEMA, row)
 
 
-def audio_spectral_peaks(df: DataFrame, window: int = 64) -> DataFrame:
+def audio_spectral_peaks(df: DataFrame) -> DataFrame:
     """(media_id, win, peak_bin): dominant rfft POWER bin per full
-    non-overlapping ``window``-frame window of channel 0 — the spectral
+    non-overlapping 64-frame window of channel 0 — the spectral
     primitive under audio fingerprinting (a track's peak-bin sequence is
     its content address; Shazam-style retrieval hashes pairs of these).
 
     Scale shape: Arrow-batched ``mapInPandas``, the window reshape and
     FFT vectorized per payload (one 2-D ``rfft`` call, no Python loop
     over windows) — map-only, no shuffle; output is
-    O(total_frames / window) integer rows.
+    O(total_frames / 64) integer rows.
     """
+    window = 64
 
     def row(media_id, payload):
         samples, channels, _ = decode_wav(bytes(payload))
@@ -3734,14 +3728,14 @@ def audio_spectral_peaks(df: DataFrame, window: int = 64) -> DataFrame:
     return _map_rows(df, ["media_id", "content"], schema, row)
 
 
-def audio_fingerprint(df: DataFrame, window: int = 64) -> DataFrame:
+def audio_fingerprint(df: DataFrame) -> DataFrame:
     """(media_id, fingerprint): md5 of the win-ordered comma-joined
-    peak-bin sequence — a compact content address for exact audio dedup
-    (the WAV analogue of ``image_dhash``'s exact-group path; byte-level
+    peak-bin sequence of 64-frame windows — a compact content address
+    for exact audio dedup (the WAV analogue of ``image_dhash``'s exact-group path; byte-level
     container or encoder differences that preserve the audible content
     collapse to one fingerprint).  One map-only spectral pass, one
     16-byte-per-track aggregate shuffle."""
-    peaks = audio_spectral_peaks(df, window)
+    peaks = audio_spectral_peaks(df)
     seq = F.transform(
         F.array_sort(F.collect_list(F.struct("win", "peak_bin"))),
         lambda s: s["peak_bin"].cast("string"),
@@ -3773,21 +3767,22 @@ def audio_landmarks(peaks: DataFrame, max_dt: int = 3) -> DataFrame:
     PRODUCTION GEOMETRY (catalog-scale keyspace arithmetic — the same
     checkable-vs-scalable note as SimHash-16 vs -64 and SemDeDup's k):
     the retrieval join buckets on the key (a_bin, b_bin, dt), so its
-    health is keyspace vs landmark count.  The test harness's
-    ``window=64`` peaks yield 33 rfft bins; with ``max_dt=3`` that is
-    33 x 33 x 3 ≈ 3.3e3 distinct keys — fine for the 500k-track test
-    grid (~10 landmarks/track → ~1.5e3 rows/bucket pre-cap) but
-    SATURATED at catalog scale: 1e8 tracks x ~1e2 landmarks = 1e10 rows
-    over 3.3e3 keys ≈ 3e6 rows/bucket, where the combined-occupancy cap
-    would prune essentially every bucket (no retrieval) and uncapped
-    pair generation is ~1e16 candidates (no run).  A real deployment
-    raises the dials this function and ``audio_spectral_peaks`` already
-    expose: window=1024+ (513+ bins) and max_dt≈64 fan-out gives
-    513^2 x 64 ≈ 1.7e7 keys — 1e10 landmarks land ~6e2 rows/bucket, so
-    the cap trims only degenerate (tonal/silence) keys and per-bucket
-    pair volume stays bounded.  Keyspace must scale with the catalog,
-    exactly as SemDeDup scales k with the corpus (SCALING.md 'Audio
-    landmark keyspace' has the full arithmetic).
+    health is keyspace vs landmark count.  The 64-frame
+    ``audio_spectral_peaks`` window yields 33 rfft bins; with
+    ``max_dt=3`` that is 33 x 33 x 3 ≈ 3.3e3 distinct keys — fine for
+    the 500k-track test grid (~10 landmarks/track → ~1.5e3 rows/bucket
+    pre-cap) but SATURATED at catalog scale: 1e8 tracks x ~1e2 landmarks
+    = 1e10 rows over 3.3e3 keys ≈ 3e6 rows/bucket, where the
+    combined-occupancy cap would prune essentially every bucket (no
+    retrieval) and uncapped pair generation is ~1e16 candidates (no
+    run).  A real deployment raises ``max_dt`` here and the spectral
+    window (a constant of ``audio_spectral_peaks``): window=1024+ (513+
+    bins) and max_dt≈64 fan-out gives 513^2 x 64 ≈ 1.7e7 keys — 1e10
+    landmarks land ~6e2 rows/bucket, so the cap trims only degenerate
+    (tonal/silence) keys and per-bucket pair volume stays bounded.
+    Keyspace must scale with the catalog, exactly as SemDeDup scales k
+    with the corpus (SCALING.md 'Audio landmark keyspace' has the full
+    arithmetic).
     """
     tags = [c for c in peaks.columns if c not in ("media_id", "win", "peak_bin")]
     track = ["media_id", *tags]
@@ -3827,28 +3822,21 @@ def audio_landmarks(peaks: DataFrame, max_dt: int = 3) -> DataFrame:
     ).distinct()
 
 
-def audio_landmark_matches(
-    peaks: DataFrame,
-    max_dt: int = 3,
-    min_matches: int = 10,
-    max_bucket_size: int | None = 64,
-) -> DataFrame:
-    """Offset-robust audio near-dup retrieval: tracks sharing at least
-    ``min_matches`` landmark keys.  Output: (id_a, id_b, n_matches),
+def audio_landmark_matches(peaks: DataFrame) -> DataFrame:
+    """Offset-robust audio near-dup retrieval: tracks sharing at least 10
+    landmark keys (``max_dt=3``).  Output: (id_a, id_b, n_matches),
     id_a < id_b.
 
     Candidates join on the landmark key (a_bin, b_bin, dt) — pair
     generation is quadratic PER KEY, and exact-duplicate mega-clusters
     make keys arbitrarily hot (every copy of a track shares its whole
-    key set), so key buckets are CAPPED at ``max_bucket_size`` combined
-    occupancy by default, exactly the dHash/MinHash dial: oversized
-    buckets prune whole (replayed in the oracle), and mega-cluster exact
-    duplicates belong to the linear ``audio_fingerprint`` groupBy, not
-    the retrieval join.  ``None`` opts out for corpora known free of
-    degenerate keys."""
-    lm = audio_landmarks(peaks, max_dt=max_dt)
-    if max_bucket_size is not None:
-        lm = prune_df_window(lm, ["a_bin", "b_bin", "dt"], max_bucket_size)
+    key set), so key buckets are CAPPED at 64 combined occupancy,
+    exactly the dHash/MinHash dial: oversized buckets prune whole
+    (replayed in the oracle), and mega-cluster exact duplicates belong
+    to the linear ``audio_fingerprint`` groupBy, not the retrieval
+    join."""
+    lm = audio_landmarks(peaks, max_dt=3)
+    lm = prune_df_window(lm, ["a_bin", "b_bin", "dt"], 64)
     a = lm.toDF("id_a", "a_bin", "b_bin", "dt")
     b = lm.toDF("id_b", "a_bin", "b_bin", "dt")
     return (
@@ -3856,7 +3844,7 @@ def audio_landmark_matches(
         .where(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("long").alias("n_matches"))
-        .where(F.col("n_matches") >= min_matches)
+        .where(F.col("n_matches") >= 10)
     )
 
 

@@ -38,16 +38,13 @@ def _exact_col(name: str):
     return F.col("`" + name.replace("`", "``") + "`")
 
 
-def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Long-format profile: one row per column with
+def profile_table(df: DataFrame) -> DataFrame:
+    """Long-format profile: one row per column of ``df`` with
     (col_name, n_rows, n_nulls, n_distinct, min_num, max_num, min_str,
     max_str) — numeric min/max as double, everything else as string,
     the other pair NULL."""
-    cols = cols or df.columns
+    cols = df.columns
     dtypes = dict(df.dtypes)
-    missing = [c for c in cols if c not in dtypes]
-    if missing:
-        raise ValueError(f"unknown columns: {missing}")
     # _exact_col resolves each name verbatim (a bare F.col/df[...] would
     # parse dots and backticks); aggregate aliases are positional so
     # arbitrary names never become identifiers

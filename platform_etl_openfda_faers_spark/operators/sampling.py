@@ -17,8 +17,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# The md5 salt and bucket count every sampler here draws with, and the
+# drug key of the FAERS sample.
+_SEED, _BUCKETS, _DRUG_KEY = 42, 10_000, "chembl_id"
 
-def hash_bucket(key: Column, seed: int = 42, buckets: int = 10_000) -> Column:
+
+def hash_bucket(key: Column, seed: int = _SEED, buckets: int = _BUCKETS) -> Column:
     """Deterministic bucket in [0, buckets) from a key column.
 
     md5-derived (first 8 hex chars -> long) so the identical expression can
@@ -39,7 +43,6 @@ def hash_sample(
     key_col: str,
     fraction: float,
     seed: int = 42,
-    buckets: int = 10_000,
 ) -> DataFrame:
     """Reproducible ~``fraction`` sample keyed on ``key_col``.
 
@@ -48,7 +51,7 @@ def hash_sample(
     state, pushes down to the scan, and re-runs select identical rows.
     Rows with equal keys are kept or dropped together (sample-by-key).
     """
-    return df.where(hash_bucket(F.col(key_col), seed, buckets) < round(fraction * buckets))
+    return df.where(hash_bucket(F.col(key_col), seed) < round(fraction * _BUCKETS))
 
 
 def stratified_hash_sample(
@@ -56,13 +59,11 @@ def stratified_hash_sample(
     key_col: str,
     stratum_col: str,
     fraction: float,
-    seed: int = 42,
-    buckets: int = 10_000,
 ) -> DataFrame:
     """Per-stratum deterministic sample: the bucket is salted with the
     stratum, so each stratum draws an independent ~``fraction`` subset."""
     salted = F.concat_ws("|", F.col(stratum_col).cast("string"), F.col(key_col).cast("string"))
-    return df.where(hash_bucket(salted, seed, buckets) < round(fraction * buckets))
+    return df.where(hash_bucket(salted) < round(fraction * _BUCKETS))
 
 
 def temperature_sample(
@@ -71,8 +72,6 @@ def temperature_sample(
     key_col: str,
     rate: float,
     alpha: float = 0.5,
-    seed: int = 42,
-    buckets: int = 10_000,
 ) -> DataFrame:
     """Temperature-based domain rebalancing — the standard data-mix
     resampling law for LLM training corpora: keep each row of group ``s``
@@ -85,7 +84,7 @@ def temperature_sample(
 
     Deterministic and oracle-replayable: membership is the md5 bucket of
     the row key against an INTEGER per-group threshold
-    ``floor(buckets * p_s)``.  For ``alpha=0.5`` the threshold chain is
+    ``floor(10000 * p_s)``.  For ``alpha=0.5`` the threshold chain is
     sqrt -> divide -> multiply -> floor — every step correctly rounded
     IEEE double in both Spark and DuckDB, so thresholds are bit-identical
     cross-engine (general ``alpha`` uses ``pow``, which is NOT guaranteed
@@ -120,13 +119,13 @@ def temperature_sample(
         p = F.lit(float(rate)) * F.pow(n, F.lit(float(alpha) - 1.0))
     thr = counts.select(
         F.col(group_col).alias("_thr_group"),
-        F.floor(F.lit(float(buckets)) * F.least(F.lit(1.0), p))
+        F.floor(F.lit(float(_BUCKETS)) * F.least(F.lit(1.0), p))
         .cast("long")
         .alias("_thr"),
     )
     out = df.join(
         thr, F.col(group_col).eqNullSafe(F.col("_thr_group"))
-    ).where(hash_bucket(F.col(key_col), seed, buckets) < F.col("_thr"))
+    ).where(hash_bucket(F.col(key_col)) < F.col("_thr"))
     # drop the join-side columns; restore the input column order
     return out.select(df.columns)
 
@@ -136,32 +135,28 @@ def stratified_sample_ids(
     all_clean: DataFrame,
     fraction: float = 0.1,
     seed: int = 42,
-    key: str = "chembl_id",
 ) -> DataFrame:
-    """J6 — the union of two ``hash_sample`` key sets: ``fraction`` of the
-    significant ids (salt ``seed``) and of all cleaned ids (``seed + 1``)."""
-    return (
-        hash_sample(significant.select(key), key, fraction, seed)
-        .union(hash_sample(all_clean.select(key), key, fraction, seed + 1))
-        .distinct()
-    )
+    """J6 — the union of two ``hash_sample`` ``chembl_id`` sets: ``fraction``
+    of the significant ids (salt ``seed``) and of all cleaned ids
+    (``seed + 1``)."""
+    sig = hash_sample(significant.select(_DRUG_KEY), _DRUG_KEY, fraction, seed)
+    clean = hash_sample(all_clean.select(_DRUG_KEY), _DRUG_KEY, fraction, seed + 1)
+    return sig.union(clean).distinct()
 
 
-def sample_clean_rows(all_clean: DataFrame, sampled_ids: DataFrame, key: str = "chembl_id") -> DataFrame:
-    """J7 — keep cleaned rows whose key is in the sampled id set.
+def sample_clean_rows(all_clean: DataFrame, sampled_ids: DataFrame) -> DataFrame:
+    """J7 — keep cleaned rows whose ``chembl_id`` is in the sampled id set.
 
     Expressed as ``left_semi`` (the reference uses an inner join against a
     deduped key list — semi-join by intent, SURVEY §2.4 J7); semi avoids
     duplicating rows if the id list ever carries duplicates and lets Spark
     broadcast the small side.
     """
-    return all_clean.join(F.broadcast(sampled_ids), [key], "left_semi")
+    return all_clean.join(F.broadcast(sampled_ids), [_DRUG_KEY], "left_semi")
 
 
-def sample_raw_reports(
-    raw: DataFrame, sampled_clean: DataFrame, report_key: str = "safetyreportid"
-) -> DataFrame:
-    """Raw reports for the sampled report ids — fields unchanged.
+def sample_raw_reports(raw: DataFrame, sampled_clean: DataFrame) -> DataFrame:
+    """Raw reports for the sampled ``safetyreportid`` set — fields unchanged.
 
     From ``pipeline.run`` these are ``load_fda_reports`` rows, so they carry
     exactly the pinned ``FAERS_SCHEMA`` fields, which is still valid
@@ -172,8 +167,8 @@ def sample_raw_reports(
     ``sample_clean_rows`` whose cardinality is capped by the ChEMBL
     vocabulary.  AQE picks broadcast when the measured size allows.
     """
-    ids = sampled_clean.select(report_key).distinct()
-    return raw.join(ids, [report_key], "left_semi")
+    ids = sampled_clean.select("safetyreportid").distinct()
+    return raw.join(ids, ["safetyreportid"], "left_semi")
 
 
 def weighted_sample_topk(
@@ -181,7 +176,6 @@ def weighted_sample_topk(
     weight: Column,
     key: Column,
     k: int,
-    seed: int = 42,
 ) -> DataFrame:
     """Weighted random sample WITHOUT replacement of ``k`` rows — the A-Res
     scheme (Efraimidis-Spirakis): each row draws a key ``u^(1/w)`` from a
@@ -190,7 +184,7 @@ def weighted_sample_topk(
     importance-sampling primitive of corpus curation (sample documents by
     quality score).
 
-    The uniform is hash-derived from ``key`` + ``seed`` (md5, same
+    The uniform is hash-derived from ``key`` + the salt 42 (md5, same
     expression any engine can replicate) rather than an RNG — fully
     deterministic across partitioning, retries, and engines, so the DuckDB
     oracle checks exact row membership, not just counts.  The global top-k
@@ -217,7 +211,7 @@ def weighted_sample_topk(
         )
     h = F.conv(
         F.substring(
-            F.md5(F.concat_ws("#", key.cast("string"), F.lit(str(seed)))), 1, 15
+            F.md5(F.concat_ws("#", key.cast("string"), F.lit(str(_SEED)))), 1, 15
         ),
         16,
         10,

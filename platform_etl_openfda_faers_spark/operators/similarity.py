@@ -43,6 +43,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine
+from .dedup import _sql_ident
+
+# Every operator here reads ids from ``vec_id`` and vectors from
+# ``embedding``, rounds scores to 6 decimals before ranking, and seeds
+# its hyperplanes with 42.
+_ID_COL, _VEC_COL, _DECIMALS, _SEED = "vec_id", "embedding", 6, 42
 
 
 def _top_k(cands: DataFrame, neighbor: str, score: Column, k: int) -> DataFrame:
@@ -68,21 +74,18 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    score_decimals: int = 6,
 ) -> DataFrame:
     """Exact top-k neighbors: (query_id, neighbor_id, score), self excluded."""
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("q_vec"),
+        F.col(_ID_COL).alias("query_id"),
+        F.col(_VEC_COL).cast("array<double>").alias("q_vec"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("c_vec"),
+        F.col(_ID_COL).alias("neighbor_id"),
+        F.col(_VEC_COL).cast("array<double>").alias("c_vec"),
     )
     cands = c.join(F.broadcast(q)).where(F.col("query_id") != F.col("neighbor_id"))
-    score = F.round(cosine(F.col("q_vec"), F.col("c_vec")), score_decimals)
+    score = F.round(cosine(F.col("q_vec"), F.col("c_vec")), _DECIMALS)
     return _top_k(cands, "neighbor_id", score, k)
 
 
@@ -90,14 +93,6 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     """Deterministic Gaussian hyperplanes (shared with tests/oracles)."""
     rng = np.random.default_rng(np.random.SeedSequence([seed, dim, n_planes]))
     return rng.standard_normal((n_planes, dim))
-
-
-def _sql_ident(name: str) -> str:
-    """Backtick-quote a column name for embedding in a SQL fragment.
-    Escapes embedded backticks (`` ` `` -> ```` `` ````) so any column
-    name round-trips — the bare-backtick interpolation the r16 ADVICE
-    flagged broke on names containing a backtick."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _dot_sql(a_sql: str, b_sql: str) -> str:
@@ -200,6 +195,16 @@ def _bucket_key_sql(vec_sql: str, planes: np.ndarray) -> str:
     return " + ".join(terms)
 
 
+def _vector_width(df: DataFrame, vec_col: str) -> int:
+    """The width of the first non-null vector in ``vec_col``: the one-row
+    probe job that ``dim=None`` costs.  Raises ``ValueError`` when the
+    column holds no vector to measure."""
+    row = df.select(vec_col).where(F.col(vec_col).isNotNull()).first()
+    if row is None:
+        raise ValueError(f"no non-null {vec_col} to infer the width from: pass dim=")
+    return len(row[0])
+
+
 def add_lsh_buckets(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -211,12 +216,12 @@ def add_lsh_buckets(
     """Attach (table, bucket) rows — one row per vector per table.
 
     ``dim``: pass the known vector width to skip the construction-time
-    ``first()`` probe.  A non-null vector of another width fails the
+    probe of the first non-null vector.  A non-null vector of another width fails the
     first action with a ``raise_error`` naming both (``zip_with`` null-pads
     unequal arrays, so it would hash to bucket 0): one ``CASE`` per row
     around the bucket array, no extra job.  Null vectors keep bucket 0."""
     if dim is None:
-        dim = len(df.select(vec_col).first()[0])
+        dim = _vector_width(df, vec_col)
     ident = _sql_ident(vec_col)
     v_sql = f"CAST({ident} AS ARRAY<DOUBLE>)"
     buckets = F.array(
@@ -244,19 +249,15 @@ def hyperplane_lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 4,
     n_tables: int = 8,
-    seed: int = 42,
-    score_decimals: int = 6,
     dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: LSH-bucketed candidates, exact cosine re-rank.
 
     ``dim``: pass the known embedding width to skip the eager one-row
-    ``first()`` probe job at construction (r16 #18); ``None`` keeps the
-    probe for callers with unknown-width vectors.  A wrong ``dim`` raises
+    probe job at construction (r16 #18); ``None`` keeps the probe (the
+    first non-null corpus vector) for callers with unknown-width vectors.  A wrong ``dim`` raises
     on the first action (see :func:`add_lsh_buckets`).
 
     .. warning:: **Default change in r7** — ``n_planes`` 8 -> 4 and
@@ -283,23 +284,16 @@ def hyperplane_lsh_topk(
        third of the candidate volume, QUALITY.md), or use the IVF /
        IVF-PQ operators whose candidate volume is controlled by
        ``n_probes`` instead of collision geometry."""
-    return _lsh_topk(
-        corpus, queries, k, id_col, vec_col, n_planes, n_tables, None, seed,
-        score_decimals, dim,
-    )
+    return _lsh_topk(corpus, queries, k, n_planes, n_tables, None, dim)
 
 
 def _lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str,
-    vec_col: str,
     n_planes: int,
     n_tables: int,
     n_probes: int | None,
-    seed: int,
-    score_decimals: int,
     dim: int | None,
 ) -> DataFrame:
     """The body of :func:`hyperplane_lsh_topk` (``n_probes=None``: each
@@ -310,27 +304,27 @@ def _lsh_topk(
     join on (table, bucket) with the query side broadcast, and the exact
     cosine re-ranks them."""
     if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
+        dim = _vector_width(corpus, _VEC_COL)
     cb = add_lsh_buckets(
         corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("c_vec"),
+            F.col(_ID_COL).alias("neighbor_id"),
+            F.col(_VEC_COL).cast("array<double>").alias("c_vec"),
         ),
         "c_vec",
         n_planes,
         n_tables,
-        seed,
+        _SEED,
         dim,
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("q_vec"),
+        F.col(_ID_COL).alias("query_id"),
+        F.col(_VEC_COL).cast("array<double>").alias("q_vec"),
     )
     if n_probes is None:
-        qb = add_lsh_buckets(q, "q_vec", n_planes, n_tables, seed, dim)
+        qb = add_lsh_buckets(q, "q_vec", n_planes, n_tables, _SEED, dim)
     else:
         qb = add_lsh_probe_buckets(
-            q, "q_vec", n_planes, n_tables, n_probes, seed, dim
+            q, "q_vec", n_planes, n_tables, n_probes, _SEED, dim
         )
     cands = (
         cb.join(F.broadcast(qb), ["table", "bucket"])
@@ -338,7 +332,7 @@ def _lsh_topk(
         .select("query_id", "neighbor_id", "q_vec", "c_vec")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    score = F.round(cosine(F.col("q_vec"), F.col("c_vec")), score_decimals)
+    score = F.round(cosine(F.col("q_vec"), F.col("c_vec")), _DECIMALS)
     return _top_k(cands, "neighbor_id", score, k)
 
 
@@ -419,18 +413,14 @@ def hyperplane_lsh_multiprobe_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 6,
     n_tables: int = 3,
     n_probes: int = 4,
-    seed: int = 42,
-    score_decimals: int = 6,
     dim: int | None = None,
 ) -> DataFrame:
     """Multi-probe hyperplane LSH top-k: sparse-bucket cost, dense-bucket
     recall.  (``dim``: as in :func:`hyperplane_lsh_topk` — pass the known
-    width to skip the construction-time ``first()`` probe.)
+    width to skip the construction-time probe.)
 
     The single-probe recall/cost dilemma (see the
     :func:`hyperplane_lsh_topk` warning): few planes -> dense buckets ->
@@ -449,10 +439,7 @@ def hyperplane_lsh_multiprobe_topk(
     dense default's recall band at a third of its candidate volume; see
     the table for the grid.
     """
-    return _lsh_topk(
-        corpus, queries, k, id_col, vec_col, n_planes, n_tables, n_probes,
-        seed, score_decimals, dim,
-    )
+    return _lsh_topk(corpus, queries, k, n_planes, n_tables, n_probes, dim)
 
 
 def ivf_cells(
@@ -461,7 +448,6 @@ def ivf_cells(
     id_col: str,
     vec_col: str,
     nprobe: int = 1,
-    score_decimals: int = 6,
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """Assign each vector to its ``nprobe`` nearest centroid cells — as a
@@ -477,7 +463,7 @@ def ivf_cells(
     formulation shuffled every corpus vector (plus its embedding payload) by
     id just to rank 16 candidate cells per row (the r04 bench regression on
     ``emb_ivf_topk``).  Assignment semantics are unchanged and bit-stable:
-    scores round to ``score_decimals`` before ranking, ties break on the
+    scores round to 6 decimals before ranking, ties break on the
     lower cell id (ascending struct sort on (-score, cell)).
 
     ``keep`` names extra input columns to carry through to the output
@@ -495,7 +481,7 @@ def ivf_cells(
     # higher-order transform whose nested cosine lambdas cost hundreds of
     # py4j round trips per call — per Lloyd iteration per subspace)
     ranked = F.expr(
-        _ranked_cells_sql("_cents", _sql_ident(vec_col), score_decimals)
+        _ranked_cells_sql("_cents", _sql_ident(vec_col), _DECIMALS)
     )
     return (
         df.join(F.broadcast(cent_arr))
@@ -513,11 +499,9 @@ def ivf_cells(
 
 def kmeans_centroids(
     corpus: DataFrame,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 16,
     iterations: int = 2,
-    score_decimals: int = 6,
 ) -> DataFrame:
     """Deterministic Lloyd k-means over an embedding column, as a purely
     DECLARATIVE composition — no driver-side loop actions, no RNG.
@@ -532,7 +516,7 @@ def kmeans_centroids(
        EXACT and therefore order-independent, so the centroid update —
        unlike a raw double sum — does not depend on partition layout and
        replays bit-for-bit in the DuckDB oracle.  The mean is then
-       rounded to ``score_decimals`` (same discipline as every other
+       rounded to 6 decimals (same discipline as every other
        cross-engine float in this repo).
 
     ``iterations`` is fixed (not convergence-tested): the lineage stays a
@@ -546,7 +530,7 @@ def kmeans_centroids(
     Output: (cell, centroid array<double>).
     """
     c = corpus.select(
-        F.col(id_col).alias("_id"),
+        F.col(_ID_COL).alias("_id"),
         F.col(vec_col).cast("array<double>").alias("_v"),
     )
     # NOT persisted, by measurement: each Lloyd iteration re-consumes the
@@ -559,16 +543,14 @@ def kmeans_centroids(
         F.col("_id").alias("cell"), F.col("_v").alias("centroid")
     )
     for _ in range(iterations):
-        assigned = ivf_cells(
-            c, cent, "_id", "_v", nprobe=1, score_decimals=score_decimals
-        )
+        assigned = ivf_cells(c, cent, "_id", "_v", nprobe=1)
         per_dim = assigned.select("cell", F.posexplode("_v").alias("pos", "val"))
         # one F.expr per aggregate (r17): same decimal-exact mean and
         # struct-sorted fold, fewer py4j round trips per Lloyd iteration
         means = per_dim.groupBy("cell", "pos").agg(
             F.expr(
                 f"round(CAST(sum(CAST(val AS DECIMAL(27,10))) AS DOUBLE) "
-                f"/ count(*), {score_decimals})"
+                f"/ count(*), {_DECIMALS})"
             ).alias("m")
         )
         cent = (
@@ -583,11 +565,8 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 16,
     nprobe: int = 4,
-    score_decimals: int = 6,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-style approximate top-k: coarse-quantize the corpus into centroid
@@ -602,20 +581,20 @@ def ivf_topk(
     """
     cent = centroids
     if cent is None:
-        cent = corpus.where(F.col(id_col) < n_centroids).select(
-            F.col(id_col).alias("cell"),
-            F.col(vec_col).cast("array<double>").alias("centroid"),
+        cent = corpus.where(F.col(_ID_COL) < n_centroids).select(
+            F.col(_ID_COL).alias("cell"),
+            F.col(_VEC_COL).cast("array<double>").alias("centroid"),
         )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("q_vec"),
+        F.col(_ID_COL).alias("query_id"),
+        F.col(_VEC_COL).cast("array<double>").alias("q_vec"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("c_vec"),
+        F.col(_ID_COL).alias("neighbor_id"),
+        F.col(_VEC_COL).cast("array<double>").alias("c_vec"),
     )
-    c_cells = ivf_cells(c, cent, "neighbor_id", "c_vec", nprobe=1, score_decimals=score_decimals)
-    q_cells = ivf_cells(q, cent, "query_id", "q_vec", nprobe=nprobe, score_decimals=score_decimals)
+    c_cells = ivf_cells(c, cent, "neighbor_id", "c_vec", nprobe=1)
+    q_cells = ivf_cells(q, cent, "query_id", "q_vec", nprobe=nprobe)
     # no pair-dedup needed: each corpus vector lives in exactly one cell
     # (nprobe=1 on the corpus side), so a (query, neighbor) pair appears at
     # most once — and skipping dropDuplicates avoids a SortAggregate over
@@ -623,31 +602,27 @@ def ivf_topk(
     cands = c_cells.join(F.broadcast(q_cells), ["cell"]).where(
         F.col("query_id") != F.col("neighbor_id")
     )
-    score = F.round(cosine(F.col("q_vec"), F.col("c_vec")), score_decimals)
+    score = F.round(cosine(F.col("q_vec"), F.col("c_vec")), _DECIMALS)
     return _top_k(cands, "neighbor_id", score, k)
 
 
 def cosine_near_duplicates(
     df: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 8,
-    n_tables: int = 4,
-    seed: int = 42,
-    score_decimals: int = 6,
     dim: int | None = None,
 ) -> DataFrame:
-    """Embedding near-dup pairs: (id_a, id_b, score) with score >= threshold.
+    """Embedding near-dup pairs: (id_a, id_b, score) with score >= threshold,
+    LSH-bucketed over 4 hyperplane tables.
     (``dim``: as in :func:`hyperplane_lsh_topk`.)"""
     if dim is None:
-        dim = len(df.select(vec_col).first()[0])
+        dim = _vector_width(df, _VEC_COL)
     b = add_lsh_buckets(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")),
+        df.select(F.col(_ID_COL).alias("id"), F.col(_VEC_COL).cast("array<double>").alias("v")),
         "v",
         n_planes,
-        n_tables,
-        seed,
+        4,
+        _SEED,
         dim,
     )
     left = b.toDF("id_a", "v_a", "table", "bucket")
@@ -659,7 +634,7 @@ def cosine_near_duplicates(
         .select(
             "id_a",
             "id_b",
-            F.round(cosine(F.col("v_a"), F.col("v_b")), score_decimals).alias("score"),
+            F.round(cosine(F.col("v_a"), F.col("v_b")), _DECIMALS).alias("score"),
         )
         .where(F.col("score") >= threshold)
     )
@@ -669,11 +644,6 @@ def semantic_near_duplicates_incremental(
     new_vectors: DataFrame,
     corpus_vectors: DataFrame,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 8,
-    iterations: int = 2,
-    score_decimals: int = 6,
 ) -> DataFrame:
     """INCREMENTAL SemDeDup: an incoming embedding batch is compared
     against itself and the existing corpus WITHIN k-means cells trained
@@ -684,33 +654,28 @@ def semantic_near_duplicates_incremental(
 
     Production shape: centroids train once on the corpus, the batch gets
     a MAP-ONLY broadcast cell assignment, and candidate volume per cell is
-    |cell ∩ batch| x |cell| instead of |cell|^2 — at 100 TB raise ``k``
-    so cells stay bounded and the within-cell equi-join stays
-    AQE-splittable.  Batch-batch pairs are found from both of their
-    rows; scores are orientation-exact (element products and the norm
+    |cell ∩ batch| x |cell| instead of |cell|^2.  Training runs 2 Lloyd
+    iterations into 8 cells; at 100 TB raise that cell count so cells
+    stay bounded and the within-cell equi-join stays AQE-splittable.
+    Batch-batch pairs are found from both of their rows; scores are
+    orientation-exact (element products and the norm
     product commute), so the normalized projection's ``distinct``
     dedupes them without weighting.  Ids must be unique across the two
     inputs.  Output: (id_a, id_b, cell, score), id_a < id_b, score >=
     ``threshold``.
     """
-    cent = kmeans_centroids(
-        corpus_vectors, k=k, iterations=iterations,
-        id_col=id_col, vec_col=vec_col,
-    )
+    cent = kmeans_centroids(corpus_vectors, k=8, iterations=2)
     batch = new_vectors.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("e"),
+        F.col(_ID_COL).alias("vid"),
+        F.col(_VEC_COL).cast("array<double>").alias("e"),
         F.lit(True).alias("_new"),
     )
     combined = corpus_vectors.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("e"),
+        F.col(_ID_COL).alias("vid"),
+        F.col(_VEC_COL).cast("array<double>").alias("e"),
         F.lit(False).alias("_new"),
     ).unionByName(batch)
-    cells = ivf_cells(
-        combined, cent, "vid", "e", nprobe=1,
-        score_decimals=score_decimals, keep=("_new",),
-    )
+    cells = ivf_cells(combined, cent, "vid", "e", nprobe=1, keep=("_new",))
     a = cells.where(F.col("_new")).select(
         F.col("vid").alias("id_a"), F.col("e").alias("e_a"), "cell"
     )
@@ -729,9 +694,7 @@ def semantic_near_duplicates_incremental(
             F.least("id_a", "id_b").alias("id_a"),
             F.greatest("id_a", "id_b").alias("id_b"),
             "cell",
-            F.round(cosine(F.col("e_a"), F.col("e_b")), score_decimals).alias(
-                "score"
-            ),
+            F.round(cosine(F.col("e_a"), F.col("e_b")), _DECIMALS).alias("score"),
         )
         .distinct()
         .where(F.col("score") >= threshold)
@@ -744,18 +707,16 @@ def semantic_near_duplicates_incremental(
 
 def pq_codebooks(
     corpus: DataFrame,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
     m: int = 4,
     k: int = 8,
-    iterations: int = 1,
-    score_decimals: int = 6,
 ) -> DataFrame:
     """Product-quantization codebooks: ``m`` INDEPENDENT deterministic
-    Lloyd k-means runs, one per contiguous ``dim/m``-wide subspace of the
-    embedding (decimal-exact means, rounded scores, id-seeded init — so
-    every run replays bit-for-bit in the SQL oracle).  Output: (sub,
+    Lloyd k-means runs of one iteration each, one per contiguous
+    ``dim/m``-wide subspace of the embedding (decimal-exact means,
+    rounded scores, id-seeded init — so every run replays bit-for-bit in
+    the SQL oracle).  Output: (sub,
     cell, centroid) with ``m*k`` rows — tiny and broadcastable
     regardless of corpus size.
 
@@ -773,15 +734,15 @@ def pq_codebooks(
     subspace (decimal sums are exact and order-independent; the argmax
     ranking is total-ordered per subspace; init stays the k lowest-id
     vectors) and pinned by ``test_pq_codebooks_fused_matches_legacy``
-    plus the unchanged DuckDB oracle replay.  At scale: per iteration,
-    one corpus scan instead of m (same total bytes — each row explodes
-    into its m slices), one broadcast instead of m."""
+    plus the unchanged DuckDB oracle replay.  At scale: one corpus scan
+    instead of m (same total bytes — each row explodes into its m
+    slices), one broadcast instead of m."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     width = dim // m
     v_sql = f"CAST({_sql_ident(vec_col)} AS ARRAY<DOUBLE>)"
     sliced = corpus.select(
-        F.col(id_col).alias("_id"),
+        F.col(_ID_COL).alias("_id"),
         F.posexplode(
             F.expr(
                 f"transform(sequence(0, {m - 1}), "
@@ -789,42 +750,31 @@ def pq_codebooks(
             )
         ).alias("sub", "_sv"),
     )
-    cent = sliced.where(F.col("_id") < k).select(
+    init = sliced.where(F.col("_id") < k).select(
         "sub", F.col("_id").alias("cell"), F.col("_sv").alias("centroid")
     )
-    for _ in range(iterations):
-        cent_arr = cent.groupBy("sub").agg(
-            F.collect_list(F.struct(F.col("cell"), F.col("centroid"))).alias(
-                "_cents"
-            )
-        )
-        assigned = sliced.join(F.broadcast(cent_arr), "sub").select(
-            "sub",
-            F.expr(
-                f"element_at({_ranked_cells_sql('_cents', '_sv', score_decimals)},"
-                f" 1).cell"
-            ).alias("cell"),
-            "_sv",
-        )
-        per_dim = assigned.select(
-            "sub", "cell", F.posexplode("_sv").alias("pos", "val")
-        )
-        means = per_dim.groupBy("sub", "cell", "pos").agg(
-            F.expr(
-                f"round(CAST(sum(CAST(val AS DECIMAL(27,10))) AS DOUBLE) "
-                f"/ count(*), {score_decimals})"
-            ).alias("m")
-        )
-        cent = (
-            means.groupBy("sub", "cell")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("pos"), F.col("m")))
-                ).alias("_pm")
-            )
-            .select("sub", "cell", F.col("_pm").getField("m").alias("centroid"))
-        )
-    return cent
+    cent_arr = init.groupBy("sub").agg(
+        F.collect_list(F.struct(F.col("cell"), F.col("centroid"))).alias("_cents")
+    )
+    assigned = sliced.join(F.broadcast(cent_arr), "sub").select(
+        "sub",
+        F.expr(
+            f"element_at({_ranked_cells_sql('_cents', '_sv', _DECIMALS)}, 1).cell"
+        ).alias("cell"),
+        "_sv",
+    )
+    per_dim = assigned.select("sub", "cell", F.posexplode("_sv").alias("pos", "val"))
+    means = per_dim.groupBy("sub", "cell", "pos").agg(
+        F.expr(
+            f"round(CAST(sum(CAST(val AS DECIMAL(27,10))) AS DOUBLE) "
+            f"/ count(*), {_DECIMALS})"
+        ).alias("m")
+    )
+    return (
+        means.groupBy("sub", "cell")
+        .agg(F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col("m")))).alias("_pm"))
+        .select("sub", "cell", F.col("_pm").getField("m").alias("centroid"))
+    )
 
 
 def _cents_all(codebooks: DataFrame, m: int) -> DataFrame:
@@ -844,9 +794,9 @@ def _cents_all(codebooks: DataFrame, m: int) -> DataFrame:
     )
 
 
-def _lut_maps_expr(m: int, width: int, q_sql: str, score_decimals: int):
+def _lut_maps_expr(m: int, width: int, q_sql: str):
     """Per-query ADC lookup tables as ONE row-local expression: an array
-    (indexed by subspace) of ``cell -> round(dot(q_s, centroid), sd)``
+    (indexed by subspace) of ``cell -> round(dot(q_s, centroid), 6)``
     maps.  Entry values are computed with the same rounded left-fold dot
     the former per-subspace LUT joins used, so ``element_at(map, code)``
     returns bit-identically the ``_l{s}`` the join produced (map keys are
@@ -854,7 +804,7 @@ def _lut_maps_expr(m: int, width: int, q_sql: str, score_decimals: int):
     entries = ", ".join(
         f"map_from_entries(transform(_cents{s}, c -> struct(c.cell, "
         f"round({_dot_sql(f'slice({q_sql}, {s * width + 1}, {width})', 'c.centroid')}, "
-        f"{score_decimals}))))"
+        f"{_DECIMALS}))))"
         for s in range(m)
     )
     return F.expr(f"array({entries})")
@@ -867,7 +817,6 @@ def pq_encode(
     vec_col: str = "embedding",
     dim: int = 64,
     m: int = 4,
-    score_decimals: int = 6,
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """Encode each vector as ``m`` codebook cells — MAP-ONLY: the whole
@@ -889,20 +838,14 @@ def pq_encode(
         # per-subspace transform+cosine lambda chain dominated the PQ
         # family's construction wall with py4j chatter
         sv = f"slice(_v, {s * width + 1}, {width})"
-        ranked = _ranked_cells_sql(f"_cents{s}", sv, score_decimals)
+        ranked = _ranked_cells_sql(f"_cents{s}", sv, _DECIMALS)
         return F.expr(f"element_at({ranked}, 1).cell").alias(f"c{s}")
 
     return df.select(F.col(id_col), *keep, *[code_expr(s) for s in range(m)])
 
 
 def _exact_rerank(
-    approx: DataFrame,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    score_decimals: int,
+    approx: DataFrame, corpus: DataFrame, queries: DataFrame, k: int
 ) -> DataFrame:
     """Exact-cosine re-rank of an approximate candidate list — the
     standard recall-recovery tail of a PQ/ADC pipeline (FAISS-style:
@@ -914,23 +857,21 @@ def _exact_rerank(
     scores, neighbor-id tie-break — same ranking discipline as
     ``brute_force_topk``, so the stage replays in the SQL oracle."""
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("_cv"),
+        F.col(_ID_COL).alias("neighbor_id"),
+        F.col(_VEC_COL).cast("array<double>").alias("_cv"),
     )
     qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
+        F.col(_ID_COL).alias("query_id"),
+        F.col(_VEC_COL).cast("array<double>").alias("_qv"),
     )
     cands = c.join(
         F.broadcast(approx.select("query_id", "neighbor_id")), ["neighbor_id"]
     ).join(F.broadcast(qv), ["query_id"])
-    score = F.round(cosine(F.col("_qv"), F.col("_cv")), score_decimals)
+    score = F.round(cosine(F.col("_qv"), F.col("_cv")), _DECIMALS)
     return _top_k(cands, "neighbor_id", score, k)
 
 
-def _adc_topk(
-    scored: DataFrame, nid: str, m: int, k: int, score_decimals: int
-) -> DataFrame:
+def _adc_topk(scored: DataFrame, nid: str, m: int, k: int) -> DataFrame:
     """The ADC score-and-rank step of :func:`pq_adc_topk` and
     :func:`ivf_pq_topk`: over (query, candidate) rows carrying the
     query's ``_luts`` map array and the candidate's codes ``c0..c{m-1}``,
@@ -943,7 +884,7 @@ def _adc_topk(
     return _top_k(
         scored.where(F.col("query_id") != F.col(nid)),
         nid,
-        F.expr(f"round({score_sql}, {score_decimals})"),
+        F.expr(f"round({score_sql}, {_DECIMALS})"),
         k,
     )
 
@@ -953,11 +894,8 @@ def pq_adc_topk(
     queries: DataFrame,
     codebooks: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     m: int = 4,
-    score_decimals: int = 6,
     rerank_from: int = 0,
 ) -> DataFrame:
     """Asymmetric-distance top-k: the query stays a raw vector, the
@@ -975,7 +913,7 @@ def pq_adc_topk(
     ``element_at(map, c_s)`` returns exactly the ``_l{s}`` the join
     matched, pinned by ``test_pq_adc_lut_map_matches_join``.)  No
     shuffle of the corpus, no raw-vector pair join.  Per-subspace LUT
-    entries round to ``score_decimals`` and the final score sums them in
+    entries round to 6 decimals and the final score sums them in
     FIXED subspace order (left-associated), so results replay exactly in
     the SQL oracle.  At 100 TB compose with IVF cells to prune candidates
     before ADC scoring; here every corpus vector is scored (the PQ point
@@ -993,27 +931,19 @@ def pq_adc_topk(
     if rerank_from and rerank_from < k:
         raise ValueError(f"rerank_from {rerank_from} must be >= k {k}")
     width = dim // m
-    enc = pq_encode(corpus, codebooks, id_col, vec_col, dim, m, score_decimals)
+    enc = pq_encode(corpus, codebooks, _ID_COL, _VEC_COL, dim, m)
     luts = (
         queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("_q"),
+            F.col(_ID_COL).alias("query_id"),
+            F.col(_VEC_COL).cast("array<double>").alias("_q"),
         )
         .join(F.broadcast(_cents_all(codebooks, m)))
-        .select(
-            "query_id",
-            _lut_maps_expr(m, width, "_q", score_decimals).alias("_luts"),
-        )
+        .select("query_id", _lut_maps_expr(m, width, "_q").alias("_luts"))
     )
-    adc = _adc_topk(
-        enc.join(F.broadcast(luts)), id_col, m, rerank_from or k,
-        score_decimals,
-    )
+    adc = _adc_topk(enc.join(F.broadcast(luts)), _ID_COL, m, rerank_from or k)
     if not rerank_from:
         return adc
-    return _exact_rerank(
-        adc, corpus, queries, k, id_col, vec_col, score_decimals
-    )
+    return _exact_rerank(adc, corpus, queries, k)
 
 
 def ivf_pq_topk(
@@ -1023,11 +953,7 @@ def ivf_pq_topk(
     codebooks: DataFrame,
     k: int = 5,
     nprobe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
-    m: int = 4,
-    score_decimals: int = 6,
     rerank_from: int = 0,
 ) -> DataFrame:
     """The full IVF-PQ pipeline — the standard billion-scale ANN layout:
@@ -1054,29 +980,27 @@ def ivf_pq_topk(
     recovers ADC misordering but not cell-pruning misses (nprobe is the
     lever for those).
 
+    ``codebooks`` come from ``pq_codebooks`` with its ``m=4`` subspaces.
+
     Output: (query_id, neighbor_id, score, rank<=k)."""
     if rerank_from and rerank_from < k:
         raise ValueError(f"rerank_from {rerank_from} must be >= k {k}")
+    m = 4
     width = dim // m
     c = corpus.select(
-        F.col(id_col).alias("_nid"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
+        F.col(_ID_COL).alias("_nid"),
+        F.col(_VEC_COL).cast("array<double>").alias("_v"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_q"),
+        F.col(_ID_COL).alias("query_id"),
+        F.col(_VEC_COL).cast("array<double>").alias("_q"),
     )
-    c_cells = ivf_cells(c, coarse_centroids, "_nid", "_v", nprobe=1,
-                        score_decimals=score_decimals)
-    q_cells = ivf_cells(q, coarse_centroids, "query_id", "_q", nprobe=nprobe,
-                        score_decimals=score_decimals)
+    c_cells = ivf_cells(c, coarse_centroids, "_nid", "_v", nprobe=1)
+    q_cells = ivf_cells(q, coarse_centroids, "query_id", "_q", nprobe=nprobe)
     # candidate pruning: corpus vector lives in exactly one cell, query
     # probes nprobe cells -> each (query, neighbor) pair appears at most
     # once, no dedup needed (same argument as ivf_topk)
-    enc = pq_encode(
-        c_cells, codebooks, "_nid", "_v", dim, m, score_decimals,
-        keep=("cell",),
-    )
+    enc = pq_encode(c_cells, codebooks, "_nid", "_v", dim, m, keep=("cell",))
     # the broadcast probe list carries each query's LUT-map array (the
     # maps ride along its <= nprobe rows — still broadcast-sized)
     probes = (
@@ -1084,15 +1008,10 @@ def ivf_pq_topk(
         .select(
             "query_id",
             "cell",
-            _lut_maps_expr(m, width, "_q", score_decimals).alias("_luts"),
+            _lut_maps_expr(m, width, "_q").alias("_luts"),
         )
     )
-    adc = _adc_topk(
-        enc.join(F.broadcast(probes), ["cell"]), "_nid", m, rerank_from or k,
-        score_decimals,
-    )
+    adc = _adc_topk(enc.join(F.broadcast(probes), ["cell"]), "_nid", m, rerank_from or k)
     if not rerank_from:
         return adc
-    return _exact_rerank(
-        adc, corpus, queries, k, id_col, vec_col, score_decimals
-    )
+    return _exact_rerank(adc, corpus, queries, k)

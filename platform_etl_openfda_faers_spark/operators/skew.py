@@ -58,9 +58,9 @@ def salted_count_distinct(
     group_col: str,
     value_col: str,
     salt: int = 16,
-    out_col: str = "n_distinct",
 ) -> DataFrame:
-    """Exact ``COUNT(DISTINCT value) GROUP BY key`` that survives hot keys.
+    """Exact ``COUNT(DISTINCT value) GROUP BY key`` that survives hot keys,
+    as (key, ``n_distinct``).
 
     Values are hash-partitioned into ``salt`` disjoint buckets, distinct-
     counted per (key, bucket), and summed per key — exact because a value
@@ -75,5 +75,5 @@ def salted_count_distinct(
         F.countDistinct(value_col).alias("_partial")
     )
     return partial.groupBy(group_col).agg(
-        F.sum("_partial").alias(out_col)
+        F.sum("_partial").alias("n_distinct")
     )

@@ -22,35 +22,35 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# Bits per quantized column in the Morton key.
+_BITS = 8
 
-def quantize(col: Column, lo: int, hi: int, bits: int = 8) -> Column:
-    """Map an integer column from [lo, hi] onto [0, 2^bits): exact
-    integer-in-double arithmetic (floor((c - lo) * (2^bits - 1) / (hi -
+def quantize(col: Column, lo: int, hi: int) -> Column:
+    """Map an integer column from [lo, hi] onto [0, 2^8): exact
+    integer-in-double arithmetic (floor((c - lo) * (2^8 - 1) / (hi -
     lo))), clamped into range so out-of-bounds values degrade to the edge
     cells instead of corrupting the interleave."""
     if hi <= lo:
         raise ValueError(f"invalid bounds [{lo}, {hi}]")
-    top = (1 << bits) - 1
+    top = (1 << _BITS) - 1
     q = F.floor(
         ((col.cast("long") - F.lit(lo)) * F.lit(top)) / F.lit(hi - lo)
     ).cast("long")
     return F.least(F.greatest(q, F.lit(0)), F.lit(top))
 
 
-def zorder_key(
-    cols: list[Column], bounds: list[tuple[int, int]], bits: int = 8
-) -> Column:
+def zorder_key(cols: list[Column], bounds: list[tuple[int, int]]) -> Column:
     """Morton key: bit i of quantized column j lands at position
     ``i * n_cols + j``.  A pure shift/and/or expression tree
-    (``bits * n_cols`` terms) — whole-stage-codegen friendly, no UDF."""
+    (``8 * n_cols`` terms) — whole-stage-codegen friendly, no UDF."""
     if len(cols) != len(bounds):
         raise ValueError("one (lo, hi) bound pair per column")
     qs = [
-        quantize(c, lo, hi, bits) for c, (lo, hi) in zip(cols, bounds)
+        quantize(c, lo, hi) for c, (lo, hi) in zip(cols, bounds)
     ]
     n = len(qs)
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(_BITS):
         for j, q in enumerate(qs):
             bit = F.shiftright(q, i).bitwiseAND(F.lit(1))
             z = z.bitwiseOR(F.shiftleft(bit, i * n + j))

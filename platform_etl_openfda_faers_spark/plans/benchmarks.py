@@ -804,7 +804,7 @@ def a5_stratified_sample(spark: SparkSession, sf: str) -> DataFrame:
     summarized per stratum — the scale-safe StratifiedSampling shape."""
     orders = load_table(spark, sf, "orders")
     sampled = sampling.stratified_hash_sample(
-        orders, "o_orderkey", "o_orderpriority", 0.20, seed=42
+        orders, "o_orderkey", "o_orderpriority", 0.20
     )
     return sampled.groupBy("o_orderpriority").agg(
         F.count("*").alias("n_sampled"),
@@ -1213,7 +1213,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     )
     sizes = dedup.shingle_set_sizes(docs, "text", "doc_id", n=3)
     return dedup.jaccard_pairs(
-        index, "doc_id", key="token", threshold=0.3, sizes=sizes, max_doc_freq=None
+        index, "doc_id", threshold=0.3, sizes=sizes, max_doc_freq=None
     )
 
 
@@ -1272,7 +1272,7 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.cache import attach_cached
 
     out = dedup.jaccard_pairs(
-        pruned, "doc_id", key="token", threshold=0.3, sizes=sizes, max_doc_freq=None
+        pruned, "doc_id", threshold=0.3, sizes=sizes, max_doc_freq=None
     )
     return attach_cached(out, pruned)
 
@@ -1319,7 +1319,7 @@ def _capped_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
     )
     sizes = pruned.groupBy("doc_id").agg(F.count("*").alias("set_size"))
     pairs = dedup.jaccard_pairs(
-        pruned, "doc_id", key="token", threshold=0.3, sizes=sizes, max_doc_freq=None
+        pruned, "doc_id", threshold=0.3, sizes=sizes, max_doc_freq=None
     )
     return attach_cached(pairs, pruned)
 
@@ -1539,7 +1539,7 @@ def dedup_containment(spark: SparkSession, sf: str) -> DataFrame:
     )
     sizes = pruned.groupBy("doc_id").agg(F.count("*").alias("set_size"))
     out = dedup.containment_pairs(
-        pruned, "doc_id", key="token", threshold=0.5, sizes=sizes,
+        pruned, "doc_id", threshold=0.5, sizes=sizes,
         max_doc_freq=None,
     )
     return attach_cached(out, pruned)
@@ -1586,7 +1586,7 @@ def dedup_incremental_containment(spark: SparkSession, sf: str) -> DataFrame:
     new = index.where(F.col("doc_id") % 7 == 0)
     corpus = index.where(F.col("doc_id") % 7 != 0)
     return dedup.containment_pairs_incremental(
-        new, corpus, "doc_id", key="token", threshold=0.5, max_doc_freq=20
+        new, corpus, "doc_id", threshold=0.5, max_doc_freq=20
     )
 
 
@@ -1637,14 +1637,11 @@ def dedup_incremental_jaccard(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _minhash_oracle_sql(
-    bands: int = 4,
-    rows_per_band: int = 4,
-    seed: int = 42,
     max_bucket_size: int | None = None,
     batch_pred: str | None = None,
 ) -> str:
-    """Generate the DuckDB twin of the MinHash-LSH pipeline (same constants,
-    incl. the optional bucket-size cap).
+    """Generate the DuckDB twin of the MinHash-LSH pipeline (same constants:
+    4 bands of 4 rows, hash seed 42; incl. the optional bucket-size cap).
 
     ``batch_pred`` — a predicate over a bare ``doc_id`` marking the
     incremental BATCH; when set, candidate pairs are restricted to those
@@ -1652,7 +1649,8 @@ def _minhash_oracle_sql(
     the semantics contract of
     ``dedup.minhash_near_duplicates_incremental``: same signatures, same
     buckets, same combined-occupancy cap, batch-touching pairs only."""
-    params = dedup.minhash_params(bands * rows_per_band, seed)
+    bands, rows_per_band = 4, 4
+    params = dedup.minhash_params(bands * rows_per_band, 42)
     p = dedup.MINHASH_PRIME
     h_expr = "('0x' || substr(md5(token), 1, 8))::BIGINT"
     mins = ",\n      ".join(
@@ -1736,8 +1734,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     # persisted and shared between the signature and both verify sides, so
     # tokenize + 3-gram + md5-per-shingle runs once, not three times.
     return dedup.minhash_near_duplicates_shared(
-        docs, "text", "doc_id", n=3, bands=4, rows_per_band=4,
-        threshold=0.3, seed=42,
+        docs, "text", "doc_id", n=3, threshold=0.3
     )
 
 
@@ -1750,8 +1747,7 @@ def dedup_minhash_lsh_uncapped(spark: SparkSession, sf: str) -> DataFrame:
     uncapped n-gram Jaccard retired in r5)."""
     docs = load_docs(spark, sf)
     return dedup.minhash_near_duplicates_shared(
-        docs, "text", "doc_id", n=3, bands=4, rows_per_band=4,
-        threshold=0.3, seed=42, max_bucket_size=None,
+        docs, "text", "doc_id", n=3, threshold=0.3, max_bucket_size=None
     )
 
 
@@ -1777,8 +1773,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf: str) -> DataFrame:
     new = docs.where(F.col("doc_id") % 7 == 0)
     corpus = docs.where(F.col("doc_id") % 7 != 0)
     return dedup.minhash_near_duplicates_incremental(
-        new, corpus, "text", "doc_id", n=3, bands=4, rows_per_band=4,
-        threshold=0.3, seed=42,
+        new, corpus, "text", "doc_id", n=3, threshold=0.3
     )
 
 
@@ -1828,7 +1823,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
     same signatures, so the bucketing's losslessness is value-checked."""
     docs = load_docs(spark, sf)
     return dedup.simhash_near_duplicates_portable(
-        docs, "text", "doc_id", max_hamming=3, bits=16
+        docs, "text", "doc_id", max_hamming=3
     )
 
 
@@ -1860,7 +1855,7 @@ def dedup_incremental_simhash(spark: SparkSession, sf: str) -> DataFrame:
     new = docs.where(F.col("doc_id") % 7 == 0)
     corpus = docs.where(F.col("doc_id") % 7 != 0)
     return dedup.simhash_near_duplicates_incremental(
-        new, corpus, "text", "doc_id", max_hamming=3, bits=16
+        new, corpus, "text", "doc_id", max_hamming=3
     )
 
 
@@ -2306,7 +2301,6 @@ def dedup_ingest_loop_serve(spark: SparkSession, sf: str) -> DataFrame:
             b,
             idx,
             acc,
-            max_hamming=3,
             max_bucket_size=None,
         )
     accepted = spark.read.parquet(acc).select(
@@ -2396,22 +2390,21 @@ _QUALITY_INTS_SQL = f"""
 """
 
 
-def _quality_logit_sql(text: str = "text", toks: str = "toks") -> str:
-    """The frozen-weight integer quality logit as a DuckDB expression over
-    a text column and its pre-split token array — shared by the
-    ``text_quality_score`` oracle shape and the curation pipeline's
-    stage-1b gate so both replay the identical arithmetic."""
-    return f"""CAST(-300000
-      + 6000 * LEAST(len({toks}), 256)
-      - 3000 * ABS((CAST(list_sum(list_transform({toks}, x -> length(x)))
-                    AS BIGINT) * 100) // len({toks}) - 450)
-      - 9000 * (CASE WHEN length({text}) = 0 THEN 0
-                ELSE (CAST(length({text}) - length(regexp_replace({text},
+# The frozen-weight integer quality logit as a DuckDB expression over the
+# ``text`` column and its pre-split token array ``toks`` — shared by the
+# ``text_quality_score`` oracle shape and the curation pipeline's
+# stage-1b gate so both replay the identical arithmetic.
+_QUALITY_LOGIT_SQL = f"""CAST(-300000
+      + 6000 * LEAST(len(toks), 256)
+      - 3000 * ABS((CAST(list_sum(list_transform(toks, x -> length(x)))
+                    AS BIGINT) * 100) // len(toks) - 450)
+      - 9000 * (CASE WHEN length(text) = 0 THEN 0
+                ELSE (CAST(length(text) - length(regexp_replace(text,
                       '[.,;:!?]', '', 'g')) AS BIGINT) * 1000)
-                     // CAST(length({text}) AS BIGINT) END)
-      + 2500 * ((CAST(len(list_filter({toks},
+                     // CAST(length(text) AS BIGINT) END)
+      + 2500 * ((CAST(len(list_filter(toks,
                     tk -> tk IN ({_QUALITY_STOPS_SQL}))) AS BIGINT) * 1000)
-                // len({toks}))
+                // len(toks))
      AS BIGINT)"""
 
 
@@ -2999,7 +2992,7 @@ def a_weighted_sample(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id", token_count(F.col("text")).alias("n_tok")
     )
     return weighted_sample_topk(
-        docs, weight=F.col("n_tok"), key=F.col("doc_id"), k=50, seed=42
+        docs, weight=F.col("n_tok"), key=F.col("doc_id"), k=50
     ).select("doc_id", "w", "ares_key")
 
 
@@ -3209,7 +3202,8 @@ def _cm_hash_sql(var: str, seed: int, buckets: int) -> str:
     )
 
 
-def _cm_oracle_sql(d: int = 3, w: int = 64, seed: int = 100, probe_max: int = 20) -> str:
+def _cm_oracle_sql() -> str:
+    d, w, seed, probe_max = 3, 64, 100, 20
     rows_cte = "\n      UNION ALL ".join(
         f"SELECT k, {r} AS r, {_cm_hash_sql('k', seed + r, w)} AS b FROM src"
         for r in range(d)
@@ -3454,7 +3448,7 @@ def sketch_kmv_overlap(spark: SparkSession, sf: str) -> DataFrame:
         list_transform(generate_series(1, greatest(len(toks) - 2, 0)),
                        i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
           AS grams,
-        {_quality_logit_sql('text', 'toks')} AS qlogit
+        {_QUALITY_LOGIT_SQL} AS qlogit
       FROM t
     ),
     filtered AS (
@@ -3607,7 +3601,7 @@ def corpus_curation_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     )
     sizes = pruned.groupBy("doc_id").agg(F.count("*").alias("set_size"))
     pairs = dedup.jaccard_pairs(
-        pruned, "doc_id", key="token", threshold=0.5, sizes=sizes, max_doc_freq=None
+        pruned, "doc_id", threshold=0.5, sizes=sizes, max_doc_freq=None
     )
     drops = pairs.select(F.col("id_b").alias("doc_id")).distinct()
     survivors = exact.join(drops, ["doc_id"], "left_anti")
@@ -3616,7 +3610,6 @@ def corpus_curation_pipeline(spark: SparkSession, sf: str) -> DataFrame:
         weight=F.col("n_tokens"),
         key=F.col("doc_id"),
         k=40,
-        seed=42,
     ).select("doc_id", "n_tokens", "w", "ares_key")
     from ..operators.cache import attach_cached
 
@@ -3633,10 +3626,17 @@ _IVF_COS = (
 # the embeddings as DOUBLE[] and the 20 query vectors (vec_id < 20)
 _V_CTE = "v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)"
 _Q_CTE = "q AS (SELECT vec_id, e FROM v WHERE vec_id < 20)"
+# the ANN oracles' shared geometry: 64-dim embeddings, hyperplanes seeded
+# from 42, the top 5 neighbors per query, and IVF cells trained from 8
+# seeds in 2 Lloyd iterations, each query probing 3 of them
+_DIM, _PLANE_SEED, _TOPK, _CELLS, _LLOYD, _NPROBE = 64, 42, 5, 8, 2, 3
+# the incremental oracles' batch is ``vec_id % 7 = 0``; SemDeDup pairs
+# score at least 0.4
+_BATCH_MOD, _SEM_THRESHOLD = 7, 0.4
 
 
-def _topk_sql(ctes: list[str], scored: str, topk: int) -> str:
-    """``WITH ctes`` and the per-query top ``topk`` of the CTE ``scored``
+def _topk_sql(ctes: list[str], scored: str) -> str:
+    """``WITH ctes`` and the per-query top 5 of the CTE ``scored``
     (query_id, neighbor_id, score): score descending, ties by
     neighbor_id."""
     body = ",\n    ".join(ctes)
@@ -3647,7 +3647,7 @@ def _topk_sql(ctes: list[str], scored: str, topk: int) -> str:
         CAST(row_number() OVER (
           PARTITION BY query_id ORDER BY score DESC, neighbor_id
         ) AS INT) AS rank
-      FROM {scored}) WHERE rank <= {topk}
+      FROM {scored}) WHERE rank <= {_TOPK}
     """
 
 
@@ -3803,12 +3803,14 @@ def emb_quantize_int8(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _plane_lits(dim: int, n_planes: int, seed: int) -> list[str]:
-    """SQL list literals of ``similarity.random_hyperplanes(dim, n_planes,
-    seed)``."""
+def _plane_lits(n_planes: int, table: int) -> list[str]:
+    """SQL list literals of ``similarity.random_hyperplanes(64, n_planes,
+    42 + table)``, one LSH table's planes."""
     return [
         "[" + ", ".join(repr(float(x)) for x in plane) + "]"
-        for plane in similarity.random_hyperplanes(dim, n_planes, seed)
+        for plane in similarity.random_hyperplanes(
+            _DIM, n_planes, _PLANE_SEED + table
+        )
     ]
 
 
@@ -3836,13 +3838,10 @@ def _lsh_rerank_sql(corpus_buckets: str, query_buckets: str) -> str:
     )""",
         ],
         "s",
-        5,
     )
 
 
-def _lsh_oracle_sql(
-    dim: int = 64, n_planes: int = 6, n_tables: int = 3, seed: int = 42
-) -> str:
+def _lsh_oracle_sql(n_planes: int = 6, n_tables: int = 3) -> str:
     """DuckDB twin of hyperplane_lsh_topk — same plane constants, same
     rounded-projection sign bits, same exact-cosine re-rank."""
 
@@ -3850,7 +3849,7 @@ def _lsh_oracle_sql(
         return " + ".join(
             f"(CASE WHEN round(list_dot_product({var}, {lit}), 6) >= 0 "
             f"THEN {1 << i} ELSE 0 END)"
-            for i, lit in enumerate(_plane_lits(dim, n_planes, seed + table))
+            for i, lit in enumerate(_plane_lits(n_planes, table))
         )
 
     def bucket_cte(src: str, var: str) -> str:
@@ -3895,23 +3894,18 @@ def emb_lsh_ann_sparse(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _lsh_multiprobe_oracle_sql(
-    dim: int = 64,
-    n_planes: int = 6,
-    n_tables: int = 3,
-    n_probes: int = 4,
-    seed: int = 42,
-) -> str:
-    """DuckDB twin of hyperplane_lsh_multiprobe_topk: replays the per-plane
-    projections, the home-bucket sign bits, the single+pair perturbation
-    masks ranked by (summed) margin cost, and the probe expansion with the
-    same plane constants and the same round-6 discipline, then the
-    exact-cosine re-rank."""
+def _lsh_multiprobe_oracle_sql(n_probes: int = 4) -> str:
+    """DuckDB twin of hyperplane_lsh_multiprobe_topk at 6 planes and 3
+    tables: replays the per-plane projections, the home-bucket sign bits,
+    the single+pair perturbation masks ranked by (summed) margin cost, and
+    the probe expansion with the same plane constants and the same
+    round-6 discipline, then the exact-cosine re-rank."""
+    n_planes, n_tables = 6, 3
 
     def proj_cte(src: str, table: int) -> str:
         cols = ", ".join(
             f"round(list_dot_product(e, {lit}), 6) AS p{i}"
-            for i, lit in enumerate(_plane_lits(dim, n_planes, seed + table))
+            for i, lit in enumerate(_plane_lits(n_planes, table))
         )
         return f"SELECT vec_id, {cols} FROM {src}"
 
@@ -3947,7 +3941,7 @@ def _lsh_multiprobe_oracle_sql(
 
 @query(
     "emb_lsh_multiprobe_topk",
-    _lsh_multiprobe_oracle_sql(n_planes=6, n_tables=3, n_probes=7),
+    _lsh_multiprobe_oracle_sql(n_probes=7),
 )
 def emb_lsh_multiprobe_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Multi-probe LSH top-5 (Lv et al., VLDB 2007): per table, probe the
@@ -4029,18 +4023,18 @@ def emb_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _kmeans_prefix_ctes(k: int, iterations: int) -> tuple[list[str], str]:
+def _kmeans_prefix_ctes() -> tuple[list[str], str]:
     """The embeddings CTE ``v`` and ``_kmeans_ctes_for`` over it: (ctes,
     name-of-final-centroid-CTE) for the trained-IVF, cell-occupancy and
     semantic-dedup oracles."""
-    ctes, last = _kmeans_ctes_for("v", "", k, iterations)
+    ctes, last = _kmeans_ctes_for("v", "", _CELLS, _LLOYD)
     return [_V_CTE] + ctes, last
 
 
-def _ivf_probe_sql(ctes: list[str], last: str, nprobe: int, topk: int) -> str:
+def _ivf_probe_sql(ctes: list[str], last: str) -> str:
     """``ctes`` (holding ``v`` and the centroid CTE ``last``), then the IVF
     search over those cells: every vector to its nearest cell, each query
-    to its ``nprobe`` nearest, exact-cosine top ``topk`` within them."""
+    to its 3 nearest, exact-cosine top 5 within them."""
     c_cos = _IVF_COS.format(a="v.e", b=f"{last}.c")
     q_cos = _IVF_COS.format(a="q.e", b=f"{last}.c")
     s_cos = _IVF_COS.format(a="qa.e", b="ca.e")
@@ -4058,7 +4052,7 @@ def _ivf_probe_sql(ctes: list[str], last: str, nprobe: int, topk: int) -> str:
         SELECT q.vec_id AS query_id, q.e, {last}.cell,
           row_number() OVER (PARTITION BY q.vec_id
             ORDER BY {q_cos} DESC, {last}.cell) AS r
-        FROM q, {last}) WHERE r <= {nprobe}
+        FROM q, {last}) WHERE r <= {_NPROBE}
     )""",
         f"""s AS (
       SELECT qa.query_id, ca.neighbor_id, {s_cos} AS score
@@ -4066,17 +4060,14 @@ def _ivf_probe_sql(ctes: list[str], last: str, nprobe: int, topk: int) -> str:
       WHERE qa.query_id <> ca.neighbor_id
     )""",
     ]
-    return _topk_sql(ctes + probe, "s", topk)
+    return _topk_sql(ctes + probe, "s")
 
 
-def _ivf_kmeans_oracle_sql(
-    k: int = 8, iterations: int = 2, nprobe: int = 3, topk: int = 5
-) -> str:
+def _ivf_kmeans_oracle_sql() -> str:
     """DuckDB twin of kmeans_centroids + ivf_topk: one CTE triple per Lloyd
     iteration (argmax assign, decimal-exact per-dim mean), then the same
     probe/re-rank tail as the static-centroid oracle."""
-    ctes, last = _kmeans_prefix_ctes(k, iterations)
-    return _ivf_probe_sql(ctes, last, nprobe, topk)
+    return _ivf_probe_sql(*_kmeans_prefix_ctes())
 
 
 def _kmeans_ctes_for(
@@ -4124,21 +4115,19 @@ def _kmeans_ctes_for(
     return ctes, f"{prefix}cent{iterations}"
 
 
-def _pq_code_ctes(
-    dim: int, m: int, k: int, iterations: int
-) -> tuple[list[str], str]:
+def _pq_code_ctes(m: int, k: int) -> tuple[list[str], str]:
     """The PQ encode over ``v``, and its ADC score expression.
 
-    Per subspace s: the slice ``v{s}``, its Lloyd replay, the argmax
-    encode ``enc{s}`` and the query LUT ``lut{s}`` (column ``l{s}``);
-    then ``enc``, every vector's m codes.  The score is the FIXED-ORDER
+    Per subspace s: the slice ``v{s}``, its one-iteration Lloyd replay,
+    the argmax encode ``enc{s}`` and the query LUT ``lut{s}`` (column
+    ``l{s}``); then ``enc``, every vector's m codes.  The score is the FIXED-ORDER
     (left-associated) sum of l0..l{m-1}."""
-    width = dim // m
+    width = _DIM // m
     ctes = []
     for s in range(m):
         lo, hi = s * width + 1, (s + 1) * width
         ctes.append(f"v{s} AS (SELECT vec_id, e[{lo}:{hi}] AS e FROM v)")
-        kc, last = _kmeans_ctes_for(f"v{s}", f"s{s}_", k, iterations)
+        kc, last = _kmeans_ctes_for(f"v{s}", f"s{s}_", k, 1)
         ctes += kc
         cos = _IVF_COS.format(a=f"v{s}.e", b=f"{last}.c")
         ctes.append(
@@ -4167,12 +4156,12 @@ def _pq_code_ctes(
     return ctes, score
 
 
-def _pq_rerank_tail(ctes: list[str], topk: int, rerank_from: int) -> str:
+def _pq_rerank_tail(ctes: list[str], rerank_from: int) -> str:
     """Shared final-SELECT builder for the PQ oracles: pure-ADC ranking,
     or (rerank_from=R > 0) the ADC top-R pool re-scored with the EXACT
     cosine — the SQL twin of ``similarity._exact_rerank``."""
     if not rerank_from:
-        return _topk_sql(ctes, "sc", topk)
+        return _topk_sql(ctes, "sc")
     cos = _IVF_COS.format(a="qv.e", b="nv.e")
     ctes = ctes + [
         f"""adc AS (
@@ -4190,13 +4179,10 @@ def _pq_rerank_tail(ctes: list[str], topk: int, rerank_from: int) -> str:
       JOIN v nv ON nv.vec_id = a.neighbor_id
     )""",
     ]
-    return _topk_sql(ctes, "ex", topk)
+    return _topk_sql(ctes, "ex")
 
 
-def _pq_oracle_sql(
-    dim: int = 64, m: int = 4, k: int = 8, iterations: int = 1, topk: int = 5,
-    rerank_from: int = 0,
-) -> str:
+def _pq_oracle_sql(m: int = 4, k: int = 8, rerank_from: int = 0) -> str:
     """DuckDB twin of pq_codebooks + pq_encode + pq_adc_topk: per subspace
     a full Lloyd replay, an argmax-cosine encode, and a dot-product LUT;
     final score is the FIXED-ORDER (left-associated) sum of the rounded
@@ -4204,7 +4190,7 @@ def _pq_oracle_sql(
     side, so the whole train-encode-score pipeline value-checks.
     ``rerank_from=R`` appends the exact-cosine re-rank of the ADC top-R
     pool (the ``_exact_rerank`` twin)."""
-    codes, score = _pq_code_ctes(dim, m, k, iterations)
+    codes, score = _pq_code_ctes(m, k)
     lut_joins = ["JOIN lut0 ON lut0.code = enc.c0"] + [
         f"JOIN lut{s} ON lut{s}.query_id = lut0.query_id AND lut{s}.code = enc.c{s}"
         for s in range(1, m)
@@ -4215,25 +4201,18 @@ def _pq_oracle_sql(
       FROM enc {' '.join(lut_joins)}
       WHERE lut0.query_id <> enc.vec_id
     )"""
-    return _pq_rerank_tail([_V_CTE] + codes + [sc], topk, rerank_from)
+    return _pq_rerank_tail([_V_CTE] + codes + [sc], rerank_from)
 
 
-def _ivf_pq_oracle_sql(
-    dim: int = 64,
-    m: int = 4,
-    k_codes: int = 8,
-    iterations: int = 1,
-    coarse_k: int = 8,
-    nprobe: int = 3,
-    topk: int = 5,
-    rerank_from: int = 0,
-) -> str:
-    """DuckDB twin of the FULL IVF-PQ pipeline: a coarse Lloyd replay on
-    whole vectors (cell pruning), per-subspace Lloyd replays (codebooks),
-    argmax encode, per-query LUTs, and ADC scoring restricted to the
-    probed cells' candidates."""
+def _ivf_pq_oracle_sql(rerank_from: int = 0) -> str:
+    """DuckDB twin of the FULL IVF-PQ pipeline: a coarse one-iteration
+    Lloyd replay on whole vectors into 8 cells (cell pruning),
+    per-subspace Lloyd replays (4 codebooks of 8 codes), argmax encode,
+    per-query LUTs, and ADC scoring restricted to the probed cells'
+    candidates."""
+    m = 4
     ctes = [_V_CTE]
-    kc, glast = _kmeans_ctes_for("v", "g_", coarse_k, iterations)
+    kc, glast = _kmeans_ctes_for("v", "g_", _CELLS, 1)
     ctes += kc
     c_cos = _IVF_COS.format(a="v.e", b=f"{glast}.c")
     q_cos = _IVF_COS.format(a="q.e", b=f"{glast}.c")
@@ -4253,10 +4232,10 @@ def _ivf_pq_oracle_sql(
         SELECT q.vec_id AS query_id, {glast}.cell,
           row_number() OVER (PARTITION BY q.vec_id
             ORDER BY {q_cos} DESC, {glast}.cell) AS r
-        FROM q, {glast}) WHERE r <= {nprobe}
+        FROM q, {glast}) WHERE r <= {_NPROBE}
     )"""
     )
-    codes, score = _pq_code_ctes(dim, m, k_codes, iterations)
+    codes, score = _pq_code_ctes(m, 8)
     ctes += codes
     ctes.append(
         """cand AS (
@@ -4276,7 +4255,7 @@ def _ivf_pq_oracle_sql(
       {' '.join(lut_joins)}
     )"""
     )
-    return _pq_rerank_tail(ctes, topk, rerank_from)
+    return _pq_rerank_tail(ctes, rerank_from)
 
 
 def _freeze_trained(df: DataFrame) -> DataFrame:
@@ -4341,11 +4320,11 @@ def emb_ivf_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     emb = load_emb(spark, sf)
     coarse, cb = _freeze_trained_pair(
         similarity.kmeans_centroids(emb, k=8, iterations=1),
-        similarity.pq_codebooks(emb, dim=64, m=4, k=8, iterations=1),
+        similarity.pq_codebooks(emb, dim=64, m=4, k=8),
     )
     return similarity.ivf_pq_topk(
         emb, emb.where(F.col("vec_id") < 20), coarse, cb,
-        k=5, nprobe=3, dim=64, m=4,
+        k=5, nprobe=3, dim=64,
     )
 
 
@@ -4372,7 +4351,7 @@ def emb_pq_adc_topk(spark: SparkSession, sf: str) -> DataFrame:
     sf0.01, plan file ~10x smaller)."""
     emb = load_emb(spark, sf)
     cb = _freeze_trained(
-        similarity.pq_codebooks(emb, dim=64, m=4, k=8, iterations=1)
+        similarity.pq_codebooks(emb, dim=64, m=4, k=8)
     )
     return similarity.pq_adc_topk(
         emb, emb.where(F.col("vec_id") < 20), cb, k=5, dim=64, m=4
@@ -4393,7 +4372,7 @@ def emb_pq_adc_rerank_topk(spark: SparkSession, sf: str) -> DataFrame:
     selection, AND the exact re-rank."""
     emb = load_emb(spark, sf)
     cb = _freeze_trained(
-        similarity.pq_codebooks(emb, dim=64, m=4, k=8, iterations=1)
+        similarity.pq_codebooks(emb, dim=64, m=4, k=8)
     )
     return similarity.pq_adc_topk(
         emb, emb.where(F.col("vec_id") < 20), cb, k=5, dim=64, m=4,
@@ -4415,7 +4394,7 @@ def emb_pq_adc_hi_topk(spark: SparkSession, sf: str) -> DataFrame:
     the toy one."""
     emb = load_emb(spark, sf)
     cb = _freeze_trained(
-        similarity.pq_codebooks(emb, dim=64, m=8, k=64, iterations=1)
+        similarity.pq_codebooks(emb, dim=64, m=8, k=64)
     )
     return similarity.pq_adc_topk(
         emb, emb.where(F.col("vec_id") < 20), cb, k=5, dim=64, m=8,
@@ -4434,11 +4413,11 @@ def emb_ivf_pq_rerank_topk(spark: SparkSession, sf: str) -> DataFrame:
     emb = load_emb(spark, sf)
     coarse, cb = _freeze_trained_pair(
         similarity.kmeans_centroids(emb, k=8, iterations=1),
-        similarity.pq_codebooks(emb, dim=64, m=4, k=8, iterations=1),
+        similarity.pq_codebooks(emb, dim=64, m=4, k=8),
     )
     return similarity.ivf_pq_topk(
         emb, emb.where(F.col("vec_id") < 20), coarse, cb,
-        k=5, nprobe=3, dim=64, m=4, rerank_from=25,
+        k=5, nprobe=3, dim=64, rerank_from=25,
     )
 
 
@@ -4462,11 +4441,11 @@ def emb_ivf_kmeans_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _cell_occupancy_oracle_sql(k: int = 8, iterations: int = 2) -> str:
+def _cell_occupancy_oracle_sql() -> str:
     """DuckDB twin of ``emb_cell_occupancy``: the shared k-means CTE
     prefix, a final argmax assignment, then per-cell occupancy stats in
     exact integer permille units."""
-    ctes, last = _kmeans_prefix_ctes(k, iterations)
+    ctes, last = _kmeans_prefix_ctes()
     cos = _IVF_COS.format(a="v.e", b=f"{last}.c")
     ctes.append(
         f"""asgf AS (
@@ -4487,7 +4466,7 @@ def _cell_occupancy_oracle_sql(k: int = 8, iterations: int = 2) -> str:
       CAST(n_vectors AS BIGINT) AS n_vectors,
       CAST((n_vectors * 1000) // SUM(n_vectors) OVER () AS BIGINT)
         AS share_permille,
-      CAST((n_vectors * {k} * 1000) // SUM(n_vectors) OVER () AS BIGINT)
+      CAST((n_vectors * {_CELLS} * 1000) // SUM(n_vectors) OVER () AS BIGINT)
         AS load_permille,
       CAST(row_number() OVER (ORDER BY n_vectors DESC, cell) AS INT)
         AS occ_rank
@@ -4532,22 +4511,19 @@ def emb_cell_occupancy(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _ivf_incremental_oracle_sql(
-    k: int = 8, iterations: int = 2, nprobe: int = 3, topk: int = 5,
-    batch_mod: int = 7,
-) -> str:
+def _ivf_incremental_oracle_sql() -> str:
     """DuckDB twin of the FROZEN-INDEX append: Lloyd k-means replayed over
-    the CORPUS ONLY (``vec_id % batch_mod <> 0``), then the full
+    the CORPUS ONLY (``vec_id % 7 <> 0``), then the full
     corpus-plus-batch set assigned to those frozen centroids and searched
     with the standard probe/re-rank tail.  Composes the shared
     ``_kmeans_ctes_for`` generator over a corpus CTE — one k-means
     definition across all trained-centroid oracles."""
-    kc, last = _kmeans_ctes_for("cv", "inc_", k, iterations)
+    kc, last = _kmeans_ctes_for("cv", "inc_", _CELLS, _LLOYD)
     ctes = [
         _V_CTE,
-        f"cv AS (SELECT vec_id, e FROM v WHERE vec_id % {batch_mod} <> 0)",
+        f"cv AS (SELECT vec_id, e FROM v WHERE vec_id % {_BATCH_MOD} <> 0)",
     ] + kc
-    return _ivf_probe_sql(ctes, last, nprobe, topk)
+    return _ivf_probe_sql(ctes, last)
 
 
 @query("emb_ivf_incremental_topk", _ivf_incremental_oracle_sql())
@@ -5042,7 +5018,7 @@ def corpus_temperature_sample(spark: SparkSession, sf: str) -> DataFrame:
     filter — no per-row RNG, no skew surface."""
     docs = load_docs(spark, sf)
     return sampling.temperature_sample(
-        docs, "source", "doc_id", rate=2.0, alpha=0.5, seed=42
+        docs, "source", "doc_id", rate=2.0, alpha=0.5
     ).select("doc_id", "source", "lang")
 
 
@@ -5079,7 +5055,7 @@ def f_zorder_key(spark: SparkSession, sf: str) -> DataFrame:
     li = load_table(spark, sf, "lineitem")
     days = F.datediff(F.col("l_shipdate"), F.lit("1995-01-01"))
     z = zorder.zorder_key(
-        [F.col("l_partkey"), days], [(1, 20000), (0, 2500)], bits=8
+        [F.col("l_partkey"), days], [(1, 20000), (0, 2500)]
     )
     return (
         li.select(
@@ -5119,11 +5095,13 @@ def multimodal_mp4_meta(spark: SparkSession, sf: str) -> DataFrame:
     return multimodal.mp4_meta(media)
 
 
-def _pagerank_oracle_sql(iterations: int = 3, damping: float = 0.85) -> str:
+def _pagerank_oracle_sql() -> str:
     """DuckDB twin of ``graph.pagerank`` over the customer→supplier edge
-    list: one (contrib, sum, rank) CTE triple per iteration.  Float
-    literals are emitted via ``repr`` so e.g. ``1.0 - 0.85`` is the SAME
-    IEEE double (0.15000000000000002) in both engines."""
+    list: one (contrib, sum, rank) CTE triple per iteration, 3 iterations
+    at damping 0.85.  Float literals are emitted via ``repr`` so e.g.
+    ``1.0 - 0.85`` is the SAME IEEE double (0.15000000000000002) in both
+    engines."""
+    iterations, damping = 3, 0.85
     d, om = repr(damping), repr(1.0 - damping)
     ctes = [
         """edges AS (
@@ -5183,7 +5161,7 @@ def graph_pagerank(spark: SparkSession, sf: str) -> DataFrame:
         )
         .distinct()
     )
-    return pagerank(edges, iterations=3, damping=0.85)
+    return pagerank(edges)
 
 
 @query(
@@ -5284,12 +5262,10 @@ def dedup_exact_substrings(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _semantic_dedup_oracle_sql(
-    k: int = 8, iterations: int = 2, threshold: float = 0.4
-) -> str:
+def _semantic_dedup_oracle_sql() -> str:
     """DuckDB twin of the SemDeDup pipeline: the shared k-means CTEs, a
-    1-nearest-cell assignment, then within-cell cosine pairs >= t."""
-    ctes, last = _kmeans_prefix_ctes(k, iterations)
+    1-nearest-cell assignment, then within-cell cosine pairs >= 0.4."""
+    ctes, last = _kmeans_prefix_ctes()
     cos = _IVF_COS.format(a="v.e", b=f"{last}.c")
     pair_cos = _IVF_COS.format(a="a.e", b="b.e")
     ctes.append(
@@ -5307,7 +5283,7 @@ def _semantic_dedup_oracle_sql(
     SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.cell AS cell,
       {pair_cos} AS score
     FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id < b.vec_id
-    WHERE {pair_cos} >= {threshold}
+    WHERE {pair_cos} >= {_SEM_THRESHOLD}
     """
 
 
@@ -5354,10 +5330,7 @@ def dedup_semantic(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _semantic_incremental_oracle_sql(
-    k: int = 8, iterations: int = 2, threshold: float = 0.4,
-    batch_mod: int = 7,
-) -> str:
+def _semantic_incremental_oracle_sql() -> str:
     """DuckDB twin of the FROZEN-CELL incremental SemDeDup: Lloyd k-means
     replayed over the CORPUS ONLY, the full corpus-plus-batch set assigned
     to those frozen cells, then within-cell cosine pairs restricted to
@@ -5365,15 +5338,15 @@ def _semantic_incremental_oracle_sql(
     orientation-normalized projection (cosine commutes exactly)."""
     ctes = [
         _V_CTE,
-        f"cv AS (SELECT vec_id, e FROM v WHERE vec_id % {batch_mod} <> 0)",
+        f"cv AS (SELECT vec_id, e FROM v WHERE vec_id % {_BATCH_MOD} <> 0)",
     ]
-    kc, last = _kmeans_ctes_for("cv", "sem_", k, iterations)
+    kc, last = _kmeans_ctes_for("cv", "sem_", _CELLS, _LLOYD)
     ctes += kc
     a_cos = _IVF_COS.format(a="v.e", b=f"{last}.c")
     pair_cos = _IVF_COS.format(a="a.e", b="b.e")
     ctes.append(
         f"""asg AS (
-      SELECT vec_id, e, cell, vec_id % {batch_mod} = 0 AS is_new FROM (
+      SELECT vec_id, e, cell, vec_id % {_BATCH_MOD} = 0 AS is_new FROM (
         SELECT v.vec_id, v.e, {last}.cell,
           row_number() OVER (PARTITION BY v.vec_id
             ORDER BY {a_cos} DESC, {last}.cell) AS r
@@ -5388,7 +5361,7 @@ def _semantic_incremental_oracle_sql(
       {pair_cos} AS score
     FROM asg a JOIN asg b
       ON a.cell = b.cell AND a.vec_id <> b.vec_id
-    WHERE a.is_new AND {pair_cos} >= {threshold}
+    WHERE a.is_new AND {pair_cos} >= {_SEM_THRESHOLD}
     """
 
 
@@ -5414,8 +5387,6 @@ def dedup_semantic_incremental(spark: SparkSession, sf: str) -> DataFrame:
         emb.where(is_new),
         emb.where(~is_new),
         threshold=0.4,
-        k=8,
-        iterations=2,
     ).select(
         F.col("id_a"), F.col("id_b"), F.col("cell"), F.col("score")
     )
@@ -5552,7 +5523,7 @@ def stream_tumbling_counts(spark: SparkSession, sf: str) -> DataFrame:
     Streaming query (identical code path; streaming equivalence is asserted
     in pytest)."""
     ev = load_table(spark, sf, "events")
-    out = tumbling_counts(ev, window="1 hour")
+    out = tumbling_counts(ev)
     return out.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
@@ -5579,7 +5550,7 @@ def stream_sliding_users(spark: SparkSession, sf: str) -> DataFrame:
     """Sliding-window (1h/30m) distinct users — batch twin of the streaming
     query (exact countDistinct in batch mode)."""
     ev = load_table(spark, sf, "events")
-    out = sliding_user_activity(ev, window="1 hour", slide="30 minutes")
+    out = sliding_user_activity(ev)
     return out.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "n_users",
@@ -5614,7 +5585,7 @@ def stream_session_windows(spark: SparkSession, sf: str) -> DataFrame:
     custom-stateful-operator shape; batch twin of the streaming query.  The
     oracle is the equivalent gaps-and-islands SQL."""
     ev = load_table(spark, sf, "events")
-    return session_counts(ev, gap="30 minutes")
+    return session_counts(ev)
 
 
 _GROUPING_SETS_SQL = """
@@ -5728,7 +5699,7 @@ def stream_interval_join(spark: SparkSession, sf: str) -> DataFrame:
     micros on both engines (the oracle truncates nanos per side before
     differencing, matching the Spark-side load conversion)."""
     ev = load_table(spark, sf, "events")
-    return click_purchase_join(ev, max_delay_minutes=60)
+    return click_purchase_join(ev)
 
 
 @query(
@@ -5753,7 +5724,7 @@ def stream_interval_join_outer(spark: SparkSession, sf: str) -> DataFrame:
     recovered by an anti-join on click_id — no nested loop); the streaming
     twin's watermark-closed outer emission is asserted in pytest."""
     ev = load_table(spark, sf, "events")
-    return click_purchase_join(ev, max_delay_minutes=60, how="left_outer")
+    return click_purchase_join(ev, how="left_outer")
 
 
 @query(
@@ -7150,7 +7121,7 @@ def _curriculum_stream(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFra
     "corpus_curriculum_order",
     f"""
     WITH t AS (
-      SELECT doc_id, lang, {_quality_logit_sql("text", "toks")} AS logit_micro
+      SELECT doc_id, lang, {_QUALITY_LOGIT_SQL} AS logit_micro
       FROM (SELECT doc_id, lang, text, {_TOKENS_SQL} AS toks FROM documents)
     ),
     kept AS (SELECT doc_id, lang, logit_micro FROM t WHERE logit_micro >= 0),
@@ -7194,7 +7165,7 @@ def corpus_curriculum_order(spark: SparkSession, sf: str) -> DataFrame:
 # documents with their token counts, at their global curriculum position
 _CURRICULUM_POS_CTES = f"""
     WITH t AS (
-      SELECT doc_id, lang, {_quality_logit_sql("text", "toks")} AS logit_micro,
+      SELECT doc_id, lang, {_QUALITY_LOGIT_SQL} AS logit_micro,
         len(toks) AS n_tokens
       FROM (SELECT doc_id, lang, text, {_TOKENS_SQL} AS toks FROM documents)
     ),
@@ -7716,7 +7687,7 @@ def multimodal_audio_peaks(spark: SparkSession, sf: str) -> DataFrame:
     windowing, reshape, or FFT-axis bug breaks the value hash."""
     docs = load_docs(spark, sf).select("doc_id")
     media = multimodal.synthetic_wav_media_tonal(docs, "doc_id")
-    return multimodal.audio_spectral_peaks(media, window=64)
+    return multimodal.audio_spectral_peaks(media)
 
 
 @query(
@@ -7753,7 +7724,7 @@ def multimodal_audio_dedup(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id", (F.col("doc_id") % 50).alias("gid")
     )
     media = multimodal.synthetic_wav_media_tonal(docs, "doc_id", seed_col="gid")
-    fp = multimodal.audio_fingerprint(media, window=64)
+    fp = multimodal.audio_fingerprint(media)
     return fp.groupBy("fingerprint").agg(
         F.count("*").alias("n_tracks"),
         F.min("media_id").alias("first_id"),
@@ -7825,10 +7796,8 @@ def multimodal_audio_neardup(spark: SparkSession, sf: str) -> DataFrame:
     media = multimodal.synthetic_wav_media_tonal(
         docs, "doc_id", seed_col="gid", offset_col="off"
     )
-    peaks = multimodal.audio_spectral_peaks(media, window=64)
-    return multimodal.audio_landmark_matches(
-        peaks, max_dt=3, min_matches=10, max_bucket_size=64
-    ).select(
+    peaks = multimodal.audio_spectral_peaks(media)
+    return multimodal.audio_landmark_matches(peaks).select(
         F.col("id_a"), F.col("id_b"), F.col("n_matches")
     )
 
@@ -7902,8 +7871,8 @@ def multimodal_audio_neardup_incremental(
     from ..operators.cache import attach_cached, cached_deps
 
     matched = multimodal.audio_landmark_matches_incremental(
-        multimodal.audio_spectral_peaks(batch, window=64),
-        multimodal.audio_spectral_peaks(corpus, window=64),
+        multimodal.audio_spectral_peaks(batch),
+        multimodal.audio_spectral_peaks(corpus),
         max_dt=3,
         min_matches=10,
         max_bucket_size=64,
@@ -7930,7 +7899,7 @@ def audio_serving_index_build(spark: SparkSession, sf: str) -> str:
     return write_serving_index(
         spark, sf, "audiolandmark",
         multimodal.audio_landmark_table(
-            multimodal.audio_spectral_peaks(media, window=64), max_dt=3
+            multimodal.audio_spectral_peaks(media), max_dt=3
         ),
         "media_id", "dt", 3, ("a_bin", "b_bin", "dt"),
     )
@@ -7953,7 +7922,7 @@ def audio_serving_index_serve(
 
     stored, occ = read_serving_index(spark, idx_path)
     matched = multimodal.audio_landmark_matches_incremental(
-        multimodal.audio_spectral_peaks(media, window=64),
+        multimodal.audio_spectral_peaks(media),
         None,
         max_dt=3,
         min_matches=10,
@@ -8075,7 +8044,7 @@ def multimodal_video_neardup(spark: SparkSession, sf: str) -> DataFrame:
     )
     hashes = multimodal.video_frame_dhash(media)
     return multimodal.video_near_duplicates(
-        hashes, max_hamming=3, min_frames=2, max_bucket_size=64
+        hashes, max_hamming=3, max_bucket_size=64
     ).select(F.col("id_a"), F.col("id_b"), F.col("n_frame_matches"))
 
 
@@ -8717,11 +8686,7 @@ def dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     pairs = similarity.cosine_near_duplicates(
         emb,
         threshold=0.4,
-        id_col="vec_id",
-        vec_col="embedding",
         n_planes=8,
-        n_tables=4,
-        seed=42,
         dim=64,
     ).select("id_a", "id_b")
     comp = connected_components_twophase(pairs, "id_a", "id_b")

@@ -19,17 +19,17 @@ from pyspark.sql import functions as F
 
 from ..sources.readers import normalize_timestamps
 
+# Every streaming operator here holds state for a 2-hour watermark on
+# event time; the windowed aggregates count per hour.
+_WATERMARK, _WINDOW = "2 hours", "1 hour"
 
-def tumbling_counts(
-    df: DataFrame,
-    window: str = "1 hour",
-    watermark: str | None = "2 hours",
-) -> DataFrame:
+
+def tumbling_counts(df: DataFrame) -> DataFrame:
     """Per-(hour, event_type) count + value sum.  Works batch or streaming."""
-    if watermark is not None and df.isStreaming:
-        df = df.withWatermark("ts", watermark)
+    if df.isStreaming:
+        df = df.withWatermark("ts", _WATERMARK)
     return (
-        df.groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
+        df.groupBy(F.window("ts", _WINDOW).alias("w"), F.col("event_type"))
         .agg(
             F.count("*").alias("n_events"),
             # decimal-cast sum: exact, order-independent (a parallel double
@@ -47,47 +47,39 @@ def tumbling_counts(
     )
 
 
-def sliding_user_activity(
-    df: DataFrame,
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str | None = "2 hours",
-) -> DataFrame:
-    """Sliding-window distinct-user activity (batch or streaming).
+def sliding_user_activity(df: DataFrame) -> DataFrame:
+    """Distinct-user activity per hour window, sliding by 30 minutes
+    (batch or streaming).
 
     Streaming mode uses ``approx_count_distinct`` (exact distinct over
     sliding state doesn't exist in streaming); batch mode is exact.
     """
     if df.isStreaming:
-        if watermark is not None:
-            df = df.withWatermark("ts", watermark)
+        df = df.withWatermark("ts", _WATERMARK)
         cnt = F.approx_count_distinct("user_id")
     else:
         cnt = F.countDistinct("user_id")
     return (
-        df.groupBy(F.window("ts", window, slide).alias("w"))
+        df.groupBy(F.window("ts", _WINDOW, "30 minutes").alias("w"))
         .agg(cnt.alias("n_users"))
         .select(F.col("w.start").alias("window_start"), "n_users")
     )
 
 
-def session_counts(
-    df: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str | None = "2 hours",
-) -> DataFrame:
+def session_counts(df: DataFrame) -> DataFrame:
     """Per-user session windows (gap-merged), batch or streaming.
 
     ``F.session_window`` merges an event into the open session while it
-    starts strictly before the previous event's ts+gap; a gap >= ``gap``
-    closes the session.  State is keyed (session, user) so it scales
-    horizontally; the watermark bounds open-session state in streaming.
-    The batch twin is the gaps-and-islands SQL the DuckDB oracle runs.
+    starts strictly before the previous event's ts+30 minutes; a gap of
+    30 minutes or more closes the session.  State is keyed (session,
+    user) so it scales horizontally; the watermark bounds open-session
+    state in streaming.  The batch twin is the gaps-and-islands SQL the
+    DuckDB oracle runs.
     """
-    if watermark is not None and df.isStreaming:
-        df = df.withWatermark("ts", watermark)
+    if df.isStreaming:
+        df = df.withWatermark("ts", _WATERMARK)
     return (
-        df.groupBy(F.session_window("ts", gap).alias("w"), F.col("user_id"))
+        df.groupBy(F.session_window("ts", "30 minutes").alias("w"), F.col("user_id"))
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum(F.col("value").cast("decimal(18,2)")), 2)
@@ -105,19 +97,16 @@ def session_counts(
 
 
 def click_purchase_join(
-    df: DataFrame,
-    watermark: str = "2 hours",
-    max_delay_minutes: int = 60,
-    how: str = "inner",
+    df: DataFrame, watermark: str = _WATERMARK, how: str = "inner"
 ) -> DataFrame:
     """Stream-stream INNER INTERVAL JOIN: each purchase matched to the same
-    user's clicks in the preceding ``max_delay_minutes`` — the canonical
+    user's clicks in the preceding 60 minutes — the canonical
     attribution join of an event pipeline.
 
     Batch and streaming share the code path; in streaming, BOTH sides carry
     a watermark and the join condition bounds event time on both sides, so
     Spark can evict click state once the watermark passes
-    ``click_ts + max_delay`` (bounded state — without the time bound a
+    ``click_ts + 60 minutes`` (bounded state — without the time bound a
     stream-stream join would buffer both sides forever).  Inner-join
     matches emit in the micro-batch where they're found; the watermark
     governs state eviction and late-input drop, not emission latency.
@@ -140,6 +129,7 @@ def click_purchase_join(
     if how not in ("inner", "left_outer"):
         # left_semi would drop the purchase columns this join projects
         raise ValueError(f"how must be inner or left_outer, got {how!r}")
+    max_delay_minutes = 60
     df = normalize_timestamps(df)
     c = df.where(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"),
@@ -216,11 +206,7 @@ def enrich_with_dim(
     ).drop(dim_key)
 
 
-def dedup_events(
-    df: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
+def dedup_events(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """Streaming-safe exact dedup on a key set (default: event_id).
 
     Streaming: ``dropDuplicatesWithinWatermark`` — the seen-key state is
@@ -231,5 +217,5 @@ def dedup_events(
     """
     keys = keys or ["event_id"]
     if df.isStreaming:
-        return df.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
+        return df.withWatermark("ts", _WATERMARK).dropDuplicatesWithinWatermark(keys)
     return df.dropDuplicates(keys)

@@ -120,11 +120,10 @@ def dedup_ingest_batch(
     batch_id: int,
     index_path: str,
     accepted_path: str,
-    max_hamming: int = 3,
     max_bucket_size: int | None = None,
 ) -> None:
     """Process ONE ingest micro-batch of (doc_id, text) rows against the
-    stored signature index.
+    stored signature index, pairing docs within SimHash-64 Hamming 3.
 
     Steps: (1) serve the near-dup check from the stored index
     (``corpus_index=`` — decode-free corpus side; first batch ever uses
@@ -183,7 +182,7 @@ def dedup_ingest_batch(
             None,
             "text",
             "doc_id",
-            max_hamming=max_hamming,
+            max_hamming=3,
             max_bucket_size=max_bucket_size,
             corpus_index=corpus_index,
             corpus_occupancy=occ,
@@ -214,7 +213,7 @@ def dedup_ingest_batch(
                 # next serve takes the broadcast-semi cap path with a
                 # fresh watermark
                 _maintain_occupancy_sidecar(
-                    spark, index_path, chunks, batch_id, keys=("ci", "cv"),
+                    spark, index_path, chunks, batch_id,
                     index_was_empty=stored is None,
                 )
             finally:
@@ -376,7 +375,6 @@ def _maintain_occupancy_sidecar(
     index_path: str,
     batch_index_rows,
     batch_id: int,
-    keys: tuple[str, ...] = ("ci", "cv"),
     index_was_empty: bool = False,
 ) -> None:
     """Per-batch sidecar maintenance (VERDICT r15 #5): occupancy counts
@@ -402,7 +400,9 @@ def _maintain_occupancy_sidecar(
     path).  The bootstrap sidecar is then computed straight off the
     persisted batch rows — value-identical to the full-rebuild fallback
     (the index IS this batch) without re-reading the just-written
-    parquet (r17; one fewer index scan on batch 0)."""
+    parquet (r17; one fewer index scan on batch 0).  The sidecar counts
+    per SimHash-64 chunk key (ci, cv)."""
+    keys = ("ci", "cv")
     local = _as_local_path(
         occupancy_sidecar_path(index_path), "occupancy sidecar update"
     )
@@ -412,7 +412,7 @@ def _maintain_occupancy_sidecar(
                 batch_index_rows.withColumn(
                     "ingest_batch", F.lit(batch_id).cast("int")
                 ),
-                keys=tuple(keys),
+                keys=keys,
             )
             _write_occupancy_sidecar(spark, occ, index_path)
         else:

@@ -155,7 +155,7 @@ def test_ivf_trained_centroids_recall(corpus, queries, exact_pairs):
 def test_pq_adc_rerank_lifts_recall(corpus, queries, exact_pairs):
     """Exact re-ranking of the ADC top-10k pool must deliver a large,
     measured lift over pure ADC ranking (0.14 -> 0.58 at sf0.01)."""
-    cb = similarity.pq_codebooks(corpus, dim=64, m=4, k=8, iterations=1)
+    cb = similarity.pq_codebooks(corpus, dim=64, m=4, k=8)
     cb.persist()
     cb.count()
     try:
@@ -177,13 +177,13 @@ def test_pq_adc_rerank_lifts_recall(corpus, queries, exact_pairs):
 
 def test_ivf_pq_rerank_recall_floor(corpus, queries, exact_pairs):
     coarse = similarity.kmeans_centroids(corpus, k=8, iterations=1)
-    cb = similarity.pq_codebooks(corpus, dim=64, m=4, k=8, iterations=1)
+    cb = similarity.pq_codebooks(corpus, dim=64, m=4, k=8)
     coarse.persist(), cb.persist()
     coarse.count(), cb.count()
     try:
         r = _recall(
             similarity.ivf_pq_topk(
-                corpus, queries, coarse, cb, k=K, nprobe=3, dim=64, m=4,
+                corpus, queries, coarse, cb, k=K, nprobe=3, dim=64,
                 rerank_from=5 * K,
             ),
             exact_pairs,
@@ -194,7 +194,7 @@ def test_ivf_pq_rerank_recall_floor(corpus, queries, exact_pairs):
 
 
 def test_rerank_validates_pool_size(corpus, queries):
-    cb = similarity.pq_codebooks(corpus, dim=64, m=4, k=8, iterations=1)
+    cb = similarity.pq_codebooks(corpus, dim=64, m=4, k=8)
     with pytest.raises(ValueError, match="rerank_from"):
         similarity.pq_adc_topk(
             corpus, queries, cb, k=K, dim=64, m=4, rerank_from=3

@@ -1312,7 +1312,7 @@ def test_audio_spectral_peaks_match_formula(spark):
     media = multimodal.synthetic_wav_media_tonal(ids, "doc_id")
     got = {
         (r.media_id, r.win): r.peak_bin
-        for r in multimodal.audio_spectral_peaks(media, window=64).collect()
+        for r in multimodal.audio_spectral_peaks(media).collect()
     }
     want = {
         (i, w): 1 + (i * 7 + w * (3 + 2 * (i % 14))) % 31
@@ -1346,7 +1346,7 @@ def test_audio_fingerprint_groups_duplicate_payloads(spark):
     media = multimodal.synthetic_wav_media_tonal(ids, "doc_id", seed_col="gid")
     fp = {
         r.media_id: r.fingerprint
-        for r in multimodal.audio_fingerprint(media, window=64).collect()
+        for r in multimodal.audio_fingerprint(media).collect()
     }
     assert len(fp) == 9
     for i in range(9):
@@ -1367,19 +1367,17 @@ def test_audio_landmarks_survive_time_shift(spark):
     media = multimodal.synthetic_wav_media_tonal(
         ids, "doc_id", seed_col="gid", offset_col="off"
     )
-    peaks = multimodal.audio_spectral_peaks(media, window=64)
+    peaks = multimodal.audio_spectral_peaks(media)
 
     fp = {
         r.media_id: r.fingerprint
-        for r in multimodal.audio_fingerprint(media, window=64).collect()
+        for r in multimodal.audio_fingerprint(media).collect()
     }
     assert fp[0] != fp[3]  # same gid, shifted -> fingerprint SPLITS them
 
     matches = {
         (r.id_a, r.id_b): r.n_matches
-        for r in multimodal.audio_landmark_matches(
-            peaks, min_matches=10
-        ).collect()
+        for r in multimodal.audio_landmark_matches(peaks).collect()
     }
     for (a, b), n in matches.items():
         assert a % 3 == b % 3  # no cross-content pair
@@ -1399,7 +1397,7 @@ def test_audio_landmarks_single_window_track(spark):
     sequence()-descending artifacts)."""
     ids = spark.createDataFrame([(1,)], ["doc_id"])
     media = multimodal.synthetic_wav_media_tonal(ids, "doc_id", n_windows=1)
-    peaks = multimodal.audio_spectral_peaks(media, window=64)
+    peaks = multimodal.audio_spectral_peaks(media)
     assert multimodal.audio_landmarks(peaks).count() == 0
 
 
@@ -1525,9 +1523,7 @@ def test_video_near_duplicates_frame_voting(spark):
     hashes = multimodal.video_frame_dhash(media)
     votes = {
         (r.id_a, r.id_b): r.n_frame_matches
-        for r in multimodal.video_near_duplicates(
-            hashes, min_frames=2
-        ).collect()
+        for r in multimodal.video_near_duplicates(hashes).collect()
     }
     assert len(votes) == 3 * 6  # every same-gid pair, C(4,2) per gid
     for (a, b), n in votes.items():
@@ -1547,12 +1543,10 @@ def test_audio_landmark_matches_incremental_law(spark):
     media = multimodal.synthetic_wav_media_tonal(
         ids, "doc_id", seed_col="gid", offset_col="off"
     )
-    peaks = multimodal.audio_spectral_peaks(media, window=64)
+    peaks = multimodal.audio_spectral_peaks(media)
     full = {
         (r.id_a, r.id_b): r.n_matches
-        for r in multimodal.audio_landmark_matches(
-            peaks, min_matches=10
-        ).collect()
+        for r in multimodal.audio_landmark_matches(peaks).collect()
     }
 
     batch_ids = {i for i in range(12) if i % 4 == 0}
@@ -1787,7 +1781,6 @@ def test_audio_landmarks_incremental_from_stored_parquet_index(
             multimodal.synthetic_wav_media_tonal(
                 docs.where(pred), "doc_id", seed_col="gid", offset_col="off"
             ),
-            window=64,
         )
 
     idx_path = str(tmp_path / "landmark_index")

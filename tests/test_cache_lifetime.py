@@ -74,9 +74,9 @@ def test_pq_freeze_trained_contract(spark, sf_dir):
         "localCheckpoint contract"
     )
     emb = benchmarks.load_emb(spark, sf_dir)
-    plain = similarity.pq_codebooks(emb, dim=64, m=4, k=8, iterations=1)
+    plain = similarity.pq_codebooks(emb, dim=64, m=4, k=8)
     frozen = benchmarks._freeze_trained(
-        similarity.pq_codebooks(emb, dim=64, m=4, k=8, iterations=1)
+        similarity.pq_codebooks(emb, dim=64, m=4, k=8)
     )
     assert sorted(map(tuple, plain.collect()), key=lambda t: t[:2]) == (
         sorted(map(tuple, frozen.collect()), key=lambda t: t[:2])

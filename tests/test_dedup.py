@@ -40,7 +40,7 @@ def test_jaccard_pairs_exact_values(docs):
 
 def test_minhash_lsh_finds_near_dups(docs):
     got = dedup.minhash_near_duplicates_shared(
-        docs, "text", "doc_id", n=1, bands=4, rows_per_band=4, threshold=0.5
+        docs, "text", "doc_id", n=1, threshold=0.5
     )
     pairs = {(r.id_a, r.id_b) for r in got.collect()}
     assert (1, 2) in pairs  # identical token sets always collide
@@ -428,14 +428,14 @@ def test_simhash_incremental_matches_full_restriction(docs):
     full = {
         (r.id_a, r.id_b): r.hamming
         for r in dedup.simhash_near_duplicates_portable(
-            docs, "text", "doc_id", max_hamming=3, bits=16
+            docs, "text", "doc_id", max_hamming=3
         ).collect()
         if r.id_a in batch_ids or r.id_b in batch_ids
     }
     inc = {
         (r.id_a, r.id_b): r.hamming
         for r in dedup.simhash_near_duplicates_incremental(
-            new_docs, corpus_docs, "text", "doc_id", max_hamming=3, bits=16
+            new_docs, corpus_docs, "text", "doc_id", max_hamming=3
         ).collect()
     }
     assert inc == full, (inc, full)

@@ -287,7 +287,7 @@ def test_pagerank_matches_numpy_reference(spark):
     from platform_etl_openfda_faers_spark.operators.graph import pagerank
 
     edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c")]
-    ranks = pagerank(spark.createDataFrame(edges, ["src", "dst"]), iterations=3)
+    ranks = pagerank(spark.createDataFrame(edges, ["src", "dst"]))
     got = {r.node: r.rank for r in ranks.collect()}
     assert unpersist_cached(ranks) == 2   # edge projection + node list
     assert unpersist_cached(ranks) == 0   # second call is a no-op

@@ -63,8 +63,7 @@ def test_audio_stamp_carries_max_dt(spark, tmp_path):
         "doc_id", (F.col("doc_id") % 5).alias("gid")
     )
     peaks = multimodal.audio_spectral_peaks(
-        multimodal.synthetic_wav_media_tonal(adocs, "doc_id", seed_col="gid"),
-        window=64,
+        multimodal.synthetic_wav_media_tonal(adocs, "doc_id", seed_col="gid")
     )
     idx = multimodal.audio_landmark_table(peaks, max_dt=2)
     assert "index_fp" in idx.columns

@@ -139,7 +139,6 @@ def test_audio_mixed_capped_matches_match_replay(spark):
         multimodal.synthetic_wav_media_tonal(
             adocs, "doc_id", seed_col="gid", offset_col="off"
         ),
-        window=64,
     ).persist()
     min_matches = 5
     got = {
@@ -293,7 +292,6 @@ def test_audio_tail_keyspace_scaling(spark):
             multimodal.synthetic_wav_media_tonal(
                 harness(spacing), "doc_id", seed_col="gid", offset_col="off"
             ),
-            window=64,
         ).persist()
         is_new = F.col("media_id") % 7 == 0
         got = {

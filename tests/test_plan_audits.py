@@ -103,10 +103,7 @@ def test_dedup_clusters_pair_graph_not_cartesian(spark, sf_dir):
     from platform_etl_openfda_faers_spark.sources.readers import load_table
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    pairs = similarity.cosine_near_duplicates(
-        emb, threshold=0.4, id_col="vec_id", vec_col="embedding",
-        n_planes=8, n_tables=4, seed=42,
-    )
+    pairs = similarity.cosine_near_duplicates(emb, threshold=0.4, n_planes=8)
     plan = plan_of(pairs)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -199,7 +196,7 @@ def test_zorder_layout_prunes_input_bytes(spark, tmp_path):
     opts = {"parquet.block.size": str(128 * 1024)}
     df.repartition(4).write.options(**opts).parquet(plain)
     # the Z-ordered writer: range-partition and sort by the Morton key
-    z = zorder.zorder_key([F.col("x"), F.col("y")], [(0, 999), (0, 999)], bits=8)
+    z = zorder.zorder_key([F.col("x"), F.col("y")], [(0, 999), (0, 999)])
     (
         df.repartitionByRange(4, z)
         .sortWithinPartitions(z)

@@ -227,7 +227,7 @@ def test_weighted_sample_topk_matches_formula(spark):
     rows = [(i, (i * 7) % 13 + 1) for i in range(200)]  # (id, weight 1..13)
     df = spark.createDataFrame(rows, ["doc_id", "wt"])
     got = weighted_sample_topk(
-        df, weight=F.col("wt"), key=F.col("doc_id"), k=20, seed=42
+        df, weight=F.col("wt"), key=F.col("doc_id"), k=20
     ).collect()
 
     def ares(i, w):

@@ -63,10 +63,34 @@ def test_lsh_buckets_wrong_dim_raises(spark, vecs, dim):
         b.collect()
 
 
-def test_cosine_near_duplicates_symmetric_pairs(vecs):
-    out = similarity.cosine_near_duplicates(
-        vecs, threshold=0.99, n_planes=2, n_tables=4
+def test_lsh_width_probe_skips_null_vectors(spark, vecs):
+    """``dim=None`` measures the first non-null vector: a null first row
+    gives the same rows as ``dim=4``, and input with no vector at all
+    raises ``ValueError`` asking for ``dim=``."""
+    null_first = (
+        spark.createDataFrame([(6, None)], vecs.schema).union(vecs).coalesce(1)
     )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(
+        similarity.add_lsh_buckets(null_first, "embedding", n_planes=4, n_tables=2)
+    ) == rows(
+        similarity.add_lsh_buckets(null_first, "embedding", n_planes=4, n_tables=2, dim=4)
+    )
+    assert rows(similarity.hyperplane_lsh_topk(null_first, vecs, k=1)) == rows(
+        similarity.hyperplane_lsh_topk(null_first, vecs, k=1, dim=4)
+    )
+    all_null = spark.createDataFrame([(6, None)], vecs.schema)
+    with pytest.raises(ValueError, match="pass dim="):
+        similarity.add_lsh_buckets(all_null, "embedding")
+    with pytest.raises(ValueError, match="pass dim="):
+        similarity.cosine_near_duplicates(vecs.where("vec_id < 0"))
+
+
+def test_cosine_near_duplicates_symmetric_pairs(vecs):
+    out = similarity.cosine_near_duplicates(vecs, threshold=0.99, n_planes=2)
     pairs = {(r.id_a, r.id_b) for r in out.collect()}
     assert (0, 5) in pairs or (1, 5) in pairs  # the tight cluster collides
     assert all(a < b for a, b in pairs)
@@ -111,7 +135,7 @@ def test_pq_adc_recall_and_map_only_encode(spark, sf_dir):
     from platform_etl_openfda_faers_spark.sources.readers import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cb = similarity.pq_codebooks(emb, dim=64, m=4, k=8, iterations=1)
+    cb = similarity.pq_codebooks(emb, dim=64, m=4, k=8)
     rows = cb.collect()
     assert len(rows) <= 4 * 8 and {r.sub for r in rows} == {0, 1, 2, 3}
     assert all(len(r.centroid) == 16 for r in rows)
@@ -154,10 +178,10 @@ def test_ivf_pq_prunes_candidates_and_overlaps_adc(spark, sf_dir):
     n = emb.count()
     queries = emb.where(F.col("vec_id") < 10)
     coarse = similarity.kmeans_centroids(emb, k=8, iterations=1)
-    cb = similarity.pq_codebooks(emb, dim=64, m=4, k=8, iterations=1)
+    cb = similarity.pq_codebooks(emb, dim=64, m=4, k=8)
 
     ivfpq = similarity.ivf_pq_topk(
-        emb, queries, coarse, cb, k=5, nprobe=3, dim=64, m=4
+        emb, queries, coarse, cb, k=5, nprobe=3, dim=64
     )
     rows = ivfpq.collect()
     assert {r.query_id for r in rows} == set(range(10))
@@ -190,7 +214,7 @@ def test_ivf_pq_prunes_candidates_and_overlaps_adc(spark, sf_dir):
         (r.query_id, r.neighbor_id, r.score, r.rank)
         for r in similarity.ivf_pq_topk(
             emb.repartition(7), queries, coarse, cb, k=5, nprobe=3,
-            dim=64, m=4,
+            dim=64,
         ).collect()
     }
     assert again == {(r.query_id, r.neighbor_id, r.score, r.rank) for r in rows}
@@ -451,7 +475,7 @@ def test_ranked_cells_sql_matches_columnwise(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("_v")
     )
-    cent = kmeans_centroids(emb, "vec_id", "_v", k=8, iterations=1)
+    cent = kmeans_centroids(emb, "_v", k=8, iterations=1)
     cent_arr = cent.groupBy().agg(
         F.collect_list(F.struct(F.col("cell"), F.col("centroid"))).alias("_cents")
     )
@@ -495,7 +519,7 @@ def test_pq_lut_sql_matches_columnwise(spark, sf_dir):
     )
     for dim, m, k in [(64, 4, 8), (64, 8, 16)]:
         width = dim // m
-        cb = pq_codebooks(emb, "vec_id", "_q", dim=dim, m=m, k=k, iterations=1)
+        cb = pq_codebooks(emb, "_q", dim=dim, m=m, k=k)
         for s in (0, m - 1):
             side = cb.where(F.col("sub") == s).select(
                 F.col("cell").alias("_code"), F.col("centroid").alias("_c")
@@ -538,10 +562,10 @@ def test_pq_codebooks_fused_matches_legacy(spark, sf_dir):
                     width,
                 ).alias("_sv"),
             )
-            cent = kmeans_centroids(sliced, "vec_id", "_sv", k=k, iterations=1)
+            cent = kmeans_centroids(sliced, "_sv", k=k, iterations=1)
             part = cent.select(F.lit(s).alias("sub"), "cell", "centroid")
             legacy = part if legacy is None else legacy.unionByName(part)
-        fused = pq_codebooks(emb, dim=dim, m=m, k=k, iterations=1)
+        fused = pq_codebooks(emb, dim=dim, m=m, k=k)
         l_rows = {
             (r["sub"], r["cell"]): tuple(r["centroid"])
             for r in legacy.collect()
@@ -572,10 +596,10 @@ def test_pq_adc_lut_map_matches_join(spark, sf_dir):
     queries = emb.where(F.col("vec_id") < 10)
     for dim, m, k in [(64, 4, 8), (64, 8, 64)]:
         width = dim // m
-        cb = pq_codebooks(emb, dim=dim, m=m, k=k, iterations=1)
+        cb = pq_codebooks(emb, dim=dim, m=m, k=k)
 
         # legacy scoring: m broadcast LUT joins (the pre-r17 operator body)
-        scored = pq_encode(emb, cb, "vec_id", "embedding", dim, m, 6)
+        scored = pq_encode(emb, cb, "vec_id", "embedding", dim, m)
         q = queries.select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").cast("array<double>").alias("_q"),

@@ -285,6 +285,27 @@ def test_load_config_file(tmp_path, monkeypatch):
         load_config(str(unset))
 
 
+def test_load_config_closes_its_file(tmp_path, monkeypatch):
+    """Loading a config leaves no file handle open: with ResourceWarning
+    an error, an unclosed file surfaces as an unraisable exception when
+    the handle is collected."""
+    import gc
+    import sys
+    import warnings
+
+    from platform_etl_openfda_faers_spark.config import load_config
+
+    cfg_file = tmp_path / "etl.conf"
+    cfg_file.write_text('{"fda": {"output_path": "out"}}')
+    unraisable = []
+    monkeypatch.setattr(sys, "unraisablehook", unraisable.append)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", ResourceWarning)
+        load_config(str(cfg_file))
+        gc.collect()
+    assert not unraisable, [u.exc_value for u in unraisable]
+
+
 def test_load_table_normalizes_ntz_timestamps(spark, sf_dir):
     # the testdata events parquet stores micros with isAdjustedToUTC=0,
     # which PySpark 4 reads as TIMESTAMP_NTZ; load_table must hand every

@@ -153,7 +153,6 @@ def test_audio_occupancy_serve_matches_window_prune(spark, sf_dir, tmp_path):
             multimodal.synthetic_wav_media_tonal(
                 docs.where(pred), "doc_id", seed_col="gid", offset_col="off"
             ),
-            window=64,
         )
 
     idx_path = str(tmp_path / "audio_landmark_index")
@@ -467,8 +466,7 @@ def _family(spark, name):
     return (
         lambda ids: multimodal.audio_spectral_peaks(
             multimodal.synthetic_wav_media_tonal(
-                docs(ids), "doc_id", seed_col="gid", offset_col="off"),
-            window=64),
+                docs(ids), "doc_id", seed_col="gid", offset_col="off")),
         lambda b, c, **kw: multimodal.audio_landmark_matches_incremental(
             b, c, max_dt=3, min_matches=2, **kw),
         lambda c: multimodal.audio_landmark_table(c, max_dt=3),

@@ -111,7 +111,7 @@ def test_watermark_drops_late_event_across_restarts(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(EVENT_SCHEMA).parquet(src)
-        agg = ev.tumbling_counts(stream, window="1 hour", watermark="2 hours")
+        agg = ev.tumbling_counts(stream)
         q = (
             agg.writeStream.format("parquet")
             .outputMode("append")

@@ -27,6 +27,11 @@ TOOLS = sorted(
     [*REPO.glob("tools/*.py"), *REPO.glob("faersbench/*.py"), REPO / "bench.py"]
 )
 PKG_FILES = sorted((REPO / PKG).rglob("*.py"))
+# Everything outside tests/ that may call into the package.
+CALLERS = [
+    *PKG_FILES, *REPO.glob("tools/**/*.py"), *REPO.glob("faersbench/*.py"),
+    REPO / "bench.py", REPO / "__spark_entry__.py",
+]
 
 # Package definitions that nothing outside tests/ calls, kept on purpose:
 # each is the simple form a test pins a live operator against.
@@ -60,18 +65,19 @@ def _engine_bindings(tree: ast.Module):
                 yield node.lineno, a.asname or a.name, f"{node.module}.{a.name}"
 
 
-def _references(paths) -> list[tuple[str, str, tuple[str, ...], bool]]:
-    """(name, file, enclosing definitions, called) for every code
-    reference in ``paths``: each ``Name`` and ``Attribute`` read, and
-    each ``ImportFrom`` alias.  ``file`` is relative to the repo, the
+def _references(paths) -> list[tuple[str, str, tuple[str, ...], ast.AST | None]]:
+    """(name, file, enclosing definitions, use) for every code reference
+    in ``paths``: each ``Name`` and ``Attribute`` read, and each
+    ``ImportFrom`` alias.  ``file`` is relative to the repo, the
     enclosing definitions run outermost first from ``"<module>"``, and
-    ``called`` marks the function of a ``Call``.  Docstrings and other
-    strings are not references."""
+    ``use`` is the ``Call`` whose function the reference is, the
+    ``ImportFrom`` of an import alias, or ``None`` for a read as a value.
+    Docstrings and other strings are not references."""
     refs = []
 
     class Visitor(ast.NodeVisitor):
         def __init__(self, path: str) -> None:
-            self.path, self.stack, self.called = path, ["<module>"], set()
+            self.path, self.stack, self.calls = path, ["<module>"], {}
 
         def visit_FunctionDef(self, node) -> None:
             self.stack.append(node.name)
@@ -81,11 +87,11 @@ def _references(paths) -> list[tuple[str, str, tuple[str, ...], bool]]:
         visit_AsyncFunctionDef = visit_ClassDef = visit_FunctionDef
 
         def visit_Call(self, node: ast.Call) -> None:
-            self.called.add(id(node.func))
+            self.calls[id(node.func)] = node
             self.generic_visit(node)
 
-        def _ref(self, node, name: str) -> None:
-            refs.append((name, self.path, tuple(self.stack), id(node) in self.called))
+        def _ref(self, node, name: str, use=None) -> None:
+            refs.append((name, self.path, tuple(self.stack), use or self.calls.get(id(node))))
 
         def visit_Name(self, node: ast.Name) -> None:
             if isinstance(node.ctx, ast.Load):
@@ -98,7 +104,7 @@ def _references(paths) -> list[tuple[str, str, tuple[str, ...], bool]]:
 
         def visit_ImportFrom(self, node: ast.ImportFrom) -> None:
             for a in node.names:
-                self._ref(node, a.name)
+                self._ref(node, a.name, node)
 
     for path in paths:
         Visitor(str(path.relative_to(REPO))).visit(ast.parse(path.read_text()))
@@ -175,12 +181,8 @@ def test_every_package_definition_has_a_caller():
     turn has no such caller, and the test it names references it.
     Names are matched without their module, so a name two modules share
     can hide dead code; the test never flags live code."""
-    callers = [
-        *PKG_FILES, *REPO.glob("tools/**/*.py"), *REPO.glob("faersbench/*.py"),
-        REPO / "bench.py", REPO / "__spark_entry__.py",
-    ]
     refs: dict[str, set[tuple[str, str]]] = {}
-    for name, path, stack, _ in _references(callers):
+    for name, path, stack, _ in _references(CALLERS):
         refs.setdefault(name, set()).add((path, stack[1] if len(stack) > 1 else ""))
     laws = {(mod, name): test for mod, name, test in LAW_REFERENCES}
     dead, defined = [], set()
@@ -213,6 +215,77 @@ def test_every_package_definition_has_a_caller():
     ]
     assert not unpinned, "law references their test does not name: " + ", ".join(
         unpinned
+    )
+
+
+def _functions(path: Path):
+    """(function, is_method) for each module-level function in ``path``
+    and each function defined in a module-level class; ``is_method``
+    marks a class-level one whose first parameter the call supplies
+    (``self``/``cls``), i.e. anything but a ``staticmethod``."""
+    defs = (ast.FunctionDef, ast.AsyncFunctionDef)
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, defs):
+            yield node, False
+        elif isinstance(node, ast.ClassDef):
+            for fn in node.body:
+                if isinstance(fn, defs):
+                    static = {getattr(d, "id", None) for d in fn.decorator_list}
+                    yield fn, "staticmethod" not in static
+
+
+def test_every_option_has_two_values():
+    """Each keyword option (a parameter with a default) of a package
+    function receives a second value somewhere in the repository: some
+    call from the package, ``tools/``, ``faersbench/``, ``bench.py``,
+    ``__spark_entry__.py`` or ``tests/`` passes an expression whose
+    source text differs from the default.  Positional arguments map to
+    parameter names; a variable counts as a second value.  An option
+    every caller leaves at one value is a constant.  Out of scope: the
+    ``LAW_REFERENCES``, names defined twice in the package, functions
+    some call passes ``*args``/``**kwargs``, and functions referenced as
+    a value (passed to a tracer or kept in a table), whose calls the AST
+    does not all show."""
+    calls: dict[str, list[ast.Call]] = {}
+    as_value = set()
+    for name, _, _, use in _references([*CALLERS, *sorted(REPO.glob("tests/*.py"))]):
+        if isinstance(use, ast.Call):
+            calls.setdefault(name, []).append(use)
+        elif use is None:
+            as_value.add(name)
+    funcs: dict[str, list[tuple[str, ast.FunctionDef, bool]]] = {}
+    for path in PKG_FILES:
+        mod = ".".join(path.relative_to(REPO / PKG).with_suffix("").parts)
+        for fn, is_method in _functions(path):
+            funcs.setdefault(fn.name, []).append((mod, fn, is_method))
+    laws = {(mod, name) for mod, name, _ in LAW_REFERENCES}
+    one_value = []
+    for name, defs in funcs.items():
+        if len(defs) > 1 or name in as_value:
+            continue
+        [(mod, fn, is_method)] = defs
+        sites = calls.get(name, [])
+        if (mod, name) in laws or any(
+            isinstance(a, ast.Starred) for c in sites for a in c.args
+        ) or any(k.arg is None for c in sites for k in c.keywords):
+            continue
+        a = fn.args
+        positional = a.posonlyargs + a.args
+        params = [p.arg for p in positional][is_method:]
+        passed: dict[str, set[str]] = {}
+        for c in sites:
+            for p, v in [*zip(params, c.args), *((k.arg, k.value) for k in c.keywords)]:
+                passed.setdefault(p, set()).add(ast.unparse(v))
+        defaults = [
+            *zip(positional[len(positional) - len(a.defaults):], a.defaults),
+            *((p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None),
+        ]
+        for p, d in defaults:
+            if passed.get(p.arg, set()) <= {ast.unparse(d)}:
+                one_value.append(f"{mod}.{name}({p.arg}={ast.unparse(d)})")
+    assert not one_value, (
+        f"{len(one_value)} options every caller leaves at one value "
+        "(make each a constant): " + ", ".join(one_value)
     )
 
 
@@ -388,8 +461,8 @@ def _call_sites(names: set[str]) -> dict[str, list[tuple[str, str]]]:
     """name -> [(module file, innermost enclosing definition)] for every
     call of ``names`` in the engine package."""
     sites: dict[str, list[tuple[str, str]]] = {n: [] for n in names}
-    for name, path, stack, called in _references(PKG_FILES):
-        if called and name in names:
+    for name, path, stack, use in _references(PKG_FILES):
+        if isinstance(use, ast.Call) and name in names:
             sites[name].append((str(Path(path).relative_to(PKG)), stack[-1]))
     return sites
 

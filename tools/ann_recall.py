@@ -104,7 +104,7 @@ def method_grid(emb, queries, k):
         )
     )
     for m, kc in ((4, 8), (4, 16), (8, 16)):
-        cb = similarity.pq_codebooks(emb, dim=DIM, m=m, k=kc, iterations=1)
+        cb = similarity.pq_codebooks(emb, dim=DIM, m=m, k=kc)
         grid.append(
             (
                 f"pq-adc m={m} k={kc}" + ("*" if (m, kc) == (4, 8) else ""),
@@ -124,7 +124,7 @@ def method_grid(emb, queries, k):
                     ),
                 )
             )
-    cb48 = similarity.pq_codebooks(emb, dim=DIM, m=4, k=8, iterations=1)
+    cb48 = similarity.pq_codebooks(emb, dim=DIM, m=4, k=8)
     for nprobe in (3, 8):
         grid.append(
             (
@@ -132,7 +132,7 @@ def method_grid(emb, queries, k):
                 + ("*" if nprobe == 3 else ""),
                 {"nprobe": nprobe, "m": 4, "k_codes": 8},
                 lambda p=nprobe: similarity.ivf_pq_topk(
-                    emb, queries, trained, cb48, k=k, nprobe=p, dim=DIM, m=4
+                    emb, queries, trained, cb48, k=k, nprobe=p, dim=DIM
                 ),
             )
         )
@@ -142,7 +142,7 @@ def method_grid(emb, queries, k):
                 {"nprobe": nprobe, "m": 4, "k_codes": 8, "rerank_from": 5 * k},
                 lambda p=nprobe: similarity.ivf_pq_topk(
                     emb, queries, trained, cb48, k=k, nprobe=p, dim=DIM,
-                    m=4, rerank_from=5 * k,
+                    rerank_from=5 * k,
                 ),
             )
         )
